@@ -46,6 +46,31 @@ def _render(
     are grouped per table, rankings in rank order) -- queries themselves stay
     sort-free because the driver's hash check is order-insensitive and a
     global sort inside the query would be pure cost in every embedding."""
+    return _render_rows(df.columns, df.collect(), humanize_cols, order)
+
+
+def _sort_key(v):
+    """Spark's ascending order for one value: NULLs first, NaN above
+    every number; strings compare by code point, which is the UTF-8 byte
+    order Spark uses."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    return (1, v)
+
+
+def _render_rows(
+    columns: list[str],
+    rows,
+    humanize_cols: dict[str, str] | None = None,
+    order: list[str] | None = None,
+) -> str:
+    """``_render`` over rows already collected. The ``order`` sort runs on
+    the driver: a report is a handful of rows, and ``orderBy`` would cost a
+    range-partitioner sampling job that re-runs the whole upstream stage
+    before the sort shuffle runs it again. The sort is stable, so ties
+    keep the collect order, as Spark's sort keeps its input order."""
     from cassandra_sstable_tools_spark.functions import humanize as H
     from cassandra_sstable_tools_spark.report.table import TableBuilder
 
@@ -56,17 +81,16 @@ def _render(
         "ldt": H.format_deletion_time,
     }
     if order:
-        df = df.orderBy(*order)
-    rows = df.collect()
+        idx = [columns.index(c) for c in order]
+        rows = sorted(rows, key=lambda r: tuple(_sort_key(r[i]) for i in idx))
     tb = TableBuilder()
-    tb.set_header(*df.columns)
+    tb.set_header(*columns)
+    kinds = [(humanize_cols or {}).get(c) for c in columns]
     for r in rows:
-        cells = []
-        for c in df.columns:
-            v = r[c]
-            kind = (humanize_cols or {}).get(c)
-            cells.append(fmts[kind](v) if kind and v is not None else v)
-        tb.add_row(*cells)
+        tb.add_row(*(
+            fmts[kind](v) if kind and v is not None else v
+            for kind, v in zip(kinds, r)
+        ))
     return str(tb)
 
 
@@ -330,6 +354,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     from cassandra_sstable_tools_spark.report.progress import job_progress
 
     interactive = (not args.batch) and sys.stderr.isatty()
+    # every job of the command carries its name (Spark UI, statusTracker
+    # job groups, event logs); an embedding caller gets its own tags back
+    sc = spark.sparkContext
+    tag_keys = ("spark.jobGroup.id", "spark.job.description")
+    saved_tags = [sc.getLocalProperty(k) for k in tag_keys]
+    sc.setJobGroup(f"cli:{args.command}", f"cli:{args.command}")
     # spark.stop() must happen AFTER job_progress exits: the progress sampler
     # thread polls statusTracker until the context closes, and stopping the
     # context underneath it would race a dying SparkContext.
@@ -338,6 +368,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             with job_progress(spark, f"Analyzing {args.command}", interactive=interactive):
                 return _dispatch(spark, args, sf, out)
     finally:
+        for k, v in zip(tag_keys, saved_tags):
+            sc.setLocalProperty(k, v)
         if owns_session:
             spark.stop()
         if snap_root is not None:
@@ -849,81 +881,39 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
                 "lookup --merge applies to -k point reads, not range mode\n"
             )
             return 2
-        from cassandra_sstable_tools_spark.sources.lookup import (
-            lookup_audit,
-            partition_lookup,
-            partition_lookup_merged,
-            partition_range_scan,
-            range_scan_audit,
-            token_range_audit,
-            token_range_scan,
+        from cassandra_sstable_tools_spark.sources import lookup as L
+        from cassandra_sstable_tools_spark.sources.data_cells import (
+            DATA_CELLS_SCHEMA,
+            _COLS,
         )
 
         root = _scoped_cassdir_root(args)
         names = args.filenames.split(",") if args.filenames else None
-        # each section below runs its own pass over the read path -- a
-        # deliberate trade: per-key I/O is O(KB) by construction, and
-        # independent jobs keep the two/three output schemas out of one
-        # awkward dual-purpose frame (review finding, accepted cost)
+        # ONE pass over the read path: the records and the audit of every
+        # sstable come back in the same collect
         if token_mode:
-            out.append(("Token-range records", _render(
-                _table_scope_filter(
-                    token_range_scan(
-                        spark, root, args.token_from, args.token_to, names
-                    ),
-                    args,
-                ),
-                {"writetime": "ts_us", "local_deletion_time": "ldt"},
-                order=["keyspace", "table_name", "partition_key",
-                       "sstable_id", "clustering", "column_name", "kind"],
-            )))
-            out.append(("Token-range audit", _render(
-                _table_scope_filter(
-                    token_range_audit(
-                        spark, root, args.token_from, args.token_to, names
-                    ),
-                    args,
-                ),
-                {"index_bytes_read": "bytes", "data_bytes_read": "bytes"},
-                order=["keyspace", "table_name", "sstable_id"],
-            )))
-            for title, table in out:
-                sys.stdout.write(f"{title}\n{table}\n")
-            return 0
-        if range_mode:
-            out.append(("Range records", _render(
-                _table_scope_filter(
-                    partition_range_scan(
-                        spark, root, args.key_from, args.key_to, names,
-                        key_type=args.key_type,
-                    ),
-                    args,
-                ),
-                {"writetime": "ts_us", "local_deletion_time": "ldt"},
-                order=["keyspace", "table_name", "partition_key",
-                       "sstable_id", "clustering", "column_name", "kind"],
-            )))
-            out.append(("Range-scan audit", _render(
-                _table_scope_filter(
-                    range_scan_audit(
-                        spark, root, args.key_from, args.key_to, names,
-                        key_type=args.key_type,
-                    ),
-                    args,
-                ),
-                {"index_bytes_read": "bytes", "data_bytes_read": "bytes"},
-                order=["keyspace", "table_name", "sstable_id"],
-            )))
-            for title, table in out:
-                sys.stdout.write(f"{title}\n{table}\n")
-            return 0
-        recs = _table_scope_filter(
-            partition_lookup(spark, root, args.key, names,
-                             key_type=args.key_type),
-            args,
-        )
-        out.append(("Per-SSTable records", _render(
-            recs,
+            fused = L.token_range_read(
+                spark, root, args.token_from, args.token_to, names
+            )
+            titles = ("Token-range records", "Token-range audit")
+            audit_order = ["keyspace", "table_name", "sstable_id"]
+        elif range_mode:
+            fused = L.range_read(
+                spark, root, args.key_from, args.key_to, names,
+                key_type=args.key_type,
+            )
+            titles = ("Range records", "Range-scan audit")
+            audit_order = ["keyspace", "table_name", "sstable_id"]
+        else:
+            fused = L.point_read(
+                spark, root, args.key, names, key_type=args.key_type
+            )
+            titles = ("Per-SSTable records", "Read-path audit")
+            audit_order = ["keyspace", "table_name", "partition_key",
+                           "sstable_id"]
+        recs, audits = L.split_rows(_table_scope_filter(fused, args).collect())
+        out.append((titles[0], _render_rows(
+            _COLS, recs,
             {"writetime": "ts_us", "local_deletion_time": "ldt"},
             order=["keyspace", "table_name", "partition_key", "sstable_id",
                    "clustering", "column_name", "kind"],
@@ -932,25 +922,19 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
             out.append((
                 "Merged live state (LWW + tombstone shadowing)",
                 _render(
-                    _table_scope_filter(
-                        partition_lookup_merged(spark, root, args.key, names,
-                                                key_type=args.key_type,
-                                                now_seconds=args.now),
-                        args,
+                    L.merged_view(
+                        spark.createDataFrame(recs, DATA_CELLS_SCHEMA),
+                        args.now,
                     ),
                     {"writetime": "ts_us"},
                     order=["keyspace", "table_name", "partition_key",
                            "clustering", "cell_name"],
                 ),
             ))
-        out.append(("Read-path audit", _render(
-            _table_scope_filter(
-                lookup_audit(spark, root, args.key, names,
-                             key_type=args.key_type),
-                args,
-            ),
+        out.append((titles[1], _render_rows(
+            L.audits_of(fused).columns, audits,
             {"index_bytes_read": "bytes", "data_bytes_read": "bytes"},
-            order=["keyspace", "table_name", "partition_key", "sstable_id"],
+            order=audit_order,
         )))
     elif args.command == "clean":
         from cassandra_sstable_tools_spark.llm.pipeline import corpus_clean_stats

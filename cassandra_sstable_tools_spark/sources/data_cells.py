@@ -201,19 +201,26 @@ def _enc_delta_cached(v: int, mn: int) -> bytes:
 
 
 class _Codec:
-    """Delta codec bound to one sstable's SerializationHeader."""
+    """Delta codec bound to one sstable's SerializationHeader. The three
+    EncodingStats mins are copied at construction: the codec lives in the
+    contents-keyed ``_ENC_PREPS`` memo, so it must not follow later
+    mutations of the header object that seeded it."""
+
+    __slots__ = ("min_ts", "min_ldt", "min_ttl")
 
     def __init__(self, h: SerializationHeaderInfo):
-        self.h = h
+        self.min_ts = h.min_timestamp
+        self.min_ldt = h.min_local_deletion_time
+        self.min_ttl = h.min_ttl
 
     def enc_ts(self, ts: int) -> bytes:
-        return _enc_delta_cached(ts, self.h.min_timestamp)
+        return _enc_delta_cached(ts, self.min_ts)
 
     def enc_ldt(self, ldt: int) -> bytes:
-        return _enc_delta_cached(ldt, self.h.min_local_deletion_time)
+        return _enc_delta_cached(ldt, self.min_ldt)
 
     def enc_ttl(self, ttl: int) -> bytes:
-        return write_unsigned_vint(ttl - self.h.min_ttl)
+        return write_unsigned_vint(ttl - self.min_ttl)
 
 
 class _BlockReader:
@@ -1663,7 +1670,7 @@ def encode_unfiltereds(
     prev_size = 0
     for rec in sorted(records, key=sort_key):
         blob = _encode_one(
-            rec, h, prep, prev_size,
+            rec, prep, prev_size,
             strict_spans=strict_spans,
         )
         if strict_spans:
@@ -1707,7 +1714,7 @@ def _row_blob(
 
 
 def _encode_one(
-    rec, h, prep: _EncPrep, prev_size: int,
+    rec, prep: _EncPrep, prev_size: int,
     strict_spans: bool = True,
 ) -> bytes:
     codec = prep.codec
@@ -1725,12 +1732,12 @@ def _encode_one(
         ):
             # bounds may be PREFIXES of the clustering (fewer components)
             vals = clustering_components(
-                val, h.clustering_types, full_arity=False
+                val, prep.cl_types_t, full_arity=False
             )
             head = bytearray([IS_MARKER, kind_ord])
             head += struct.pack(">H", len(vals))
             head += _enc_clustering_values(
-                vals, h.clustering_types[: len(vals)]
+                vals, prep.cl_types_t[: len(vals)]
             )
             if strict_spans and (len(deletion) >= 128 or psz >= 128):
                 raise ValueError(
@@ -1886,7 +1893,7 @@ def fixture_header_schema() -> tuple[list[str], list, list]:
     return clustering_types, statics, regulars
 
 
-_REC_FIELDS = [
+_FIXTURE_CELL_FIELDS = [
     "partition_key", "clustering", "kind", "cell_name", "cell_size",
     "writetime", "ttl", "is_tombstone", "is_counter",
     "local_deletion_time", "range_start", "range_end",
@@ -1912,9 +1919,9 @@ def fixture_cell_payload(spark: SparkSession, sf_dir: str) -> dict:
     mins: dict[tuple, list] = {}
     cells = tpch_adapter.cells(spark, sf_dir)
     for r in cells.select(
-        "keyspace", "table_name", "sstable_id", *_REC_FIELDS
+        "keyspace", "table_name", "sstable_id", *_FIXTURE_CELL_FIELDS
     ).collect():
-        rec = {f: r[f] for f in _REC_FIELDS}
+        rec = {f: r[f] for f in _FIXTURE_CELL_FIELDS}
         if not record_encodable(rec):
             continue
         # v12 simple->complex transform: route the matching cells into the

@@ -32,12 +32,14 @@ Murmur3Partitioner -> (murmur3 token, key bytes); ByteOrderedPartitioner
 -> raw key bytes. Unknown partitioners fail LOUD rather than
 binary-searching with a wrong comparator and silently missing keys.
 
-Spark shape / 100 TB notes: the sstable inventory is the DataFrame (one
-task per sstable, file-count parallelism); the K requested keys ride the
-task closure — a POINT READ is K-bounded by definition (the CLI's -k
-flags; thousands at most), so this is a broadcast of kilobytes, not a
-shuffle. Per (sstable, key) the I/O is O(KB) regardless of sstable size:
-the bloom filter and summary are ~keys/128-sized, the index read is one
+Spark shape / 100 TB notes: the sstable inventory is a driver-side
+listing (sources/inventory.py), and one Spark stage of
+min(#sstables, cores) tasks reads every sstable exactly once, emitting the
+decoded records and the audit rows of that read together. The K
+requested keys ride the task closure — a POINT READ is K-bounded by
+definition (the CLI's -k flags; thousands at most), so this is a
+broadcast of kilobytes, not a shuffle. Per (sstable, key) the I/O is
+O(KB) regardless of sstable size: the bloom filter and summary are ~keys/128-sized, the index read is one
 sampling interval, the data read is one partition block. Overlapping
 key windows within an sstable are MERGED and each merged region is
 streamed once, so a batch of co-located keys never re-reads index
@@ -56,9 +58,9 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
-    _filter_files,
     _is_local_root,
     _local_path,
     _parse_filename,
@@ -510,28 +512,131 @@ def _normalize_keys(keys, key_type=None) -> list[tuple[str, bytes]]:
     return out
 
 
-def _index_files(spark: SparkSession, root: str, filenames):
+def _sstable_pass(
+    spark: SparkSession, root: str, filenames, read, schema: StructType
+) -> DataFrame:
+    """Run ``read(index_local, path, version)`` once for every live sstable
+    with an Index.db, in ONE Spark stage, and emit its row tuples (``schema``
+    column order after the keyspace/table_name/sstable_id prefix).
+
+    The sstable list is the driver-side inventory (no listing job, no
+    count, no shuffle); ``min(#sstables, defaultParallelism)`` tasks each
+    take every n-th sstable of it, so every read path runs exactly once
+    per sstable and a point read costs one job end to end."""
+    from cassandra_sstable_tools_spark.sources.data_cells import _cell_batches
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        sstable_inventory,
+    )
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     if not _is_local_root(root):
         raise ValueError(
             f"partition_lookup needs a POSIX-visible root (point seeks); "
             f"got {root!r}"
         )
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Index.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "Index.db",
+    paths = [
+        s.path("Index.db")
+        for s in sstable_inventory(spark, root, filenames)
+        if "Index.db" in s.components
+    ]
+    n = max(1, min(len(paths), spark.sparkContext.defaultParallelism))
+    pa_schema = to_arrow_schema(schema)
+
+    def run(batches) -> Iterator:
+        for rb in batches:
+            for task in rb.column(0).to_pylist():
+                rows: list[tuple] = []
+                for path in paths[task::n]:
+                    ks, tb, ss, ver = _parse_filename(path)
+                    rows.extend(
+                        (ks, tb, ss, *r)
+                        for r in read(_local_path(path), path, ver)
+                    )
+                yield from _cell_batches(rows, pa_schema)
+
+    return spark.range(0, n, 1, n).mapInArrow(run, schema)
+
+
+def _fused_schema(audit_ddl: str) -> StructType:
+    """One frame for a read pass: the identity prefix, then a ``record``
+    struct (data_cells columns) OR an ``audit`` struct per row."""
+    from cassandra_sstable_tools_spark.sources.data_cells import (
+        DATA_CELLS_SCHEMA,
     )
-    # one task per sstable: the listing's natural partitioning packs
-    # multiple files per task (tiny path strings), halving read-path
-    # parallelism. The COUNT must be explicit -- a column-only repartition
-    # is AQE-byte-coalescible (the data_cells shard lesson); the count()
-    # is a metadata-only listing.
-    n = files.count()
-    return files.repartition(max(1, n), F.col("path"))
+
+    cells = StructType.fromDDL(DATA_CELLS_SCHEMA).fields
+    audit = StructType.fromDDL(audit_ddl).fields
+    return StructType([
+        *cells[:3],
+        StructField("record", StructType(cells[3:])),
+        StructField("audit", StructType(audit[3:])),
+    ])
+
+
+_ID = ("keyspace", "table_name", "sstable_id")
+
+
+def records_of(fused: DataFrame) -> DataFrame:
+    """The decoded records of a read pass (data_cells schema)."""
+    return fused.where(F.col("record").isNotNull()).select(*_ID, "record.*")
+
+
+def audits_of(fused: DataFrame) -> DataFrame:
+    """The audit rows of a read pass (its audit schema)."""
+    return fused.where(F.col("audit").isNotNull()).select(*_ID, "audit.*")
+
+
+def split_rows(rows) -> tuple[list[tuple], list[tuple]]:
+    """Collected read-pass rows -> (record tuples, audit tuples), each in
+    the column order of ``records_of`` / ``audits_of``."""
+    recs, auds = [], []
+    for r in rows:
+        if r.record is not None:
+            recs.append((*r[:3], *r.record))
+        if r.audit is not None:
+            auds.append((*r[:3], *r.audit))
+    return recs, auds
+
+
+_POINT_AUDIT_KEYS = (
+    "partition_key", "bloom_pass", "bounds_skip", "window_start",
+    "window_end", "index_bytes_read", "found", "records", "data_bytes_read",
+)
+_RANGE_AUDIT_KEYS = (
+    "bounds_skip", "scan_start", "entries_scanned", "partitions_matched",
+    "records", "index_bytes_read", "data_bytes_read",
+)
+
+
+def _fused_rows(got, keys) -> list[tuple]:
+    """A per-sstable read result (audit dict(s), records) -> fused rows."""
+    if got is None:
+        return []
+    audits, recs = got
+    if isinstance(audits, dict):
+        audits = [audits]
+    return [(None, tuple(a[k] for k in keys)) for a in audits] + [
+        (r, None) for r in recs
+    ]
+
+
+def point_read(
+    spark: SparkSession, root: str, keys, filenames=None,
+    chunk_bytes: int = 8 << 10, key_type: str | None = None,
+) -> DataFrame:
+    """ONE pass of the bloom/summary/index point-read path over every
+    sstable for the requested keys: each row carries either a decoded
+    record or the (sstable, key) audit (``records_of`` / ``audits_of``)."""
+    targets = _normalize_keys(keys, key_type)
+    return _sstable_pass(
+        spark, root, filenames,
+        lambda local, path, ver: _fused_rows(
+            _lookup_in_sstable(local, path, ver, targets,
+                               chunk_bytes=chunk_bytes),
+            _POINT_AUDIT_KEYS,
+        ),
+        _fused_schema(LOOKUP_AUDIT_SCHEMA),
+    )
 
 
 def partition_lookup(
@@ -542,37 +647,9 @@ def partition_lookup(
     partition keys only, found via the bloom/summary/index point-read
     path — never a data scan. ``keys``: a K-bounded list of partition
     keys (str, UTF-8-encoded; or raw bytes)."""
-    from cassandra_sstable_tools_spark.sources.data_cells import (
-        DATA_CELLS_SCHEMA,
-        _COLS,
+    return records_of(
+        point_read(spark, root, keys, filenames, chunk_bytes, key_type)
     )
-
-    targets = _normalize_keys(keys, key_type)
-    files = _index_files(spark, root, filenames)
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                got = _lookup_in_sstable(
-                    _local_path(path), path, ver, targets,
-                    chunk_bytes=chunk_bytes,
-                )
-                if got is None:
-                    continue
-                _audits, recs = got
-                rows.extend((ks, tb, ss) + r for r in recs)
-            pdf_out = pd.DataFrame(rows, columns=_COLS)
-            for c in ("writetime", "local_deletion_time", "cell_value",
-                      "phys_size", "value_len"):
-                pdf_out[c] = pdf_out[c].astype("Int64")
-            pdf_out["ttl"] = pdf_out["ttl"].astype("Int32")
-            yield pdf_out
-
-    return files.mapInPandas(scan, DATA_CELLS_SCHEMA)
 
 
 def lookup_audit(
@@ -587,45 +664,9 @@ def lookup_audit(
     bloom_pass=false or bounds_skip=true rows prove ZERO index/data
     bytes; scanned rows prove the read stayed inside one sampling
     window (+ one read-ahead chunk)."""
-    targets = _normalize_keys(keys, key_type)
-    files = _index_files(spark, root, filenames)
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                got = _lookup_in_sstable(
-                    _local_path(path), path, ver, targets,
-                    chunk_bytes=chunk_bytes,
-                )
-                if got is None:
-                    continue
-                audits, _recs = got
-                for a in audits:
-                    rows.append((
-                        ks, tb, ss, a["partition_key"], a["bloom_pass"],
-                        a["bounds_skip"], a["window_start"],
-                        a["window_end"], a["index_bytes_read"], a["found"],
-                        a["records"], a["data_bytes_read"],
-                    ))
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id",
-                         "partition_key", "bloom_pass", "bounds_skip",
-                         "window_start", "window_end", "index_bytes_read",
-                         "found", "records", "data_bytes_read"],
-            )
-            for c in ("window_start", "window_end", "index_bytes_read",
-                      "records", "data_bytes_read"):
-                pdf_out[c] = pdf_out[c].astype("Int64")
-            for c in ("bloom_pass", "bounds_skip"):
-                pdf_out[c] = pdf_out[c].astype("boolean")
-            yield pdf_out
-
-    return files.mapInPandas(scan, LOOKUP_AUDIT_SCHEMA)
+    return audits_of(
+        point_read(spark, root, keys, filenames, chunk_bytes, key_type)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -648,49 +689,35 @@ def summary_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     to run ahead of trusting a foreign directory, like bloom_checks.
     Cost: one seek + one entry parse per sampled entry (~keys/interval),
     index size never read."""
-    files = _index_files(spark, root, filenames)
+    return _sstable_pass(
+        spark, root, filenames, _summary_check_in_sstable,
+        StructType.fromDDL(SUMMARY_CHECK_SCHEMA),
+    )
 
-    def scan(batches) -> Iterator:
-        import pandas as pd
 
-        from cassandra_sstable_tools_spark.sources.summary_db import (
-            parse_summary_db,
-        )
+def _summary_check_in_sstable(index_local: str, path: str, ver: str):
+    """[(sampled_entries, verified, all_verified)] for one sstable, or []
+    when it has no Summary.db."""
+    from cassandra_sstable_tools_spark.sources.summary_db import (
+        parse_summary_db,
+    )
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                local = _local_path(path)
-                summary_path = local[: -len("Index.db")] + "Summary.db"
-                if not os.path.exists(summary_path):
-                    continue
-                with open(summary_path, "rb") as f:
-                    summ = parse_summary_db(f.read(), source=summary_path)
-                verified = 0
-                with open(local, "rb") as f:
-                    for key, idx_off in summ.entries:
-                        try:
-                            cur = _IndexCursor(f, ver, path, idx_off)
-                            ent = cur.next_entry()
-                        except ValueError:
-                            continue  # mid-entry offset: not a boundary
-                        if ent is not None and ent[0] == key:
-                            verified += 1
-                rows.append((
-                    ks, tb, ss, len(summ.entries), verified,
-                    verified == len(summ.entries),
-                ))
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id",
-                         "sampled_entries", "verified", "all_verified"],
-            )
-            for c in ("sampled_entries", "verified"):
-                pdf_out[c] = pdf_out[c].astype("int32")
-            yield pdf_out
-
-    return files.mapInPandas(scan, SUMMARY_CHECK_SCHEMA)
+    summary_path = index_local[: -len("Index.db")] + "Summary.db"
+    if not os.path.exists(summary_path):
+        return []
+    with open(summary_path, "rb") as f:
+        summ = parse_summary_db(f.read(), source=summary_path)
+    verified = 0
+    with open(index_local, "rb") as f:
+        for key, idx_off in summ.entries:
+            try:
+                ent = _IndexCursor(f, ver, path, idx_off).next_entry()
+            except ValueError:
+                continue  # mid-entry offset: not a boundary
+            if ent is not None and ent[0] == key:
+                verified += 1
+    n = len(summ.entries)
+    return [(n, verified, verified == n)]
 
 
 def summary_check_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,48 +984,39 @@ def _token_range_in_sstable(
     return audit, records
 
 
+def token_range_read(
+    spark: SparkSession, root: str, token_lo: int, token_hi: int,
+    filenames=None, chunk_bytes: int = 64 << 10,
+) -> DataFrame:
+    """ONE pass of the murmur3 token-range read over every sstable: each
+    row carries a decoded record or the sstable's RANGE_AUDIT_SCHEMA
+    counters (``records_of`` / ``audits_of``)."""
+    if token_lo > token_hi:
+        raise ValueError(f"empty token range: {token_lo} > {token_hi}")
+    return _sstable_pass(
+        spark, root, filenames,
+        lambda local, path, ver: _fused_rows(
+            _token_range_in_sstable(local, path, ver, token_lo, token_hi,
+                                    chunk_bytes=chunk_bytes),
+            _RANGE_AUDIT_KEYS,
+        ),
+        _fused_schema(RANGE_AUDIT_SCHEMA),
+    )
+
+
 def token_range_scan(
     spark: SparkSession, root: str, token_lo: int, token_hi: int,
     filenames=None, chunk_bytes: int = 64 << 10,
 ) -> DataFrame:
     """Decoded records of every partition with murmur3 token in
     [token_lo, token_hi] (both inclusive) — the nodetool-repair-style
-    subrange read over murmur3 sstables. One task per sstable; at 100 TB
+    subrange read over murmur3 sstables. One read per sstable; at 100 TB
     a 1/N token subrange costs ~1/N of each sstable plus one summary
     window, which is exactly how a cluster-wide analysis shards a
     murmur3 table without a shuffle."""
-    from cassandra_sstable_tools_spark.sources.data_cells import (
-        DATA_CELLS_SCHEMA,
-        _COLS,
-    )
-
-    if token_lo > token_hi:
-        raise ValueError(f"empty token range: {token_lo} > {token_hi}")
-    files = _index_files(spark, root, filenames)
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                got = _token_range_in_sstable(
-                    _local_path(path), path, ver, token_lo, token_hi,
-                    chunk_bytes=chunk_bytes,
-                )
-                if got is None:
-                    continue
-                _audit, recs = got
-                rows.extend((ks, tb, ss) + r for r in recs)
-            pdf_out = pd.DataFrame(rows, columns=_COLS)
-            for c in ("writetime", "local_deletion_time", "cell_value",
-                      "phys_size", "value_len"):
-                pdf_out[c] = pdf_out[c].astype("Int64")
-            pdf_out["ttl"] = pdf_out["ttl"].astype("Int32")
-            yield pdf_out
-
-    return files.mapInPandas(scan, DATA_CELLS_SCHEMA)
+    return records_of(token_range_read(
+        spark, root, token_lo, token_hi, filenames, chunk_bytes
+    ))
 
 
 def token_range_audit(
@@ -1007,44 +1025,9 @@ def token_range_audit(
 ) -> DataFrame:
     """Per-sstable token-range I/O counters (RANGE_AUDIT_SCHEMA): the
     selectivity proof for the murmur3 subrange path."""
-    if token_lo > token_hi:
-        raise ValueError(f"empty token range: {token_lo} > {token_hi}")
-    files = _index_files(spark, root, filenames)
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                got = _token_range_in_sstable(
-                    _local_path(path), path, ver, token_lo, token_hi,
-                    chunk_bytes=chunk_bytes,
-                )
-                if got is None:
-                    continue
-                a, _recs = got
-                rows.append((
-                    ks, tb, ss, a["bounds_skip"], a["scan_start"],
-                    a["entries_scanned"], a["partitions_matched"],
-                    a["records"], a["index_bytes_read"],
-                    a["data_bytes_read"],
-                ))
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id",
-                         "bounds_skip", "scan_start", "entries_scanned",
-                         "partitions_matched", "records",
-                         "index_bytes_read", "data_bytes_read"],
-            )
-            for c in ("scan_start", "entries_scanned", "partitions_matched",
-                      "records", "index_bytes_read", "data_bytes_read"):
-                pdf_out[c] = pdf_out[c].astype("Int64")
-            pdf_out["bounds_skip"] = pdf_out["bounds_skip"].astype("boolean")
-            yield pdf_out
-
-    return files.mapInPandas(scan, RANGE_AUDIT_SCHEMA)
+    return audits_of(token_range_read(
+        spark, root, token_lo, token_hi, filenames, chunk_bytes
+    ))
 
 
 def _normalize_bound(b, key_type=None) -> bytes:
@@ -1057,47 +1040,38 @@ def _normalize_bound(b, key_type=None) -> bytes:
     return key_encoder(key_type)(b)
 
 
+def range_read(
+    spark: SparkSession, root: str, lo, hi, filenames=None,
+    chunk_bytes: int = 64 << 10, key_type: str | None = None,
+) -> DataFrame:
+    """ONE pass of the partition-range read over every sstable: each row
+    carries a decoded record or the sstable's RANGE_AUDIT_SCHEMA counters
+    (``records_of`` / ``audits_of``)."""
+    lo_b, hi_b = _normalize_bound(lo, key_type), _normalize_bound(hi, key_type)
+    if lo_b > hi_b:
+        raise ValueError(f"empty range: lo {lo!r} > hi {hi!r}")
+    return _sstable_pass(
+        spark, root, filenames,
+        lambda local, path, ver: _fused_rows(
+            _range_in_sstable(local, path, ver, lo_b, hi_b,
+                              chunk_bytes=chunk_bytes),
+            _RANGE_AUDIT_KEYS,
+        ),
+        _fused_schema(RANGE_AUDIT_SCHEMA),
+    )
+
+
 def partition_range_scan(
     spark: SparkSession, root: str, lo, hi, filenames=None,
     chunk_bytes: int = 64 << 10, key_type: str | None = None,
 ) -> DataFrame:
     """Decoded records of every partition with lo <= key <= hi (byte
     order, both bounds inclusive) -- reading only the matching byte spans
-    of each sstable, never the files. One task per sstable; at 100 TB a
+    of each sstable, never the files. One read per sstable; at 100 TB a
     selective range costs O(range bytes + one summary window), not O(data)."""
-    from cassandra_sstable_tools_spark.sources.data_cells import (
-        DATA_CELLS_SCHEMA,
-        _COLS,
+    return records_of(
+        range_read(spark, root, lo, hi, filenames, chunk_bytes, key_type)
     )
-
-    lo_b, hi_b = _normalize_bound(lo, key_type), _normalize_bound(hi, key_type)
-    if lo_b > hi_b:
-        raise ValueError(f"empty range: lo {lo!r} > hi {hi!r}")
-    files = _index_files(spark, root, filenames)
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                got = _range_in_sstable(
-                    _local_path(path), path, ver, lo_b, hi_b,
-                    chunk_bytes=chunk_bytes,
-                )
-                if got is None:
-                    continue
-                _audit, recs = got
-                rows.extend((ks, tb, ss) + r for r in recs)
-            pdf_out = pd.DataFrame(rows, columns=_COLS)
-            for c in ("writetime", "local_deletion_time", "cell_value",
-                      "phys_size", "value_len"):
-                pdf_out[c] = pdf_out[c].astype("Int64")
-            pdf_out["ttl"] = pdf_out["ttl"].astype("Int32")
-            yield pdf_out
-
-    return files.mapInPandas(scan, DATA_CELLS_SCHEMA)
 
 
 def range_scan_audit(
@@ -1108,45 +1082,9 @@ def range_scan_audit(
     scan start, entries scanned vs partitions matched, and index/data
     bytes read -- the observable proof a selective range reads a slice,
     not the sstable."""
-    lo_b, hi_b = _normalize_bound(lo, key_type), _normalize_bound(hi, key_type)
-    if lo_b > hi_b:
-        raise ValueError(f"empty range: lo {lo!r} > hi {hi!r}")
-    files = _index_files(spark, root, filenames)
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[tuple] = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                got = _range_in_sstable(
-                    _local_path(path), path, ver, lo_b, hi_b,
-                    chunk_bytes=chunk_bytes,
-                )
-                if got is None:
-                    continue
-                a, _recs = got
-                rows.append((
-                    ks, tb, ss, a["bounds_skip"], a["scan_start"],
-                    a["entries_scanned"], a["partitions_matched"],
-                    a["records"], a["index_bytes_read"],
-                    a["data_bytes_read"],
-                ))
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id",
-                         "bounds_skip", "scan_start", "entries_scanned",
-                         "partitions_matched", "records",
-                         "index_bytes_read", "data_bytes_read"],
-            )
-            for c in ("scan_start", "entries_scanned", "partitions_matched",
-                      "records", "index_bytes_read", "data_bytes_read"):
-                pdf_out[c] = pdf_out[c].astype("Int64")
-            pdf_out["bounds_skip"] = pdf_out["bounds_skip"].astype("boolean")
-            yield pdf_out
-
-    return files.mapInPandas(scan, RANGE_AUDIT_SCHEMA)
+    return audits_of(
+        range_read(spark, root, lo, hi, filenames, chunk_bytes, key_type)
+    )
 
 
 def partition_lookup_merged(
@@ -1162,21 +1100,27 @@ def partition_lookup_merged(
     and the tombstone markers themselves are not part of the answer.
     Output is row-state grain: live cells and row markers, one surviving
     copy each, with the winning sstable attributed."""
+    return merged_view(
+        partition_lookup(spark, root, keys, filenames, key_type=key_type),
+        now_seconds,
+    )
+
+
+def merged_view(records: DataFrame, now_seconds: int | None = None) -> DataFrame:
+    """The read-time merge of ``partition_lookup_merged`` over records
+    already read (data_cells schema)."""
     from cassandra_sstable_tools_spark.constants import NOW_SECONDS
     from cassandra_sstable_tools_spark.operators.purge import merge_enriched
-
-    now = NOW_SECONDS if now_seconds is None else now_seconds
     from cassandra_sstable_tools_spark.sources.data_cells import (
         fold_cell_path,
     )
 
+    now = NOW_SECONDS if now_seconds is None else now_seconds
     # fold the CellPath into the merge identity (r09 s2 fix): two map
     # cells under DIFFERENT paths are distinct CQL map entries -- the bare
     # column_name rename made them LWW-collide, silently dropping all but
     # the latest-written entry of every collection from the merged view
-    c = fold_cell_path(
-        partition_lookup(spark, root, keys, filenames, key_type=key_type)
-    ).withColumnRenamed("phys_size", "cell_size")
+    c = fold_cell_path(records).withColumnRenamed("phys_size", "cell_size")
     enriched, survives = merge_enriched(c, gc_before=now)
     live_kinds = ("CELL", "STATIC_CELL", "ROW_MARKER")
     return enriched.where(survives & F.col("kind").isin(*live_kinds)).select(

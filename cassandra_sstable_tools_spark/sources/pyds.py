@@ -320,8 +320,8 @@ class SSTableCellReader(DataSourceReader):
         # 10x tree: 57s single-task -> ~15s; SCALE.md r09 s2)
         tsb = options.get("target_split_bytes")
         # None -> resolved at partitions() time by the same core-filling
-        # rule the mapInPandas scan uses (data_cells._auto_split_bytes):
-        # ~2 waves across defaultParallelism, floored at 16 MiB, capped at
+        # rule the mapInArrow scan uses (data_cells._auto_split_bytes):
+        # one wave across defaultParallelism, floored at 16 MiB, capped at
         # the old fixed 256 MiB default (which an explicit option or
         # SPARK_GRAFT_DECODE_SPLIT_BYTES still overrides).
         self.target_split_bytes = int(tsb) if tsb is not None else None

@@ -636,6 +636,10 @@ def render_typed(v: bytes, marshal_type: str | None) -> str:
     return render_key(v)
 
 
+# path segments that never hold live sstables (see _filter_files)
+EXCLUDED_PATHS = "/(snapshots|backups)/"
+
+
 def _filter_files(files: DataFrame, filenames, component: str) -> DataFrame:
     """Apply the reference's `-f` semantics (a set of Data.db FILENAMES,
     `cli/PartitionSizeStatisticsCollector.java:35-59`) to a (path, ...)
@@ -650,9 +654,7 @@ def _filter_files(files: DataFrame, filenames, component: str) -> DataFrame:
     path pieces would read keyspace='snapshots'); the reference only sees
     live sstables because it goes through the ColumnFamilyStore (r07
     ADVICE #2)."""
-    files = files.where(
-        ~F.col("path").rlike("/(snapshots|backups)/")
-    )
+    files = files.where(~F.col("path").rlike(EXCLUDED_PATHS))
     if not filenames:
         return files
     fn = F.element_at(F.split(F.col("path"), "/"), -1)

@@ -1080,46 +1080,35 @@ def has_statistics_files(
     """True when any *-Statistics.db exists under ``root`` (within the
     `-f` selection when given -- a `-f` naming only stats-less sstables
     must take the reduced-listing path, not print an empty full listing).
-    A pure file LISTING job (path column only), no contents read."""
-    return bool(
-        _filter_files(
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*-Statistics.db")
-            .option("recursiveFileLookup", "true")
-            .load(root)
-            .select("path"),
-            filenames,
-            "Statistics.db",
-        )
-        .limit(1)
-        .count()
+    A driver-side listing (sources/inventory.py), no Spark job."""
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        sstable_inventory,
+    )
+
+    return any(
+        "Statistics.db" in s.components
+        for s in sstable_inventory(spark, root, filenames)
     )
 
 
 def statistics_coverage(
     spark: SparkSession, root: str, filenames=None
 ) -> tuple[int, int]:
-    """(#Data.db files, #Statistics.db files) under ``root`` -- two pure
-    listing jobs. The CLI compares them to WARN when a full listing or
-    summary silently omits sstables whose Statistics.db is missing
+    """(#Data.db files, #Statistics.db files) under ``root``, from one
+    driver-side listing. The CLI compares them to WARN when a full listing
+    or summary silently omits sstables whose Statistics.db is missing
     (partial snapshot copies, failed compaction cleanup): a tool that
     inventories sstables must not under-report the broken ones without
     saying so."""
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        sstable_inventory,
+    )
 
-    def count(component: str) -> int:
-        return (
-            _filter_files(
-                spark.read.format("binaryFile")
-                .option("pathGlobFilter", f"*-{component}")
-                .option("recursiveFileLookup", "true")
-                .load(root)
-                .select("path"),
-                filenames,
-                component,
-            ).count()
-        )
-
-    return count("Data.db"), count("Statistics.db")
+    ssts = sstable_inventory(spark, root, filenames)
+    return (
+        sum("Data.db" in s.components for s in ssts),
+        sum("Statistics.db" in s.components for s in ssts),
+    )
 
 
 def sstable_metadata_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -301,3 +301,30 @@ def test_cli_query_runs_staged_by_name(spark, sf_dir, capsys):
     assert main(["query", name, "--sf-dir", sf_dir], spark=spark) == 0
     out = capsys.readouterr().out
     assert name in out and "rows" in out
+
+
+def test_render_driver_sort_matches_order_by(spark):
+    """``_render(order=...)`` sorts collected rows on the driver; the
+    table must equal the one rendered from Spark's own ``orderBy`` when
+    the order columns hold NULLs, ties, non-ASCII strings, negative ints
+    and NaN (Spark: NULLs first, NaN above every number, UTF-8 byte
+    order for strings)."""
+    from cassandra_sstable_tools_spark.__main__ import _render
+
+    strs = [None, "", "a", "B", "\u00e9", "\u65e5\u672c", "\uffff",
+            "\U0001f600", "z"]
+    ints = [None, -(1 << 62), -7, -1, 0, 3]
+    dbls = [None, float("nan"), -1.5, 0.25]
+    # 72 rows over 36 distinct (s, i, d) triples: every triple is tied
+    # twice, and the tie is broken by the last order column n
+    rows = [
+        (strs[k % 9], ints[k % 6], dbls[k % 4], -k if k % 2 else None)
+        for k in range(72)
+    ]
+    rows += [("a", -7, None, 5), ("a", -7, None, 5)]  # exact duplicates
+    df = spark.createDataFrame(
+        rows, "s string, i bigint, d double, n bigint"
+    ).repartition(3)
+    for order in (["s", "i", "d", "n"], ["i", "d", "s", "n"],
+                  ["d", "n", "s", "i"]):
+        assert _render(df, order=order) == _render(df.orderBy(*order)), order

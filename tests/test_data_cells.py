@@ -197,7 +197,7 @@ def test_corruption_is_loud():
     )
     blob = dc.encode_unfiltereds([only_open], h)
     # strip the close marker: find second IS_MARKER byte offset by re-encoding
-    open_only = dc._encode_one(only_open, h, dc._encode_prep(h), 0)
+    open_only = dc._encode_one(only_open, dc._encode_prep(h), 0)
     half = len(open_only) // 2
     block = encode_partition_header(b"k4") + open_only[:half] + b"\x01"
     with pytest.raises(ValueError, match="corrupt Data.db"):

@@ -727,3 +727,66 @@ def test_inet_lookup_probes_mapped_form():
     ) in got
     # non-inet types keep the single exact candidate
     assert len(_normalize_keys(["7"], key_type="long")) == 1
+
+
+@pytest.mark.parametrize("mode", ["keys", "range", "token"])
+def test_cli_lookup_is_one_job_reading_each_sstable_once(
+    spark, sf_dir, tmp_path, monkeypatch, mode
+):
+    """Every lookup mode prints its records AND its audit from ONE Spark
+    job (the command's job group holds exactly one job id), and that job
+    runs the Python read path exactly once per sstable -- no listing
+    count, no sampling job of an orderBy, no second pass per section."""
+    import contextlib
+    import io
+
+    from cassandra_sstable_tools_spark.__main__ import main
+    from cassandra_sstable_tools_spark.sources import lookup as L
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        sstable_inventory,
+    )
+
+    if mode == "token":
+        for sub in ("a", "b"):
+            (tmp_path / sub).mkdir()
+            _plant_sstable(
+                tmp_path / sub, "org.apache.cassandra.dht.Murmur3Partitioner"
+            )
+        root = str(tmp_path)
+        argv = ["--from-token", str(-(1 << 63)), "--to-token",
+                str((1 << 63) - 1)]
+        read = "_token_range_in_sstable"
+    else:
+        root = _tree(spark, sf_dir)
+        keys = _all_keys(spark, sf_dir)
+        if mode == "keys":
+            argv = ["-k", keys[0], "-k", keys[len(keys) // 2], "-k", "absent"]
+            read = "_lookup_in_sstable"
+        else:
+            argv = ["--from", keys[0], "--to", keys[len(keys) // 3]]
+            read = "_range_in_sstable"
+    sc = spark.sparkContext
+    calls = sc.accumulator(0)
+    real = getattr(L, read)
+
+    def counting(*a, **kw):
+        calls.add(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(L, read, counting)
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup("cli:lookup"))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = main(["lookup", "--cassandra-dir", root, *argv, "-b"],
+                  spark=spark)
+    assert rc == 0
+    jobs = set(tracker.getJobIdsForGroup("cli:lookup")) - before
+    assert len(jobs) == 1, f"lookup ran {len(jobs)} Spark jobs"
+    n_sstables = sum(
+        "Index.db" in s.components for s in sstable_inventory(spark, root)
+    )
+    assert n_sstables > 1
+    assert calls.value == n_sstables
+    # the job tag is the caller's to keep: nothing leaks past main()
+    assert sc.getLocalProperty("spark.jobGroup.id") is None

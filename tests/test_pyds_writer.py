@@ -887,3 +887,50 @@ def test_encode_prep_memo_is_contents_keyed():
     assert prep.reg["v0"][3] == 8  # LongType: fixed 8-byte value
     assert prep.sta["s0"][0] == 0
     assert prep.cl_types_t == ("org.apache.cassandra.db.marshal.UTF8Type",)
+def test_encode_memo_ignores_mutation_of_its_seeding_header():
+    """A memoized prep must not follow its seeding header object: after
+    that header is mutated, a fresh header with the ORIGINAL contents hits
+    the same memo entry and must still encode the original bytes --
+    EncodingStats deltas and range-tombstone bounds included."""
+    from cassandra_sstable_tools_spark.sources import data_cells as dc
+    from cassandra_sstable_tools_spark.sources.statistics_db import (
+        SerializationHeaderInfo,
+    )
+
+    clustering_types, statics, regulars = dc.fixture_header_schema()
+
+    def header():
+        return SerializationHeaderInfo(
+            min_timestamp=19980401000001,
+            min_local_deletion_time=1698986000,
+            min_ttl=3600,
+            key_type="org.apache.cassandra.db.marshal.UTF8Type",
+            clustering_types=list(clustering_types),
+            static_columns=list(statics),
+            regular_columns=list(regulars),
+        )
+
+    recs = [
+        dict(kind="CELL", clustering="0007", cell_name="c2", cell_size=1234,
+             writetime=19980401000005, ttl=86400,
+             local_deletion_time=1699000000, is_tombstone=False,
+             is_counter=False, range_start=None, range_end=None,
+             partition_key="p"),
+        dict(kind="RANGE_TOMBSTONE_MARKER", clustering=None, cell_name=None,
+             cell_size=None, writetime=19980601000001, ttl=None,
+             local_deletion_time=1698987001, is_tombstone=True,
+             is_counter=False, range_start="0001", range_end="0002",
+             partition_key="p"),
+    ]
+    dc._ENC_PREPS.clear()
+    seed = header()
+    expected = dc.encode_unfiltereds(recs, seed)
+    seed.min_timestamp += 1000
+    seed.min_local_deletion_time += 1000
+    seed.min_ttl += 60
+    seed.clustering_types[:] = ["org.apache.cassandra.db.marshal.UTF8Type"]
+    fresh = header()
+    assert dc._encode_prep(fresh) is dc._encode_prep(header())
+    assert dc.encode_unfiltereds(recs, fresh) == expected
+
+

@@ -465,6 +465,19 @@ def test_snapshot_and_backup_dirs_excluded(spark, tmp_path):
     assert len(rows) == 2  # live copies only, not 6
     assert {r.keyspace for r in rows} == {"ks1"}
     assert {r.table_name for r in rows} == {"tab"}
+    # the driver-side inventory (lookups, Statistics.db coverage) applies
+    # the same exclusion and the same -f semantics
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        sstable_inventory,
+    )
+
+    inv = sstable_inventory(spark, str(root))
+    assert [s.path("Index.db") for s in inv] == [
+        f"file:{live}/nb-00001-big-Index.db"
+    ]
+    assert sstable_inventory(spark, str(root), ["nb-00001-big-Data.db"]) == inv
+    assert sstable_inventory(spark, str(root), ["nb-00002-big-Data.db"]) == []
+    assert sstable_inventory(spark, str(snap)) == []
 
 
 def test_non_utf8_key_renders_hex(spark, tmp_path):
