@@ -42,7 +42,7 @@ scans (the ``bloom_checks`` frame makes that a one-query audit —
 mismatch, loudly visible, since a correctly-read bloom filter can never
 false-negative).
 
-Scale shape: one task per (Filter.db, Index.db) sibling pair; the filter
+Scale shape: one read per (Filter.db, Index.db) sibling pair; the filter
 is ~1.2 GB for 1e9 keys at 10 bits/key — within one task's budget, and
 the index side streams in 8 MB chunks, so task memory is bounded by
 filter size, never index size.
@@ -51,7 +51,6 @@ filter size, never index size.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -360,69 +359,36 @@ def bloom_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     is impossible for a correctly written+read bloom filter (no false
     negatives), so any shortfall means corruption or a byte-order
     mismatch — the one-query audit the module docstring prescribes before
-    trusting a foreign directory. One task per sstable; the index side
+    trusting a foreign directory. One read per sstable; the index side
     streams in 8 MB chunks."""
-    import os as _os
-
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        _filter_files,
-        _is_local_root,
-        _local_path,
-        _parse_filename,
         stream_parse_index_db,
     )
 
-    if not _is_local_root(root):
-        raise ValueError(f"bloom_checks needs a POSIX-visible root; got {root!r}")
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Filter.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "Filter.db",
-    )
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path, component="Filter.db")
-                local = _local_path(path)
-                with open(local, "rb") as f:
-                    filt = parse_filter_db(f.read(), source=path)
-                index_path = local[: -len("Filter.db")] + "Index.db"
-                if not _os.path.exists(index_path):
-                    raise ValueError(
-                        f"Filter.db without sibling Index.db: {path}"
-                    )
-                total = 0
-                present = 0
-                with open(index_path, "rb") as f:
-                    for key, _position in stream_parse_index_db(
-                        f, version=ver, source=index_path
-                    ):
-                        total += 1
-                        if filt.might_contain(key):
-                            present += 1
-                rows.append(
-                    (ks, tb, ss, filt.hash_count, total, present,
-                     present == total)
-                )
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id", "hash_count",
-                         "key_count", "present_count", "all_present"],
+    def check(sst) -> list[tuple]:
+        with open(sst.local("Filter.db"), "rb") as f:
+            filt = parse_filter_db(f.read(), source=sst.path("Filter.db"))
+        index_path = sst.local("Index.db")
+        if index_path is None:
+            raise ValueError(
+                f"Filter.db without sibling Index.db: {sst.path('Filter.db')}"
             )
-            pdf_out["hash_count"] = pdf_out["hash_count"].astype("int32")
-            for c in ("key_count", "present_count"):
-                pdf_out[c] = pdf_out[c].astype("int64")
-            yield pdf_out
+        total = 0
+        present = 0
+        with open(index_path, "rb") as f:
+            for key, _position in stream_parse_index_db(
+                f, version=sst.version, source=index_path
+            ):
+                total += 1
+                if filt.might_contain(key):
+                    present += 1
+        return [(filt.hash_count, total, present, present == total)]
 
-    return files.mapInPandas(scan, BLOOM_CHECK_SCHEMA)
+    return sstable_pass(
+        spark, "bloom_checks", root, filenames, ("Filter.db",), check,
+        BLOOM_CHECK_SCHEMA,
+    )
 
 
 # --------------------------------------------------------------------------

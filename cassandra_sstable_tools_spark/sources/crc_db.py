@@ -19,17 +19,15 @@ On-disk layout implemented (big format)::
 N is implicit: (len(file) - 4) / 4, and must equal
 ceil(data_length / chunkLength) — validated against the actual Data.db.
 
-Scale shape: one task per sstable, streaming chunk-at-a-time reads —
+Scale shape: one read per sstable, streaming chunk-at-a-time reads —
 task memory is one chunk (64 KB default) regardless of Data.db size,
 same bound as the digest scan.
 """
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -99,66 +97,35 @@ def crc_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     damaged (matched of chunks). The stored chunk count must equal
     ceil(data_length / chunk_length) or the row fails loud — a truncated
     Data.db can't masquerade as having fewer chunks."""
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        _filter_files,
-        _is_local_root,
-        _local_path,
-        _parse_filename,
-    )
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 
-    if not _is_local_root(root):
-        raise ValueError(f"crc_checks needs a POSIX-visible root; got {root!r}")
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-CRC.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "CRC.db",
-    )
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                ks, tb, ss, _ver = _parse_filename(path, component="CRC.db")
-                local = _local_path(path)
-                with open(local, "rb") as f:
-                    chunk_length, crcs = parse_crc_db(f.read(), source=path)
-                data_path = local[: -len("CRC.db")] + "Data.db"
-                if not os.path.exists(data_path):
-                    raise ValueError(f"CRC.db without sibling Data.db: {path}")
-                data_len = os.path.getsize(data_path)
-                expected_chunks = (data_len + chunk_length - 1) // chunk_length
-                if expected_chunks != len(crcs):
-                    raise ValueError(
-                        f"corrupt CRC.db {path}: {len(crcs)} CRCs for a "
-                        f"{data_len}-byte Data.db at chunk length "
-                        f"{chunk_length} (expected {expected_chunks})"
-                    )
-                matched = 0
-                with open(data_path, "rb") as f:
-                    for stored in crcs:
-                        chunk = f.read(chunk_length)
-                        if (zlib.crc32(chunk) & 0xFFFFFFFF) == stored:
-                            matched += 1
-                rows.append(
-                    (ks, tb, ss, chunk_length, len(crcs), matched,
-                     matched == len(crcs))
-                )
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id",
-                         "chunk_length", "chunks", "matched", "crc_ok"],
+    def check(sst) -> list[tuple]:
+        path = sst.path("CRC.db")
+        with open(sst.local("CRC.db"), "rb") as f:
+            chunk_length, crcs = parse_crc_db(f.read(), source=path)
+        data_path = sst.local("Data.db")
+        if data_path is None:
+            raise ValueError(f"CRC.db without sibling Data.db: {path}")
+        data_len = sst.length("Data.db")
+        expected_chunks = (data_len + chunk_length - 1) // chunk_length
+        if expected_chunks != len(crcs):
+            raise ValueError(
+                f"corrupt CRC.db {path}: {len(crcs)} CRCs for a "
+                f"{data_len}-byte Data.db at chunk length "
+                f"{chunk_length} (expected {expected_chunks})"
             )
-            for c in ("chunk_length", "chunks", "matched"):
-                pdf_out[c] = pdf_out[c].astype("int32")
-            yield pdf_out
+        matched = 0
+        with open(data_path, "rb") as f:
+            for stored in crcs:
+                chunk = f.read(chunk_length)
+                if (zlib.crc32(chunk) & 0xFFFFFFFF) == stored:
+                    matched += 1
+        return [(chunk_length, len(crcs), matched, matched == len(crcs))]
 
-    return files.mapInPandas(scan, CRC_CHECK_SCHEMA)
+    return sstable_pass(
+        spark, "crc_checks", root, filenames, ("CRC.db",), check,
+        CRC_CHECK_SCHEMA,
+    )
 
 
 # --------------------------------------------------------------------------

@@ -61,7 +61,7 @@ parses the fields AND then seeks to the declared body end, which on a real
 file is a no-op and makes skipping corrupt-tolerant the way Cassandra's
 own skippers position.
 
-Spark shape / 100 TB notes: one task per sstable (file-count parallelism).
+Spark shape / 100 TB notes: one task per (sstable, shard) (``data_cells``).
 Per task: Statistics.db HEADER parse (KB), a streaming Index.db pass kept
 as a position array (8 bytes/partition), then per-partition point reads of
 [position, next position) -- task memory bounds at one partition block
@@ -114,9 +114,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
-    _filter_files,
-    _local_path,
-    _parse_filename,
     read_unsigned_vint,
     render_key,
     render_typed,
@@ -1979,27 +1976,30 @@ def partition_budget_ok(psize: int, records: list[dict]) -> bool:
 # --------------------------------------------------------------------------
 
 
-def _scan_plan(index_path: str, shard: int, n_shards: int):
+def _scan_plan(sst, shard: int, n_shards: int):
     """The shared setup of a per-task sstable scan: component checks,
     Statistics.db header parse, Index.db position pass (summary-seek
-    sliced when sharded). Returns None when the sstable lacks Data.db /
+    sliced when sharded). ``sst`` is an ``inventory.SSTable`` or the path
+    of an Index.db. Returns None when the sstable lacks Data.db /
     Statistics.db (the skip rule) or the shard is empty, else
     ``(ks, tb, ss, header, positions, lo, hi, npos, tail, data_path,
-    comp_path, cmarshal)``. Extracted verbatim from the old
-    ``scan_sstable_cell_rows`` body so the tuple and columnar paths share
-    one setup (same side-effect order, same errors)."""
+    comp_path, cmarshal)``; the tuple and columnar paths share this one
+    setup (same side-effect order, same errors)."""
+    from cassandra_sstable_tools_spark.sources.inventory import SSTable
     from cassandra_sstable_tools_spark.sources.statistics_db import (
         parse_serialization_header,
     )
 
-    path = index_path
-    ks, tb, ss, ver = _parse_filename(path)
-    local = _local_path(path)
-    base = local[: -len("Index.db")]
-    data_path = base + "Data.db"
-    stats_path = base + "Statistics.db"
-    comp_path = base + "CompressionInfo.db"
-    if not os.path.exists(data_path) or not os.path.exists(stats_path):
+    if isinstance(sst, str):
+        sst = SSTable.at(sst)
+    path = sst.path("Index.db")
+    ks, tb, ss = sst.identity
+    ver = sst.version
+    local = sst.local("Index.db")
+    data_path = sst.local("Data.db")
+    stats_path = sst.local("Statistics.db")
+    comp_path = sst.local("CompressionInfo.db")
+    if data_path is None or stats_path is None:
         return None
     with open(stats_path, "rb") as f:
         header = parse_serialization_header(
@@ -2008,8 +2008,8 @@ def _scan_plan(index_path: str, shard: int, n_shards: int):
     # positions are computed BEFORE the Data.db handle opens: a corrupt
     # Summary/Index parse raises here, and an open handle must not leak
     # across that raise (review finding)
-    summary_path = base + "Summary.db"
-    if n_shards > 1 and os.path.exists(summary_path):
+    summary_path = sst.local("Summary.db")
+    if n_shards > 1 and summary_path is not None:
         # summary-seek slice (r08 s2): shard boundaries are SAMPLED
         # summary entries, whose stored positions are Index.db offsets --
         # each shard streams only ITS index byte range instead of
@@ -2126,10 +2126,10 @@ def scan_sstable_cell_rows(
     -- the per-task body shared by the point/span read paths and, as the
     no-C fallback, the ``data_cells`` scan and the Python DataSource read
     path (``sources/pyds.py``; their fast path is
-    ``scan_sstable_cell_batches``). ``index_path`` may be a ``file:`` URI
-    or a POSIX path. Returns [] when the sstable lacks the components
-    cell decoding needs (Data.db / Statistics.db -- the skip rule);
-    raises, naming file and byte offset, on corruption.
+    ``scan_sstable_cell_batches``). ``index_path`` may be a ``file:`` URI,
+    a POSIX path or an ``inventory.SSTable``. Returns [] when the sstable
+    lacks the components cell decoding needs (Data.db / Statistics.db --
+    the skip rule); raises, naming file and byte offset, on corruption.
 
     Sharding (``n_shards > 1``): contiguous position ranges. With a
     Summary.db present the shard SEEKS to its sampled index slice and
@@ -2295,127 +2295,61 @@ def data_cells(
     - sstables without a Statistics.db are skipped (no schema, no codec);
     - sstables without a Data.db are skipped;
     - corruption inside a block raises, naming file and byte offset."""
-    if not root.startswith(("/", "file:")):
-        raise ValueError(
-            f"data_cells needs a POSIX-visible root (point seeks); got {root!r}"
-        )
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        live_sstables,
+        run_units,
+    )
+
     if shards_per_sstable is not None and shards_per_sstable < 1:
         raise ValueError("shards_per_sstable must be >= 1")
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Index.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "Index.db",
+    ssts = live_sstables(
+        spark, "data_cells", root, filenames,
+        ("Index.db", "Data.db", "Statistics.db"),
     )
-    n_shards = shards_per_sstable
-    if n_shards is None:
+    if shards_per_sstable is None:
         # Adaptive default (optimization guide S2: scale-adaptive
         # partitioning, stragglers): shard count per sstable =
-        # ceil(Data.db bytes / auto target), decided driver-side from the
-        # same listing the count() below would have paid anyway. The root
-        # is POSIX-visible by contract (checked above), so a driver
-        # getsize is legal; a missing Data.db keeps one no-op shard (the
-        # scan's skip rule returns [] for it either way). Shard
-        # invariance of the union is pinned by test, so results are
-        # bit-identical to the old one-task-per-sstable default.
-        paths = sorted(r["path"] for r in files.collect())
-        sizes = []
-        for p in paths:
-            base = _local_path(p)[: -len("Index.db")]
-            try:
-                sizes.append(os.path.getsize(base + "Data.db"))
-            except OSError:
-                sizes.append(0)
-        target = _auto_split_bytes(spark, sum(sizes))
-        rows_ps = []
-        for p, sz in zip(paths, sizes):
-            ns = max(1, min(256, -(-sz // target)))
-            rows_ps.extend((p, s, ns) for s in range(ns))
-        files = spark.createDataFrame(
-            rows_ps, "path string, shard int, n_shards int"
-        ).repartitionByRange(
-            max(1, len(rows_ps)), F.col("path"), F.col("shard")
+        # ceil(Data.db bytes / auto target), from the inventory's own
+        # file lengths. Shard invariance of the union is pinned by test,
+        # so results are bit-identical to one task per sstable.
+        target = _auto_split_bytes(
+            spark, sum(s.length("Data.db") for s in ssts)
         )
-    elif n_shards > 1:
-        # one (path, shard) row per task. The partition COUNT must be
-        # explicit: a column-only repartition is AQE-coalescible, and AQE
-        # sizes by BYTES -- 36 path strings look like one tiny partition,
-        # so it serialized every shard into ONE task (measured: 3.2s ->
-        # 22s at sf0.1; the sharding feature was silently defeating its
-        # own parallelism). repartition(num, cols) is REPARTITION_BY_NUM,
-        # which AQE leaves alone. The count() is a metadata-only listing.
-        n_files = files.count()
-        # repartitionByRange, not hash: with exactly n_files*n_shards
-        # distinct (path, shard) tuples, range boundaries give every task
-        # its own tuple, while hash placement could co-locate two shards
-        # and idle a slot (r08 ADVICE #5). The explicit COUNT keeps AQE
-        # from byte-coalescing the tiny rows (the r08 s2 lesson).
-        files = files.select(
-            "path", F.explode(F.sequence(F.lit(0), F.lit(n_shards - 1)))
-            .alias("shard"), F.lit(n_shards).alias("n_shards"),
-        ).repartitionByRange(
-            max(1, n_files * n_shards), F.col("path"), F.col("shard")
-        )
+        counts = [
+            max(1, min(256, -(-s.length("Data.db") // target))) for s in ssts
+        ]
     else:
-        # one task per sstable even unsharded: the binaryFile LISTING
-        # packs path rows into size-binned partitions (measured: 12 files
-        # in 6 partitions at sf0.1 -> half the decode parallelism, and the
-        # bin pairing can co-locate the two biggest files). Explicit count
-        # so AQE cannot byte-coalesce the tiny rows (the r08 s2 lesson);
-        # the count() is a metadata-only listing. Measured 5.7s -> ~4s on
-        # the full sf0.1 decode.
-        n_files = files.count()
-        files = files.withColumn("shard", F.lit(0)).withColumn(
-            "n_shards", F.lit(1)
-        ).repartitionByRange(max(1, n_files), F.col("path"))
-
-    schema = DATA_CELLS_VALUES_SCHEMA if with_values else DATA_CELLS_SCHEMA
-
-    def scan(batches) -> Iterator:
-        for rb in batches:
-            names = rb.schema.names
-            for path, shard, ns in zip(
-                rb.column(names.index("path")).to_pylist(),
-                rb.column(names.index("shard")).to_pylist(),
-                rb.column(names.index("n_shards")).to_pylist(),
-            ):
-                yield from scan_sstable_cell_batches(
-                    path, int(shard), int(ns), with_values=with_values
-                )
-
-    return files.mapInArrow(scan, schema)
+        counts = [shards_per_sstable] * len(ssts)
+    # one task per (sstable, shard): a few huge sstables never gate the
+    # stage on one long task
+    units = [
+        [(s, shard, ns)] for s, ns in zip(ssts, counts) for shard in range(ns)
+    ]
+    return run_units(
+        spark, units,
+        lambda unit: scan_sstable_cell_batches(*unit, with_values=with_values),
+        DATA_CELLS_VALUES_SCHEMA if with_values else DATA_CELLS_SCHEMA,
+    )
 
 
 def decodable_sstables(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     """(keyspace, table_name, sstable_id) of cell-DECODABLE sstables: a
     Data.db and a Statistics.db present (compressed sstables decode
-    through the LZ4 chunk layer since v8). Two component listings, each
-    1 row per sstable; joins always broadcast-able."""
+    through the LZ4 chunk layer since v8). One driver-side inventory
+    filter, 1 row per sstable; joins always broadcast-able."""
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        local_frame,
+        sstable_inventory,
+    )
 
-    def listing(component: str) -> DataFrame:
-        files = _filter_files(
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", f"*-{component}")
-            .option("recursiveFileLookup", "true")
-            .load(root)
-            .select("path"),
-            filenames,
-            component,
-        )
-        pieces = "split(element_at(split(path, '/'), -1), '-')"
-        return files.select(
-            F.expr("element_at(split(path, '/'), -3)").alias("keyspace"),
-            F.expr("element_at(split(path, '/'), -2)").alias("table_name"),
-            F.expr(
-                f"array_join(slice({pieces}, 2, size({pieces}) - 3), '-')"
-            ).alias("sstable_id"),
-        )
-
-    keys = ["keyspace", "table_name", "sstable_id"]
-    return listing("Data.db").join(listing("Statistics.db"), keys, "semi")
+    return local_frame(
+        spark,
+        [
+            s.identity for s in sstable_inventory(spark, root, filenames)
+            if {"Data.db", "Statistics.db"} <= s.components
+        ],
+        "keyspace string, table_name string, sstable_id string",
+    )
 
 
 # --------------------------------------------------------------------------

@@ -27,25 +27,21 @@ Scope limits, by design and documented:
   zero-length partition sharing its offset with its successor (dirty
   metadata), and a real reader performs the same sanity check.
 
-Spark shape / 100 TB notes: one task per sstable (file-count parallelism,
-like every reader here); per task the work is O(#partitions) point reads
-at ~26 bytes each -- IO-bound on seeks, no contents ever shipped whole.
+Spark shape / 100 TB notes: one read per sstable (the shared
+``inventory.sstable_pass``); per sstable the work is O(#partitions) point
+reads at ~26 bytes each -- IO-bound on seeks, no contents ever shipped
+whole.
 Output is partition-tombstone rows only (rare grain), always small.
 """
 
 from __future__ import annotations
 
-import os
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
-    _filter_files,
-    _local_path,
-    _parse_filename,
     render_key,
     stream_parse_index_db,
 )
@@ -100,66 +96,31 @@ def partition_deletions(
     headers (offsets from the sibling Index.db; compressed sstables read
     through the CompressionInfo chunk map + LZ4 block decode -- v8 closed
     the former uncompressed-only scope). LIVE partitions produce no row."""
-    if not root.startswith(("/", "file:")):
-        raise ValueError(
-            "partition_deletions needs a POSIX-visible root (point seeks); "
-            f"got {root!r}"
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
+    from cassandra_sstable_tools_spark.sources.lz4_block import open_data_file
+
+    def scan(sst) -> list[tuple]:
+        rows = []
+        dat, _ = open_data_file(
+            sst.local("Data.db"), sst.local("CompressionInfo.db"), sst.version
         )
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Index.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "Index.db",
+        try:
+            with open(sst.local("Index.db"), "rb") as idx:
+                for key, position in stream_parse_index_db(
+                    idx, version=sst.version, source=sst.path("Index.db")
+                ):
+                    got = read_partition_header(dat, position, key)
+                    if got is None or got == (LIVE_LDT, LIVE_MFDA):
+                        continue
+                    rows.append((render_key(key), *got))
+        finally:
+            dat.close()
+        return rows
+
+    return sstable_pass(
+        spark, "partition_deletions", root, filenames,
+        ("Index.db", "Data.db"), scan, PARTITION_DELETIONS_SCHEMA,
     )
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        from cassandra_sstable_tools_spark.sources.lz4_block import (
-            open_data_file,
-        )
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                local = _local_path(path)
-                data_path = local[: -len("Index.db")] + "Data.db"
-                comp_path = local[: -len("Index.db")] + "CompressionInfo.db"
-                if not os.path.exists(data_path):
-                    continue  # absent Data.db: documented exclusion
-                dat, _ = open_data_file(data_path, comp_path, ver)
-                try:
-                    with open(local, "rb") as idx:
-                        for key, position in stream_parse_index_db(
-                            idx, version=ver, source=path
-                        ):
-                            got = read_partition_header(dat, position, key)
-                            if got is None:
-                                continue
-                            ldt, mfda = got
-                            if (ldt, mfda) == (LIVE_LDT, LIVE_MFDA):
-                                continue
-                            rows.append(
-                                (ks, tb, ss, render_key(key), ldt, mfda)
-                            )
-                finally:
-                    dat.close()
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=[
-                    "keyspace", "table_name", "sstable_id", "partition_key",
-                    "local_deletion_time", "marked_for_delete_at",
-                ],
-            )
-            for c in ("local_deletion_time", "marked_for_delete_at"):
-                pdf_out[c] = pdf_out[c].astype("int64")
-            yield pdf_out
-
-    return files.mapInPandas(scan, PARTITION_DELETIONS_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -269,53 +230,26 @@ DIGEST_SCHEMA = (
 def digest_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     """(sstable, digest_ok) for every sstable with BOTH a Data.db and a
     Digest.crc32: recompute the file CRC32 in bounded-memory chunks and
-    compare with the stored digest. One task per sstable; the whole
+    compare with the stored digest. One read per sstable; the whole
     Data.db is read (that is what verification means), contents never
-    shipped -- each task reduces its file to one boolean. A malformed
+    shipped -- each read reduces its file to one boolean. A malformed
     digest file is loud (it means corruption too)."""
-    if not root.startswith(("/", "file:")):
-        raise ValueError(
-            f"digest_checks needs a POSIX-visible root; got {root!r}"
-        )
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Digest.crc32")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "Digest.crc32",
-    )
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                ks, tb, ss, _ = _parse_filename(
-                    path, component="Digest.crc32"
-                )
-                local = _local_path(path)
-                data_path = local[: -len("Digest.crc32")] + "Data.db"
-                if not os.path.exists(data_path):
-                    continue
-                with open(local, "rb") as f:
-                    text = f.read(64).decode("ascii", "replace").strip()
-                if not text.isdigit():
-                    raise ValueError(
-                        f"corrupt Digest.crc32 {path}: not a decimal CRC "
-                        f"({text[:20]!r})"
-                    )
-                rows.append(
-                    (ks, tb, ss, file_crc32(data_path) == int(text))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id", "digest_ok"],
+    def check(sst) -> list[tuple]:
+        with open(sst.local("Digest.crc32"), "rb") as f:
+            text = f.read(64).decode("ascii", "replace").strip()
+        if not text.isdigit():
+            raise ValueError(
+                f"corrupt Digest.crc32 {sst.path('Digest.crc32')}: not a "
+                f"decimal CRC ({text[:20]!r})"
             )
+        return [(file_crc32(sst.local("Data.db")) == int(text),)]
 
-    return files.mapInPandas(scan, DIGEST_SCHEMA)
+    return sstable_pass(
+        spark, "digest_checks", root, filenames, ("Digest.crc32", "Data.db"),
+        check, DIGEST_SCHEMA,
+    )
 
 
 def digest_check_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:

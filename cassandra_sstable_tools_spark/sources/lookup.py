@@ -54,16 +54,13 @@ this module implements them from the public on-disk formats.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
-    _is_local_root,
-    _local_path,
-    _parse_filename,
     read_unsigned_vint,
 )
 
@@ -245,7 +242,7 @@ def _merge_regions(windows: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return [(s, e) for s, e in merged]
 
 
-def _sstable_ctx(index_local: str, ver: str) -> dict | None:
+def _sstable_ctx(sst) -> dict | None:
     """Open one sstable's read-path components: schema header + partitioner
     comparator (required -- Statistics.db), bloom filter and summary
     (optional), index size. None when cell decoding is impossible
@@ -259,10 +256,9 @@ def _sstable_ctx(index_local: str, ver: str) -> dict | None:
         parse_summary_db,
     )
 
-    base = index_local[: -len("Index.db")]
-    data_path = base + "Data.db"
-    stats_path = base + "Statistics.db"
-    if not os.path.exists(data_path) or not os.path.exists(stats_path):
+    ver = sst.version
+    stats_path = sst.local("Statistics.db")
+    if sst.local("Data.db") is None or stats_path is None:
         return None
     with open(stats_path, "rb") as f:
         stats_content = f.read()
@@ -271,24 +267,24 @@ def _sstable_ctx(index_local: str, ver: str) -> dict | None:
         stats_content, version=ver, source=stats_path
     )
     filt = None
-    filter_path = base + "Filter.db"
-    if os.path.exists(filter_path):
+    filter_path = sst.local("Filter.db")
+    if filter_path is not None:
         with open(filter_path, "rb") as f:
             filt = parse_filter_db(f.read(), source=filter_path)
     summ = None
-    summary_path = base + "Summary.db"
-    if os.path.exists(summary_path):
+    summary_path = sst.local("Summary.db")
+    if summary_path is not None:
         with open(summary_path, "rb") as f:
             summ = parse_summary_db(f.read(), source=summary_path)
     return {
-        "data": data_path,
-        "comp": base + "CompressionInfo.db",
+        "data": sst.local("Data.db"),
+        "comp": sst.local("CompressionInfo.db"),
         "header": header,
         "partitioner": stats.partitioner,
         "decorate": key_decorator(stats.partitioner),
         "filter": filt,
         "summary": summ,
-        "index_size": os.path.getsize(index_local),
+        "index_size": os.path.getsize(sst.local("Index.db")),
     }
 
 
@@ -310,9 +306,7 @@ def _summary_floor(summ, decorate, dk) -> int:
 
 
 def _lookup_in_sstable(
-    index_local: str,
-    path: str,
-    ver: str,
+    sst,
     targets: list[tuple[str, bytes]],
     chunk_bytes: int = 8 << 10,
 ) -> tuple[list[dict], list[tuple]] | None:
@@ -328,7 +322,9 @@ def _lookup_in_sstable(
         render_typed as _render_typed,
     )
 
-    ctx = _sstable_ctx(index_local, ver)
+    index_local, path = sst.local("Index.db"), sst.path("Index.db")
+    ver = sst.version
+    ctx = _sstable_ctx(sst)
     if ctx is None:
         return None
     data_path, comp_path, header = ctx["data"], ctx["comp"], ctx["header"]
@@ -512,51 +508,6 @@ def _normalize_keys(keys, key_type=None) -> list[tuple[str, bytes]]:
     return out
 
 
-def _sstable_pass(
-    spark: SparkSession, root: str, filenames, read, schema: StructType
-) -> DataFrame:
-    """Run ``read(index_local, path, version)`` once for every live sstable
-    with an Index.db, in ONE Spark stage, and emit its row tuples (``schema``
-    column order after the keyspace/table_name/sstable_id prefix).
-
-    The sstable list is the driver-side inventory (no listing job, no
-    count, no shuffle); ``min(#sstables, defaultParallelism)`` tasks each
-    take every n-th sstable of it, so every read path runs exactly once
-    per sstable and a point read costs one job end to end."""
-    from cassandra_sstable_tools_spark.sources.data_cells import _cell_batches
-    from cassandra_sstable_tools_spark.sources.inventory import (
-        sstable_inventory,
-    )
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if not _is_local_root(root):
-        raise ValueError(
-            f"partition_lookup needs a POSIX-visible root (point seeks); "
-            f"got {root!r}"
-        )
-    paths = [
-        s.path("Index.db")
-        for s in sstable_inventory(spark, root, filenames)
-        if "Index.db" in s.components
-    ]
-    n = max(1, min(len(paths), spark.sparkContext.defaultParallelism))
-    pa_schema = to_arrow_schema(schema)
-
-    def run(batches) -> Iterator:
-        for rb in batches:
-            for task in rb.column(0).to_pylist():
-                rows: list[tuple] = []
-                for path in paths[task::n]:
-                    ks, tb, ss, ver = _parse_filename(path)
-                    rows.extend(
-                        (ks, tb, ss, *r)
-                        for r in read(_local_path(path), path, ver)
-                    )
-                yield from _cell_batches(rows, pa_schema)
-
-    return spark.range(0, n, 1, n).mapInArrow(run, schema)
-
-
 def _fused_schema(audit_ddl: str) -> StructType:
     """One frame for a read pass: the identity prefix, then a ``record``
     struct (data_cells columns) OR an ``audit`` struct per row."""
@@ -628,11 +579,10 @@ def point_read(
     sstable for the requested keys: each row carries either a decoded
     record or the (sstable, key) audit (``records_of`` / ``audits_of``)."""
     targets = _normalize_keys(keys, key_type)
-    return _sstable_pass(
-        spark, root, filenames,
-        lambda local, path, ver: _fused_rows(
-            _lookup_in_sstable(local, path, ver, targets,
-                               chunk_bytes=chunk_bytes),
+    return sstable_pass(
+        spark, "point_read", root, filenames, ("Index.db",),
+        lambda sst: _fused_rows(
+            _lookup_in_sstable(sst, targets, chunk_bytes=chunk_bytes),
             _POINT_AUDIT_KEYS,
         ),
         _fused_schema(LOOKUP_AUDIT_SCHEMA),
@@ -689,29 +639,28 @@ def summary_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     to run ahead of trusting a foreign directory, like bloom_checks.
     Cost: one seek + one entry parse per sampled entry (~keys/interval),
     index size never read."""
-    return _sstable_pass(
-        spark, root, filenames, _summary_check_in_sstable,
-        StructType.fromDDL(SUMMARY_CHECK_SCHEMA),
+    return sstable_pass(
+        spark, "summary_checks", root, filenames, ("Index.db", "Summary.db"),
+        _summary_check_in_sstable, SUMMARY_CHECK_SCHEMA,
     )
 
 
-def _summary_check_in_sstable(index_local: str, path: str, ver: str):
-    """[(sampled_entries, verified, all_verified)] for one sstable, or []
-    when it has no Summary.db."""
+def _summary_check_in_sstable(sst):
+    """[(sampled_entries, verified, all_verified)] for one sstable."""
     from cassandra_sstable_tools_spark.sources.summary_db import (
         parse_summary_db,
     )
 
-    summary_path = index_local[: -len("Index.db")] + "Summary.db"
-    if not os.path.exists(summary_path):
-        return []
+    summary_path = sst.local("Summary.db")
     with open(summary_path, "rb") as f:
         summ = parse_summary_db(f.read(), source=summary_path)
     verified = 0
-    with open(index_local, "rb") as f:
+    with open(sst.local("Index.db"), "rb") as f:
         for key, idx_off in summ.entries:
             try:
-                ent = _IndexCursor(f, ver, path, idx_off).next_entry()
+                ent = _IndexCursor(
+                    f, sst.version, sst.path("Index.db"), idx_off
+                ).next_entry()
             except ValueError:
                 continue  # mid-entry offset: not a boundary
             if ent is not None and ent[0] == key:
@@ -747,9 +696,7 @@ RANGE_AUDIT_SCHEMA = (
 
 
 def _range_in_sstable(
-    index_local: str,
-    path: str,
-    ver: str,
+    sst,
     lo_b: bytes,
     hi_b: bytes,
     chunk_bytes: int = 64 << 10,
@@ -773,8 +720,10 @@ def _range_in_sstable(
         render_typed,
     )
 
+    index_local, path = sst.local("Index.db"), sst.path("Index.db")
+    ver = sst.version
     if ctx is None:
-        ctx = _sstable_ctx(index_local, ver)
+        ctx = _sstable_ctx(sst)
     if ctx is None:
         return None
     if ctx["partitioner"].rsplit(".", 1)[-1] != "ByteOrderedPartitioner":
@@ -863,9 +812,7 @@ def _range_in_sstable(
 
 
 def _token_range_in_sstable(
-    index_local: str,
-    path: str,
-    ver: str,
+    sst,
     token_lo: int,
     token_hi: int,
     chunk_bytes: int = 64 << 10,
@@ -889,7 +836,9 @@ def _token_range_in_sstable(
         render_typed,
     )
 
-    ctx = _sstable_ctx(index_local, ver)
+    index_local, path = sst.local("Index.db"), sst.path("Index.db")
+    ver = sst.version
+    ctx = _sstable_ctx(sst)
     if ctx is None:
         return None
     if ctx["partitioner"].rsplit(".", 1)[-1] != "Murmur3Partitioner":
@@ -993,10 +942,10 @@ def token_range_read(
     counters (``records_of`` / ``audits_of``)."""
     if token_lo > token_hi:
         raise ValueError(f"empty token range: {token_lo} > {token_hi}")
-    return _sstable_pass(
-        spark, root, filenames,
-        lambda local, path, ver: _fused_rows(
-            _token_range_in_sstable(local, path, ver, token_lo, token_hi,
+    return sstable_pass(
+        spark, "token_range_read", root, filenames, ("Index.db",),
+        lambda sst: _fused_rows(
+            _token_range_in_sstable(sst, token_lo, token_hi,
                                     chunk_bytes=chunk_bytes),
             _RANGE_AUDIT_KEYS,
         ),
@@ -1050,11 +999,10 @@ def range_read(
     lo_b, hi_b = _normalize_bound(lo, key_type), _normalize_bound(hi, key_type)
     if lo_b > hi_b:
         raise ValueError(f"empty range: lo {lo!r} > hi {hi!r}")
-    return _sstable_pass(
-        spark, root, filenames,
-        lambda local, path, ver: _fused_rows(
-            _range_in_sstable(local, path, ver, lo_b, hi_b,
-                              chunk_bytes=chunk_bytes),
+    return sstable_pass(
+        spark, "range_read", root, filenames, ("Index.db",),
+        lambda sst: _fused_rows(
+            _range_in_sstable(sst, lo_b, hi_b, chunk_bytes=chunk_bytes),
             _RANGE_AUDIT_KEYS,
         ),
         _fused_schema(RANGE_AUDIT_SCHEMA),

@@ -796,10 +796,11 @@ class _RangeFile:
         self.reader.f.close()
 
 
-def open_data_file(data_path: str, comp_path: str, version: str):
+def open_data_file(data_path: str, comp_path: str | None, version: str):
     """Open a Data.db for logical (uncompressed-offset) point reads:
-    plain file when no CompressionInfo.db sibling exists, else a
-    chunk-decoding facade. Returns (file-like, logical data length)."""
+    plain file when no CompressionInfo.db sibling exists (``comp_path``
+    None or absent), else a chunk-decoding facade. Returns (file-like,
+    logical data length)."""
     import os
 
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
@@ -807,7 +808,7 @@ def open_data_file(data_path: str, comp_path: str, version: str):
     )
 
     f = open(data_path, "rb")
-    if not os.path.exists(comp_path):
+    if comp_path is None or not os.path.exists(comp_path):
         return f, os.path.getsize(data_path)
     try:
         with open(comp_path, "rb") as cf:

@@ -533,20 +533,18 @@ class SSTableCellReader(DataSourceReader):
         from cassandra_sstable_tools_spark.sources.data_cells import (
             scan_sstable_cell_rows,
         )
+        from cassandra_sstable_tools_spark.sources.inventory import SSTable
         from cassandra_sstable_tools_spark.sources.lookup import (
             _range_in_sstable,
             _sstable_ctx,
         )
         from cassandra_sstable_tools_spark.sources.sstable_binary import (
-            _parse_filename,
-        )
-
-        from cassandra_sstable_tools_spark.sources.sstable_binary import (
             uses_default_key_render,
         )
 
-        ks, tb, ss, ver = _parse_filename(partition.path)
-        ctx = _sstable_ctx(partition.path, ver)
+        sst = SSTable.at(partition.path)
+        ks, tb, ss = sst.identity
+        ctx = _sstable_ctx(sst)
         if ctx is None:
             return
         if (
@@ -560,9 +558,7 @@ class SSTableCellReader(DataSourceReader):
             yield from scan_sstable_cell_rows(partition.path)
             return
         for lo_b, hi_b in partition.spans:
-            got = _range_in_sstable(
-                partition.path, partition.path, ver, lo_b, hi_b, ctx=ctx
-            )
+            got = _range_in_sstable(sst, lo_b, hi_b, ctx=ctx)
             if got is None:
                 return
             _audit, records = got
@@ -580,17 +576,18 @@ class SSTableCellReader(DataSourceReader):
         from cassandra_sstable_tools_spark.sources.data_cells import (
             scan_sstable_cell_rows,
         )
+        from cassandra_sstable_tools_spark.sources.inventory import SSTable
         from cassandra_sstable_tools_spark.sources.lookup import (
             _lookup_in_sstable,
             _sstable_ctx,
         )
         from cassandra_sstable_tools_spark.sources.sstable_binary import (
-            _parse_filename,
             render_typed,
         )
 
-        ks, tb, ss, ver = _parse_filename(partition.path)
-        ctx = _sstable_ctx(partition.path, ver)
+        sst = SSTable.at(partition.path)
+        ks, tb, ss = sst.identity
+        ctx = _sstable_ctx(sst)
         if ctx is None:
             return
         key_type = ctx["header"].key_type
@@ -604,7 +601,7 @@ class SSTableCellReader(DataSourceReader):
             faithful.append((lit, kb))
         if not faithful:
             return
-        got = _lookup_in_sstable(partition.path, partition.path, ver, faithful)
+        got = _lookup_in_sstable(sst, faithful)
         if got is None:
             return
         _audits, records = got

@@ -40,13 +40,16 @@ Unsigned vint (Cassandra ``VIntCoding``): first byte carries N leading
 bits, extra bytes big-endian. Values < 128 are one byte.
 
 Spark shape / 100 TB notes:
-- ``spark.read.format("binaryFile")`` distributes one task per Index.db
-  file; parsing runs executor-side in an Arrow-batched ``mapInPandas``
-  (never row-at-a-time, never driver-side). Index.db is typically ~1% of
-  Data.db, and binaryFile loads a whole file per row -- a 100 GB Data.db's
-  index is ~1 GB, within executor memory; a pathological case can be
-  chunked by sstable splitting upstream (documented bound, matches the
-  reference which also streams one file per thread).
+- on a POSIX-visible root (a real data directory always is one) the
+  driver lists the directory once (``inventory.sstable_inventory``) and
+  one ``mapInArrow`` stage of min(#sstables, cores) tasks reads each
+  Index.db exactly once (``inventory.sstable_pass``), stream-parsing it
+  in 8 MB chunks executor-side -- task memory is bounded by the chunk,
+  never by the index size (a 100 GB Data.db's index is ~1 GB), and the
+  reference also streams one file per thread.
+- on ``hdfs://``/``s3a://`` roots no task can open a file by path, so the
+  sources that must run there read whole-file ``binaryFile`` content rows
+  instead (``content_scan``; one component file per row in memory).
 - the parse is sequential WITHIN a file by format necessity (entries are
   variable-length), exactly like the reference reader; parallelism is
   across files, which is how a real data directory scales (many sstables).
@@ -671,28 +674,80 @@ def _local_path(path: str) -> str:
     return path
 
 
-def _header_renderer(index_local: str, ver: str):
-    """Per-sstable typed renderer off the sibling Statistics.db header
-    (POSIX path, key_type unset); unreadable/absent header -> heuristic."""
+def content_scan(
+    spark: SparkSession, root: str, filenames, component: str, parse,
+    schema: str,
+) -> DataFrame:
+    """binaryFile scan of every ``component`` file's CONTENT under any
+    Hadoop root (``hdfs://``, ``s3a://``, a POSIX directory): one
+    whole-file row per component, ``parse(content, version, path)`` returns
+    the file's rows (``schema`` column order after the keyspace/table_name/
+    sstable_id prefix), Arrow-typed from ``schema``. The read path of the
+    sources that must also run where no filesystem is visible to a task;
+    POSIX-only sources read through ``inventory.sstable_pass``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from cassandra_sstable_tools_spark.sources.data_cells import _cell_batches
+
+    files = _filter_files(
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", f"*-{component}")
+        .option("recursiveFileLookup", "true")
+        .load(root)
+        .select("path", "content"),
+        filenames,
+        component,
+    )
+    pa_schema = to_arrow_schema(StructType.fromDDL(schema))
+
+    def scan(batches) -> Iterator:
+        for rb in batches:
+            rows: list[tuple] = []
+            for path, content in zip(
+                rb.column(0).to_pylist(), rb.column(1).to_pylist()
+            ):
+                ks, tb, ss, ver = _parse_filename(path, component=component)
+                rows.extend(
+                    (ks, tb, ss, *r) for r in parse(content, ver, path)
+                )
+            yield from _cell_batches(rows, pa_schema)
+
+    return files.mapInArrow(scan, schema)
+
+
+def _header_renderer(sst):
+    """Per-sstable typed renderer off its Statistics.db header (key_type
+    unset); absent/unreadable header -> heuristic."""
     from cassandra_sstable_tools_spark.sources.statistics_db import (
         parse_serialization_header,
     )
 
-    stats = index_local[: -len("Index.db")] + "Statistics.db"
+    stats = sst.local("Statistics.db")
+    if stats is None:
+        return render_key
     try:
         with open(stats, "rb") as f:
             kt = parse_serialization_header(
-                f.read(), version=ver, source=stats
+                f.read(), version=sst.version, source=stats
             ).key_type
-    except Exception:  # noqa: BLE001 -- absent/corrupt header: heuristic
+    except Exception:  # noqa: BLE001 -- corrupt header: heuristic
         return render_key
     return lambda b: render_typed(b, kt)
+
+
+def _index_entries(sst) -> list[tuple[bytes, int]]:
+    """Stream-parse one sstable's Index.db -> [(key, position)]."""
+    with open(sst.local("Index.db"), "rb") as f:
+        return list(stream_parse_index_db(
+            f, version=sst.version, source=sst.path("Index.db")
+        ))
 
 
 def binary_index_entries(
     spark: SparkSession, root: str, filenames=None, key_type: str | None = None
 ) -> DataFrame:
-    """Distributed Index.db scan: one task per file, Arrow-batched parse.
+    """Distributed Index.db scan, one read per file.
 
     Emits the same frame as ``tpch_adapter.index_entries`` so the whole
     pstats family runs unchanged on real binary files. ``key_type``
@@ -702,12 +757,12 @@ def binary_index_entries(
     Two physical strategies, same grammar and same loud-corruption
     contract:
     - POSIX-visible roots (a real Cassandra data dir is always one): the
-      scan reads ONLY (path, length) metadata and each task stream-parses
-      its file in 8 MB chunks (``stream_parse_index_db``) -- task memory
-      is bounded by the chunk, not the index size, and binaryFile's 2 GB
+      per-sstable pass (``inventory.sstable_pass``) stream-parses each
+      file in 8 MB chunks (``stream_parse_index_db``) -- task memory is
+      bounded by the chunk, not the index size, and binaryFile's 2 GB
       content ceiling never applies.
-    - non-POSIX roots (hdfs://, s3a://...): fall back to binaryFile
-      content rows + whole-buffer parse; the documented bound is one
+    - non-POSIX roots (hdfs://, s3a://...): binaryFile content rows +
+      whole-buffer parse (``content_scan``); the documented bound is one
       index file per task in memory.
 
     Without an explicit ``key_type``, POSIX-root keys render via the
@@ -717,88 +772,30 @@ def binary_index_entries(
     (cfstats sizes x counts) stay aligned on typed-key tables; headerless
     sstables and non-POSIX roots keep the UTF-8-or-hex heuristic.
     """
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
+
     render = key_renderer(key_type)
 
-    if _is_local_root(root):
-        files = _filter_files(
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*-Index.db")
-            .option("recursiveFileLookup", "true")
-            .load(root)
-            .select("path"),
-            filenames,
-            "Index.db",
+    if not _is_local_root(root):
+        return content_scan(
+            spark, root, filenames, "Index.db",
+            lambda content, ver, path: [
+                (render(key), position)
+                for key, position in parse_index_db(
+                    content, version=ver, source=path
+                )
+            ],
+            INDEX_ENTRIES_SCHEMA,
         )
 
-        def parse_local(batches) -> Iterator:
-            import pandas as pd
+    def scan(sst) -> list[tuple]:
+        r = render if key_type is not None else _header_renderer(sst)
+        return [(r(key), position) for key, position in _index_entries(sst)]
 
-            for pdf in batches:
-                ks_l, tb_l, ss_l, pk_l, pos_l = [], [], [], [], []
-                for path in pdf["path"]:
-                    ks, tb, ss, ver = _parse_filename(path)
-                    local = _local_path(path)
-                    r = (
-                        render if key_type is not None
-                        else _header_renderer(local, ver)
-                    )
-                    with open(local, "rb") as f:
-                        for key, position in stream_parse_index_db(
-                            f, version=ver, source=path
-                        ):
-                            ks_l.append(ks)
-                            tb_l.append(tb)
-                            ss_l.append(ss)
-                            pk_l.append(r(key))
-                            pos_l.append(position)
-                yield pd.DataFrame(
-                    {
-                        "keyspace": ks_l,
-                        "table_name": tb_l,
-                        "sstable_id": ss_l,
-                        "partition_key": pk_l,
-                        "position": pd.Series(pos_l, dtype="int64"),
-                    }
-                )
-
-        return files.mapInPandas(parse_local, INDEX_ENTRIES_SCHEMA)
-
-    bf = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Index.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path", "content"),
-        filenames,
-        "Index.db",
+    return sstable_pass(
+        spark, "binary_index_entries", root, filenames, ("Index.db",), scan,
+        INDEX_ENTRIES_SCHEMA,
     )
-
-    def parse_files(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ks_l, tb_l, ss_l, pk_l, pos_l = [], [], [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                ks, tb, ss, ver = _parse_filename(path)
-                for key, position in parse_index_db(
-                    bytes(content), version=ver, source=path
-                ):
-                    ks_l.append(ks)
-                    tb_l.append(tb)
-                    ss_l.append(ss)
-                    pk_l.append(render(key))
-                    pos_l.append(position)
-            yield pd.DataFrame(
-                {
-                    "keyspace": ks_l,
-                    "table_name": tb_l,
-                    "sstable_id": ss_l,
-                    "partition_key": pk_l,
-                    "position": pd.Series(pos_l, dtype="int64"),
-                }
-            )
-
-    return bf.mapInPandas(parse_files, INDEX_ENTRIES_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -960,42 +957,11 @@ def compression_data_lengths(
     sstable. Contents ARE read (unlike the Data.db scan) but the component
     is a few KB of header + chunk offsets per sstable, so the scan cost is
     directory-listing-shaped, never data-shaped."""
-    bf = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-CompressionInfo.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path", "content"),
-        filenames,
-        "CompressionInfo.db",
-    )
-
-    def parse_files(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ks_l, tb_l, ss_l, len_l = [], [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                ks, tb, ss, ver = _parse_filename(
-                    path, component="CompressionInfo.db"
-                )
-                ks_l.append(ks)
-                tb_l.append(tb)
-                ss_l.append(ss)
-                len_l.append(
-                    parse_compression_info(bytes(content), ver, source=path)
-                )
-            yield pd.DataFrame(
-                {
-                    "keyspace": ks_l,
-                    "table_name": tb_l,
-                    "sstable_id": ss_l,
-                    "uncompressed_length": pd.Series(len_l, dtype="int64"),
-                }
-            )
-
-    return bf.mapInPandas(
-        parse_files,
+    return content_scan(
+        spark, root, filenames, "CompressionInfo.db",
+        lambda content, ver, path: [
+            (parse_compression_info(content, ver, source=path),)
+        ],
         "keyspace string, table_name string, sstable_id string, "
         "uncompressed_length bigint",
     )
@@ -1010,43 +976,15 @@ def compression_chunk_maps(
     ``compression_data_lengths`` (the component is KBs per sstable) but
     parses the WHOLE header incl. the compressor class name and the chunk
     offset array -- the inputs a compression report needs."""
-    bf = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-CompressionInfo.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path", "content"),
-        filenames,
-        "CompressionInfo.db",
-    )
 
-    def parse_files(batches) -> Iterator:
-        import pandas as pd
+    def parse(content, ver, path) -> list[tuple]:
+        chunk_len, data_len, _mc, offsets, name = parse_compression_info_full(
+            content, ver, source=path
+        )
+        return [(name, chunk_len, len(offsets), data_len)]
 
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                ks, tb, ss, ver = _parse_filename(
-                    path, component="CompressionInfo.db"
-                )
-                chunk_len, data_len, _mc, offsets, name = (
-                    parse_compression_info_full(
-                        bytes(content), ver, source=path
-                    )
-                )
-                rows.append(
-                    (ks, tb, ss, name, chunk_len, len(offsets), data_len)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "keyspace", "table_name", "sstable_id", "compressor",
-                    "chunk_length", "n_chunks", "uncompressed_length",
-                ],
-            )
-
-    return bf.mapInPandas(
-        parse_files,
+    return content_scan(
+        spark, root, filenames, "CompressionInfo.db", parse,
         "keyspace string, table_name string, sstable_id string, "
         "compressor string, chunk_length bigint, n_chunks bigint, "
         "uncompressed_length bigint",
@@ -1096,36 +1034,27 @@ def compression_report_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _data_db_meta(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     """(keyspace, table_name, sstable_id, disk_length, file_timestamp) from
-    Data.db file METADATA -- one listing, no contents.
+    Data.db file METADATA -- the inventory's own listing, no contents.
 
-    Only ``binaryFile``'s metadata columns are selected, so the reader
-    never materializes Data.db contents (column pruning on the binary
-    source -- plan-audited); the frame is 1 row per SSTable and always
-    broadcast-able. Identity is parsed from the path JVM-side:
-    <root>/<keyspace>/<table_name>/<version>-<id>-big-Data.db, mirroring
-    ``_parse_filename``. Consumers needing only lengths prune
-    file_timestamp away at zero cost; sharing ONE scan keeps a large real
-    directory to a single listing job."""
-    bf = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Data.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path", "length", "modificationTime"),
-        filenames,
-        "Data.db",
+    The lengths and modification times come from the driver-side listing's
+    ``FileStatus`` (``inventory.sstable_inventory``), which works on every
+    Hadoop root: no Spark job, and the frame is a 1-row-per-SSTable local
+    relation, always broadcast-able. Consumers needing only lengths prune
+    file_timestamp away at zero cost."""
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        local_frame,
+        sstable_inventory,
     )
-    fname = "element_at(split(path, '/'), -1)"
-    pieces = f"split({fname}, '-')"
-    return bf.select(
-        F.expr("element_at(split(path, '/'), -3)").alias("keyspace"),
-        F.expr("element_at(split(path, '/'), -2)").alias("table_name"),
-        # id = pieces[2 .. n-2] re-joined (version-<id...>-big-Data.db)
-        F.expr(
-            f"array_join(slice({pieces}, 2, size({pieces}) - 3), '-')"
-        ).alias("sstable_id"),
-        F.col("length").alias("disk_length"),
-        F.unix_millis("modificationTime").alias("file_timestamp"),
+
+    return local_frame(
+        spark,
+        [
+            (*s.identity, s.length("Data.db"), s.mtime("Data.db"))
+            for s in sstable_inventory(spark, root, filenames)
+            if "Data.db" in s.components
+        ],
+        "keyspace string, table_name string, sstable_id string, "
+        "disk_length bigint, file_timestamp bigint",
     )
 
 
@@ -1221,9 +1150,15 @@ def binary_index_sizes(
     semi join against a component listing.
 
     Non-POSIX roots keep the window composition (sibling reads need a
-    filesystem; binaryFile content rows do not carry one)."""
+    filesystem; binaryFile content rows do not carry one), with
+    ``require_components`` applied as an inventory filter."""
     from cassandra_sstable_tools_spark.operators.window_sizes import (
         index_partition_sizes,
+    )
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        local_frame,
+        sstable_inventory,
+        sstable_pass,
     )
 
     if not _is_local_root(root):
@@ -1231,99 +1166,51 @@ def binary_index_sizes(
             binary_index_entries(spark, root, filenames, key_type=key_type),
             data_file_lengths(spark, root, filenames),
         )
-        for comp in require_components:
-            # mirrors data_cells.decodable_sstables' listing semi join
-            comp_files = _filter_files(
-                spark.read.format("binaryFile")
-                .option("pathGlobFilter", f"*-{comp}")
-                .option("recursiveFileLookup", "true")
-                .load(root)
-                .select("path"),
-                filenames,
-                comp,
-            )
-            pieces = "split(element_at(split(path, '/'), -1), '-')"
-            comp_ids = comp_files.select(
-                F.expr("element_at(split(path, '/'), -3)").alias("keyspace"),
-                F.expr("element_at(split(path, '/'), -2)").alias("table_name"),
-                F.expr(
-                    f"array_join(slice({pieces}, 2, size({pieces}) - 3), '-')"
-                ).alias("sstable_id"),
-            )
-            sizes = sizes.join(
-                F.broadcast(comp_ids),
-                ["keyspace", "table_name", "sstable_id"],
-                "semi",
-            )
-        return sizes
+        if not require_components:
+            return sizes
+        ids = local_frame(
+            spark,
+            [
+                s.identity for s in sstable_inventory(spark, root, filenames)
+                if set(require_components) <= s.components
+            ],
+            "keyspace string, table_name string, sstable_id string",
+        )
+        return sizes.join(
+            F.broadcast(ids), ["keyspace", "table_name", "sstable_id"], "semi"
+        )
 
     render = key_renderer(key_type)
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Index.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "Index.db",
-    )
+    needs = {"Data.db", *require_components}
 
-    def parse_local(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ks_l, tb_l, ss_l, pk_l, sz_l = [], [], [], [], []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path)
-                local = _local_path(path)
-                r = (
-                    render if key_type is not None
-                    else _header_renderer(local, ver)
+    def scan(sst) -> list[tuple]:
+        r = render if key_type is not None else _header_renderer(sst)
+        entries = _index_entries(sst)
+        # inner-join semantics: no Data.db sibling -> no length row -> the
+        # window composition drops this sstable's entries
+        if not needs <= sst.components:
+            return []
+        comp_local = sst.local("CompressionInfo.db")
+        if comp_local is not None:
+            with open(comp_local, "rb") as cf:
+                length = parse_compression_info(
+                    cf.read(), sst.version,
+                    source=sst.path("CompressionInfo.db"),
                 )
-                with open(local, "rb") as f:
-                    entries = list(
-                        stream_parse_index_db(f, version=ver, source=path)
-                    )
-                stem = local[: -len("Index.db")]
-                # inner-join semantics: no Data.db sibling -> no length row
-                # -> the window composition drops this sstable's entries
-                if not os.path.exists(stem + "Data.db"):
-                    continue
-                if any(
-                    not os.path.exists(stem + comp)
-                    for comp in require_components
-                ):
-                    continue
-                comp_local = stem + "CompressionInfo.db"
-                if os.path.exists(comp_local):
-                    with open(comp_local, "rb") as cf:
-                        length = parse_compression_info(
-                            cf.read(), ver,
-                            source=path[: -len("Index.db")]
-                            + "CompressionInfo.db",
-                        )
-                else:
-                    length = os.path.getsize(stem + "Data.db")
-                entries.sort(key=lambda e: e[1])
-                positions = [p for _, p in entries]
-                positions.append(length)
-                for j, (key, pos) in enumerate(entries):
-                    ks_l.append(ks)
-                    tb_l.append(tb)
-                    ss_l.append(ss)
-                    pk_l.append(r(key))
-                    sz_l.append(positions[j + 1] - pos)
-            yield pd.DataFrame(
-                {
-                    "keyspace": ks_l,
-                    "table_name": tb_l,
-                    "sstable_id": ss_l,
-                    "partition_key": pk_l,
-                    "size": pd.Series(sz_l, dtype="int64"),
-                }
-            )
+        else:
+            length = sst.length("Data.db")
+        entries.sort(key=lambda e: e[1])
+        positions = [p for _, p in entries]
+        positions.append(length)
+        return [
+            (r(key), positions[j + 1] - pos)
+            for j, (key, pos) in enumerate(entries)
+        ]
 
-    return files.mapInPandas(parse_local, INDEX_SIZES_SCHEMA)
+    return sstable_pass(
+        spark, "binary_index_sizes", root, filenames, ("Index.db",), scan,
+        INDEX_SIZES_SCHEMA,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2240,57 +2127,26 @@ TOC_CHECK_SCHEMA = (
 def toc_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     """Per-sstable TOC.txt verification: the manifest every real sstable
     carries lists its components one per line (itself included); this
-    compares the listed set against the files actually on disk.
+    compares the listed set against the sstable's files in the
+    driver-side listing.
 
     ``missing`` = listed but absent (the partial-snapshot-copy failure the
     Statistics-join warning only hints at), ``extra`` = present but
-    unlisted (a torn write or foreign debris). One task per TOC file;
-    nothing but directory listings and a <1 KB text read per sstable."""
-    if not root.startswith(("/", "file:")):
-        raise ValueError(f"toc_checks needs a POSIX-visible root; got {root!r}")
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-TOC.txt")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "TOC.txt",
+    unlisted (a torn write or foreign debris). One read per TOC file;
+    nothing but the listing and a <1 KB text read per sstable."""
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
+
+    def check(sst) -> list[tuple]:
+        with open(sst.local("TOC.txt")) as f:
+            listed = {ln.strip() for ln in f if ln.strip()}
+        missing = len(listed - sst.components)
+        extra = len(sst.components - listed)
+        return [(len(listed), missing, extra, missing == 0 and extra == 0)]
+
+    return sstable_pass(
+        spark, "toc_checks", root, filenames, ("TOC.txt",), check,
+        TOC_CHECK_SCHEMA,
     )
-
-    def scan(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                ks, tb, ss, ver = _parse_filename(path, component="TOC.txt")
-                local = _local_path(path)
-                d = os.path.dirname(local)
-                prefix = os.path.basename(local)[: -len("TOC.txt")]
-                with open(local) as f:
-                    listed = {ln.strip() for ln in f if ln.strip()}
-                present = {
-                    fname[len(prefix):]
-                    for fname in os.listdir(d)
-                    if fname.startswith(prefix)
-                }
-                missing = len(listed - present)
-                extra = len(present - listed)
-                rows.append((
-                    ks, tb, ss, len(listed), missing, extra,
-                    missing == 0 and extra == 0,
-                ))
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id",
-                         "listed", "missing", "extra", "complete"],
-            )
-            for c in ("listed", "missing", "extra"):
-                pdf_out[c] = pdf_out[c].astype("int32")
-            yield pdf_out
-
-    return files.mapInPandas(scan, TOC_CHECK_SCHEMA)
 
 
 def toc_check_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -81,7 +81,7 @@ point < gcBefore.
 
 Spark shape / 100 TB notes: Statistics.db is a few KB per sstable
 regardless of data size, so the scan is directory-listing-shaped --
-``binaryFile`` content rows + one Arrow-batched ``mapInPandas`` parse,
+``binaryFile`` content rows + one Arrow-batched ``mapInArrow`` parse,
 1 output row per sstable, always broadcast-able downstream. Parsing is
 loud on corruption (ValueError naming file and offset), same contract as
 the Index.db reader.
@@ -96,15 +96,12 @@ from __future__ import annotations
 import math
 import struct
 import zlib
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
-    _filter_files,
-    _parse_filename,
     _read_java_utf,
     _write_java_utf,
     read_unsigned_vint,
@@ -764,87 +761,49 @@ def statistics_metadata(
     ``is_repaired`` is the reference's ``repairedAt != 0`` test
     (SSTableMetadataCollector.java:88)."""
     from cassandra_sstable_tools_spark.constants import GC_BEFORE
-
-    bf = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Statistics.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path", "content"),
-        filenames,
-        "Statistics.db",
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        content_scan,
     )
 
-    def parse_files(batches) -> Iterator:
-        import pandas as pd
+    def parse(content, ver, path) -> list[tuple]:
+        st = parse_statistics_db(content, ver, source=path)
+        try:
+            ctypes = parse_serialization_header(
+                content, version=ver, source=path
+            ).clustering_types
+        except (ValueError, KeyError):
+            ctypes = None  # no HEADER component: heuristic display
+        return [(
+            st.partitioner,
+            st.bloom_fp_chance,
+            st.min_timestamp,
+            st.max_timestamp,
+            st.min_local_deletion_time,
+            st.max_local_deletion_time,
+            st.min_ttl,
+            st.max_ttl,
+            st.compression_ratio,
+            st.level,
+            st.repaired_at,
+            st.repaired_at != 0,
+            _clustering_display(st.min_clustering, ctypes),
+            _clustering_display(st.max_clustering, ctypes),
+            st.total_columns_set,
+            st.total_rows,
+            estimated_histogram_mean(st.partition_size_hist),
+            estimated_histogram_max(
+                st.partition_size_hist, getattr(st, "_psize_overflow", 0)
+            ),
+            estimated_histogram_mean(st.column_count_hist),
+            estimated_histogram_max(
+                st.column_count_hist, getattr(st, "_ccount_overflow", 0)
+            ),
+            droppable_before(st.tombstone_hist, GC_BEFORE),
+        )]
 
-        cols = [c.split(" ")[0] for c in STATISTICS_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                ks, tb, ss, ver = _parse_filename(
-                    path, component="Statistics.db"
-                )
-                st = parse_statistics_db(bytes(content), ver, source=path)
-                try:
-                    ctypes = parse_serialization_header(
-                        bytes(content), version=ver, source=path
-                    ).clustering_types
-                except (ValueError, KeyError):
-                    ctypes = None  # no HEADER component: heuristic display
-                rows.append(
-                    (
-                        ks,
-                        tb,
-                        ss,
-                        st.partitioner,
-                        st.bloom_fp_chance,
-                        st.min_timestamp,
-                        st.max_timestamp,
-                        st.min_local_deletion_time,
-                        st.max_local_deletion_time,
-                        st.min_ttl,
-                        st.max_ttl,
-                        st.compression_ratio,
-                        st.level,
-                        st.repaired_at,
-                        st.repaired_at != 0,
-                        _clustering_display(st.min_clustering, ctypes),
-                        _clustering_display(st.max_clustering, ctypes),
-                        st.total_columns_set,
-                        st.total_rows,
-                        estimated_histogram_mean(st.partition_size_hist),
-                        estimated_histogram_max(
-                            st.partition_size_hist,
-                            getattr(st, "_psize_overflow", 0),
-                        ),
-                        estimated_histogram_mean(st.column_count_hist),
-                        estimated_histogram_max(
-                            st.column_count_hist,
-                            getattr(st, "_ccount_overflow", 0),
-                        ),
-                        droppable_before(st.tombstone_hist, GC_BEFORE),
-                    )
-                )
-            pdf_out = pd.DataFrame(rows, columns=cols)
-            # pandas infers float64 for empty/int columns; pin the ints
-            for c, dt in [
-                ("min_timestamp", "int64"), ("max_timestamp", "int64"),
-                ("min_local_deletion_time", "int64"),
-                ("max_local_deletion_time", "int64"),
-                ("min_ttl", "int32"), ("max_ttl", "int32"),
-                ("level", "int32"), ("repaired_at", "int64"),
-                ("total_columns_set", "int64"), ("total_rows", "int64"),
-                ("mean_partition_size", "int64"),
-                ("max_partition_size", "int64"),
-                ("mean_column_count", "int64"),
-                ("max_column_count", "int64"),
-                ("droppable_tombstones", "int64"),
-            ]:
-                pdf_out[c] = pdf_out[c].astype(dt)
-            yield pdf_out
-
-    return bf.mapInPandas(parse_files, STATISTICS_SCHEMA)
+    return content_scan(
+        spark, root, filenames, "Statistics.db", parse, STATISTICS_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1019,10 +978,9 @@ def directory_sstables_listing(
     Statistics.db at all.
 
     ``file_timestamp=True`` adds the reference's File Timestamp column
-    from the Data.db modification time (binaryFile metadata -- contents
-    still never read, and the length and mtime come from the SAME single
-    Data.db listing: on a large real directory each extra binaryFile load
-    is a full recursive listing job). CLI-only: mtimes are not derivable
+    from the Data.db modification time (listing metadata -- contents
+    still never read, and the length and mtime come from the SAME
+    driver-side listing). CLI-only: mtimes are not derivable
     from the fixture tables, so the certified query below omits it."""
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         _data_db_meta,

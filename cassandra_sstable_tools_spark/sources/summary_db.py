@@ -46,15 +46,14 @@ certificates are self-consistent either way; flip the two ``">i"``/
 ``">q"`` sites in ``encode_summary_db``/``parse_summary_db`` together if
 a real file proves native order.
 
-Scale shape: one task per Summary.db file, and a summary is ~keys/128
-entries — KB-sized for a 100 GB sstable — so whole-buffer parse per task
+Scale shape: one read per Summary.db file, and a summary is ~keys/128
+entries — KB-sized for a 100 GB sstable — so whole-buffer parse per read
 is the right physical plan (unlike Index.db, which streams in chunks).
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -236,27 +235,13 @@ def parse_summary_db(buf: bytes, source: str = "<buf>") -> ParsedSummary:
 
 
 # --------------------------------------------------------------------------
-# Distributed scans (one task per summary file; summaries are KB-sized)
+# Distributed scans (one read per Summary.db; summaries are KB-sized)
 # --------------------------------------------------------------------------
 
 
-def _summary_files(spark: SparkSession, root: str, filenames):
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        _filter_files,
-        _is_local_root,
-    )
-
-    if not _is_local_root(root):
-        raise ValueError(f"summary scans need a POSIX-visible root; got {root!r}")
-    return _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*-Summary.db")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path"),
-        filenames,
-        "Summary.db",
-    )
+def _parsed_summary(sst) -> ParsedSummary:
+    with open(sst.local("Summary.db"), "rb") as f:
+        return parse_summary_db(f.read(), source=sst.path("Summary.db"))
 
 
 def summary_entries(
@@ -265,41 +250,24 @@ def summary_entries(
     """Every sampled (key, index_position) of every Summary.db under
     ``root``, entry-grain — the in-memory frame a point read
     binary-searches before seeking Index.db (sources/lookup.py does)."""
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        _local_path,
-        _parse_filename,
         key_renderer,
     )
 
-    files = _summary_files(spark, root, filenames)
     render = key_renderer(key_type)
 
-    def scan(batches) -> Iterator:
-        import pandas as pd
+    def scan(sst) -> list[tuple]:
+        parsed = _parsed_summary(sst)
+        return [
+            (i, render(key), position, parsed.min_index_interval)
+            for i, (key, position) in enumerate(parsed.entries)
+        ]
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                ks, tb, ss, _ver = _parse_filename(path, component="Summary.db")
-                with open(_local_path(path), "rb") as f:
-                    parsed = parse_summary_db(f.read(), source=path)
-                for i, (key, position) in enumerate(parsed.entries):
-                    rows.append(
-                        (ks, tb, ss, i, render(key), position,
-                         parsed.min_index_interval)
-                    )
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id",
-                         "summary_idx", "partition_key", "index_position",
-                         "min_index_interval"],
-            )
-            for c in ("summary_idx", "min_index_interval"):
-                pdf_out[c] = pdf_out[c].astype("int32")
-            pdf_out["index_position"] = pdf_out["index_position"].astype("int64")
-            yield pdf_out
-
-    return files.mapInPandas(scan, SUMMARY_ENTRIES_SCHEMA)
+    return sstable_pass(
+        spark, "summary_entries", root, filenames, ("Summary.db",), scan,
+        SUMMARY_ENTRIES_SCHEMA,
+    )
 
 
 def summary_bounds(
@@ -307,40 +275,25 @@ def summary_bounds(
 ) -> DataFrame:
     """Per-sstable trailer view: first/last partition key (the range-
     ownership answer that never opens Index.db) + sampling metadata."""
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        _local_path,
-        _parse_filename,
         key_renderer,
     )
 
-    files = _summary_files(spark, root, filenames)
     render = key_renderer(key_type)
 
-    def scan(batches) -> Iterator:
-        import pandas as pd
+    def scan(sst) -> list[tuple]:
+        parsed = _parsed_summary(sst)
+        return [(
+            render(parsed.first_key), render(parsed.last_key),
+            len(parsed.entries), parsed.min_index_interval,
+            parsed.sampling_level,
+        )]
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                ks, tb, ss, _ver = _parse_filename(path, component="Summary.db")
-                with open(_local_path(path), "rb") as f:
-                    parsed = parse_summary_db(f.read(), source=path)
-                rows.append(
-                    (ks, tb, ss, render(parsed.first_key),
-                     render(parsed.last_key), len(parsed.entries),
-                     parsed.min_index_interval, parsed.sampling_level)
-                )
-            pdf_out = pd.DataFrame(
-                rows,
-                columns=["keyspace", "table_name", "sstable_id", "first_key",
-                         "last_key", "entries", "min_index_interval",
-                         "sampling_level"],
-            )
-            for c in ("entries", "min_index_interval", "sampling_level"):
-                pdf_out[c] = pdf_out[c].astype("int32")
-            yield pdf_out
-
-    return files.mapInPandas(scan, SUMMARY_BOUNDS_SCHEMA)
+    return sstable_pass(
+        spark, "summary_bounds", root, filenames, ("Summary.db",), scan,
+        SUMMARY_BOUNDS_SCHEMA,
+    )
 
 
 # --------------------------------------------------------------------------

@@ -52,9 +52,50 @@ def test_read_verifies_key_and_bounds():
     assert read_partition_header(buf2, 0, b"abc") is None
 
 
-def test_non_posix_root_rejected(spark):
-    with pytest.raises(ValueError, match="POSIX"):
-        partition_deletions(spark, "s3a://bucket/data")
+def _posix_only_sources():
+    """Every source that reads by path on its tasks, with a call taking
+    (spark, root). The check runs before any listing, so an s3a:// root
+    never reaches a filesystem."""
+    from cassandra_sstable_tools_spark.sources import (
+        bloom,
+        crc_db,
+        data_cells,
+        data_db,
+        lookup,
+        summary_db,
+    )
+    from cassandra_sstable_tools_spark.sources import sstable_binary as sb
+
+    return {
+        "partition_deletions": data_db.partition_deletions,
+        "digest_checks": data_db.digest_checks,
+        "crc_checks": crc_db.crc_checks,
+        "bloom_checks": bloom.bloom_checks,
+        "toc_checks": sb.toc_checks,
+        "summary_entries": summary_db.summary_entries,
+        "summary_bounds": summary_db.summary_bounds,
+        "data_cells": data_cells.data_cells,
+        "summary_checks": lookup.summary_checks,
+        "point_read": lambda spark, root: lookup.point_read(
+            spark, root, ["k"]
+        ),
+        "range_read": lambda spark, root: lookup.range_read(
+            spark, root, "a", "b"
+        ),
+        "token_range_read": lambda spark, root: lookup.token_range_read(
+            spark, root, 0, 1
+        ),
+    }
+
+
+@pytest.mark.parametrize("source", sorted(_posix_only_sources()))
+def test_non_posix_root_rejected(spark, source):
+    """A path-reading source refuses an hdfs/s3a root up front, and the
+    message names the public function that was called."""
+    with pytest.raises(
+        ValueError, match=f"^{source} needs a POSIX-visible root"
+    ):
+        _posix_only_sources()[source](spark, "s3a://bucket/data")
 
 
 def test_live_partitions_produce_no_rows(spark, sf_dir):

@@ -288,10 +288,11 @@ def test_cli_cassandra_dir_misuse_is_loud(spark, sf_dir, capsys):
 
 
 def test_data_file_lengths_plan_prunes_content(spark, sf_dir):
-    """The Data.db scan must read ONLY (path, length) -- file contents
-    never enter the plan (a content read would ship every data byte
-    through the executor for a length lookup). The combined resolve may
-    read content ONLY from the (tiny) CompressionInfo.db scan."""
+    """Data.db contents never enter the plan (a content read would ship
+    every data byte through the executor for a length lookup): the
+    lengths come from the driver-side listing, so there is no Data.db file
+    scan at all. The combined resolve may read content ONLY from the
+    (tiny) CompressionInfo.db scan."""
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         _data_db_byte_lengths,
         data_file_lengths,
@@ -307,11 +308,12 @@ def test_data_file_lengths_plan_prunes_content(spark, sf_dir):
         data_file_lengths(spark, root)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    # exactly one content-reading file scan (the CompressionInfo headers);
-    # the Data.db scan stays pruned to (path, length)
+    # the only file scan is the CompressionInfo headers' content scan; the
+    # Data.db side is a local relation of the listing
     scans = [l for l in combined.splitlines() if "FileScan binaryFile" in l]
-    assert len(scans) == 2
-    assert sum("content:binary" in s for s in scans) == 1
+    assert len(scans) == 1
+    assert "content:binary" in scans[0]
+    assert "LocalTableScan" in combined
 
 
 def test_stream_parse_matches_whole_buffer():
@@ -440,44 +442,157 @@ def test_compressed_fixture_subset_is_differential(spark, sf_dir):
             assert raw[k] != exp[k]  # byte length is compressed => differs
 
 
-def test_snapshot_and_backup_dirs_excluded(spark, tmp_path):
-    """r07 ADVICE #2: recursiveFileLookup must not pick up sstable copies
+def _dir_sources():
+    """Every directory source that reads per-sstable components, as
+    (spark, root, filenames) -> DataFrame."""
+    from cassandra_sstable_tools_spark.sources import (
+        bloom,
+        crc_db,
+        data_cells,
+        data_db,
+        summary_db,
+    )
+    from cassandra_sstable_tools_spark.sources import sstable_binary as sb
+
+    return {
+        "binary_index_entries": sb.binary_index_entries,
+        "binary_index_sizes": sb.binary_index_sizes,
+        "toc_checks": sb.toc_checks,
+        "_data_db_meta": sb._data_db_meta,
+        "crc_checks": crc_db.crc_checks,
+        "bloom_checks": bloom.bloom_checks,
+        "summary_entries": summary_db.summary_entries,
+        "summary_bounds": summary_db.summary_bounds,
+        "partition_deletions": data_db.partition_deletions,
+        "digest_checks": data_db.digest_checks,
+        "data_cells": data_cells.data_cells,
+        "decodable_sstables": data_cells.decodable_sstables,
+    }
+
+
+def _write_two_sstables(table_dir: str) -> None:
+    """Two complete uncompressed sstables (nb-1, nb-2), each with live
+    cells and one partition deletion, so every directory source has rows
+    from both."""
+    from cassandra_sstable_tools_spark.sources.pyds_writer import write_sstable
+
+    long_type = "org.apache.cassandra.db.marshal.LongType"
+
+    def row(pk, kind="CELL", **kw):
+        base = dict(
+            partition_key=pk, kind=kind, clustering="r0", column_name="c0",
+            cell_path=None, writetime=1000, ttl=None,
+            local_deletion_time=None, is_tombstone=False, is_expiring=False,
+            is_counter=False, cell_value=None, range_start=None,
+            range_end=None, value_len=8, value_bytes=(7).to_bytes(8, "big"),
+            value_marshal=long_type,
+        )
+        base.update(kw)
+        return base
+
+    for sid in ("1", "2"):
+        rows = [
+            row(f"k{sid}a"), row(f"k{sid}b"),
+            row(f"k{sid}c", kind="PARTITION_DELETE", clustering=None,
+                column_name=None, writetime=5, local_deletion_time=100,
+                is_tombstone=True, value_len=None, value_bytes=None,
+                value_marshal=None),
+        ]
+        write_sstable(rows, table_dir, sstable_id=sid)
+
+
+@pytest.mark.parametrize("source", sorted(_dir_sources()))
+def test_snapshot_and_backup_dirs_excluded(spark, tmp_path, source):
+    """r07 ADVICE #2: a recursive listing must not pick up sstable copies
     under <table>/snapshots/<tag>/ or <table>/backups/ -- a real data
     directory always has them, and counting them double-counts data under
-    a misattributed (keyspace='snapshots') identity."""
+    a misattributed (keyspace='snapshots') identity. The exclusion and the
+    reference's -f rule live in the driver-side inventory; every source
+    must honour both."""
     import os
     import shutil
 
-    root = tmp_path / "cas"
-    live = root / "ks1" / "tab" 
-    os.makedirs(live)
-    entries = [(b"k1", 0), (b"k2", 100)]
-    with open(live / "nb-00001-big-Index.db", "wb") as f:
-        f.write(encode_index_db(entries))
-    # snapshot + backup copies of the SAME sstable
-    snap = live / "snapshots" / "tag1"
-    back = live / "backups"
-    os.makedirs(snap)
-    os.makedirs(back)
-    shutil.copy(live / "nb-00001-big-Index.db", snap / "nb-00001-big-Index.db")
-    shutil.copy(live / "nb-00001-big-Index.db", back / "nb-00001-big-Index.db")
-    rows = binary_index_entries(spark, str(root)).collect()
-    assert len(rows) == 2  # live copies only, not 6
-    assert {r.keyspace for r in rows} == {"ks1"}
-    assert {r.table_name for r in rows} == {"tab"}
-    # the driver-side inventory (lookups, Statistics.db coverage) applies
-    # the same exclusion and the same -f semantics
     from cassandra_sstable_tools_spark.sources.inventory import (
         sstable_inventory,
     )
 
+    read = _dir_sources()[source]
+    live_root, root = tmp_path / "live", tmp_path / "cas"
+    _write_two_sstables(str(live_root / "ks1" / "tab"))
+    shutil.copytree(live_root, root)
+    live = root / "ks1" / "tab"
+    snap = live / "snapshots" / "tag1"
+    back = live / "backups"
+    os.makedirs(snap)
+    os.makedirs(back)
+    for name in os.listdir(live):
+        if os.path.isfile(live / name):
+            shutil.copy2(live / name, snap / name)
+            shutil.copy2(live / name, back / name)
+
+    def rows(r, filenames=None):
+        return sorted(
+            (tuple(x) for x in read(spark, str(r), filenames).collect()),
+            key=repr,
+        )
+
+    want = rows(live_root)
+    got = rows(root)
+    assert got == want  # live copies only
+    assert {r[:2] for r in got} == {("ks1", "tab")}
+    assert {r[2] for r in got} == {"1", "2"}
+    # -f keeps the sstables it names and drops the others
+    assert rows(root, ["nb-1-big-Data.db"]) == [r for r in want if r[2] == "1"]
+    assert rows(root, ["nb-3-big-Data.db"]) == []
+
     inv = sstable_inventory(spark, str(root))
     assert [s.path("Index.db") for s in inv] == [
-        f"file:{live}/nb-00001-big-Index.db"
+        f"file:{live}/nb-1-big-Index.db", f"file:{live}/nb-2-big-Index.db"
     ]
-    assert sstable_inventory(spark, str(root), ["nb-00001-big-Data.db"]) == inv
-    assert sstable_inventory(spark, str(root), ["nb-00002-big-Data.db"]) == []
+    assert sstable_inventory(spark, str(root), ["nb-1-big-Data.db"]) == inv[:1]
     assert sstable_inventory(spark, str(snap)) == []
+
+
+def test_sstable_handle_identity_and_siblings():
+    """The per-sstable handle parses its identity with _parse_filename's
+    checks (malformed name, path without keyspace/table dirs -> loud) and
+    answers sibling paths from the listing, None when a component is
+    absent."""
+    from cassandra_sstable_tools_spark.sources.inventory import SSTable
+
+    sst = SSTable("file:/r/ks/tb/nb-7-big-", frozenset({"Index.db", "Data.db"}))
+    assert sst.identity == ("ks", "tb", "7") and sst.version == "nb"
+    assert sst.local("Data.db") == "/r/ks/tb/nb-7-big-Data.db"
+    assert sst.local("Summary.db") is None
+    with pytest.raises(ValueError, match="lacks keyspace/table"):
+        SSTable("file:/nb-7-big-", frozenset({"Index.db"})).identity
+    with pytest.raises(ValueError, match="not an Index.db component"):
+        SSTable("file:/r/ks/tb/junk-", frozenset({"Index.db"})).identity
+
+
+@pytest.mark.parametrize(
+    "source",
+    sorted(set(_dir_sources()) - {"_data_db_meta", "decodable_sstables"}),
+)
+def test_directory_source_is_one_job(spark, sf_dir, source):
+    """Collecting a per-sstable directory source runs exactly ONE Spark
+    job: the listing is driver-side, and the read is one stage with no
+    count(), no listing collect() and no range-partition sampling job.
+    (_data_db_meta and decodable_sstables are local relations built from
+    the listing: they run none.)"""
+    root = materialize_index_files(spark, sf_dir)
+    df = _dir_sources()[source](spark, root)
+    sc = spark.sparkContext
+    group = f"one-job:{source}"
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, f"{source} ran {len(jobs)} Spark jobs"
 
 
 def test_non_utf8_key_renders_hex(spark, tmp_path):
