@@ -367,18 +367,17 @@ def bloom_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     )
 
     def check(sst) -> list[tuple]:
-        with open(sst.local("Filter.db"), "rb") as f:
+        with sst.open("Filter.db") as f:
             filt = parse_filter_db(f.read(), source=sst.path("Filter.db"))
-        index_path = sst.local("Index.db")
-        if index_path is None:
+        if "Index.db" not in sst.components:
             raise ValueError(
                 f"Filter.db without sibling Index.db: {sst.path('Filter.db')}"
             )
         total = 0
         present = 0
-        with open(index_path, "rb") as f:
+        with sst.open("Index.db") as f:
             for key, _position in stream_parse_index_db(
-                f, version=sst.version, source=index_path
+                f, version=sst.version, source=sst.path("Index.db")
             ):
                 total += 1
                 if filt.might_contain(key):

@@ -101,10 +101,9 @@ def crc_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
 
     def check(sst) -> list[tuple]:
         path = sst.path("CRC.db")
-        with open(sst.local("CRC.db"), "rb") as f:
+        with sst.open("CRC.db") as f:
             chunk_length, crcs = parse_crc_db(f.read(), source=path)
-        data_path = sst.local("Data.db")
-        if data_path is None:
+        if "Data.db" not in sst.components:
             raise ValueError(f"CRC.db without sibling Data.db: {path}")
         data_len = sst.length("Data.db")
         expected_chunks = (data_len + chunk_length - 1) // chunk_length
@@ -115,7 +114,7 @@ def crc_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
                 f"{chunk_length} (expected {expected_chunks})"
             )
         matched = 0
-        with open(data_path, "rb") as f:
+        with sst.open("Data.db") as f:
             for stored in crcs:
                 chunk = f.read(chunk_length)
                 if (zlib.crc32(chunk) & 0xFFFFFFFF) == stored:

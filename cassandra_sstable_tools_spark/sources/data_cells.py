@@ -1982,9 +1982,9 @@ def _scan_plan(sst, shard: int, n_shards: int):
     sliced when sharded). ``sst`` is an ``inventory.SSTable`` or the path
     of an Index.db. Returns None when the sstable lacks Data.db /
     Statistics.db (the skip rule) or the shard is empty, else
-    ``(ks, tb, ss, header, positions, lo, hi, npos, tail, data_path,
-    comp_path, cmarshal)``; the tuple and columnar paths share this one
-    setup (same side-effect order, same errors)."""
+    ``(sst, ks, tb, ss, ver, header, positions, lo, hi, npos, tail,
+    cmarshal)``; the tuple and columnar paths share this one setup (same
+    side-effect order, same errors)."""
     from cassandra_sstable_tools_spark.sources.inventory import SSTable
     from cassandra_sstable_tools_spark.sources.statistics_db import (
         parse_serialization_header,
@@ -1995,21 +1995,16 @@ def _scan_plan(sst, shard: int, n_shards: int):
     path = sst.path("Index.db")
     ks, tb, ss = sst.identity
     ver = sst.version
-    local = sst.local("Index.db")
-    data_path = sst.local("Data.db")
-    stats_path = sst.local("Statistics.db")
-    comp_path = sst.local("CompressionInfo.db")
-    if data_path is None or stats_path is None:
+    if not {"Data.db", "Statistics.db"} <= sst.components:
         return None
-    with open(stats_path, "rb") as f:
+    with sst.open("Statistics.db") as f:
         header = parse_serialization_header(
-            f.read(), version=ver, source=stats_path
+            f.read(), version=ver, source=sst.path("Statistics.db")
         )
     # positions are computed BEFORE the Data.db handle opens: a corrupt
     # Summary/Index parse raises here, and an open handle must not leak
     # across that raise (review finding)
-    summary_path = sst.local("Summary.db")
-    if n_shards > 1 and summary_path is not None:
+    if n_shards > 1 and "Summary.db" in sst.components:
         # summary-seek slice (r08 s2): shard boundaries are SAMPLED
         # summary entries, whose stored positions are Index.db offsets --
         # each shard streams only ITS index byte range instead of
@@ -2023,10 +2018,12 @@ def _scan_plan(sst, shard: int, n_shards: int):
             parse_summary_db,
         )
 
-        with open(summary_path, "rb") as sf_:
-            summ = parse_summary_db(sf_.read(), source=summary_path)
+        with sst.open("Summary.db") as sf_:
+            summ = parse_summary_db(
+                sf_.read(), source=sst.path("Summary.db")
+            )
         ns = len(summ.entries)
-        idx_size = os.path.getsize(local)
+        idx_size = sst.length("Index.db")
         lo_e = int(shard) * ns // n_shards
         hi_e = (int(shard) + 1) * ns // n_shards
         if lo_e == hi_e:
@@ -2035,7 +2032,7 @@ def _scan_plan(sst, shard: int, n_shards: int):
         end_off = summ.entries[hi_e][1] if hi_e < ns else idx_size
         positions: list[int] = []
         next_pos = None
-        with open(local, "rb") as idx:
+        with sst.open("Index.db") as idx:
             cur = _IndexCursor(
                 idx, ver, path, start_off,
                 chunk_bytes=1 << 20, region_end=end_off,
@@ -2058,7 +2055,7 @@ def _scan_plan(sst, shard: int, n_shards: int):
         lo, hi = 0, npos
         tail = next_pos  # None -> bounded by data length
     else:
-        with open(local, "rb") as idx:
+        with sst.open("Index.db") as idx:
             positions = sorted(
                 pos for _, pos in stream_parse_index_db(
                     idx, version=ver, source=path
@@ -2074,8 +2071,8 @@ def _scan_plan(sst, shard: int, n_shards: int):
     # typed clustering automatically
     cmarshal = ",".join(h_clustering) or None
     return (
-        ks, tb, ss, ver, header, positions, lo, hi, npos, tail,
-        data_path, comp_path, cmarshal,
+        sst, ks, tb, ss, ver, header, positions, lo, hi, npos, tail,
+        cmarshal,
     )
 
 
@@ -2137,16 +2134,17 @@ def scan_sstable_cell_rows(
     without one it falls back to a full index stream sliced by position
     count. Shard-invariance of the union is pinned by test."""
     from cassandra_sstable_tools_spark.sources.lz4_block import (
-        open_data_file,
+        open_sstable_data,
     )
 
     plan = _scan_plan(index_path, shard, n_shards)
     if plan is None:
         return []
-    (ks, tb, ss, ver, header, positions, lo, hi, npos, tail,
-     data_path, comp_path, cmarshal) = plan
+    (sst, ks, tb, ss, ver, header, positions, lo, hi, npos, tail,
+     cmarshal) = plan
+    data_path = sst.path("Data.db")
     rows: list[tuple] = []
-    dat, data_len = open_data_file(data_path, comp_path, ver)
+    dat, data_len = open_sstable_data(sst)
     tail_end = data_len if tail is None else tail
     try:
         for span, blocks in _iter_block_spans(
@@ -2190,7 +2188,7 @@ def scan_sstable_cell_batches(
     declines a block it cannot represent faithfully."""
     from cassandra_sstable_tools_spark.sources import cellwalk
     from cassandra_sstable_tools_spark.sources.lz4_block import (
-        open_data_file,
+        open_sstable_data,
     )
 
     if not cellwalk.available():
@@ -2204,16 +2202,16 @@ def scan_sstable_cell_batches(
     plan = _scan_plan(index_path, shard, n_shards)
     if plan is None:
         return
-    (ks, tb, ss, ver, header, positions, lo, hi, npos, tail,
-     data_path, comp_path, cmarshal) = plan
-    dat, data_len = open_data_file(data_path, comp_path, ver)
+    (sst, ks, tb, ss, ver, header, positions, lo, hi, npos, tail,
+     cmarshal) = plan
+    dat, data_len = open_sstable_data(sst)
     tail_end = data_len if tail is None else tail
     try:
         try:
             bundle = cellwalk.walk_spans(
                 header,
                 _iter_block_spans(dat, positions, lo, hi, npos, tail_end),
-                data_path,
+                sst.path("Data.db"),
                 with_values,
             )
         except cellwalk._NeedPython:
@@ -2221,7 +2219,7 @@ def scan_sstable_cell_batches(
             # interpreted kernel is the arbiter, re-scan through it
             yield from _cell_batches(
                 scan_sstable_cell_rows(
-                    index_path, shard, n_shards, with_values=with_values
+                    sst, shard, n_shards, with_values=with_values
                 ),
                 _pa_cells_schema(with_values),
             )
@@ -2303,7 +2301,7 @@ def data_cells(
     if shards_per_sstable is not None and shards_per_sstable < 1:
         raise ValueError("shards_per_sstable must be >= 1")
     ssts = live_sstables(
-        spark, "data_cells", root, filenames,
+        "data_cells", root, filenames,
         ("Index.db", "Data.db", "Statistics.db"),
     )
     if shards_per_sstable is None:
@@ -2338,15 +2336,17 @@ def decodable_sstables(spark: SparkSession, root: str, filenames=None) -> DataFr
     through the LZ4 chunk layer since v8). One driver-side inventory
     filter, 1 row per sstable; joins always broadcast-able."""
     from cassandra_sstable_tools_spark.sources.inventory import (
+        live_sstables,
         local_frame,
-        sstable_inventory,
     )
 
     return local_frame(
         spark,
         [
-            s.identity for s in sstable_inventory(spark, root, filenames)
-            if {"Data.db", "Statistics.db"} <= s.components
+            s.identity for s in live_sstables(
+                "decodable_sstables", root, filenames,
+                ("Data.db", "Statistics.db"),
+            )
         ],
         "keyspace string, table_name string, sstable_id string",
     )

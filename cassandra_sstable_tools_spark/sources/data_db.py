@@ -19,9 +19,9 @@ Scope limits, by design and documented:
 - COMPRESSED sstables read through the CompressionInfo.db chunk map and
   the pure-Python LZ4 block decoder (sources/lz4_block.py) -- v8 closed
   the former uncompressed-only scope.
-- POSIX-visible roots only (a real Cassandra data dir always is): the
-  access pattern is point seeks, which ``binaryFile`` cannot express
-  without shipping whole files.
+- Any root the shared inventory can open (a POSIX directory, or a
+  ``pyarrow.fs`` filesystem such as ``s3://``): the access pattern is
+  point seeks through the sstable handle, so no file is shipped whole.
 - Every seek VERIFIES the key at the offset against the Index.db key and
   skips silently on mismatch -- the one legitimate mismatch source is a
   zero-length partition sharing its offset with its successor (dirty
@@ -97,15 +97,15 @@ def partition_deletions(
     through the CompressionInfo chunk map + LZ4 block decode -- v8 closed
     the former uncompressed-only scope). LIVE partitions produce no row."""
     from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
-    from cassandra_sstable_tools_spark.sources.lz4_block import open_data_file
+    from cassandra_sstable_tools_spark.sources.lz4_block import (
+        open_sstable_data,
+    )
 
     def scan(sst) -> list[tuple]:
         rows = []
-        dat, _ = open_data_file(
-            sst.local("Data.db"), sst.local("CompressionInfo.db"), sst.version
-        )
+        dat, _ = open_sstable_data(sst)
         try:
-            with open(sst.local("Index.db"), "rb") as idx:
+            with sst.open("Index.db") as idx:
                 for key, position in stream_parse_index_db(
                     idx, version=sst.version, source=sst.path("Index.db")
                 ):
@@ -210,15 +210,20 @@ _CRC_CHUNK = 8 << 20  # bounded memory regardless of Data.db size
 
 
 def file_crc32(path: str, chunk_bytes: int = _CRC_CHUNK) -> int:
+    with open(path, "rb") as f:
+        return stream_crc32(f, chunk_bytes)
+
+
+def stream_crc32(f, chunk_bytes: int = _CRC_CHUNK) -> int:
+    """CRC32 of everything ``f`` has left to read, in bounded memory."""
     import zlib
 
     crc = 0
-    with open(path, "rb") as f:
-        while True:
-            chunk = f.read(chunk_bytes)
-            if not chunk:
-                return crc & 0xFFFFFFFF
-            crc = zlib.crc32(chunk, crc)
+    while True:
+        chunk = f.read(chunk_bytes)
+        if not chunk:
+            return crc & 0xFFFFFFFF
+        crc = zlib.crc32(chunk, crc)
 
 
 DIGEST_SCHEMA = (
@@ -237,14 +242,15 @@ def digest_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 
     def check(sst) -> list[tuple]:
-        with open(sst.local("Digest.crc32"), "rb") as f:
+        with sst.open("Digest.crc32") as f:
             text = f.read(64).decode("ascii", "replace").strip()
         if not text.isdigit():
             raise ValueError(
                 f"corrupt Digest.crc32 {sst.path('Digest.crc32')}: not a "
                 f"decimal CRC ({text[:20]!r})"
             )
-        return [(file_crc32(sst.local("Data.db")) == int(text),)]
+        with sst.open("Data.db") as f:
+            return [(stream_crc32(f) == int(text),)]
 
     return sstable_pass(
         spark, "digest_checks", root, filenames, ("Digest.crc32", "Data.db"),

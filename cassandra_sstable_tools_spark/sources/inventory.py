@@ -1,17 +1,22 @@
-"""Driver-side sstable inventory, and the one per-sstable pass every POSIX
+"""Driver-side sstable inventory, and the one per-sstable pass every
 directory source reads through.
 
-The listing goes through the Hadoop ``FileSystem`` of the root, so a POSIX
-directory and an ``hdfs://``/``s3a://`` root take the same path, and it runs
-on the driver: no Spark job, no ``count()``, no repartition. Paths come back
-qualified (``file:/...``), exactly as the ``binaryFile`` source reports them.
+One ``pyarrow.fs`` filesystem, resolved from the root URI on the driver
+(``FileSystem.from_uri``), both lists and opens every sstable: a POSIX
+directory (``/x``, ``file:/x``, ``file:///x``) and any other root pyarrow
+can open (``s3://``, ``hdfs://`` where a Hadoop install provides
+``libhdfs.so``) take the same path. A root pyarrow cannot resolve
+(``s3a://``, an unknown scheme) is refused before any job runs, with a
+``ValueError`` naming the public function that was called. The listing
+runs on the driver: no Spark job, no ``count()``, no repartition. Paths
+come back qualified (``file:/...``).
 
 Listing rules, shared by every consumer:
 
 - ``snapshots/`` and ``backups/`` subtrees are never live data (a recursive
   listing would double-count their hardlinks and read keyspace='snapshots'
   off the path; r07 ADVICE #2), so they are skipped, as are hidden and
-  ``_``-prefixed names, which the file-source listing skips too;
+  ``_``-prefixed names; a root that itself lies inside one lists nothing;
 - ``filenames`` carries the reference's ``-f`` semantics (a set of Data.db
   basenames, `cli/PartitionSizeStatisticsCollector.java:35-59`): an sstable
   is kept when its Data.db name is in the set, whichever of its components
@@ -21,7 +26,8 @@ Listing rules, shared by every consumer:
 `cassandra/IndexReader.java:77-113`): the work list is the inventory
 filtered by the components a source needs, one ``spark.range(...)
 .mapInArrow`` stage runs one task per work unit, and each read gets an
-``SSTable`` handle whose sibling paths come from the listing -- no task
+``SSTable`` handle that carries the filesystem, opens its components
+(``SSTable.open``) and knows their lengths from the listing -- no task
 probes the filesystem for a sibling.
 """
 
@@ -30,64 +36,78 @@ from __future__ import annotations
 import os
 import re
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
-    EXCLUDED_PATHS,
-    _is_local_root,
-    _local_path,
     _parse_filename,
 )
 
+# directories that never hold live sstables, pruned from the walk; a root
+# that itself lies inside one lists nothing
 _EXCLUDED_DIRS = ("snapshots", "backups")
-_EXCLUDED = re.compile(EXCLUDED_PATHS)
+_EXCLUDED = re.compile("/(snapshots|backups)/")
 
 
 @dataclass(frozen=True)
 class SSTable:
     """One sstable's files: ``base`` is the qualified path up to the
     component name (``<dir>/<version>-<id>-<format>-``); ``status`` holds
-    ``(component, length, mtime_ms)`` per file when the handle comes from
-    the inventory listing."""
+    ``(component, length, mtime_ms)`` per file from the listing; ``fs`` is
+    the ``pyarrow.fs`` filesystem that listed them, whose paths are
+    ``base`` minus ``uri_prefix`` (``file:`` on a local root)."""
 
     base: str
     components: frozenset
     status: tuple = ()
+    fs: object = field(default=None, compare=False)
+    uri_prefix: str = ""
 
     @classmethod
     def at(cls, path: str) -> SSTable:
         """The handle of the sstable that owns component file ``path`` (a
-        POSIX path or ``file:`` URI), from one listing of its directory --
-        for callers that hold a path rather than an inventory."""
-        local = _local_path(path)
-        directory, name = os.path.split(local)
-        prefix = name[: name.rindex("-") + 1]
-        return cls(
-            path[: len(path) - len(name) + len(prefix)],
-            frozenset(
-                f[len(prefix):] for f in os.listdir(directory)
-                if f.startswith(prefix)
-            ),
-        )
+        POSIX path or a URI), from one listing of its directory -- for
+        callers that hold a path rather than an inventory."""
+        directory, _, name = path.rpartition("/")
+        stem = name[: name.rindex("-") + 1]
+        fs, top, prefix = _resolve("SSTable.at", directory or ".")
+        files = [
+            f for f in _list_dir(fs, top)[0]
+            if f[0].rsplit("/", 1)[-1].startswith(stem)
+        ]
+        found = _group(files, fs, prefix)
+        if not found:
+            raise ValueError(f"no sstable component at {path}")
+        return found[0]
 
     def path(self, component: str) -> str:
         return self.base + component
 
-    def local(self, component: str) -> str | None:
-        """POSIX path of ``component``, or None when it is not on disk."""
-        if component not in self.components:
-            return None
-        return _local_path(self.base + component)
+    def fs_path(self, component: str) -> str:
+        """``component``'s path on ``fs`` (a POSIX path on a local root)."""
+        return self.base[len(self.uri_prefix):] + component
+
+    def open(self, component: str):
+        """Binary random-access input stream of ``component`` (``read``,
+        ``seek``, ``close``; a context manager)."""
+        return self.fs.open_input_file(self.fs_path(component))
+
+    def _status(self, component: str) -> tuple[int, int]:
+        for c, n, t in self.status:
+            if c == component:
+                return n, t
+        raise ValueError(
+            f"sstable {self.base}: no {component} in its listing"
+        )
 
     def length(self, component: str) -> int:
-        return next(n for c, n, _ in self.status if c == component)
+        return self._status(component)[0]
 
     def mtime(self, component: str) -> int:
-        return next(t for c, _, t in self.status if c == component)
+        return self._status(component)[1]
 
     @property
     def data_name(self) -> str:
@@ -110,49 +130,87 @@ class SSTable:
         return self._parsed[3]
 
 
-def _list_files(spark: SparkSession, root: str) -> list[tuple[str, int, int]]:
-    jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    out: list[tuple[str, int, int]] = []
-    stack = [path]
-    while stack:
-        for st in fs.listStatus(stack.pop()):
-            p = st.getPath()
-            uri = p.toString()
-            name = uri.rsplit("/", 1)[-1]
-            if name.startswith(("_", ".")):
-                continue  # hidden, as the file-source listing treats them
-            if st.isDirectory():
-                if name not in _EXCLUDED_DIRS:
-                    stack.append(p)
-            else:
-                out.append((uri, st.getLen(), st.getModificationTime()))
-    return out
+def _resolve(name: str, root: str):
+    """``(filesystem, path on it, URI prefix)`` of a directory ``root``;
+    ``name`` is the public function resolving it, for the message."""
+    from pyarrow import fs as pafs
+
+    if "://" not in root and not root.startswith("file:"):
+        root = os.path.abspath(root)  # relative: against the cwd
+    try:
+        fs, top = pafs.FileSystem.from_uri(root)
+    except (ValueError, OSError) as e:
+        raise ValueError(
+            f"{name} cannot open root {root!r} through pyarrow.fs: {e}"
+        ) from None
+    if fs.get_file_info(top).type != pafs.FileType.Directory:
+        raise ValueError(f"{name} root is not a directory: {root}")
+    if isinstance(fs, pafs.LocalFileSystem):
+        prefix = "file:"
+    else:
+        i = root.rfind(top)
+        prefix = root[:i] if i >= 0 else ""
+    return fs, top, prefix
 
 
-def sstable_inventory(
-    spark: SparkSession, root: str, filenames=None
-) -> list[SSTable]:
-    """Live sstables under ``root``, sorted by path, each with the set of
-    component names found on disk (``Data.db``, ``Index.db``, ...)."""
+def _list_dir(fs, top: str) -> tuple[list[tuple[str, int, int]], list[str]]:
+    """``([(path, length, mtime_ms)] of the files, [subdirectory paths])``
+    directly under ``top``, hidden and ``_``-prefixed names skipped."""
+    from pyarrow import fs as pafs
+
+    files: list[tuple[str, int, int]] = []
+    dirs: list[str] = []
+    for info in fs.get_file_info(pafs.FileSelector(top)):
+        if info.base_name.startswith(("_", ".")):
+            continue
+        if info.type == pafs.FileType.Directory:
+            dirs.append(info.path)
+        elif info.type == pafs.FileType.File:
+            files.append((info.path, info.size, info.mtime_ns // 1_000_000))
+    return files, dirs
+
+
+def _group(files, fs, prefix: str) -> list[SSTable]:
+    """Component files -> one handle per sstable, sorted by path."""
     groups: dict[str, list] = {}
-    for uri, length, mtime in _list_files(spark, root):
-        if _EXCLUDED.search(uri):
-            continue  # the root itself lies inside a snapshot/backup
-        base, sep, component = uri.rpartition("-")
+    for path, length, mtime in files:
+        base, sep, component = path.rpartition("-")
         if sep and "/" not in component:
             groups.setdefault(base + sep, []).append(
                 (component, length, mtime)
             )
-    ssts = [
-        SSTable(b, frozenset(c for c, _, _ in st), tuple(sorted(st)))
+    return [
+        SSTable(
+            prefix + b, frozenset(c for c, _, _ in st), tuple(sorted(st)),
+            fs, prefix,
+        )
         for b, st in sorted(groups.items())
+    ]
+
+
+def _inventory(name: str, root: str, filenames) -> list[SSTable]:
+    fs, top, prefix = _resolve(name, root)
+    files: list[tuple[str, int, int]] = []
+    stack = [top]
+    while stack:
+        found, dirs = _list_dir(fs, stack.pop())
+        files += found
+        stack += [
+            d for d in dirs if d.rsplit("/", 1)[-1] not in _EXCLUDED_DIRS
+        ]
+    ssts = [
+        s for s in _group(files, fs, prefix) if not _EXCLUDED.search(s.base)
     ]
     if filenames:
         wanted = set(filenames)
         ssts = [s for s in ssts if s.data_name in wanted]
     return ssts
+
+
+def sstable_inventory(root: str, filenames=None) -> list[SSTable]:
+    """Live sstables under ``root``, sorted by path, each with the set of
+    component names found on disk (``Data.db``, ``Index.db``, ...)."""
+    return _inventory("sstable_inventory", root, filenames)
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
@@ -170,18 +228,13 @@ def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     ))
 
 
-def live_sstables(
-    spark: SparkSession, name: str, root: str, filenames, needs
-) -> list[SSTable]:
-    """The work list of a POSIX directory source: the inventory's sstables
-    that have every component in ``needs``. ``name`` is the public
-    function reading them, for the root check's message."""
-    if not _is_local_root(root):
-        raise ValueError(f"{name} needs a POSIX-visible root; got {root!r}")
+def live_sstables(name: str, root: str, filenames, needs) -> list[SSTable]:
+    """The work list of a directory source: the inventory's sstables that
+    have every component in ``needs``. ``name`` is the public function
+    reading them, for the root check's message."""
     need = set(needs)
     return [
-        s for s in sstable_inventory(spark, root, filenames)
-        if need <= s.components
+        s for s in _inventory(name, root, filenames) if need <= s.components
     ]
 
 
@@ -220,7 +273,7 @@ def sstable_pass(
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    ssts = live_sstables(spark, name, root, filenames, needs)
+    ssts = live_sstables(name, root, filenames, needs)
     n = max(1, min(len(ssts), spark.sparkContext.defaultParallelism))
     pa_schema = to_arrow_schema(schema)
 

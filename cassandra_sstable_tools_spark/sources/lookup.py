@@ -53,8 +53,6 @@ this module implements them from the public on-disk formats.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -257,34 +255,31 @@ def _sstable_ctx(sst) -> dict | None:
     )
 
     ver = sst.version
-    stats_path = sst.local("Statistics.db")
-    if sst.local("Data.db") is None or stats_path is None:
+    if not {"Data.db", "Statistics.db"} <= sst.components:
         return None
-    with open(stats_path, "rb") as f:
+    stats_path = sst.path("Statistics.db")
+    with sst.open("Statistics.db") as f:
         stats_content = f.read()
     stats = parse_statistics_db(stats_content, version=ver, source=stats_path)
     header = parse_serialization_header(
         stats_content, version=ver, source=stats_path
     )
     filt = None
-    filter_path = sst.local("Filter.db")
-    if filter_path is not None:
-        with open(filter_path, "rb") as f:
-            filt = parse_filter_db(f.read(), source=filter_path)
+    if "Filter.db" in sst.components:
+        with sst.open("Filter.db") as f:
+            filt = parse_filter_db(f.read(), source=sst.path("Filter.db"))
     summ = None
-    summary_path = sst.local("Summary.db")
-    if summary_path is not None:
-        with open(summary_path, "rb") as f:
-            summ = parse_summary_db(f.read(), source=summary_path)
+    if "Summary.db" in sst.components:
+        with sst.open("Summary.db") as f:
+            summ = parse_summary_db(f.read(), source=sst.path("Summary.db"))
     return {
-        "data": sst.local("Data.db"),
-        "comp": sst.local("CompressionInfo.db"),
+        "data": sst.path("Data.db"),
         "header": header,
         "partitioner": stats.partitioner,
         "decorate": key_decorator(stats.partitioner),
         "filter": filt,
         "summary": summ,
-        "index_size": os.path.getsize(sst.local("Index.db")),
+        "index_size": sst.length("Index.db"),
     }
 
 
@@ -317,17 +312,19 @@ def _lookup_in_sstable(
     from cassandra_sstable_tools_spark.sources.data_cells import (
         decode_partition_block,
     )
-    from cassandra_sstable_tools_spark.sources.lz4_block import open_data_file
+    from cassandra_sstable_tools_spark.sources.lz4_block import (
+        open_sstable_data,
+    )
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         render_typed as _render_typed,
     )
 
-    index_local, path = sst.local("Index.db"), sst.path("Index.db")
+    path = sst.path("Index.db")
     ver = sst.version
     ctx = _sstable_ctx(sst)
     if ctx is None:
         return None
-    data_path, comp_path, header = ctx["data"], ctx["comp"], ctx["header"]
+    data_path, header = ctx["data"], ctx["header"]
     decorate, filt, summ = ctx["decorate"], ctx["filter"], ctx["summary"]
     index_size = ctx["index_size"]
 
@@ -400,7 +397,7 @@ def _lookup_in_sstable(
         per_region[
             bisect.bisect_right(region_starts, a["window_start"]) - 1
         ].append((kb, a))
-    with open(index_local, "rb") as f:
+    with sst.open("Index.db") as f:
         for (rs, re_), members in zip(regions, per_region):
             remaining = {kb for kb, _a in members}
             cur = _IndexCursor(
@@ -433,7 +430,7 @@ def _lookup_in_sstable(
 
     records: list[tuple] = []
     if matches:
-        dat, data_len = open_data_file(data_path, comp_path, ver)
+        dat, data_len = open_sstable_data(sst)
         try:
             for dpos, dend, a in sorted(
                 matches, key=lambda m: m[0]
@@ -651,11 +648,10 @@ def _summary_check_in_sstable(sst):
         parse_summary_db,
     )
 
-    summary_path = sst.local("Summary.db")
-    with open(summary_path, "rb") as f:
-        summ = parse_summary_db(f.read(), source=summary_path)
+    with sst.open("Summary.db") as f:
+        summ = parse_summary_db(f.read(), source=sst.path("Summary.db"))
     verified = 0
-    with open(sst.local("Index.db"), "rb") as f:
+    with sst.open("Index.db") as f:
         for key, idx_off in summ.entries:
             try:
                 ent = _IndexCursor(
@@ -715,12 +711,14 @@ def _range_in_sstable(
     from cassandra_sstable_tools_spark.sources.data_cells import (
         decode_partition_block,
     )
-    from cassandra_sstable_tools_spark.sources.lz4_block import open_data_file
+    from cassandra_sstable_tools_spark.sources.lz4_block import (
+        open_sstable_data,
+    )
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         render_typed,
     )
 
-    index_local, path = sst.local("Index.db"), sst.path("Index.db")
+    path = sst.path("Index.db")
     ver = sst.version
     if ctx is None:
         ctx = _sstable_ctx(sst)
@@ -755,7 +753,7 @@ def _range_in_sstable(
     # index pass: matched (key, data_position) + the end boundary
     matched: list[tuple[bytes, int]] = []
     boundary: int | None = None  # data position of the first entry past hi
-    with open(index_local, "rb") as f:
+    with sst.open("Index.db") as f:
         cur = _IndexCursor(f, ver, path, start, chunk_bytes=chunk_bytes)
         while True:
             ent = cur.next_entry()
@@ -783,7 +781,7 @@ def _range_in_sstable(
         )
     records: list[tuple] = []
     if matched:
-        dat, data_len = open_data_file(ctx["data"], ctx["comp"], ver)
+        dat, data_len = open_sstable_data(sst)
         try:
             ends = [dpos for _, dpos in matched[1:]] + [
                 data_len if boundary is None else boundary
@@ -831,12 +829,14 @@ def _token_range_in_sstable(
     from cassandra_sstable_tools_spark.sources.data_cells import (
         decode_partition_block,
     )
-    from cassandra_sstable_tools_spark.sources.lz4_block import open_data_file
+    from cassandra_sstable_tools_spark.sources.lz4_block import (
+        open_sstable_data,
+    )
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         render_typed,
     )
 
-    index_local, path = sst.local("Index.db"), sst.path("Index.db")
+    path = sst.path("Index.db")
     ver = sst.version
     ctx = _sstable_ctx(sst)
     if ctx is None:
@@ -876,7 +876,7 @@ def _token_range_in_sstable(
 
     matched: list[tuple[bytes, int]] = []
     boundary: int | None = None
-    with open(index_local, "rb") as f:
+    with sst.open("Index.db") as f:
         cur = _IndexCursor(f, ver, path, start, chunk_bytes=chunk_bytes)
         while True:
             ent = cur.next_entry()
@@ -905,7 +905,7 @@ def _token_range_in_sstable(
         )
     records: list[tuple] = []
     if matched:
-        dat, data_len = open_data_file(ctx["data"], ctx["comp"], ver)
+        dat, data_len = open_sstable_data(sst)
         try:
             ends = [dpos for _, dpos in matched[1:]] + [
                 data_len if boundary is None else boundary

@@ -797,29 +797,55 @@ class _RangeFile:
 
 
 def open_data_file(data_path: str, comp_path: str | None, version: str):
-    """Open a Data.db for logical (uncompressed-offset) point reads:
-    plain file when no CompressionInfo.db sibling exists (``comp_path``
-    None or absent), else a chunk-decoding facade. Returns (file-like,
-    logical data length)."""
+    """Open a Data.db by path for logical (uncompressed-offset) point
+    reads: plain file when no CompressionInfo.db sibling exists
+    (``comp_path`` None or absent), else a chunk-decoding facade. Returns
+    (file-like, logical data length)."""
     import os
 
+    comp = None
+    if comp_path is not None and os.path.exists(comp_path):
+        with open(comp_path, "rb") as cf:
+            comp = cf.read()
+    return _logical_data(
+        open(data_path, "rb"), os.path.getsize(data_path), comp, version,
+        data_path, comp_path,
+    )
+
+
+def open_sstable_data(sst):
+    """``open_data_file`` through an ``inventory.SSTable`` handle: the
+    components open through its filesystem, the Data.db length comes from
+    its listing."""
+    comp = None
+    if "CompressionInfo.db" in sst.components:
+        with sst.open("CompressionInfo.db") as cf:
+            comp = cf.read()
+    return _logical_data(
+        sst.open("Data.db"), sst.length("Data.db"), comp, sst.version,
+        sst.path("Data.db"), sst.path("CompressionInfo.db"),
+    )
+
+
+def _logical_data(f, size: int, comp: bytes | None, version: str,
+                  source: str, comp_source: str):
+    """(file-like, logical length) over the open Data.db ``f`` of ``size``
+    bytes, given its CompressionInfo.db bytes (None: uncompressed)."""
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         parse_compression_info_full,
     )
 
-    f = open(data_path, "rb")
-    if comp_path is None or not os.path.exists(comp_path):
-        return f, os.path.getsize(data_path)
+    if comp is None:
+        return f, size
     try:
-        with open(comp_path, "rb") as cf:
-            chunk_len, data_len, max_comp, offsets, compressor = (
-                parse_compression_info_full(
-                    cf.read(), version=version, source=comp_path
-                )
+        chunk_len, data_len, max_comp, offsets, compressor = (
+            parse_compression_info_full(
+                comp, version=version, source=comp_source
             )
+        )
         reader = CompressedRangeReader(
-            f, os.path.getsize(data_path), chunk_len, data_len, offsets,
-            max_comp, source=data_path, compressor=compressor,
+            f, size, chunk_len, data_len, offsets,
+            max_comp, source=source, compressor=compressor,
         )
     except Exception:
         f.close()

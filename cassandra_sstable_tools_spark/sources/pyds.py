@@ -55,8 +55,9 @@ differences are where the Spark-first value is:
   generations late (out-of-band ``nodetool refresh`` of historical
   files) -- documented; restart with ``startingOffsets=earliest``.
 
-100 TB notes: planning state is one dict per sstable (path + names --
-listing-scale, same as any file source); decode state per task is one
+100 TB notes: planning state is one handle per sstable (its component
+names and lengths from the shared driver-side inventory -- listing-scale,
+same as any file source); decode state per task is one
 partition block + the shard's position array (``data_cells`` bounds);
 the stream's offset dict is O(tables). Rows cross the Python<->JVM
 boundary through the DataSource API's Arrow batching.
@@ -67,7 +68,6 @@ semantics above; this module is additive Spark-native surface.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
@@ -91,62 +91,37 @@ _PRUNE_COLS = ("keyspace", "table_name", "sstable_id")
 PLANNING_AUDIT = {"filter_reads": 0}
 
 
-def _walk_index_files(root: str) -> list[str]:
-    """All live *-Index.db paths under a Cassandra data directory --
-    driver-side plain listing (planning runs on the driver; the root is
-    POSIX-visible by the same contract as ``data_cells``). Excludes
-    ``snapshots/`` and ``backups/`` subtrees exactly like
-    ``sstable_binary._filter_files`` (r07 ADVICE #2: recursive listings
-    would double-count snapshot hardlinks)."""
-    if root.startswith("file:"):
-        root = root[5:]
-        while root.startswith("//"):
-            root = root[1:]
-    if not root.startswith("/"):
-        raise ValueError(
-            f"cassandra-sstable needs a POSIX-visible root; got {root!r}"
-        )
-    if not os.path.isdir(root):
-        raise ValueError(f"cassandra-sstable root is not a directory: {root}")
-    out: list[str] = []
-    for dirpath, dirnames, names in os.walk(root):
-        dirnames[:] = [
-            d for d in dirnames if d not in ("snapshots", "backups")
-        ]
-        for n in names:
-            if n.endswith("-Index.db"):
-                out.append(os.path.join(dirpath, n))
-    return sorted(out)
+def _index_sstables(root: str, filenames=None, needs=("Index.db",)):
+    """Live sstable handles under ``root`` that have ``needs`` -- the
+    shared inventory (``inventory.sstable_inventory``: snapshot/backup
+    exclusion, ``-f``, the root check), listed driver-side."""
+    from cassandra_sstable_tools_spark.sources.inventory import live_sstables
+
+    return live_sstables(FORMAT_NAME, root, filenames, needs)
+
+
+# the data_cells decodability rule, plus the Index.db planning needs
+_DECODABLE = ("Index.db", "Data.db", "Statistics.db")
 
 
 def list_sstables(root: str, filenames=None) -> list[dict]:
-    """Live sstables under ``root`` as planning rows:
-    {path, keyspace, table_name, sstable_id, version}. ``filenames``
-    carries the reference's ``-f`` semantics (a set of Data.db basenames,
+    """Live sstables under ``root`` that have an Index.db, as planning
+    rows: {path (of the Index.db on the root's filesystem), keyspace,
+    table_name, sstable_id, version}. ``filenames`` carries the
+    reference's ``-f`` semantics (a set of Data.db basenames,
     `cli/PartitionSizeStatisticsCollector.java:35-59`): pruning happens
     HERE, before any file opens."""
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        _parse_filename,
-    )
-
-    wanted = set(filenames) if filenames else None
-    rows = []
-    for p in _walk_index_files(root):
-        ks, tb, ss, ver = _parse_filename(p)
-        if wanted is not None:
-            data_name = os.path.basename(p)[: -len("Index.db")] + "Data.db"
-            if data_name not in wanted:
-                continue
-        rows.append(
-            {
-                "path": p,
-                "keyspace": ks,
-                "table_name": tb,
-                "sstable_id": ss,
-                "version": ver,
-            }
-        )
-    return rows
+    return [
+        {
+            "path": s.fs_path("Index.db"),
+            "keyspace": ks,
+            "table_name": tb,
+            "sstable_id": ss,
+            "version": s.version,
+        }
+        for s in _index_sstables(root, filenames)
+        for ks, tb, ss in (s.identity,)
+    ]
 
 
 @dataclass
@@ -158,22 +133,19 @@ class SSTablePartition(InputPartition):
     carry several byte candidates when the literal is encoding-ambiguous
     (a text key that LOOKS like a 0x-hex render). ``spans`` holds
     disjoint (lo_bytes, hi_bytes) byte intervals whose union is a proven
-    SUPERSET of the pushed string-range predicate (see _range_spans)."""
+    SUPERSET of the pushed string-range predicate (see _range_spans).
+    ``sst`` is the ``inventory.SSTable`` handle (None: an empty batch)."""
 
-    path: str
+    sst: object = None
     shard: int = 0
     n_shards: int = 1
     keys: tuple | None = None
     spans: tuple | None = None
 
-
-def _decode_visible(index_local: str) -> bool:
-    """The data_cells decodability rule: Data.db + Statistics.db present
-    next to the Index.db."""
-    base = index_local[: -len("Index.db")]
-    return os.path.exists(base + "Data.db") and os.path.exists(
-        base + "Statistics.db"
-    )
+    @property
+    def path(self) -> str:
+        """The partition's Index.db path ("" for an empty batch)."""
+        return self.sst.fs_path("Index.db") if self.sst is not None else ""
 
 
 def _key_candidates(literal: str, key_type: str | None) -> list[bytes]:
@@ -360,21 +332,22 @@ class SSTableCellReader(DataSourceReader):
 
     # -- planning ---------------------------------------------------------
 
-    def _listing(self) -> list[dict]:
-        rows = list_sstables(self.root, self.filenames)
+    def _listing(self) -> list:
+        ssts = _index_sstables(self.root, self.filenames)
         for col, allowed in self._allowed.items():
-            rows = [r for r in rows if r[col] in allowed]
-        return rows
+            i = _PRUNE_COLS.index(col)
+            ssts = [s for s in ssts if s.identity[i] in allowed]
+        return ssts
 
     def partitions(self) -> Sequence[InputPartition]:
         if self._prunable:
-            return [SSTablePartition(path="", keys=())]
-        rows = self._listing()
+            return [SSTablePartition(keys=())]
+        ssts = self._listing()
         if (
             self._key_literals is not None
             and len(self._key_literals) <= self.pointread_max_keys
         ):
-            return self._point_read_partitions(rows)
+            return self._point_read_partitions(ssts)
         if self._has_range and not self.key_type:
             # range pushdown is sound only for the DEFAULT rendering
             # (UTF-8-or-hex -- both families order-consistent with bytes,
@@ -382,32 +355,30 @@ class SSTableCellReader(DataSourceReader):
             # differently than their bytes, so they keep the full scan
             spans = tuple(_range_spans(self._range_lo, self._range_hi))
             if not spans:
-                return [SSTablePartition(path="", keys=())]
+                return [SSTablePartition(keys=())]
             return [
-                SSTablePartition(path=r["path"], spans=spans)
-                for r in rows
-            ] or [SSTablePartition(path="", keys=())]
+                SSTablePartition(sst=sst, spans=spans) for sst in ssts
+            ] or [SSTablePartition(keys=())]
         return [
-            SSTablePartition(path=r["path"], shard=s, n_shards=k)
-            for r in rows
-            for k in (self._shards_for(r["path"]),)
+            SSTablePartition(sst=sst, shard=s, n_shards=k)
+            for sst in ssts
+            for k in (self._shards_for(sst, ssts),)
             for s in range(k)
-        ] or [SSTablePartition(path="", keys=())]
+        ] or [SSTablePartition(keys=())]
 
-    def _shards_for(self, index_path: str) -> int:
+    def _shards_for(self, sst, ssts: list) -> int:
         """Split count for one sstable: the explicit option wins; else
         ceil(Data.db bytes / target_split_bytes), capped so a pathological
         file cannot explode the task count."""
         if self.n_shards is not None:
             return self.n_shards
-        data = index_path[: -len("Index.db")] + "Data.db"
-        try:
-            size = os.path.getsize(data)
-        except OSError:
+        if "Data.db" not in sst.components:
             return 1
-        return max(1, min(256, -(-size // self._resolved_target())))
+        return max(1, min(
+            256, -(-sst.length("Data.db") // self._resolved_target(ssts))
+        ))
 
-    def _resolved_target(self) -> int:
+    def _resolved_target(self, ssts: list) -> int:
         """Effective split-byte target: the explicit option, else the
         shared core-filling rule over this listing's total Data.db bytes
         and the active session's defaultParallelism (partitions() runs
@@ -419,14 +390,9 @@ class SSTableCellReader(DataSourceReader):
             auto_split_bytes,
         )
 
-        total = 0
-        for r in self._listing():
-            try:
-                total += os.path.getsize(
-                    r["path"][: -len("Index.db")] + "Data.db"
-                )
-            except OSError:
-                pass
+        total = sum(
+            s.length("Data.db") for s in ssts if "Data.db" in s.components
+        )
         cores = 0
         try:
             from pyspark.sql import SparkSession
@@ -441,7 +407,7 @@ class SSTableCellReader(DataSourceReader):
         self.target_split_bytes = auto_split_bytes(total, cores)
         return self.target_split_bytes
 
-    def _point_read_partitions(self, rows: list[dict]) -> list[InputPartition]:
+    def _point_read_partitions(self, ssts: list) -> list[InputPartition]:
         """Point-read planning: bloom-probe every candidate key against
         each sstable's Filter.db DRIVER-side (a bloom filter is KB-scale;
         reading it here means a bloom-negative sstable contributes no
@@ -459,23 +425,22 @@ class SSTableCellReader(DataSourceReader):
         for lit in sorted(self._key_literals or ()):
             for kb in _key_candidates(lit, self.key_type):
                 targets.append((lit, kb))
-        visible = [r for r in rows if _decode_visible(r["path"])]
+        visible = [s for s in ssts if set(_DECODABLE) <= s.components]
         driver_prune = targets and len(visible) <= self.bloom_prune_max_files
         parts: list[InputPartition] = []
-        for r in visible:
+        for sst in visible:
             keep = targets
-            fpath = r["path"][: -len("Index.db")] + "Filter.db"
-            if driver_prune and os.path.exists(fpath):
+            if driver_prune and "Filter.db" in sst.components:
                 PLANNING_AUDIT["filter_reads"] += 1
-                with open(fpath, "rb") as f:
-                    filt = parse_filter_db(f.read(), source=fpath)
+                with sst.open("Filter.db") as f:
+                    filt = parse_filter_db(
+                        f.read(), source=sst.path("Filter.db")
+                    )
                 passes = might_contain_batch(filt, [kb for _, kb in targets])
                 keep = [t for t, ok in zip(targets, passes) if ok]
             if keep:
-                parts.append(
-                    SSTablePartition(path=r["path"], keys=tuple(keep))
-                )
-        return parts or [SSTablePartition(path="", keys=())]
+                parts.append(SSTablePartition(sst=sst, keys=tuple(keep)))
+        return parts or [SSTablePartition(keys=())]
 
     # -- execution --------------------------------------------------------
 
@@ -493,7 +458,7 @@ class SSTableCellReader(DataSourceReader):
         )
 
         if (
-            partition.path
+            partition.sst is not None
             and partition.keys is None
             and partition.spans is None
         ):
@@ -502,14 +467,14 @@ class SSTableCellReader(DataSourceReader):
             # volume is small and their decode goes through the lookup
             # window readers, not the scan)
             return scan_sstable_cell_batches(
-                partition.path, partition.shard, partition.n_shards
+                partition.sst, partition.shard, partition.n_shards
             )
         return _cell_batches(
             self._read_rows(partition), _pa_cells_schema(False)
         )
 
     def _read_rows(self, partition: SSTablePartition) -> Iterator[tuple]:
-        if not partition.path:
+        if partition.sst is None:
             return iter(())
         if partition.keys is not None:
             return self._read_point(partition)
@@ -521,7 +486,7 @@ class SSTableCellReader(DataSourceReader):
 
         return iter(
             scan_sstable_cell_rows(
-                partition.path, partition.shard, partition.n_shards
+                partition.sst, partition.shard, partition.n_shards
             )
         )
 
@@ -533,7 +498,6 @@ class SSTableCellReader(DataSourceReader):
         from cassandra_sstable_tools_spark.sources.data_cells import (
             scan_sstable_cell_rows,
         )
-        from cassandra_sstable_tools_spark.sources.inventory import SSTable
         from cassandra_sstable_tools_spark.sources.lookup import (
             _range_in_sstable,
             _sstable_ctx,
@@ -542,7 +506,7 @@ class SSTableCellReader(DataSourceReader):
             uses_default_key_render,
         )
 
-        sst = SSTable.at(partition.path)
+        sst = partition.sst
         ks, tb, ss = sst.identity
         ctx = _sstable_ctx(sst)
         if ctx is None:
@@ -555,7 +519,7 @@ class SSTableCellReader(DataSourceReader):
             # key bytes, so spans could UNDER-cover -- full-scan instead
             or not uses_default_key_render(ctx["header"].key_type)
         ):
-            yield from scan_sstable_cell_rows(partition.path)
+            yield from scan_sstable_cell_rows(sst)
             return
         for lo_b, hi_b in partition.spans:
             got = _range_in_sstable(sst, lo_b, hi_b, ctx=ctx)
@@ -576,7 +540,6 @@ class SSTableCellReader(DataSourceReader):
         from cassandra_sstable_tools_spark.sources.data_cells import (
             scan_sstable_cell_rows,
         )
-        from cassandra_sstable_tools_spark.sources.inventory import SSTable
         from cassandra_sstable_tools_spark.sources.lookup import (
             _lookup_in_sstable,
             _sstable_ctx,
@@ -585,7 +548,7 @@ class SSTableCellReader(DataSourceReader):
             render_typed,
         )
 
-        sst = SSTable.at(partition.path)
+        sst = partition.sst
         ks, tb, ss = sst.identity
         ctx = _sstable_ctx(sst)
         if ctx is None:
@@ -596,7 +559,7 @@ class SSTableCellReader(DataSourceReader):
             if render_typed(kb, key_type) != lit:
                 # the literal cannot be inverted for THIS validator:
                 # full-scan this sstable instead of silently missing rows
-                yield from scan_sstable_cell_rows(partition.path)
+                yield from scan_sstable_cell_rows(sst)
                 return
             faithful.append((lit, kb))
         if not faithful:
@@ -775,11 +738,9 @@ class SSTableStreamReader(DataSourceStreamReader):
     def _list_gens(self) -> dict[str, list[str]]:
         """table -> sorted gen keys of ALL visible sstables."""
         seen: dict[str, list[str]] = {}
-        for r in list_sstables(self.root):
-            if not _decode_visible(r["path"]):
-                continue
-            t = f"{r['keyspace']}/{r['table_name']}"
-            seen.setdefault(t, []).append(_gen_key(r["sstable_id"]))
+        for sst in _index_sstables(self.root, needs=_DECODABLE):
+            ks, tb, ss = sst.identity
+            seen.setdefault(f"{ks}/{tb}", []).append(_gen_key(ss))
         return {t: sorted(g) for t, g in seen.items()}
 
     def _snapshot(self) -> dict[str, list[str]]:
@@ -867,25 +828,23 @@ class SSTableStreamReader(DataSourceStreamReader):
         self, start: dict, end: dict
     ) -> Sequence[InputPartition]:
         parts = []
-        for r in list_sstables(self.root):
-            if not _decode_visible(r["path"]):
-                continue
-            t = f"{r['keyspace']}/{r['table_name']}"
-            g = _gen_key(r["sstable_id"])
+        for sst in _index_sstables(self.root, needs=_DECODABLE):
+            ks, tb, ss = sst.identity
+            t, g = f"{ks}/{tb}", _gen_key(ss)
             if self._claims(end, t, g) and not self._claims(start, t, g):
-                parts.append(SSTablePartition(path=r["path"]))
+                parts.append(SSTablePartition(sst=sst))
         # Spark requires >= 1 partition per batch; an empty batch reads none
-        return parts or [SSTablePartition(path="", keys=())]
+        return parts or [SSTablePartition(keys=())]
 
     def read(self, partition: SSTablePartition) -> Iterator:
-        if not partition.path:
+        if partition.sst is None:
             return iter(())
         from cassandra_sstable_tools_spark.sources.data_cells import (
             scan_sstable_cell_batches,
         )
 
         # pyarrow RecordBatches, same fast path as the batch reader
-        return scan_sstable_cell_batches(partition.path)
+        return scan_sstable_cell_batches(partition.sst)
 
     def commit(self, end: dict) -> None:
         pass
@@ -1097,7 +1056,7 @@ def ds_write_roundtrip_cassdir(spark, sf_dir: str):
         .mode("append")
         .save(out)
     )
-    if not _walk_index_files(out):
+    if not list_sstables(out):
         # empty corpus wrote nothing: the typed empty frame is the answer
         return src.drop("value_bytes", "value_marshal", "clustering_marshal")
     # the re-decode needs only the base frame (value_len rides it); a

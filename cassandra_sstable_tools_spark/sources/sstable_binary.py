@@ -40,16 +40,14 @@ Unsigned vint (Cassandra ``VIntCoding``): first byte carries N leading
 bits, extra bytes big-endian. Values < 128 are one byte.
 
 Spark shape / 100 TB notes:
-- on a POSIX-visible root (a real data directory always is one) the
-  driver lists the directory once (``inventory.sstable_inventory``) and
-  one ``mapInArrow`` stage of min(#sstables, cores) tasks reads each
-  Index.db exactly once (``inventory.sstable_pass``), stream-parsing it
-  in 8 MB chunks executor-side -- task memory is bounded by the chunk,
-  never by the index size (a 100 GB Data.db's index is ~1 GB), and the
-  reference also streams one file per thread.
-- on ``hdfs://``/``s3a://`` roots no task can open a file by path, so the
-  sources that must run there read whole-file ``binaryFile`` content rows
-  instead (``content_scan``; one component file per row in memory).
+- the driver lists the root once through its ``pyarrow.fs`` filesystem
+  (``inventory.sstable_inventory``; a POSIX directory, or any root pyarrow
+  can open) and one ``mapInArrow`` stage of min(#sstables, cores) tasks
+  reads each Index.db exactly once through that filesystem
+  (``inventory.sstable_pass``), stream-parsing it in 8 MB chunks
+  executor-side -- task memory is bounded by the chunk, never by the
+  index size (a 100 GB Data.db's index is ~1 GB), and the reference also
+  streams one file per thread.
 - the parse is sequential WITHIN a file by format necessity (entries are
   variable-length), exactly like the reference reader; parallelism is
   across files, which is how a real data directory scales (many sstables).
@@ -301,10 +299,10 @@ def stream_parse_index_db(
     """Parse Index.db from a file object in bounded memory.
 
     The whole-file path (``parse_index_db``) holds one file in RAM, which
-    inherits binaryFile's 2 GB content ceiling and makes a 100 GB Data.db's
-    multi-GB index a task OOM; this variant keeps only ``chunk_bytes`` plus
-    one partial entry resident, so index size never bounds what a task can
-    read. Same grammar, same loud-corruption contract."""
+    makes a 100 GB Data.db's multi-GB index a task OOM; this variant keeps
+    only ``chunk_bytes`` plus one partial entry resident, so index size
+    never bounds what a task can read. Same grammar, same loud-corruption
+    contract."""
     buf = b""
     base = 0  # file offset of buf[0]
     while True:
@@ -348,11 +346,6 @@ INDEX_ENTRIES_SCHEMA = (
     "keyspace string, table_name string, sstable_id string, "
     "partition_key string, position bigint"
 )
-
-
-def _is_local_root(root: str) -> bool:
-    """POSIX-visible root: a bare absolute path or an explicit file: URI."""
-    return root.startswith(("/", "file:"))
 
 
 _CONTROL_CHARS = __import__("re").compile("[\x00-\x1f\x7f-\x9f]")
@@ -639,81 +632,13 @@ def render_typed(v: bytes, marshal_type: str | None) -> str:
     return render_key(v)
 
 
-# path segments that never hold live sstables (see _filter_files)
-EXCLUDED_PATHS = "/(snapshots|backups)/"
-
-
-def _filter_files(files: DataFrame, filenames, component: str) -> DataFrame:
-    """Apply the reference's `-f` semantics (a set of Data.db FILENAMES,
-    `cli/PartitionSizeStatisticsCollector.java:35-59`) to a (path, ...)
-    listing of some component: map each basename to its sibling Data.db
-    name and keep members. File-grain pruning BEFORE any parse -- whole
-    excluded sstables are never opened, like the reference's reader skip.
-
-    Always excluded, filter or not: files under a ``snapshots/`` or
-    ``backups/`` path segment. recursiveFileLookup would otherwise pick up
-    ``<table>/snapshots/<tag>/*`` and ``<table>/backups/*`` copies in a real
-    data directory, double-counting data and misattributing it (the -3/-2
-    path pieces would read keyspace='snapshots'); the reference only sees
-    live sstables because it goes through the ColumnFamilyStore (r07
-    ADVICE #2)."""
-    files = files.where(~F.col("path").rlike(EXCLUDED_PATHS))
-    if not filenames:
-        return files
-    fn = F.element_at(F.split(F.col("path"), "/"), -1)
-    data_fn = F.regexp_replace(fn, component.replace(".", r"\.") + "$", "Data.db")
-    return files.where(data_fn.isin(list(filenames)))
-
-
 def _local_path(path: str) -> str:
-    """file:/x, file:///x -> /x (binaryFile emits file: URIs)."""
+    """file:/x, file:///x -> /x."""
     if path.startswith("file:"):
         path = path[5:]
         while path.startswith("//"):
             path = path[1:]
     return path
-
-
-def content_scan(
-    spark: SparkSession, root: str, filenames, component: str, parse,
-    schema: str,
-) -> DataFrame:
-    """binaryFile scan of every ``component`` file's CONTENT under any
-    Hadoop root (``hdfs://``, ``s3a://``, a POSIX directory): one
-    whole-file row per component, ``parse(content, version, path)`` returns
-    the file's rows (``schema`` column order after the keyspace/table_name/
-    sstable_id prefix), Arrow-typed from ``schema``. The read path of the
-    sources that must also run where no filesystem is visible to a task;
-    POSIX-only sources read through ``inventory.sstable_pass``."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    from cassandra_sstable_tools_spark.sources.data_cells import _cell_batches
-
-    files = _filter_files(
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", f"*-{component}")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path", "content"),
-        filenames,
-        component,
-    )
-    pa_schema = to_arrow_schema(StructType.fromDDL(schema))
-
-    def scan(batches) -> Iterator:
-        for rb in batches:
-            rows: list[tuple] = []
-            for path, content in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist()
-            ):
-                ks, tb, ss, ver = _parse_filename(path, component=component)
-                rows.extend(
-                    (ks, tb, ss, *r) for r in parse(content, ver, path)
-                )
-            yield from _cell_batches(rows, pa_schema)
-
-    return files.mapInArrow(scan, schema)
 
 
 def _header_renderer(sst):
@@ -723,13 +648,13 @@ def _header_renderer(sst):
         parse_serialization_header,
     )
 
-    stats = sst.local("Statistics.db")
-    if stats is None:
+    if "Statistics.db" not in sst.components:
         return render_key
     try:
-        with open(stats, "rb") as f:
+        with sst.open("Statistics.db") as f:
             kt = parse_serialization_header(
-                f.read(), version=sst.version, source=stats
+                f.read(), version=sst.version,
+                source=sst.path("Statistics.db"),
             ).key_type
     except Exception:  # noqa: BLE001 -- corrupt header: heuristic
         return render_key
@@ -738,7 +663,7 @@ def _header_renderer(sst):
 
 def _index_entries(sst) -> list[tuple[bytes, int]]:
     """Stream-parse one sstable's Index.db -> [(key, position)]."""
-    with open(sst.local("Index.db"), "rb") as f:
+    with sst.open("Index.db") as f:
         return list(stream_parse_index_db(
             f, version=sst.version, source=sst.path("Index.db")
         ))
@@ -754,39 +679,20 @@ def binary_index_entries(
     upgrades key display from the UTF-8-or-hex heuristic to the table's
     key validator (``key_renderer``).
 
-    Two physical strategies, same grammar and same loud-corruption
-    contract:
-    - POSIX-visible roots (a real Cassandra data dir is always one): the
-      per-sstable pass (``inventory.sstable_pass``) stream-parses each
-      file in 8 MB chunks (``stream_parse_index_db``) -- task memory is
-      bounded by the chunk, not the index size, and binaryFile's 2 GB
-      content ceiling never applies.
-    - non-POSIX roots (hdfs://, s3a://...): binaryFile content rows +
-      whole-buffer parse (``content_scan``); the documented bound is one
-      index file per task in memory.
+    The per-sstable pass (``inventory.sstable_pass``) stream-parses each
+    file in 8 MB chunks (``stream_parse_index_db``) -- task memory is
+    bounded by the chunk, not the index size, on every root.
 
-    Without an explicit ``key_type``, POSIX-root keys render via the
-    sibling Statistics.db header's key validator when one exists
+    Without an explicit ``key_type``, keys render via the sibling
+    Statistics.db header's key validator when one exists
     (``render_typed``) -- the SAME rendering the cell decoder applies, so
     frames that JOIN index-side and decode-side rows on partition_key
     (cfstats sizes x counts) stay aligned on typed-key tables; headerless
-    sstables and non-POSIX roots keep the UTF-8-or-hex heuristic.
+    sstables keep the UTF-8-or-hex heuristic.
     """
     from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 
     render = key_renderer(key_type)
-
-    if not _is_local_root(root):
-        return content_scan(
-            spark, root, filenames, "Index.db",
-            lambda content, ver, path: [
-                (render(key), position)
-                for key, position in parse_index_db(
-                    content, version=ver, source=path
-                )
-            ],
-            INDEX_ENTRIES_SCHEMA,
-        )
 
     def scan(sst) -> list[tuple]:
         r = render if key_type is not None else _header_renderer(sst)
@@ -949,19 +855,37 @@ def parse_compression_info_full(
         raise ValueError(f"corrupt CompressionInfo.db {source}: {e}") from None
 
 
+def _compression_info_scan(
+    spark: SparkSession, name: str, root: str, filenames, parse, schema: str
+) -> DataFrame:
+    """One row per COMPRESSED sstable: ``parse(content, version, path)``
+    over its whole CompressionInfo.db (a few KB of header + chunk offsets
+    per sstable), so the scan cost is directory-listing-shaped, never
+    data-shaped."""
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
+
+    def scan(sst) -> list[tuple]:
+        with sst.open("CompressionInfo.db") as f:
+            return [parse(
+                f.read(), sst.version, sst.path("CompressionInfo.db")
+            )]
+
+    return sstable_pass(
+        spark, name, root, filenames, ("CompressionInfo.db",), scan, schema
+    )
+
+
 def compression_data_lengths(
     spark: SparkSession, root: str, filenames=None
 ) -> DataFrame:
     """(keyspace, table_name, sstable_id, uncompressed_length) from the
     CompressionInfo.db headers under ``root`` -- one row per COMPRESSED
-    sstable. Contents ARE read (unlike the Data.db scan) but the component
-    is a few KB of header + chunk offsets per sstable, so the scan cost is
-    directory-listing-shaped, never data-shaped."""
-    return content_scan(
-        spark, root, filenames, "CompressionInfo.db",
-        lambda content, ver, path: [
-            (parse_compression_info(content, ver, source=path),)
-        ],
+    sstable."""
+    return _compression_info_scan(
+        spark, "compression_data_lengths", root, filenames,
+        lambda content, ver, path: (
+            parse_compression_info(content, ver, source=path),
+        ),
         "keyspace string, table_name string, sstable_id string, "
         "uncompressed_length bigint",
     )
@@ -972,19 +896,18 @@ def compression_chunk_maps(
 ) -> DataFrame:
     """Full CompressionInfo.db chunk-map facts per COMPRESSED sstable:
     (keyspace, table_name, sstable_id, compressor, chunk_length, n_chunks,
-    uncompressed_length). Same directory-listing-shaped scan as
-    ``compression_data_lengths`` (the component is KBs per sstable) but
+    uncompressed_length). Same scan as ``compression_data_lengths`` but
     parses the WHOLE header incl. the compressor class name and the chunk
     offset array -- the inputs a compression report needs."""
 
-    def parse(content, ver, path) -> list[tuple]:
+    def parse(content, ver, path) -> tuple:
         chunk_len, data_len, _mc, offsets, name = parse_compression_info_full(
             content, ver, source=path
         )
-        return [(name, chunk_len, len(offsets), data_len)]
+        return (name, chunk_len, len(offsets), data_len)
 
-    return content_scan(
-        spark, root, filenames, "CompressionInfo.db", parse,
+    return _compression_info_scan(
+        spark, "compression_chunk_maps", root, filenames, parse,
         "keyspace string, table_name string, sstable_id string, "
         "compressor string, chunk_length bigint, n_chunks bigint, "
         "uncompressed_length bigint",
@@ -1036,11 +959,10 @@ def _data_db_meta(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     """(keyspace, table_name, sstable_id, disk_length, file_timestamp) from
     Data.db file METADATA -- the inventory's own listing, no contents.
 
-    The lengths and modification times come from the driver-side listing's
-    ``FileStatus`` (``inventory.sstable_inventory``), which works on every
-    Hadoop root: no Spark job, and the frame is a 1-row-per-SSTable local
-    relation, always broadcast-able. Consumers needing only lengths prune
-    file_timestamp away at zero cost."""
+    The lengths and modification times come from the driver-side listing
+    (``inventory.sstable_inventory``): no Spark job, and the frame is a
+    1-row-per-SSTable local relation, always broadcast-able. Consumers
+    needing only lengths prune file_timestamp away at zero cost."""
     from cassandra_sstable_tools_spark.sources.inventory import (
         local_frame,
         sstable_inventory,
@@ -1050,7 +972,7 @@ def _data_db_meta(spark: SparkSession, root: str, filenames=None) -> DataFrame:
         spark,
         [
             (*s.identity, s.length("Data.db"), s.mtime("Data.db"))
-            for s in sstable_inventory(spark, root, filenames)
+            for s in sstable_inventory(root, filenames)
             if "Data.db" in s.components
         ],
         "keyspace string, table_name string, sstable_id string, "
@@ -1147,38 +1069,8 @@ def binary_index_sizes(
     drops keyless entries the same way). ``require_components`` lists
     extra sibling components that must also exist (e.g. Statistics.db for
     the cell-decodable universe) -- the in-task equivalent of a broadcast
-    semi join against a component listing.
-
-    Non-POSIX roots keep the window composition (sibling reads need a
-    filesystem; binaryFile content rows do not carry one), with
-    ``require_components`` applied as an inventory filter."""
-    from cassandra_sstable_tools_spark.operators.window_sizes import (
-        index_partition_sizes,
-    )
-    from cassandra_sstable_tools_spark.sources.inventory import (
-        local_frame,
-        sstable_inventory,
-        sstable_pass,
-    )
-
-    if not _is_local_root(root):
-        sizes = index_partition_sizes(
-            binary_index_entries(spark, root, filenames, key_type=key_type),
-            data_file_lengths(spark, root, filenames),
-        )
-        if not require_components:
-            return sizes
-        ids = local_frame(
-            spark,
-            [
-                s.identity for s in sstable_inventory(spark, root, filenames)
-                if set(require_components) <= s.components
-            ],
-            "keyspace string, table_name string, sstable_id string",
-        )
-        return sizes.join(
-            F.broadcast(ids), ["keyspace", "table_name", "sstable_id"], "semi"
-        )
+    semi join against a component listing."""
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 
     render = key_renderer(key_type)
     needs = {"Data.db", *require_components}
@@ -1190,9 +1082,8 @@ def binary_index_sizes(
         # window composition drops this sstable's entries
         if not needs <= sst.components:
             return []
-        comp_local = sst.local("CompressionInfo.db")
-        if comp_local is not None:
-            with open(comp_local, "rb") as cf:
+        if "CompressionInfo.db" in sst.components:
+            with sst.open("CompressionInfo.db") as cf:
                 length = parse_compression_info(
                     cf.read(), sst.version,
                     source=sst.path("CompressionInfo.db"),
@@ -1539,7 +1430,7 @@ def materialize_index_files(
 def index_binary_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full binary round-trip at the ENTRY grain: encode the fixture's
     index_entries to real Index.db bytes, re-read them through the
-    distributed binaryFile + Arrow parse, and hand the driver every
+    distributed per-sstable parse, and hand the driver every
     (key, position) row. The oracle is the parquet-path index_entries CTE,
     so a hash match certifies vint encoding, u16 keys, promoted-index skip
     and path-derived identity all at once."""
@@ -2137,8 +2028,9 @@ def toc_checks(spark: SparkSession, root: str, filenames=None) -> DataFrame:
     from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 
     def check(sst) -> list[tuple]:
-        with open(sst.local("TOC.txt")) as f:
-            listed = {ln.strip() for ln in f if ln.strip()}
+        with sst.open("TOC.txt") as f:
+            lines = f.read().decode().splitlines()
+        listed = {ln.strip() for ln in lines if ln.strip()}
         missing = len(listed - sst.components)
         extra = len(sst.components - listed)
         return [(len(listed), missing, extra, missing == 0 and extra == 0)]

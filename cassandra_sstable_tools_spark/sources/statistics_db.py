@@ -81,10 +81,10 @@ point < gcBefore.
 
 Spark shape / 100 TB notes: Statistics.db is a few KB per sstable
 regardless of data size, so the scan is directory-listing-shaped --
-``binaryFile`` content rows + one Arrow-batched ``mapInArrow`` parse,
-1 output row per sstable, always broadcast-able downstream. Parsing is
-loud on corruption (ValueError naming file and offset), same contract as
-the Index.db reader.
+one whole-file read per sstable in the shared per-sstable pass
+(``inventory.sstable_pass``), 1 output row per sstable, always
+broadcast-able downstream. Parsing is loud on corruption (ValueError
+naming file and offset), same contract as the Index.db reader.
 
 The encoder half exists so tests and fixtures can plant real binary files
 (the Index.db / PNG playbook: independent in-test encoder, fuzz
@@ -751,9 +751,9 @@ def statistics_metadata(
 ) -> DataFrame:
     """Distributed Statistics.db scan: one row per sstable with every
     StatsMetadata field the reference's `sstables` command surfaces.
-    Statistics.db is a few KB regardless of sstable size, so whole-content
-    binaryFile rows are the right physical plan here (unlike Index.db,
-    which needs the streaming parse); output is O(#sstables) rows.
+    Statistics.db is a few KB regardless of sstable size, so each read
+    takes the whole file (unlike Index.db, which needs the streaming
+    parse); output is O(#sstables) rows.
 
     ``droppable_tombstones`` replicates the reference's
     ``getDroppableTombstonesBefore(gcBefore)`` with the engine's pinned
@@ -761,11 +761,12 @@ def statistics_metadata(
     ``is_repaired`` is the reference's ``repairedAt != 0`` test
     (SSTableMetadataCollector.java:88)."""
     from cassandra_sstable_tools_spark.constants import GC_BEFORE
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        content_scan,
-    )
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 
-    def parse(content, ver, path) -> list[tuple]:
+    def parse(sst) -> list[tuple]:
+        ver, path = sst.version, sst.path("Statistics.db")
+        with sst.open("Statistics.db") as f:
+            content = f.read()
         st = parse_statistics_db(content, ver, source=path)
         try:
             ctypes = parse_serialization_header(
@@ -801,8 +802,9 @@ def statistics_metadata(
             droppable_before(st.tombstone_hist, GC_BEFORE),
         )]
 
-    return content_scan(
-        spark, root, filenames, "Statistics.db", parse, STATISTICS_SCHEMA
+    return sstable_pass(
+        spark, "statistics_metadata", root, filenames, ("Statistics.db",),
+        parse, STATISTICS_SCHEMA,
     )
 
 
@@ -1039,14 +1041,11 @@ def has_statistics_files(
     `-f` selection when given -- a `-f` naming only stats-less sstables
     must take the reduced-listing path, not print an empty full listing).
     A driver-side listing (sources/inventory.py), no Spark job."""
-    from cassandra_sstable_tools_spark.sources.inventory import (
-        sstable_inventory,
-    )
+    from cassandra_sstable_tools_spark.sources.inventory import live_sstables
 
-    return any(
-        "Statistics.db" in s.components
-        for s in sstable_inventory(spark, root, filenames)
-    )
+    return bool(live_sstables(
+        "has_statistics_files", root, filenames, ("Statistics.db",)
+    ))
 
 
 def statistics_coverage(
@@ -1058,11 +1057,9 @@ def statistics_coverage(
     (partial snapshot copies, failed compaction cleanup): a tool that
     inventories sstables must not under-report the broken ones without
     saying so."""
-    from cassandra_sstable_tools_spark.sources.inventory import (
-        sstable_inventory,
-    )
+    from cassandra_sstable_tools_spark.sources.inventory import live_sstables
 
-    ssts = sstable_inventory(spark, root, filenames)
+    ssts = live_sstables("statistics_coverage", root, filenames, ())
     return (
         sum("Data.db" in s.components for s in ssts),
         sum("Statistics.db" in s.components for s in ssts),

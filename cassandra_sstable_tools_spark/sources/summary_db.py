@@ -240,7 +240,7 @@ def parse_summary_db(buf: bytes, source: str = "<buf>") -> ParsedSummary:
 
 
 def _parsed_summary(sst) -> ParsedSummary:
-    with open(sst.local("Summary.db"), "rb") as f:
+    with sst.open("Summary.db") as f:
         return parse_summary_db(f.read(), source=sst.path("Summary.db"))
 
 

@@ -90,11 +90,10 @@ def _posix_only_sources():
 
 @pytest.mark.parametrize("source", sorted(_posix_only_sources()))
 def test_non_posix_root_rejected(spark, source):
-    """A path-reading source refuses an hdfs/s3a root up front, and the
-    message names the public function that was called."""
-    with pytest.raises(
-        ValueError, match=f"^{source} needs a POSIX-visible root"
-    ):
+    """A path-reading source refuses a root pyarrow.fs cannot open (s3a
+    is a Hadoop-only scheme) up front, and the message names the public
+    function that was called."""
+    with pytest.raises(ValueError, match=f"^{source} cannot open root"):
         _posix_only_sources()[source](spark, "s3a://bucket/data")
 
 

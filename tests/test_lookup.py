@@ -784,7 +784,7 @@ def test_cli_lookup_is_one_job_reading_each_sstable_once(
     jobs = set(tracker.getJobIdsForGroup("cli:lookup")) - before
     assert len(jobs) == 1, f"lookup ran {len(jobs)} Spark jobs"
     n_sstables = sum(
-        "Index.db" in s.components for s in sstable_inventory(spark, root)
+        "Index.db" in s.components for s in sstable_inventory(root)
     )
     assert n_sstables > 1
     assert calls.value == n_sstables

@@ -18,7 +18,10 @@ from __future__ import annotations
 
 import pytest
 
-from cassandra_sstable_tools_spark.plans.audit import tree_node_count
+from cassandra_sstable_tools_spark.plans.audit import (
+    formatted_plan,
+    tree_node_count,
+)
 from cassandra_sstable_tools_spark.queries import registry
 
 _QUERIES = dict(registry.queries())
@@ -37,3 +40,11 @@ def test_no_cartesian_no_rowwise_python(name, spark, sf_dir):
     assert tree_node_count(df, "BatchEvalPython") == 0, (
         f"{name}: plan contains row-at-a-time Python (BatchEvalPython)"
     )
+
+
+@pytest.mark.parametrize("name", sorted(_QUERIES))
+def test_no_binary_file_scan(name, spark, sf_dir):
+    """Every sstable is listed and opened through the one inventory
+    filesystem: no plan reads files through the binaryFile source."""
+    plan = formatted_plan(_QUERIES[name](spark, sf_dir))
+    assert "Scan binaryFile" not in plan, f"{name}: plan scans binaryFile"

@@ -291,8 +291,8 @@ def test_data_file_lengths_plan_prunes_content(spark, sf_dir):
     """Data.db contents never enter the plan (a content read would ship
     every data byte through the executor for a length lookup): the
     lengths come from the driver-side listing, so there is no Data.db file
-    scan at all. The combined resolve may read content ONLY from the
-    (tiny) CompressionInfo.db scan."""
+    scan at all, and the CompressionInfo.db headers are read by the
+    per-sstable pass, so the combined resolve has no file scan either."""
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         _data_db_byte_lengths,
         data_file_lengths,
@@ -308,11 +308,9 @@ def test_data_file_lengths_plan_prunes_content(spark, sf_dir):
         data_file_lengths(spark, root)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    # the only file scan is the CompressionInfo headers' content scan; the
-    # Data.db side is a local relation of the listing
-    scans = [l for l in combined.splitlines() if "FileScan binaryFile" in l]
-    assert len(scans) == 1
-    assert "content:binary" in scans[0]
+    # no file scan at all; the Data.db side is a local relation of the
+    # listing
+    assert "FileScan" not in combined
     assert "LocalTableScan" in combined
 
 
@@ -360,23 +358,6 @@ def test_stream_parse_truncation_is_loud():
                 io.BytesIO(blob[:-2]), source="t", chunk_bytes=5
             )
         )
-
-
-def test_content_fallback_matches_streaming(spark, sf_dir, monkeypatch):
-    """The non-POSIX (binaryFile content) strategy must produce the exact
-    frame the streaming strategy produces -- forced by monkeypatching the
-    root classifier, since tests only have local paths."""
-    from cassandra_sstable_tools_spark.sources import sstable_binary as sb
-
-    root = materialize_index_files(spark, sf_dir)
-    streamed = sorted(
-        tuple(r) for r in sb.binary_index_entries(spark, root).collect()
-    )
-    monkeypatch.setattr(sb, "_is_local_root", lambda _root: False)
-    content = sorted(
-        tuple(r) for r in sb.binary_index_entries(spark, root).collect()
-    )
-    assert streamed == content and len(streamed) > 0
 
 
 def test_compression_info_roundtrip():
@@ -442,6 +423,20 @@ def test_compressed_fixture_subset_is_differential(spark, sf_dir):
             assert raw[k] != exp[k]  # byte length is compressed => differs
 
 
+def _v2_read(spark, root, filenames=None):
+    """The V2 reader, ``-f`` through its ``files`` option."""
+    from cassandra_sstable_tools_spark.sources.pyds import (
+        FORMAT_NAME,
+        register,
+    )
+
+    register(spark)
+    reader = spark.read.format(FORMAT_NAME)
+    if filenames:
+        reader = reader.option("files", ",".join(filenames))
+    return reader.load(root)
+
+
 def _dir_sources():
     """Every directory source that reads per-sstable components, as
     (spark, root, filenames) -> DataFrame."""
@@ -450,11 +445,14 @@ def _dir_sources():
         crc_db,
         data_cells,
         data_db,
+        statistics_db,
         summary_db,
     )
     from cassandra_sstable_tools_spark.sources import sstable_binary as sb
 
     return {
+        "statistics_metadata": statistics_db.statistics_metadata,
+        "v2_reader": _v2_read,
         "binary_index_entries": sb.binary_index_entries,
         "binary_index_sizes": sb.binary_index_sizes,
         "toc_checks": sb.toc_checks,
@@ -545,29 +543,68 @@ def test_snapshot_and_backup_dirs_excluded(spark, tmp_path, source):
     assert rows(root, ["nb-1-big-Data.db"]) == [r for r in want if r[2] == "1"]
     assert rows(root, ["nb-3-big-Data.db"]) == []
 
-    inv = sstable_inventory(spark, str(root))
+    inv = sstable_inventory(str(root))
     assert [s.path("Index.db") for s in inv] == [
         f"file:{live}/nb-1-big-Index.db", f"file:{live}/nb-2-big-Index.db"
     ]
-    assert sstable_inventory(spark, str(root), ["nb-1-big-Data.db"]) == inv[:1]
-    assert sstable_inventory(spark, str(snap)) == []
+    assert sstable_inventory(str(root), ["nb-1-big-Data.db"]) == inv[:1]
+    assert sstable_inventory(str(snap)) == []
 
 
 def test_sstable_handle_identity_and_siblings():
     """The per-sstable handle parses its identity with _parse_filename's
     checks (malformed name, path without keyspace/table dirs -> loud) and
-    answers sibling paths from the listing, None when a component is
-    absent."""
+    answers sibling paths and lengths from the listing; a component
+    absent from the listing is a ValueError naming the sstable and the
+    component."""
     from cassandra_sstable_tools_spark.sources.inventory import SSTable
 
-    sst = SSTable("file:/r/ks/tb/nb-7-big-", frozenset({"Index.db", "Data.db"}))
+    sst = SSTable(
+        "file:/r/ks/tb/nb-7-big-", frozenset({"Index.db", "Data.db"}),
+        (("Data.db", 10, 7), ("Index.db", 3, 7)), uri_prefix="file:",
+    )
     assert sst.identity == ("ks", "tb", "7") and sst.version == "nb"
-    assert sst.local("Data.db") == "/r/ks/tb/nb-7-big-Data.db"
-    assert sst.local("Summary.db") is None
+    assert sst.path("Data.db") == "file:/r/ks/tb/nb-7-big-Data.db"
+    assert sst.fs_path("Data.db") == "/r/ks/tb/nb-7-big-Data.db"
+    assert (sst.length("Data.db"), sst.mtime("Index.db")) == (10, 7)
+    for probe in (sst.length, sst.mtime):
+        with pytest.raises(ValueError, match="nb-7-big-.*Summary.db"):
+            probe("Summary.db")
     with pytest.raises(ValueError, match="lacks keyspace/table"):
         SSTable("file:/nb-7-big-", frozenset({"Index.db"})).identity
     with pytest.raises(ValueError, match="not an Index.db component"):
         SSTable("file:/r/ks/tb/junk-", frozenset({"Index.db"})).identity
+
+
+def test_root_uri_spellings_agree(spark, tmp_path):
+    """``/x``, ``file:/x`` and ``file:///x`` resolve to the same
+    filesystem path: equal inventories with ``file:/x/...`` paths, and
+    identical rows from the sources that read through them."""
+    from cassandra_sstable_tools_spark.sources.data_cells import data_cells
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        sstable_inventory,
+    )
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        binary_index_sizes,
+    )
+    from cassandra_sstable_tools_spark.sources.statistics_db import (
+        statistics_metadata,
+    )
+
+    root = tmp_path / "cas"
+    _write_two_sstables(str(root / "ks1" / "tab"))
+    spellings = [str(root), f"file:{root}", f"file://{root}"]
+    invs = [sstable_inventory(r) for r in spellings]
+    assert invs[0] == invs[1] == invs[2] and len(invs[0]) == 2
+    assert [s.path("Data.db") for s in invs[0]] == [
+        f"file:{root}/ks1/tab/nb-{i}-big-Data.db" for i in (1, 2)
+    ]
+    for read in (statistics_metadata, binary_index_sizes, data_cells):
+        got = [
+            sorted(tuple(x) for x in read(spark, r).collect())
+            for r in spellings
+        ]
+        assert got[0] and got[0] == got[1] == got[2], read.__name__
 
 
 @pytest.mark.parametrize(
