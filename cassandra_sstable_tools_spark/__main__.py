@@ -253,7 +253,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         "--approx", action="store_true",
         help="pstats/cfstats: bounded-memory percentile sketch instead of "
              "exact per-group buffering (the 100 TB path; within 10%% of "
-             "exact, driver-certified by pstats_summary_approx_check)",
+             "exact, driver-certified by pstats_summary_approx_check). "
+             "pstats --cassandra-dir --approx runs through Spark SQL, whose "
+             "sketch defines the approximate percentiles; exact mode there "
+             "is one Python pass finished on the driver",
     )
     p.add_argument(
         "--explain", action="store_true",
@@ -437,6 +440,14 @@ def _table_scope_filter(frame, args):
     return frame
 
 
+def _table_scope_rows(rows, args):
+    """``_table_scope_filter`` over report rows collected on the driver
+    (table_name is every report's second column)."""
+    if args.table and not args.keyspace:
+        return [r for r in rows if r[1] == args.table]
+    return rows
+
+
 def _warn_partial_statistics(spark, root, names, what: str) -> None:
     """stderr warning when some sstables lack Statistics.db: the
     Statistics-joined reports inner-join by design (fabricated blanks
@@ -468,13 +479,18 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
 
         if args.cassandra_dir:
             # directory-only summary: lengths from Data/CompressionInfo,
-            # repair state from Statistics.db -- zero parquet in the plan.
+            # repair state from Statistics.db -- one read per sstable,
+            # aggregated on the driver, zero parquet and no SQL plan.
             # No Statistics.db at all is an ERROR (repair state lives
             # nowhere else; an empty table with rc=0 would read as "no
             # data"), and partial coverage warns like the listing does.
+            from cassandra_sstable_tools_spark.sources.inventory import (
+                ddl_columns,
+            )
             from cassandra_sstable_tools_spark.sources.statistics_db import (
-                directory_summary,
+                SUMMARY_SCHEMA,
                 has_statistics_files,
+                summary_report,
             )
 
             names = args.filenames.split(",") if args.filenames else None
@@ -487,13 +503,13 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
                 )
                 return 2
             _warn_partial_statistics(spark, root, names, "summary")
-            frame = _table_scope_filter(
-                directory_summary(spark, root, names), args
-            )
+            cols = ddl_columns(SUMMARY_SCHEMA)
+            rows = _table_scope_rows(summary_report(spark, root, names), args)
         else:
             frame = summary(spark, sf)
-        out.append(("Summary", _render(
-            frame,
+            cols, rows = frame.columns, frame.collect()
+        out.append(("Summary", _render_rows(
+            cols, rows,
             {"disk_size": "bytes", "data_size": "bytes", "last_repaired": "ts_ms"},
             order=["keyspace", "table_name"],
         )))
@@ -524,67 +540,40 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
         from cassandra_sstable_tools_spark.queries.sstables_listing import sstables_listing
 
         if args.cassandra_dir:
-            # directory-only listing. When Statistics.db components are
-            # present (every healthy Cassandra directory), render the
-            # reference's FULL metadata listing
-            # (cli/SSTableMetadataCollector.java:40-90) straight off the
-            # binary components; otherwise fall back to the columns
-            # derivable from Index/Data/CompressionInfo alone.
-            from cassandra_sstable_tools_spark.sources.sstable_binary import (
-                binary_index_entries,
-                compression_data_lengths,
-                data_file_lengths,
-                _data_db_byte_lengths,
+            # directory-only listing, one read per sstable finished on the
+            # driver. When Statistics.db components are present (every
+            # healthy Cassandra directory), render the reference's FULL
+            # metadata listing (cli/SSTableMetadataCollector.java:40-90)
+            # straight off the binary components; otherwise fall back to
+            # the columns derivable from Index/Data/CompressionInfo alone.
+            from cassandra_sstable_tools_spark.sources.inventory import (
+                ddl_columns,
             )
             from cassandra_sstable_tools_spark.sources.statistics_db import (
-                directory_sstables_listing,
                 has_statistics_files,
+                sstables_listing_report,
             )
-            from pyspark.sql import functions as _F
 
             root = _scoped_cassdir_root(args)
             names = args.filenames.split(",") if args.filenames else None
-            if has_statistics_files(spark, root, names):
+            full = has_statistics_files(spark, root, names)
+            if full:
                 _warn_partial_statistics(spark, root, names, "full listing")
-                listing = _table_scope_filter(
-                    directory_sstables_listing(
-                        spark, root, filenames=names, file_timestamp=True
-                    ),
-                    args,
-                )
-                fmts = {
-                    "min_timestamp": "ts_us", "max_timestamp": "ts_us",
-                    "file_timestamp": "ts_ms", "repaired_at": "ts_ms",
-                    "min_local_deletion_time": "ldt",
-                    "max_local_deletion_time": "ldt",
-                    "disk_length": "bytes",
-                    "uncompressed_length": "bytes",
-                    "mean_partition_size": "bytes",
-                    "max_partition_size": "bytes",
-                }
-            else:
-                counts = (
-                    binary_index_entries(spark, root, filenames=names)
-                    .groupBy("keyspace", "table_name", "sstable_id")
-                    .agg(_F.count(_F.lit(1)).alias("partitions"))
-                )
-                disk = _data_db_byte_lengths(spark, root, names).withColumnRenamed(
-                    "uncompressed_length", "disk_length")
-                comp = compression_data_lengths(spark, root, names).withColumnRenamed(
-                    "uncompressed_length", "_cl")
-                keys = ["keyspace", "table_name", "sstable_id"]
-                listing = _table_scope_filter(
-                    counts.join(_F.broadcast(disk), keys)
-                    .join(_F.broadcast(comp), keys, "left")
-                    .select(*keys, "partitions", "disk_length",
-                            _F.coalesce("_cl", "disk_length")
-                            .alias("uncompressed_length"),
-                            _F.col("_cl").isNotNull().alias("compressed")),
-                    args,
-                )
-                fmts = {"disk_length": "bytes", "uncompressed_length": "bytes"}
-            out.append(("SSTables (directory-derived)", _render(
-                listing, fmts,
+            ddl, rows = sstables_listing_report(
+                spark, root, names, file_timestamp=full, statistics=full
+            )
+            fmts = {
+                "min_timestamp": "ts_us", "max_timestamp": "ts_us",
+                "file_timestamp": "ts_ms", "repaired_at": "ts_ms",
+                "min_local_deletion_time": "ldt",
+                "max_local_deletion_time": "ldt",
+                "disk_length": "bytes",
+                "uncompressed_length": "bytes",
+                "mean_partition_size": "bytes",
+                "max_partition_size": "bytes",
+            }
+            out.append(("SSTables (directory-derived)", _render_rows(
+                ddl_columns(ddl), _table_scope_rows(rows, args), fmts,
                 order=["keyspace", "table_name", "sstable_id"])))
             for title, table in out:
                 sys.stdout.write(f"{title}\n{table}\n")
@@ -609,41 +598,57 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
         if args.cassandra_dir:
             # directory-only mode: the whole report off real binary files
             # (Index.db entries + CompressionInfo/Data.db lengths), zero
-            # parquet -- one persisted collate feeds all three sections,
-            # same as the fixture path. --keyspace/--table narrow the scan
-            # ROOT (whole directories never listed); -f prunes at the file
-            # listing before any parse -- the same skip grain as the
-            # reference's reader.
-            from cassandra_sstable_tools_spark.sources.sstable_binary import (
-                binary_index_sizes,
+            # parquet. --keyspace/--table narrow the scan ROOT (whole
+            # directories never listed); -f prunes at the file listing
+            # before any parse -- the same skip grain as the reference's
+            # reader. Exact mode is one Python pass finished on the driver
+            # (pstats_report); --approx keeps the DataFrame composition,
+            # because Spark's percentile sketch defines its output.
+            from cassandra_sstable_tools_spark.sources import (
+                sstable_binary as sb,
+            )
+            from cassandra_sstable_tools_spark.sources.inventory import (
+                ddl_columns,
             )
 
             names = args.filenames.split(",") if args.filenames else None
             root = _scoped_cassdir_root(args)
-            sizes = _table_scope_filter(
-                binary_index_sizes(spark, root, filenames=names,
-                                   key_type=args.key_type), args
-            )
-            c = m.collate_sizes(sizes).persist()
-            summary = m.summary_from_collated(c, approx=args.approx)
-            top_size = m.top_size_from_collated(c, args.n)
-            top_tables = m.top_tables_from_collated(c, args.n)
+            if args.approx:
+                c = m.collate_sizes(sb.binary_index_sizes(
+                    spark, root, filenames=names, key_type=args.key_type
+                )).persist()
+                try:
+                    sections = [(df.columns, df.collect()) for df in (
+                        m.summary_from_collated(c, approx=True),
+                        m.top_size_from_collated(c, args.n),
+                        m.top_tables_from_collated(c, args.n),
+                    )]
+                finally:
+                    c.unpersist()
+            else:
+                sections = [
+                    (ddl_columns(ddl), rows) for ddl, rows in sb.pstats_report(
+                        spark, root, names, args.n, key_type=args.key_type
+                    )
+                ]
+            sections = [
+                (cols, _table_scope_rows(rows, args)) for cols, rows in sections
+            ]
         else:
-            c = None
-            summary = m.pstats_summary(spark, sf, approx=args.approx)
-            top_size = m.pstats_top_size(spark, sf, args.n)
-            top_tables = m.pstats_top_tables(spark, sf, args.n)
-        out.append(("Partition size summary", _render(
-            summary, size_fmt, order=["keyspace", "table_name"])))
-        out.append(("Largest partitions", _render(
-            top_size, {"size": "bytes"},
-            order=["keyspace", "table_name", "rank"])))
-        out.append(("Partitions in most sstables", _render(
-            top_tables, {"size": "bytes"},
-            order=["keyspace", "table_name", "rank"])))
-        if c is not None:
-            # all three sections are rendered (collected); drop the collate
-            c.unpersist()
+            sections = [(df.columns, df.collect()) for df in (
+                m.pstats_summary(spark, sf, approx=args.approx),
+                m.pstats_top_size(spark, sf, args.n),
+                m.pstats_top_tables(spark, sf, args.n),
+            )]
+        by_table = ["keyspace", "table_name"]
+        for title, (cols, rows), fmts, order in zip(
+            ("Partition size summary", "Largest partitions",
+             "Partitions in most sstables"),
+            sections,
+            (size_fmt, {"size": "bytes"}, {"size": "bytes"}),
+            (by_table, [*by_table, "rank"], [*by_table, "rank"]),
+        ):
+            out.append((title, _render_rows(cols, rows, fmts, order=order)))
         if args.cassandra_dir and getattr(args, "bucketed", False):
             # the bucketed section reads the parquet fixture layout; mixing
             # it into a report advertised as directory-only would be a lie
@@ -886,32 +891,38 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
             DATA_CELLS_SCHEMA,
             _COLS,
         )
+        from cassandra_sstable_tools_spark.sources.inventory import (
+            ddl_columns,
+        )
 
         root = _scoped_cassdir_root(args)
         names = args.filenames.split(",") if args.filenames else None
-        # ONE pass over the read path: the records and the audit of every
-        # sstable come back in the same collect
+        # ONE pass over the read path, no SQL plan: the records and the
+        # audit of every sstable come back in the same collect
         if token_mode:
-            fused = L.token_range_read(
-                spark, root, args.token_from, args.token_to, names
-            )
+            name = "token_range_read"
+            read = L.token_range_reader(args.token_from, args.token_to)
             titles = ("Token-range records", "Token-range audit")
+            audit_ddl = L.RANGE_AUDIT_SCHEMA
             audit_order = ["keyspace", "table_name", "sstable_id"]
         elif range_mode:
-            fused = L.range_read(
-                spark, root, args.key_from, args.key_to, names,
-                key_type=args.key_type,
+            name = "range_read"
+            read = L.range_reader(
+                args.key_from, args.key_to, key_type=args.key_type
             )
             titles = ("Range records", "Range-scan audit")
+            audit_ddl = L.RANGE_AUDIT_SCHEMA
             audit_order = ["keyspace", "table_name", "sstable_id"]
         else:
-            fused = L.point_read(
-                spark, root, args.key, names, key_type=args.key_type
-            )
+            name = "point_read"
+            read = L.point_reader(args.key, key_type=args.key_type)
             titles = ("Per-SSTable records", "Read-path audit")
+            audit_ddl = L.LOOKUP_AUDIT_SCHEMA
             audit_order = ["keyspace", "table_name", "partition_key",
                            "sstable_id"]
-        recs, audits = L.split_rows(_table_scope_filter(fused, args).collect())
+        recs, audits = L.split_rows(_table_scope_rows(
+            L.read_rows(spark, name, root, names, read), args
+        ))
         out.append((titles[0], _render_rows(
             _COLS, recs,
             {"writetime": "ts_us", "local_deletion_time": "ldt"},
@@ -932,7 +943,7 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
                 ),
             ))
         out.append((titles[1], _render_rows(
-            L.audits_of(fused).columns, audits,
+            ddl_columns(audit_ddl), audits,
             {"index_bytes_read": "bytes", "data_bytes_read": "bytes"},
             order=audit_order,
         )))

@@ -16,6 +16,10 @@ Results are floored to whole bytes: the reports consume them through
 
 from __future__ import annotations
 
+import bisect
+import itertools
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -40,10 +44,41 @@ def percentile_cols(
         if approx
         else F.percentile(col, pcts)
     )
+    return [
+        F.floor(F.element_at(agg, i + 1)).alias(percentile_name(p))
+        for i, p in enumerate(ps)
+    ]
+
+
+def percentile_name(p: float) -> str:
+    """0.5 -> p50, 0.999 -> p999."""
+    return "p" + f"{p * 100:g}".replace(".", "")
+
+
+def exact_percentiles(
+    counts: dict[int, int], percentiles: list[float] | None = None
+) -> list[int | None]:
+    """The exact-mode ``percentile_cols`` over a value -> frequency map,
+    evaluated in Python the way Spark's ``percentile`` evaluates it: the
+    value at position ``(n-1)*p`` of the sorted values, linearly
+    interpolated between the values at its floor and ceil positions (no
+    interpolation when those values are equal), then floored."""
+    ps = percentiles if percentiles is not None else REPORT_PERCENTILES
+    if not counts:
+        return [None] * len(ps)
+    values = sorted(counts)
+    ends = list(itertools.accumulate(counts[v] for v in values))
+    last = ends[-1] - 1
     out = []
-    for i, p in enumerate(ps):
-        name = "p" + f"{p * 100:g}".replace(".", "")
-        out.append(F.floor(F.element_at(agg, i + 1)).alias(name))
+    for p in ps:
+        pos = last * p
+        lo, hi = math.floor(pos), math.ceil(pos)
+        lo_v = values[bisect.bisect_left(ends, lo + 1)]
+        hi_v = values[bisect.bisect_left(ends, hi + 1)]
+        if lo == hi or lo_v == hi_v:
+            out.append(math.floor(float(lo_v)))
+        else:
+            out.append(math.floor((hi - pos) * lo_v + (pos - lo) * hi_v))
     return out
 
 
@@ -52,7 +87,7 @@ def percentile_sql(col: str, percentiles: list[float] | None = None) -> str:
     ps = percentiles if percentiles is not None else REPORT_PERCENTILES
     parts = [
         f"CAST(floor(quantile_cont({col}, {p})) AS BIGINT) AS "
-        + "p" + f"{p * 100:g}".replace(".", "")
+        + percentile_name(p)
         for p in ps
     ]
     return ",\n       ".join(parts)

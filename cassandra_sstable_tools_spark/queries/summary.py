@@ -24,17 +24,25 @@ from cassandra_sstable_tools_spark.sources import tpch_adapter
 def summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference cmd 1 (SummaryCollector): per-table SSTable counts, disk
     and data sizes, int-truncated averages (X5), last-repaired sentinel."""
-    meta = tpch_adapter.sstables(spark, sf_dir)
+    return summary_of(tpch_adapter.sstables(spark, sf_dir))
+
+
+def summary_of(meta: DataFrame) -> DataFrame:
+    """``summary`` over any per-sstable metadata frame (keyspace,
+    table_name, disk_length, uncompressed_length, is_repaired,
+    repaired_at). ``repair_pct`` is NULL for a table whose sstables hold 0
+    bytes: ``try_divide`` instead of ``/``, which raises DIVIDE_BY_ZERO
+    under ANSI mode and fails the whole report."""
     return meta.groupBy("keyspace", "table_name").agg(
         F.count(F.lit(1)).alias("sstable_count"),
         F.sum("disk_length").alias("disk_size"),
         F.sum("uncompressed_length").alias("data_size"),
         F.max(F.when(F.col("is_repaired"), F.col("repaired_at"))).alias("last_repaired"),
-        F.floor(
+        F.floor(F.try_divide(
             F.sum(F.when(F.col("is_repaired"), F.col("uncompressed_length")).otherwise(0))
-            * 100
-            / F.sum("uncompressed_length")
-        ).alias("repair_pct"),
+            * 100,
+            F.sum("uncompressed_length"),
+        )).alias("repair_pct"),
     )
 
 

@@ -28,7 +28,9 @@ filtered by the components a source needs, one ``spark.range(...)
 .mapInArrow`` stage runs one task per work unit, and each read gets an
 ``SSTable`` handle that carries the filesystem, opens its components
 (``SSTable.open``) and knows their lengths from the listing -- no task
-probes the filesystem for a sibling.
+probes the filesystem for a sibling. ``sstable_rows`` / ``sstable_rdd``
+run the same work units as a plain Python RDD for the reports that
+finish on the driver: no schema, no Arrow batch, no SQL plan.
 """
 
 from __future__ import annotations
@@ -213,6 +215,11 @@ def sstable_inventory(root: str, filenames=None) -> list[SSTable]:
     return _inventory("sstable_inventory", root, filenames)
 
 
+def ddl_columns(ddl: str) -> list[str]:
+    """The column names of a flat DDL schema string."""
+    return [f.split()[0] for f in ddl.split(",")]
+
+
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     """Driver-side row tuples as a local relation typed from ``ddl``:
     built from an Arrow table, so reading or broadcasting it runs no Spark
@@ -256,25 +263,28 @@ def run_units(
     return spark.range(0, n, 1, n).mapInArrow(run, schema)
 
 
+def _units(spark: SparkSession, name: str, root: str, filenames, needs):
+    """The work units of a pass: ``min(#sstables, defaultParallelism)``
+    round-robin slices of the live sstables that have the components
+    ``needs``, so every read runs exactly once per sstable."""
+    ssts = live_sstables(name, root, filenames, needs)
+    n = max(1, min(len(ssts), spark.sparkContext.defaultParallelism))
+    return [ssts[i::n] for i in range(n)]
+
+
 def sstable_pass(
     spark: SparkSession, name: str, root: str, filenames, needs, read, schema
 ) -> DataFrame:
     """Run ``read(sst)`` once for every live sstable that has the
     components ``needs``, in ONE Spark stage, and emit its row tuples
     (``schema`` column order after the keyspace/table_name/sstable_id
-    prefix). ``schema`` is a StructType or a DDL string.
-
-    ``min(#sstables, defaultParallelism)`` tasks each take every n-th
-    sstable of the work list, so every read runs exactly once per
-    sstable."""
+    prefix). ``schema`` is a StructType or a DDL string."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from cassandra_sstable_tools_spark.sources.data_cells import _cell_batches
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    ssts = live_sstables(name, root, filenames, needs)
-    n = max(1, min(len(ssts), spark.sparkContext.defaultParallelism))
     pa_schema = to_arrow_schema(schema)
 
     def read_batches(sst) -> Iterator:
@@ -282,5 +292,34 @@ def sstable_pass(
         return _cell_batches([(*ident, *r) for r in read(sst)], pa_schema)
 
     return run_units(
-        spark, [ssts[i::n] for i in range(n)], read_batches, schema
+        spark, _units(spark, name, root, filenames, needs), read_batches,
+        schema,
     )
+
+
+def sstable_rdd(
+    spark: SparkSession, name: str, root: str, filenames, needs, read
+):
+    """``sstable_pass``'s work units as a plain Python RDD of
+    ``(*sst.identity, *row)`` tuples: no schema, no Arrow batch, no SQL
+    plan -- the source of the reports that finish on the driver."""
+    units = _units(spark, name, root, filenames, needs)
+
+    def run(idx) -> Iterator:
+        for i in idx:
+            for sst in units[i]:
+                ident = sst.identity
+                for r in read(sst):
+                    yield (*ident, *r)
+
+    n = len(units)
+    return spark.sparkContext.parallelize(range(n), n).mapPartitions(run)
+
+
+def sstable_rows(
+    spark: SparkSession, name: str, root: str, filenames, needs, read
+) -> list[tuple]:
+    """``read(sst)``'s rows for every live sstable that has the components
+    ``needs``, collected in ONE Spark job: ``(*sst.identity, *row)``
+    tuples, in work-unit order."""
+    return sstable_rdd(spark, name, root, filenames, needs, read).collect()

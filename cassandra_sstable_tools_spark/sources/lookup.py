@@ -57,7 +57,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
+from cassandra_sstable_tools_spark.sources.inventory import (
+    sstable_pass,
+    sstable_rows,
+)
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
     read_unsigned_vint,
 )
@@ -535,14 +538,15 @@ def audits_of(fused: DataFrame) -> DataFrame:
 
 
 def split_rows(rows) -> tuple[list[tuple], list[tuple]]:
-    """Collected read-pass rows -> (record tuples, audit tuples), each in
-    the column order of ``records_of`` / ``audits_of``."""
+    """Read-pass rows (collected Rows or ``read_rows`` tuples) -> (record
+    tuples, audit tuples), each in the column order of ``records_of`` /
+    ``audits_of``."""
     recs, auds = [], []
     for r in rows:
-        if r.record is not None:
-            recs.append((*r[:3], *r.record))
-        if r.audit is not None:
-            auds.append((*r[:3], *r.audit))
+        if r[3] is not None:
+            recs.append((*r[:3], *r[3]))
+        if r[4] is not None:
+            auds.append((*r[:3], *r[4]))
     return recs, auds
 
 
@@ -568,6 +572,25 @@ def _fused_rows(got, keys) -> list[tuple]:
     ]
 
 
+def read_rows(
+    spark: SparkSession, name: str, root: str, filenames, read
+) -> list[tuple]:
+    """The ``name`` pass (``point_read``, ``range_read``,
+    ``token_range_read``) of the per-sstable ``read`` its ``*_reader``
+    gives, collected from ONE Spark job without a SQL plan:
+    ``(keyspace, table_name, sstable_id, record, audit)`` tuples."""
+    return sstable_rows(spark, name, root, filenames, ("Index.db",), read)
+
+
+def point_reader(keys, chunk_bytes: int = 8 << 10, key_type=None):
+    """The per-sstable read of ``point_read``."""
+    targets = _normalize_keys(keys, key_type)
+    return lambda sst: _fused_rows(
+        _lookup_in_sstable(sst, targets, chunk_bytes=chunk_bytes),
+        _POINT_AUDIT_KEYS,
+    )
+
+
 def point_read(
     spark: SparkSession, root: str, keys, filenames=None,
     chunk_bytes: int = 8 << 10, key_type: str | None = None,
@@ -575,13 +598,9 @@ def point_read(
     """ONE pass of the bloom/summary/index point-read path over every
     sstable for the requested keys: each row carries either a decoded
     record or the (sstable, key) audit (``records_of`` / ``audits_of``)."""
-    targets = _normalize_keys(keys, key_type)
     return sstable_pass(
         spark, "point_read", root, filenames, ("Index.db",),
-        lambda sst: _fused_rows(
-            _lookup_in_sstable(sst, targets, chunk_bytes=chunk_bytes),
-            _POINT_AUDIT_KEYS,
-        ),
+        point_reader(keys, chunk_bytes, key_type),
         _fused_schema(LOOKUP_AUDIT_SCHEMA),
     )
 
@@ -933,6 +952,19 @@ def _token_range_in_sstable(
     return audit, records
 
 
+def token_range_reader(
+    token_lo: int, token_hi: int, chunk_bytes: int = 64 << 10
+):
+    """The per-sstable read of ``token_range_read``."""
+    if token_lo > token_hi:
+        raise ValueError(f"empty token range: {token_lo} > {token_hi}")
+    return lambda sst: _fused_rows(
+        _token_range_in_sstable(sst, token_lo, token_hi,
+                                chunk_bytes=chunk_bytes),
+        _RANGE_AUDIT_KEYS,
+    )
+
+
 def token_range_read(
     spark: SparkSession, root: str, token_lo: int, token_hi: int,
     filenames=None, chunk_bytes: int = 64 << 10,
@@ -940,15 +972,9 @@ def token_range_read(
     """ONE pass of the murmur3 token-range read over every sstable: each
     row carries a decoded record or the sstable's RANGE_AUDIT_SCHEMA
     counters (``records_of`` / ``audits_of``)."""
-    if token_lo > token_hi:
-        raise ValueError(f"empty token range: {token_lo} > {token_hi}")
     return sstable_pass(
         spark, "token_range_read", root, filenames, ("Index.db",),
-        lambda sst: _fused_rows(
-            _token_range_in_sstable(sst, token_lo, token_hi,
-                                    chunk_bytes=chunk_bytes),
-            _RANGE_AUDIT_KEYS,
-        ),
+        token_range_reader(token_lo, token_hi, chunk_bytes),
         _fused_schema(RANGE_AUDIT_SCHEMA),
     )
 
@@ -989,6 +1015,17 @@ def _normalize_bound(b, key_type=None) -> bytes:
     return key_encoder(key_type)(b)
 
 
+def range_reader(lo, hi, chunk_bytes: int = 64 << 10, key_type=None):
+    """The per-sstable read of ``range_read``."""
+    lo_b, hi_b = _normalize_bound(lo, key_type), _normalize_bound(hi, key_type)
+    if lo_b > hi_b:
+        raise ValueError(f"empty range: lo {lo!r} > hi {hi!r}")
+    return lambda sst: _fused_rows(
+        _range_in_sstable(sst, lo_b, hi_b, chunk_bytes=chunk_bytes),
+        _RANGE_AUDIT_KEYS,
+    )
+
+
 def range_read(
     spark: SparkSession, root: str, lo, hi, filenames=None,
     chunk_bytes: int = 64 << 10, key_type: str | None = None,
@@ -996,15 +1033,9 @@ def range_read(
     """ONE pass of the partition-range read over every sstable: each row
     carries a decoded record or the sstable's RANGE_AUDIT_SCHEMA counters
     (``records_of`` / ``audits_of``)."""
-    lo_b, hi_b = _normalize_bound(lo, key_type), _normalize_bound(hi, key_type)
-    if lo_b > hi_b:
-        raise ValueError(f"empty range: lo {lo!r} > hi {hi!r}")
     return sstable_pass(
         spark, "range_read", root, filenames, ("Index.db",),
-        lambda sst: _fused_rows(
-            _range_in_sstable(sst, lo_b, hi_b, chunk_bytes=chunk_bytes),
-            _RANGE_AUDIT_KEYS,
-        ),
+        range_reader(lo, hi, chunk_bytes, key_type),
         _fused_schema(RANGE_AUDIT_SCHEMA),
     )
 

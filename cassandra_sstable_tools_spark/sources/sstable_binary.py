@@ -65,12 +65,22 @@ path -- the same independent-encoder playbook the PNG decoder used.
 
 from __future__ import annotations
 
+import math
 import os
 import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cassandra_sstable_tools_spark.constants import (
+    DEFAULT_TOP_N,
+    REPORT_PERCENTILES,
+)
+from cassandra_sstable_tools_spark.operators.percentiles import (
+    exact_percentiles,
+    percentile_name,
+)
 
 # --------------------------------------------------------------------------
 # Cassandra unsigned vint (VIntCoding) -- pure Python, both directions
@@ -1043,64 +1053,63 @@ INDEX_SIZES_SCHEMA = (
 )
 
 
+def _index_sizes(sst, render=None, needs=("Data.db",)) -> list[tuple]:
+    """One sstable's (partition_key, size) rows: Index.db position deltas,
+    the tail partition closed by the sibling-resolved uncompressed length
+    (the CompressionInfo.db dataLength when the sstable is compressed,
+    else the Data.db byte length). ``render`` renders keys (None: the
+    sibling Statistics.db header's key validator). The Index.db is always
+    parsed (loud on corruption), but rows are emitted only when every
+    component in ``needs`` exists."""
+    r = render or _header_renderer(sst)
+    entries = _index_entries(sst)
+    if not set(needs) <= sst.components:
+        return []
+    if "CompressionInfo.db" in sst.components:
+        with sst.open("CompressionInfo.db") as cf:
+            length = parse_compression_info(
+                cf.read(), sst.version, source=sst.path("CompressionInfo.db"),
+            )
+    else:
+        length = sst.length("Data.db")
+    entries.sort(key=lambda e: e[1])
+    positions = [p for _, p in entries]
+    positions.append(length)
+    return [
+        (r(key), positions[j + 1] - pos)
+        for j, (key, pos) in enumerate(entries)
+    ]
+
+
 def binary_index_sizes(
     spark: SparkSession, root: str, filenames=None, key_type: str | None = None,
     require_components: tuple[str, ...] = (),
 ) -> DataFrame:
     """Fused Index.db scan -> (ks, tb, ss, pk, SIZE): each parse task
-    resolves its own file's position deltas in place.
+    resolves its own file's position deltas in place (``_index_sizes``).
 
     Equivalent by construction to
     ``index_partition_sizes(binary_index_entries(...),
     data_file_lengths(...))`` -- the parser sees a file's entries in
     position order (sorted defensively per file, matching the W1 window's
     ORDER BY position), so size = next position - position with the tail
-    partition closed by the sibling-resolved uncompressed length: the
-    CompressionInfo.db header's dataLength when the sstable is compressed,
-    else the Data.db byte length (exactly ``data_file_lengths``). Removes
+    partition closed by exactly ``data_file_lengths``'s length. Removes
     the entry-grain lead() window (one Exchange + Sort) and the broadcast
-    length join from every directory-sizes plan, plus the two extra
-    component listings those frames cost (guide §2.4 remove shuffles,
-    §1.2 remove passes).
+    length join from every directory-sizes plan.
 
-    Join semantics preserved: an Index.db is always parsed (loud on
-    corruption), but its rows are emitted only when the sibling Data.db
-    exists (the window composition's inner join against the lengths frame
+    Join semantics preserved: an sstable without a Data.db sibling emits
+    no rows (the window composition's inner join against the lengths frame
     drops keyless entries the same way). ``require_components`` lists
     extra sibling components that must also exist (e.g. Statistics.db for
     the cell-decodable universe) -- the in-task equivalent of a broadcast
     semi join against a component listing."""
     from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
 
-    render = key_renderer(key_type)
-    needs = {"Data.db", *require_components}
-
-    def scan(sst) -> list[tuple]:
-        r = render if key_type is not None else _header_renderer(sst)
-        entries = _index_entries(sst)
-        # inner-join semantics: no Data.db sibling -> no length row -> the
-        # window composition drops this sstable's entries
-        if not needs <= sst.components:
-            return []
-        if "CompressionInfo.db" in sst.components:
-            with sst.open("CompressionInfo.db") as cf:
-                length = parse_compression_info(
-                    cf.read(), sst.version,
-                    source=sst.path("CompressionInfo.db"),
-                )
-        else:
-            length = sst.length("Data.db")
-        entries.sort(key=lambda e: e[1])
-        positions = [p for _, p in entries]
-        positions.append(length)
-        return [
-            (r(key), positions[j + 1] - pos)
-            for j, (key, pos) in enumerate(entries)
-        ]
-
+    render = key_renderer(key_type) if key_type is not None else None
+    needs = ("Data.db", *require_components)
     return sstable_pass(
-        spark, "binary_index_sizes", root, filenames, ("Index.db",), scan,
-        INDEX_SIZES_SCHEMA,
+        spark, "binary_index_sizes", root, filenames, ("Index.db",),
+        lambda sst: _index_sizes(sst, render, needs), INDEX_SIZES_SCHEMA,
     )
 
 
@@ -1438,17 +1447,6 @@ def index_binary_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return binary_index_entries(spark, root)
 
 
-def _pstats_rollup(sizes: DataFrame) -> DataFrame:
-    """Collate + summary tail: the pstats module's own definitions, so the
-    binary variants can never drift from the parquet report."""
-    from cassandra_sstable_tools_spark.queries.pstats import (
-        collate_sizes,
-        summary_from_collated,
-    )
-
-    return summary_from_collated(collate_sizes(sizes))
-
-
 def pstats_summary_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`pstats summary` end-to-end over REAL binary Index.db files: binary
     scan -> W1 position-delta window -> collate -> summary, sharing every
@@ -1460,44 +1458,177 @@ def pstats_summary_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_sstable_tools_spark.operators.window_sizes import (
         index_partition_sizes,
     )
+    from cassandra_sstable_tools_spark.queries.pstats import (
+        collate_sizes,
+        summary_from_collated,
+    )
     from cassandra_sstable_tools_spark.sources import tpch_adapter
 
     root = materialize_index_files(spark, sf_dir)
-    return _pstats_rollup(
-        index_partition_sizes(
-            binary_index_entries(spark, root),
-            tpch_adapter.sstables(spark, sf_dir),
+    return summary_from_collated(collate_sizes(index_partition_sizes(
+        binary_index_entries(spark, root),
+        tpch_adapter.sstables(spark, sf_dir),
+    )))
+
+
+# --------------------------------------------------------------------------
+# pstats over a data directory: one Python pass, finished on the driver
+# --------------------------------------------------------------------------
+
+PSTATS_SUMMARY_SCHEMA = (
+    "keyspace string, table_name string, partitions bigint, "
+    "total_size bigint, min_size bigint, max_size bigint, avg_size bigint, "
+    + ", ".join(f"{percentile_name(p)} bigint" for p in REPORT_PERCENTILES)
+)
+PSTATS_TOP_SIZE_SCHEMA = (
+    "keyspace string, table_name string, partition_key string, "
+    "size bigint, tables bigint, rank int"
+)
+PSTATS_TOP_TABLES_SCHEMA = (
+    "keyspace string, table_name string, partition_key string, "
+    "tables bigint, size bigint, rank int"
+)
+
+
+def _keep_best(top: list, item, n: int) -> None:
+    """Add ``item`` to a top-``n`` candidate list (ascending = best),
+    pruning it back to ``n`` entries whenever it doubles."""
+    top.append(item)
+    if len(top) > 2 * n + 64:
+        top.sort()
+        del top[n:]
+
+
+def _size_buckets(rows, parts: int) -> list[tuple[int, list]]:
+    """One map task's (ks, tb, ss, pk, size) rows -> ``(reducer,
+    [(ks, tb, pk, size)...])`` per reduce partition: the rows of a key
+    (its crc32) meet in one reducer, and PySpark shuffles a few large
+    records instead of one per row."""
+    import zlib
+
+    buckets: list[list] = [[] for _ in range(parts)]
+    for ks, tb, _ss, pk, size in rows:
+        buckets[zlib.crc32(pk.encode()) % parts].append((ks, tb, pk, size))
+    return [(i, b) for i, b in enumerate(buckets) if b]
+
+
+def _pstats_partials(buckets, n: int) -> list[tuple]:
+    """One reduce partition's ``_size_buckets`` -> the partitions collated
+    across sstables (size sum, sstable count) -> one partial per table:
+    ({size: partitions}, the best ``n`` by (size desc, key asc), the best
+    ``n`` by (tables desc, size desc, key asc))."""
+    from collections import Counter
+
+    collated: dict[tuple[str, str, str], list] = {}
+    for _, rows in buckets:
+        for ks, tb, pk, size in rows:
+            c = collated.get((ks, tb, pk))
+            if c is None:
+                collated[(ks, tb, pk)] = [size, 1]
+            else:
+                c[0] += size
+                c[1] += 1
+    tables: dict[tuple[str, str], tuple] = {}
+    for (ks, tb, pk), (size, n_tables) in collated.items():
+        sizes, best, most = tables.setdefault((ks, tb), (Counter(), [], []))
+        sizes[size] += 1
+        _keep_best(best, (-size, pk, n_tables), n)
+        _keep_best(most, (-n_tables, -size, pk), n)
+    return [
+        (key, (sizes, sorted(best)[:n], sorted(most)[:n]))
+        for key, (sizes, best, most) in tables.items()
+    ]
+
+
+def pstats_report(
+    spark: SparkSession, root: str, filenames=None, n: int = DEFAULT_TOP_N,
+    key_type: str | None = None,
+) -> list[tuple[str, list[tuple]]]:
+    """The ``pstats`` report over a Cassandra data directory, as three
+    ``(ddl, rows)`` sections: the per-table size summary, the ``n``
+    largest partitions and the ``n`` partitions in most sstables per
+    table -- the rows ``queries/pstats.py``'s collate + summary + top-N
+    frames give over ``binary_index_sizes``.
+
+    One Spark job and no SQL plan: the per-sstable Index.db size read
+    (``_index_sizes``) is shuffled once on (keyspace, table, key) to
+    ``spark.sql.shuffle.partitions`` partitions; each reduce partition
+    collates its keys and turns them into per-table partials
+    (``_pstats_partials``), and only those reach the driver, which merges
+    them. The size -> count map per table is what Spark's exact
+    ``percentile`` buffers per group anyway."""
+    from collections import Counter
+
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_rdd
+
+    render = key_renderer(key_type) if key_type is not None else None
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    partials = (
+        sstable_rdd(
+            spark, "pstats_report", root, filenames, ("Index.db",),
+            lambda sst: _index_sizes(sst, render),
         )
+        .mapPartitions(lambda rows: _size_buckets(rows, parts))
+        .partitionBy(parts, lambda i: i)
+        .mapPartitions(lambda buckets: _pstats_partials(buckets, n))
+        .collect()
     )
+    tables: dict[tuple[str, str], tuple] = {}
+    for key, (sizes, best, most) in partials:
+        t = tables.setdefault(key, (Counter(), [], []))
+        t[0].update(sizes)
+        t[1].extend(best)
+        t[2].extend(most)
+    summary, by_size, by_tables = [], [], []
+    for (ks, tb), (sizes, best, most) in tables.items():
+        count = sum(sizes.values())
+        total = sum(size * c for size, c in sizes.items())
+        summary.append((
+            ks, tb, count, total, min(sizes), max(sizes),
+            # integer division per reference (X5,
+            # PartitionSizeStatisticsCollector.java:181)
+            math.floor(float(total) / float(count)),
+            *exact_percentiles(sizes),
+        ))
+        by_size += [
+            (ks, tb, pk, -size, t, rank)
+            for rank, (size, pk, t) in enumerate(sorted(best)[:n], 1)
+        ]
+        by_tables += [
+            (ks, tb, pk, -t, -size, rank)
+            for rank, (t, size, pk) in enumerate(sorted(most)[:n], 1)
+        ]
+    return [
+        (PSTATS_SUMMARY_SCHEMA, summary),
+        (PSTATS_TOP_SIZE_SCHEMA, by_size),
+        (PSTATS_TOP_TABLES_SCHEMA, by_tables),
+    ]
 
 
-def _cassdir_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directory-only partition sizes: Index.db entries from the binary
-    parse, tail-closing lengths resolved in the same task from sibling
-    CompressionInfo.db / Data.db byte lengths (``binary_index_sizes``).
-    Zero parquet inputs anywhere in the plan."""
-    root = materialize_index_files(spark, sf_dir)
-    return binary_index_sizes(spark, root)
+def _pstats_cassdir(spark: SparkSession, sf_dir: str, section: int):
+    """One ``pstats_report`` section over the planted fixture tree, as a
+    local relation."""
+    from cassandra_sstable_tools_spark.sources.inventory import local_frame
+
+    ddl, rows = pstats_report(
+        spark, materialize_index_files(spark, sf_dir)
+    )[section]
+    return local_frame(spark, rows, ddl)
 
 
 def pstats_summary_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`pstats summary` from a Cassandra data DIRECTORY and nothing else
-    -- the composition behind the CLI's ``--cassandra-dir``. Same oracle
-    as the other pstats variants: a hash match proves the directory-only
+    -- the report behind the CLI's ``--cassandra-dir``. Same oracle as
+    the other pstats variants: a hash match proves the directory-only
     path is bit-identical to the metadata-table path."""
-    return _pstats_rollup(_cassdir_sizes(spark, sf_dir))
+    return _pstats_cassdir(spark, sf_dir, 0)
 
 
 def pstats_top_size_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`pstats` largest-partitions section, directory-only -- certifies
     the per-partition grain of the binary path (the summary certificate
-    aggregates it away) through the same T1 bounded top-N operator."""
-    from cassandra_sstable_tools_spark.queries.pstats import (
-        collate_sizes,
-        top_size_from_collated,
-    )
-
-    return top_size_from_collated(collate_sizes(_cassdir_sizes(spark, sf_dir)))
+    aggregates it away) and the driver-side top-N."""
+    return _pstats_cassdir(spark, sf_dir, 1)
 
 
 def pstats_top_tables_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1505,12 +1636,7 @@ def pstats_top_tables_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
     sstable COUNT depends on every Index.db file being parsed, so this
     certificate catches a dropped/misattributed file that total-size
     aggregates could mask."""
-    from cassandra_sstable_tools_spark.queries.pstats import (
-        collate_sizes,
-        top_tables_from_collated,
-    )
-
-    return top_tables_from_collated(collate_sizes(_cassdir_sizes(spark, sf_dir)))
+    return _pstats_cassdir(spark, sf_dir, 2)
 
 
 def sstables_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1520,35 +1646,18 @@ def sstables_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Disk Size" vs "Total Size" columns (SSTableMetadataCollector.java:41-42)
     -- disk = Data.db byte length, total = CompressionInfo-resolved data
     length; `compressed` certifies the header-vs-file-length distinction at
-    the per-sstable grain the pstats certificates aggregate away.
-    Three 1-row-per-sstable frames + one index-count agg; every join is
-    broadcast-able."""
-    root = materialize_index_files(spark, sf_dir)
-    counts = (
-        binary_index_entries(spark, root)
-        .groupBy("keyspace", "table_name", "sstable_id")
-        .agg(F.count(F.lit(1)).alias("partitions"))
+    the per-sstable grain the pstats certificates aggregate away. The
+    reduced ``statistics_db.sstables_listing_report`` as a local
+    relation."""
+    from cassandra_sstable_tools_spark.sources.inventory import local_frame
+    from cassandra_sstable_tools_spark.sources.statistics_db import (
+        sstables_listing_report,
     )
-    disk = _data_db_byte_lengths(spark, root).withColumnRenamed(
-        "uncompressed_length", "disk_length"
+
+    ddl, rows = sstables_listing_report(
+        spark, materialize_index_files(spark, sf_dir), statistics=False
     )
-    comp = compression_data_lengths(spark, root).withColumnRenamed(
-        "uncompressed_length", "_comp_length"
-    )
-    keys = ["keyspace", "table_name", "sstable_id"]
-    return (
-        counts.join(F.broadcast(disk), keys)
-        .join(F.broadcast(comp), keys, "left")
-        .select(
-            *keys,
-            "partitions",
-            "disk_length",
-            F.coalesce("_comp_length", "disk_length").alias(
-                "uncompressed_length"
-            ),
-            F.col("_comp_length").isNotNull().alias("compressed"),
-        )
-    )
+    return local_frame(spark, rows, ddl)
 
 
 # The fixture's compressed subset is md5-parity-chosen (_is_compressed_fixture,

@@ -746,6 +746,49 @@ STATISTICS_SCHEMA = (
 )
 
 
+def _statistics_row(sst) -> tuple:
+    """One sstable's STATISTICS_SCHEMA fields after the identity prefix."""
+    from cassandra_sstable_tools_spark.constants import GC_BEFORE
+
+    ver, path = sst.version, sst.path("Statistics.db")
+    with sst.open("Statistics.db") as f:
+        content = f.read()
+    st = parse_statistics_db(content, ver, source=path)
+    try:
+        ctypes = parse_serialization_header(
+            content, version=ver, source=path
+        ).clustering_types
+    except (ValueError, KeyError):
+        ctypes = None  # no HEADER component: heuristic display
+    return (
+        st.partitioner,
+        st.bloom_fp_chance,
+        st.min_timestamp,
+        st.max_timestamp,
+        st.min_local_deletion_time,
+        st.max_local_deletion_time,
+        st.min_ttl,
+        st.max_ttl,
+        st.compression_ratio,
+        st.level,
+        st.repaired_at,
+        st.repaired_at != 0,
+        _clustering_display(st.min_clustering, ctypes),
+        _clustering_display(st.max_clustering, ctypes),
+        st.total_columns_set,
+        st.total_rows,
+        estimated_histogram_mean(st.partition_size_hist),
+        estimated_histogram_max(
+            st.partition_size_hist, getattr(st, "_psize_overflow", 0)
+        ),
+        estimated_histogram_mean(st.column_count_hist),
+        estimated_histogram_max(
+            st.column_count_hist, getattr(st, "_ccount_overflow", 0)
+        ),
+        droppable_before(st.tombstone_hist, GC_BEFORE),
+    )
+
+
 def statistics_metadata(
     spark: SparkSession, root: str, filenames=None
 ) -> DataFrame:
@@ -760,51 +803,11 @@ def statistics_metadata(
     GC_BEFORE (constants.py -- deterministic across engine and oracle).
     ``is_repaired`` is the reference's ``repairedAt != 0`` test
     (SSTableMetadataCollector.java:88)."""
-    from cassandra_sstable_tools_spark.constants import GC_BEFORE
     from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
-
-    def parse(sst) -> list[tuple]:
-        ver, path = sst.version, sst.path("Statistics.db")
-        with sst.open("Statistics.db") as f:
-            content = f.read()
-        st = parse_statistics_db(content, ver, source=path)
-        try:
-            ctypes = parse_serialization_header(
-                content, version=ver, source=path
-            ).clustering_types
-        except (ValueError, KeyError):
-            ctypes = None  # no HEADER component: heuristic display
-        return [(
-            st.partitioner,
-            st.bloom_fp_chance,
-            st.min_timestamp,
-            st.max_timestamp,
-            st.min_local_deletion_time,
-            st.max_local_deletion_time,
-            st.min_ttl,
-            st.max_ttl,
-            st.compression_ratio,
-            st.level,
-            st.repaired_at,
-            st.repaired_at != 0,
-            _clustering_display(st.min_clustering, ctypes),
-            _clustering_display(st.max_clustering, ctypes),
-            st.total_columns_set,
-            st.total_rows,
-            estimated_histogram_mean(st.partition_size_hist),
-            estimated_histogram_max(
-                st.partition_size_hist, getattr(st, "_psize_overflow", 0)
-            ),
-            estimated_histogram_mean(st.column_count_hist),
-            estimated_histogram_max(
-                st.column_count_hist, getattr(st, "_ccount_overflow", 0)
-            ),
-            droppable_before(st.tombstone_hist, GC_BEFORE),
-        )]
 
     return sstable_pass(
         spark, "statistics_metadata", root, filenames, ("Statistics.db",),
-        parse, STATISTICS_SCHEMA,
+        lambda sst: [_statistics_row(sst)], STATISTICS_SCHEMA,
     )
 
 
@@ -960,78 +963,118 @@ def statistics_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return statistics_metadata(spark, root)
 
 
+# --------------------------------------------------------------------------
+# Directory reports finished on the driver: one read per sstable
+# --------------------------------------------------------------------------
+
+_STATS_TYPES = dict(f.split() for f in STATISTICS_SCHEMA.split(","))
+_STATS_COLS = list(_STATS_TYPES)
+
+
+def _sstable_facts(sst, partitions: bool) -> list[tuple]:
+    """One sstable's row for the directory reports: (partitions,
+    disk_length, file_timestamp, uncompressed_length, compressed,
+    {Statistics.db field: value} or None). The Data.db length and mtime
+    come from the listing; ``uncompressed_length`` is Cassandra's
+    SSTableReader.uncompressedLength(): the CompressionInfo.db dataLength,
+    else the Data.db length. ``partitions`` counts the Index.db entries
+    when asked (an Index.db without entries has no count: no row)."""
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        parse_compression_info,
+        stream_parse_index_db,
+    )
+
+    n = None
+    if partitions:
+        with sst.open("Index.db") as f:
+            n = sum(1 for _ in stream_parse_index_db(
+                f, version=sst.version, source=sst.path("Index.db")
+            ))
+        if not n:
+            return []
+    disk = data = sst.length("Data.db")
+    compressed = "CompressionInfo.db" in sst.components
+    if compressed:
+        with sst.open("CompressionInfo.db") as f:
+            data = parse_compression_info(
+                f.read(), sst.version, source=sst.path("CompressionInfo.db")
+            )
+    stats = None
+    if "Statistics.db" in sst.components:
+        stats = dict(zip(_STATS_COLS[3:], _statistics_row(sst)))
+    return [(n, disk, sst.mtime("Data.db"), data, compressed, stats)]
+
+
+_LISTING_STATS = (
+    "min_timestamp", "max_timestamp", "min_local_deletion_time",
+    "max_local_deletion_time", "min_ttl", "max_ttl", "level",
+    "is_repaired", "repaired_at", "mean_partition_size",
+    "max_partition_size", "mean_column_count", "max_column_count",
+    "droppable_tombstones",
+)
+_LENGTH_FIELDS = [
+    "keyspace string", "table_name string", "sstable_id string",
+    "partitions bigint", "disk_length bigint", "uncompressed_length bigint",
+    "compressed boolean",
+]
+
+
+def sstables_listing_report(
+    spark: SparkSession, root: str, filenames=None,
+    file_timestamp: bool = False, statistics: bool = True,
+) -> tuple[str, list[tuple]]:
+    """``(ddl, rows)`` of the directory ``sstables`` listing: one read per
+    sstable (``_sstable_facts``) in one Spark job, no SQL plan.
+
+    ``statistics=True`` is the reference's FULL listing
+    (cli/SSTableMetadataCollector.java:40-90): Statistics.db metadata,
+    exact Index.db partition counts (`keys` -- exact where the reference
+    estimates, documented improvement) and CompressionInfo/Data.db-resolved
+    lengths (Disk Size vs Total Size); ``file_timestamp=True`` adds the
+    reference's File Timestamp column from the Data.db modification time
+    (CLI-only: no oracle can predict mtimes). ``statistics=False`` is the
+    reduced listing, the columns derivable from Index/Data/CompressionInfo
+    alone.
+
+    An sstable missing its Index.db, Data.db or (full listing)
+    Statistics.db component is broken and is left out rather than shown
+    as a row of fabricated blanks; the CLI warns about the Statistics.db
+    omissions and falls back to the reduced listing when a directory has
+    NO Statistics.db at all."""
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_rows
+
+    stats = []
+    if statistics:
+        stats = [f"{c} {_STATS_TYPES[c]}" for c in _LISTING_STATS]
+        if file_timestamp:
+            stats.insert(2, "file_timestamp bigint")
+    cols = [f.split()[0] for f in stats]
+    rows = [
+        (ks, tb, ss, n, disk, data, compressed,
+         *({**(st or {}), "file_timestamp": mtime}[c] for c in cols))
+        for ks, tb, ss, n, disk, mtime, data, compressed, st in sstable_rows(
+            spark, "sstables_listing_report", root, filenames,
+            ("Index.db", "Data.db", *(["Statistics.db"] if statistics else [])),
+            lambda sst: _sstable_facts(sst, partitions=True),
+        )
+    ]
+    return ", ".join(_LENGTH_FIELDS + stats), rows
+
+
 def directory_sstables_listing(
     spark: SparkSession,
     root: str,
     filenames=None,
     file_timestamp: bool = False,
 ) -> DataFrame:
-    """The reference's FULL `sstables` listing from a Cassandra data
-    directory and nothing else (cli/SSTableMetadataCollector.java:40-90):
-    Statistics.db metadata joined with exact Index.db partition counts
-    (`keys` -- exact where the reference estimates, documented
-    improvement) and CompressionInfo/Data.db-resolved lengths (Disk Size
-    vs Total Size). All sides are 1 row per sstable; the joins broadcast.
+    """The full directory ``sstables`` listing (``sstables_listing_report``)
+    as a local relation."""
+    from cassandra_sstable_tools_spark.sources.inventory import local_frame
 
-    Inner joins by design: an sstable missing its Data.db or
-    Statistics.db component is broken, and a row of fabricated blanks
-    would hide that; the CLI falls back to the reduced
-    Index/Data/CompressionInfo listing when a directory has NO
-    Statistics.db at all.
-
-    ``file_timestamp=True`` adds the reference's File Timestamp column
-    from the Data.db modification time (listing metadata -- contents
-    still never read, and the length and mtime come from the SAME
-    driver-side listing). CLI-only: mtimes are not derivable
-    from the fixture tables, so the certified query below omits it."""
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        _data_db_meta,
-        binary_index_entries,
-        compression_data_lengths,
+    ddl, rows = sstables_listing_report(
+        spark, root, filenames, file_timestamp
     )
-
-    keys = ["keyspace", "table_name", "sstable_id"]
-    counts = (
-        binary_index_entries(spark, root, filenames=filenames)
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("partitions"))
-    )
-    data_meta = _data_db_meta(spark, root, filenames)
-    ts_cols = ["file_timestamp"] if file_timestamp else []
-    disk = data_meta.select(*keys, "disk_length", *ts_cols)
-    comp = compression_data_lengths(spark, root, filenames).withColumnRenamed(
-        "uncompressed_length", "_comp_length"
-    )
-    stats = statistics_metadata(spark, root, filenames)
-    return (
-        counts.join(F.broadcast(disk), keys)
-        .join(F.broadcast(comp), keys, "left")
-        .join(F.broadcast(stats), keys)
-        .select(
-            *keys,
-            "partitions",
-            "disk_length",
-            F.coalesce("_comp_length", "disk_length").alias(
-                "uncompressed_length"
-            ),
-            F.col("_comp_length").isNotNull().alias("compressed"),
-            "min_timestamp",
-            "max_timestamp",
-            *ts_cols,
-            "min_local_deletion_time",
-            "max_local_deletion_time",
-            "min_ttl",
-            "max_ttl",
-            "level",
-            "is_repaired",
-            "repaired_at",
-            "mean_partition_size",
-            "max_partition_size",
-            "mean_column_count",
-            "max_column_count",
-            "droppable_tombstones",
-        )
-    )
+    return local_frame(spark, rows, ddl)
 
 
 def has_statistics_files(
@@ -1077,62 +1120,57 @@ def sstable_metadata_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return directory_sstables_listing(spark, root)
 
 
+SUMMARY_SCHEMA = (
+    "keyspace string, table_name string, sstable_count bigint, "
+    "disk_size bigint, data_size bigint, last_repaired bigint, "
+    "repair_pct bigint"
+)
+
+
+def summary_report(
+    spark: SparkSession, root: str, filenames=None
+) -> list[tuple]:
+    """The reference's `summary` report (cli/SummaryCollector.java:23-72)
+    from a Cassandra data directory and nothing else, as SUMMARY_SCHEMA
+    rows: per-table sstable counts, disk vs data sizes
+    (CompressionInfo-resolved), last-repaired and the X5 integer-floor
+    repair %. Statistics.db made this possible -- repair state lives
+    nowhere else; sstables without it are left out (the CLI warns). Same
+    columns and formulas as the parquet-path `summary`
+    (queries/summary.py), so reports are interchangeable. One read per
+    sstable in one Spark job; the driver aggregates."""
+    from cassandra_sstable_tools_spark.sources.inventory import sstable_rows
+
+    tables: dict[tuple[str, str], list] = {}
+    for ks, tb, _ss, _n, disk, _t, data, _c, st in sstable_rows(
+        spark, "summary_report", root, filenames, ("Data.db", "Statistics.db"),
+        lambda sst: _sstable_facts(sst, partitions=False),
+    ):
+        t = tables.setdefault((ks, tb), [0, 0, 0, None, 0])
+        t[0] += 1
+        t[1] += disk
+        t[2] += data
+        if st["is_repaired"]:
+            at = st["repaired_at"]
+            t[3] = at if t[3] is None else max(t[3], at)
+            t[4] += data
+    # repair % as Spark evaluates floor(try_divide(repaired * 100, data)):
+    # a double division, floored; NULL for a table of 0 bytes
+    return [
+        (ks, tb, n, disk, data, last,
+         math.floor(float(rep * 100) / float(data)) if data else None)
+        for (ks, tb), (n, disk, data, last, rep) in tables.items()
+    ]
+
+
 def directory_summary(
     spark: SparkSession, root: str, filenames=None
 ) -> DataFrame:
-    """The reference's `summary` report (cli/SummaryCollector.java:23-72)
-    from a Cassandra data directory and nothing else: per-table sstable
-    counts, disk vs data sizes (CompressionInfo-resolved), last-repaired
-    and the X5 integer-floor repair %. Statistics.db made this possible --
-    repair state lives nowhere else. Same column names and formulas as the
-    parquet-path `summary` (queries/summary.py), so reports are
-    interchangeable; inputs are 1-row-per-sstable frames, one tiny
-    groupBy."""
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        _data_db_byte_lengths,
-        compression_data_lengths,
-    )
+    """``summary_report`` as a local relation (SUMMARY_SCHEMA)."""
+    from cassandra_sstable_tools_spark.sources.inventory import local_frame
 
-    keys = ["keyspace", "table_name", "sstable_id"]
-    disk = _data_db_byte_lengths(spark, root, filenames).withColumnRenamed(
-        "uncompressed_length", "disk_length"
-    )
-    comp = compression_data_lengths(spark, root, filenames).withColumnRenamed(
-        "uncompressed_length", "_comp_length"
-    )
-    stats = statistics_metadata(spark, root, filenames).select(
-        *keys, "is_repaired", "repaired_at"
-    )
-    per_sstable = (
-        disk.join(F.broadcast(comp), keys, "left")
-        .join(F.broadcast(stats), keys)
-        .select(
-            "keyspace",
-            "table_name",
-            "disk_length",
-            F.coalesce("_comp_length", "disk_length").alias(
-                "uncompressed_length"
-            ),
-            "is_repaired",
-            "repaired_at",
-        )
-    )
-    return per_sstable.groupBy("keyspace", "table_name").agg(
-        F.count(F.lit(1)).alias("sstable_count"),
-        F.sum("disk_length").alias("disk_size"),
-        F.sum("uncompressed_length").alias("data_size"),
-        F.max(F.when(F.col("is_repaired"), F.col("repaired_at"))).alias(
-            "last_repaired"
-        ),
-        F.floor(
-            F.sum(
-                F.when(
-                    F.col("is_repaired"), F.col("uncompressed_length")
-                ).otherwise(0)
-            )
-            * 100
-            / F.sum("uncompressed_length")
-        ).alias("repair_pct"),
+    return local_frame(
+        spark, summary_report(spark, root, filenames), SUMMARY_SCHEMA
     )
 
 
