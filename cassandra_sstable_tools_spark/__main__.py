@@ -448,22 +448,28 @@ def _table_scope_rows(rows, args):
     return rows
 
 
+def _warn_omitted(n: int, of: int, why: str, what: str) -> None:
+    """stderr warning that ``n`` of ``of`` sstables are left out of a
+    report: the directory reports skip broken sstables by design
+    (fabricated blanks would hide breakage), so the omission must be
+    SAID, not silent -- a tool that inventories sstables must not
+    under-report exactly the broken ones."""
+    if n > 0:
+        sys.stderr.write(
+            f"warning: {n} of {of} sstables {why} and are omitted from the "
+            f"{what}\n"
+        )
+
+
 def _warn_partial_statistics(spark, root, names, what: str) -> None:
-    """stderr warning when some sstables lack Statistics.db: the
-    Statistics-joined reports inner-join by design (fabricated blanks
-    would hide breakage), so the omission must be SAID, not silent -- a
-    tool that inventories sstables must not under-report exactly the
-    broken ones (partial snapshot copies, failed compaction cleanup)."""
+    """Warn when some sstables lack Statistics.db: the Statistics-joined
+    reports inner-join them away."""
     from cassandra_sstable_tools_spark.sources.statistics_db import (
         statistics_coverage,
     )
 
-    n_data, n_stats = statistics_coverage(spark, root, names)
-    if n_stats < n_data:
-        sys.stderr.write(
-            f"warning: {n_data - n_stats} of {n_data} sstables have no "
-            f"Statistics.db and are omitted from the {what}\n"
-        )
+    n_data, n_stats, _ = statistics_coverage(spark, root, names)
+    _warn_omitted(n_data - n_stats, n_data, "have no Statistics.db", what)
 
 
 def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
@@ -489,20 +495,23 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
             )
             from cassandra_sstable_tools_spark.sources.statistics_db import (
                 SUMMARY_SCHEMA,
-                has_statistics_files,
+                statistics_coverage,
                 summary_report,
             )
 
             names = args.filenames.split(",") if args.filenames else None
             root = _scoped_cassdir_root(args)
-            if not has_statistics_files(spark, root, names):
+            n_data, n_stats, _ = statistics_coverage(spark, root, names)
+            if not n_stats:
                 sys.stderr.write(
                     "summary --cassandra-dir needs Statistics.db components "
                     f"(repair state lives nowhere else); none found under "
                     f"{root}\n"
                 )
                 return 2
-            _warn_partial_statistics(spark, root, names, "summary")
+            _warn_omitted(
+                n_data - n_stats, n_data, "have no Statistics.db", "summary"
+            )
             cols = ddl_columns(SUMMARY_SCHEMA)
             rows = _table_scope_rows(summary_report(spark, root, names), args)
         else:
@@ -550,15 +559,20 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
                 ddl_columns,
             )
             from cassandra_sstable_tools_spark.sources.statistics_db import (
-                has_statistics_files,
                 sstables_listing_report,
+                statistics_coverage,
             )
 
             root = _scoped_cassdir_root(args)
             names = args.filenames.split(",") if args.filenames else None
-            full = has_statistics_files(spark, root, names)
+            n_data, n_stats, n_empty = statistics_coverage(spark, root, names)
+            full = n_stats > 0
+            what = "full listing" if full else "listing"
             if full:
-                _warn_partial_statistics(spark, root, names, "full listing")
+                _warn_omitted(
+                    n_data - n_stats, n_data, "have no Statistics.db", what
+                )
+            _warn_omitted(n_empty, n_data, "have an empty Index.db", what)
             ddl, rows = sstables_listing_report(
                 spark, root, names, file_timestamp=full, statistics=full
             )

@@ -3,13 +3,13 @@
 ``_cellwalk.c`` mirrors ``data_cells.decode_partition_block``'s byte walk
 exactly (same reads, same bounds checks, same error conditions at the same
 byte offsets) but emits COLUMNAR arrays instead of per-record Python
-objects; this module compiles it on demand (gcc, cached per source hash),
-renders the display strings (partition keys, clustering values, cell
-paths) through the SAME cached Python renderers the interpreted kernel
-uses, and assembles pyarrow RecordBatches directly -- removing both the
-per-field Python dispatch and the per-record ``_Rec``/tuple/transpose
-marshal from the scan hot path (optimization guide §4.2: Spark
-distributes, native code crunches).
+objects; this module compiles it on demand (gcc, cached per platform
+and source), renders the display strings (partition keys, clustering
+values, cell paths) through the SAME cached Python renderers the
+interpreted kernel uses, and assembles pyarrow RecordBatches directly --
+removing both the per-field Python dispatch and the per-record
+``_Rec``/tuple/transpose marshal from the scan hot path (optimization
+guide §4.2: Spark distributes, native code crunches).
 
 Safety contract:
 - the pure-Python kernel stays the reference: ``available()`` is False
@@ -33,6 +33,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import platform
 import subprocess
 import tempfile
 from collections.abc import Iterator
@@ -127,18 +128,31 @@ _lib_tried = False
 
 
 def _compile() -> str | None:
-    """Compile _cellwalk.c to a cached .so (keyed on the source hash);
-    returns the .so path or None when no compiler is available. Cluster
-    posture: compiles once per host into a per-user cache; concurrent
-    compiles race safely via atomic rename."""
+    """Compile _cellwalk.c to a cached .so, keyed on the machine, the
+    compiler version and the source hash, so a cache shared between hosts
+    (an NFS home) never hands one platform's binary to another; returns
+    the .so path or None when no compiler is available. Cluster posture:
+    compiles once per host into a per-user cache; concurrent compiles
+    race safely via atomic rename."""
     with open(_SRC, "rb") as f:
         src = f.read()
-    digest = hashlib.md5(src).hexdigest()[:16]
+    try:
+        cc = subprocess.run(
+            ["gcc", "-dumpfullversion"], capture_output=True, timeout=30
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    if cc.returncode != 0:
+        return None
+    machine = platform.machine() or "unknown"
+    digest = hashlib.md5(
+        b"\0".join([machine.encode(), cc.stdout.strip(), src])
+    ).hexdigest()[:16]
     cache_dir = os.path.join(
         os.environ.get("XDG_CACHE_HOME", os.path.expanduser("~/.cache")),
         "sstable-cellwalk",
     )
-    so_path = os.path.join(cache_dir, f"cellwalk-{digest}.so")
+    so_path = os.path.join(cache_dir, f"cellwalk-{machine}-{digest}.so")
     if os.path.exists(so_path):
         return so_path
     os.makedirs(cache_dir, exist_ok=True)

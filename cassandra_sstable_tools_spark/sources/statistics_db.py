@@ -1077,35 +1077,29 @@ def directory_sstables_listing(
     return local_frame(spark, rows, ddl)
 
 
-def has_statistics_files(
-    spark: SparkSession, root: str, filenames=None
-) -> bool:
-    """True when any *-Statistics.db exists under ``root`` (within the
-    `-f` selection when given -- a `-f` naming only stats-less sstables
-    must take the reduced-listing path, not print an empty full listing).
-    A driver-side listing (sources/inventory.py), no Spark job."""
-    from cassandra_sstable_tools_spark.sources.inventory import live_sstables
-
-    return bool(live_sstables(
-        "has_statistics_files", root, filenames, ("Statistics.db",)
-    ))
-
-
 def statistics_coverage(
     spark: SparkSession, root: str, filenames=None
-) -> tuple[int, int]:
-    """(#Data.db files, #Statistics.db files) under ``root``, from one
-    driver-side listing. The CLI compares them to WARN when a full listing
-    or summary silently omits sstables whose Statistics.db is missing
-    (partial snapshot copies, failed compaction cleanup): a tool that
-    inventories sstables must not under-report the broken ones without
-    saying so."""
+) -> tuple[int, int, int]:
+    """(#Data.db files, #Statistics.db files, #sstables whose Data.db sits
+    next to an empty Index.db) under ``root`` (within the `-f` selection
+    when given), from one driver-side listing, no Spark job. The CLI
+    takes all its directory checks from it: no Statistics.db at all
+    fails ``summary`` and reduces the ``sstables`` listing, and partial
+    coverage or an empty Index.db WARNS, because the reports then omit
+    those sstables (partial snapshot copies, failed compaction cleanup):
+    a tool that inventories sstables must not under-report the broken
+    ones without saying so. An Index.db without entries has length 0."""
     from cassandra_sstable_tools_spark.sources.inventory import live_sstables
 
     ssts = live_sstables("statistics_coverage", root, filenames, ())
     return (
         sum("Data.db" in s.components for s in ssts),
         sum("Statistics.db" in s.components for s in ssts),
+        sum(
+            {"Data.db", "Index.db"} <= s.components
+            and s.length("Index.db") == 0
+            for s in ssts
+        ),
     )
 
 

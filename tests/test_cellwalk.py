@@ -7,6 +7,7 @@ representative subset on every test run."""
 
 from __future__ import annotations
 
+import os
 import struct
 
 import pytest
@@ -207,6 +208,29 @@ def test_kill_switch_falls_back(monkeypatch):
         monkeypatch.delenv("SPARK_GRAFT_NO_CELLWALK")
         importlib.reload(cw)
         assert cw.available()
+
+
+def test_kernel_cache_is_keyed_on_the_platform(monkeypatch, tmp_path):
+    """A binary cached under the source hash alone (another host's build
+    in a shared cache) is never loaded: the kernel builds under a key of
+    machine, compiler version and source, and loads."""
+    import hashlib
+
+    import cassandra_sstable_tools_spark.sources.cellwalk as cw
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    with open(cw._SRC, "rb") as f:
+        old = hashlib.md5(f.read()).hexdigest()[:16]
+    cache = tmp_path / "sstable-cellwalk"
+    cache.mkdir()
+    (cache / f"cellwalk-{old}.so").write_bytes(b"not an ELF object")
+    monkeypatch.setattr(cw, "_lib", None)
+    monkeypatch.setattr(cw, "_lib_tried", False)
+    so = cw._compile()
+    assert so is not None and so.startswith(str(cache))
+    assert os.path.basename(so) != f"cellwalk-{old}.so"
+    assert cw._load() is not None
+    assert cw._compile() == so  # cached: the second call compiles nothing
 
 
 def test_ttl_out_of_int32_declines_to_python():

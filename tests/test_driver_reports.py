@@ -282,6 +282,46 @@ def test_edge_tree_summary_cases(spark, edge_root):
     assert out.count("\n|") - 1 == 4
 
 
+@pytest.mark.parametrize("statistics", [True, False])
+def test_listing_warns_about_empty_index(spark, edge_root, tmp_path,
+                                         statistics):
+    """ks2/zero's Index.db has no entries, so both listings leave it out:
+    stderr says so, stdout is unchanged."""
+    root = edge_root
+    if not statistics:
+        root = _without_statistics(edge_root, str(tmp_path / "nostats"))
+    rc, out, err = _cli(spark, ["sstables", "--cassandra-dir", root])
+    assert rc == 0
+    what = "full listing" if statistics else "listing"
+    assert (f"warning: 1 of 6 sstables have an empty Index.db and are "
+            f"omitted from the {what}\n") in err
+    assert "zero" not in out
+    rc, out, err = _cli(spark, ["sstables", "--cassandra-dir", root,
+                                "--keyspace", "ks1"])
+    assert rc == 0 and "empty Index.db" not in err
+
+
+@pytest.mark.parametrize("command", ["summary", "sstables"])
+def test_directory_walks_per_command(spark, edge_root, monkeypatch,
+                                     command):
+    """``summary`` and ``sstables`` list the data directory twice on the
+    driver: once for the Statistics.db coverage checks, once for the
+    pass (on an object store each listing is a round of LIST calls)."""
+    from cassandra_sstable_tools_spark.sources import inventory
+
+    calls = []
+    real = inventory._inventory
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(inventory, "_inventory", counting)
+    rc, _out, _err = _cli(spark, [command, "--cassandra-dir", edge_root])
+    assert rc == 0
+    assert len(calls) == 2, [c[0] for c in calls]
+
+
 def test_parquet_summary_zero_bytes_is_null(spark):
     """The parquet-path ``summary`` formula on a table whose sstables sum
     to 0 bytes: NULL repair %, not an ANSI DIVIDE_BY_ZERO."""

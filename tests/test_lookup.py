@@ -298,11 +298,37 @@ def test_unknown_partitioner_is_loud(spark, tmp_path):
         partition_lookup(spark, str(tmp_path), ["k00"]).collect()
 
 
-def test_index_pointing_at_wrong_block_is_loud(spark, tmp_path):
+_MURMUR3 = "org.apache.cassandra.dht.Murmur3Partitioner"
+_BYTE_ORDERED = "org.apache.cassandra.dht.ByteOrderedPartitioner"
+
+
+def _read_mode(spark, root, mode, first: bytes, last: bytes):
+    """The records of one lookup mode reading ``first``: its point read,
+    or the byte range or murmur3 token range ``first``..``last`` (index
+    order)."""
+    from cassandra_sstable_tools_spark.sources.bloom import murmur3_x64_128
+    from cassandra_sstable_tools_spark.sources.lookup import (
+        partition_range_scan,
+        token_range_scan,
+    )
+
+    if mode == "keys":
+        return partition_lookup(spark, root, [first.decode()]).collect()
+    if mode == "range":
+        return partition_range_scan(
+            spark, root, first.decode(), last.decode()
+        ).collect()
+    return token_range_scan(
+        spark, root, murmur3_x64_128(first)[0], murmur3_x64_128(last)[0]
+    ).collect()
+
+
+@pytest.mark.parametrize("mode", ["keys", "range", "token"])
+def test_index_pointing_at_wrong_block_is_loud(spark, tmp_path, mode):
     """Flip the key bytes inside one Data.db partition block: the lookup
     that followed the index there must name the mismatch, not return the
     wrong partition's cells."""
-    part = "org.apache.cassandra.dht.ByteOrderedPartitioner"
+    part = _MURMUR3 if mode == "token" else _BYTE_ORDERED
     keys, ordered, base = _plant_sstable(tmp_path, part)
     victim = ordered[4]
     with open(base + "Data.db", "r+b") as f:
@@ -312,7 +338,44 @@ def test_index_pointing_at_wrong_block_is_loud(spark, tmp_path):
         f.seek(at + 2)
         f.write(b"X" * len(victim))  # same length, different key
     with pytest.raises(Exception, match="index points at"):
-        partition_lookup(spark, str(tmp_path), [victim.decode()]).collect()
+        _read_mode(spark, str(tmp_path), mode, victim, victim)
+
+
+@pytest.mark.parametrize("mode", ["keys", "range", "token"])
+def test_decreasing_index_data_position_is_loud(spark, tmp_path, mode):
+    """Swap the Data.db positions of two adjacent Index.db entries, so the
+    second points below the first: every mode reading the first entry's
+    partition must refuse the index, naming the Index.db, instead of
+    dropping or misreading a partition."""
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        encode_index_db,
+        index_offsets,
+        parse_index_db,
+    )
+    from cassandra_sstable_tools_spark.sources.summary_db import (
+        encode_summary_db,
+    )
+
+    part = _MURMUR3 if mode == "token" else _BYTE_ORDERED
+    _keys, ordered, base = _plant_sstable(tmp_path, part)
+    with open(base + "Index.db", "rb") as f:
+        entries = parse_index_db(f.read(), version="nb")
+    i = 5
+    (ka, pa), (kb, pb) = entries[i], entries[i + 1]
+    assert pa < pb and [k for k, _ in entries] == ordered
+    entries[i], entries[i + 1] = (ka, pb), (kb, pa)
+    with open(base + "Index.db", "wb") as f:
+        f.write(encode_index_db(entries))
+    with open(base + "Summary.db", "wb") as f:
+        f.write(encode_summary_db(
+            [(k, o) for (k, _), o in zip(entries, index_offsets(entries))],
+            min_index_interval=3,
+        ))
+    want = "successor data position" if mode == "keys" else "decreases"
+    with pytest.raises(Exception, match=want) as err:
+        _read_mode(spark, str(tmp_path), mode, ka, kb)
+    assert "corrupt Index.db " in str(err.value)
+    assert f"{base}Index.db" in str(err.value)
 
 
 def test_summary_check_detects_a_drifted_summary(spark, sf_dir, tmp_path):

@@ -339,22 +339,25 @@ def test_full_listing_data_scan_stays_metadata_only(spark, sf_dir):
 
 
 def test_has_statistics_files_detection(spark, sf_dir, tmp_path):
+    """``statistics_coverage`` tells a tree with Statistics.db components
+    from one without any (the CLI's reduced-listing / summary-error
+    switch)."""
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         materialize_index_files,
     )
     from cassandra_sstable_tools_spark.sources.statistics_db import (
-        has_statistics_files,
+        statistics_coverage,
     )
 
     root = materialize_index_files(spark, sf_dir)
-    assert has_statistics_files(spark, root)
+    assert statistics_coverage(spark, root)[1] > 0
     nostats = str(tmp_path / "tree")
     shutil.copytree(root, nostats)
     for dp, _, fs in os.walk(nostats):
         for f in fs:
             if f.endswith("-Statistics.db"):
                 os.remove(os.path.join(dp, f))
-    assert not has_statistics_files(spark, nostats)
+    assert statistics_coverage(spark, nostats)[1] == 0
 
 
 def test_cli_scoping_applies_to_directory_listings(spark, sf_dir, capsys):
