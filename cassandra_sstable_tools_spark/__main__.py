@@ -34,6 +34,8 @@ import sys
 
 from pyspark.sql import DataFrame
 
+from cassandra_sstable_tools_spark.report.table import sort_key as _sort_key
+
 
 def _render(
     df: DataFrame,
@@ -47,17 +49,6 @@ def _render(
     sort-free because the driver's hash check is order-insensitive and a
     global sort inside the query would be pure cost in every embedding."""
     return _render_rows(df.columns, df.collect(), humanize_cols, order)
-
-
-def _sort_key(v):
-    """Spark's ascending order for one value: NULLs first, NaN above
-    every number; strings compare by code point, which is the UTF-8 byte
-    order Spark uses."""
-    if v is None:
-        return (0,)
-    if isinstance(v, float) and v != v:
-        return (2,)
-    return (1, v)
 
 
 def _render_rows(
@@ -760,58 +751,42 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
         from cassandra_sstable_tools_spark.queries import purge as m
 
         if args.cassandra_dir:
-            # directory-only: full merge -> purge -> measure over the
-            # DECODED cell stream with REAL serialized sizes -- with this,
-            # all five reference commands run off a data directory
+            # directory-only: per table and key range, every sstable's
+            # partitions merged in key order and purged inside the task
+            # (sources/merge_scan.py); totals and top-N finish on the
+            # driver. One Spark job, no shuffle, no SQL plan.
             from cassandra_sstable_tools_spark.constants import DEFAULT_TOP_N
-            from cassandra_sstable_tools_spark.operators.purge import (
-                purge_stats,
+            from cassandra_sstable_tools_spark.sources import merge_scan
+            from cassandra_sstable_tools_spark.sources.inventory import (
+                live_sstables,
             )
-            from cassandra_sstable_tools_spark.operators.topn import (
-                top_n_per_group,
-            )
-            from pyspark.sql import functions as _F
-
-            from cassandra_sstable_tools_spark.sources.data_cells import (
-                _decoded_purge_cells,
-                _purge_partitioned,
+            from cassandra_sstable_tools_spark.sources.statistics_db import (
+                sstable_coverage,
             )
 
             names = args.filenames.split(",") if args.filenames else None
-            root = _scoped_cassdir_root(args)
-            _warn_partial_statistics(spark, root, names, "purge")
-            per_part = _table_scope_filter(
-                purge_stats(_purge_partitioned(
-                    _decoded_purge_cells(spark, root, names)
-                )), args
-            ).persist()
-            try:
-                out.append(("Purge totals", _render(
-                    per_part.groupBy("keyspace", "table_name").agg(
-                        _F.count(_F.lit(1)).alias("partitions"),
-                        _F.sum("pre_size").alias("total_size"),
-                        _F.sum("merged_size").alias("total_merged"),
-                        _F.sum("reclaimable").alias("total_reclaimable"),
-                    ),
-                    {"total_size": "bytes", "total_merged": "bytes",
-                     "total_reclaimable": "bytes"},
-                    order=["keyspace", "table_name"])))
-                out.append(("Top reclaimable partitions", _render(
-                    top_n_per_group(
-                        per_part,
-                        ["keyspace", "table_name"],
-                        [_F.desc("reclaimable"), _F.desc("pre_size"),
-                         _F.asc("partition_key")],
-                        args.n or DEFAULT_TOP_N,
-                    ).select(
-                        "keyspace", "table_name", "partition_key", "tables",
-                        "pre_size", "merged_size", "reclaimable", "rank",
-                    ),
-                    {"pre_size": "bytes", "merged_size": "bytes",
-                     "reclaimable": "bytes"},
-                    order=["keyspace", "table_name", "rank"])))
-            finally:
-                per_part.unpersist()
+            ssts = live_sstables(
+                "purge", _scoped_cassdir_root(args), names, ()
+            )
+            n_data, n_stats, n_empty = sstable_coverage(ssts)
+            _warn_omitted(
+                n_data - n_stats, n_data, "have no Statistics.db", "purge"
+            )
+            _warn_omitted(n_empty, n_data, "have an empty Index.db", "purge")
+            totals, top = merge_scan.purge_report(
+                spark, ssts, args.n or DEFAULT_TOP_N
+            )
+            out.append(("Purge totals", _render_rows(
+                merge_scan.PURGE_TOTALS_COLUMNS,
+                _table_scope_rows(totals, args),
+                {"total_size": "bytes", "total_merged": "bytes",
+                 "total_reclaimable": "bytes"},
+                order=["keyspace", "table_name"])))
+            out.append(("Top reclaimable partitions", _render_rows(
+                merge_scan.PURGE_TOP_COLUMNS, _table_scope_rows(top, args),
+                {"pre_size": "bytes", "merged_size": "bytes",
+                 "reclaimable": "bytes"},
+                order=["keyspace", "table_name", "rank"])))
             for title, table in out:
                 sys.stdout.write(f"{title}\n{table}\n")
             return 0

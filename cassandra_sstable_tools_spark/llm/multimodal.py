@@ -631,36 +631,38 @@ def media_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grid -- aHash halves, 8x8-bit banding, capped join, hamming verify
     -- is the REAL operator, shared with the real-pixel path
     (``media_phash_real`` -> ``phash_neardup_pairs_over``) that the planted
-    PNG re-encode differential drives in tests. All JVM-side: the grid is
-    one transform over a materialized words array (bound column, NOT an
-    inlined split -- the r06 chunker-quadratic lesson), the fold to halves
-    is an integer Horner aggregate; no Python in the registered path."""
+    PNG re-encode differential drives in tests. All JVM-side, no Python in
+    the registered path.
+
+    The words array, the grid and its sum are each bound to a lambda
+    variable (``transform(array(x), v -> ...)`` is a let-binding), so each
+    is computed once per doc and every per-element lambda reads a bound
+    value. Referenced as plain columns, the optimizer inlined the grid
+    expression into the per-element lambdas of both halves: 64 grid
+    evaluations (64 md5s and a regex split of the whole payload each) per
+    half per doc, which took 111 s on 500 documents."""
     m = media_table(spark, sf_dir)
-    ws = m.select(
-        "doc_id",
-        F.split(
-            F.regexp_replace(F.lower(F.decode("payload", "UTF-8")), r"\s+", " "),
-            " ",
-        ).alias("ws"),
-    ).withColumn("nw", F.size("ws"))
-    cells = ws.select(
+    grid = (
+        "transform(sequence(0, 63), j -> cast(conv(substr(md5(element_at("
+        "ws, cast((j * size(ws)) div 64 as int) + 1)), 1, 1), 16, 10) as int))"
+    )
+    g = m.select(
         "doc_id",
         F.expr(
-            "transform(sequence(0, 63), j -> cast(conv(substr(md5("
-            "element_at(ws, cast((j * nw) div 64 as int) + 1)), 1, 1), 16, 10)"
-            " as int))"
-        ).alias("cs"),
-    ).withColumn("s", F.expr("aggregate(cs, 0, (a, x) -> a + x)"))
-    ph = cells.select(
+            "element_at(transform(array(split(regexp_replace(lower(decode("
+            r"payload, 'UTF-8')), '\\s+', ' '), ' ')), ws -> element_at("
+            f"transform(array({grid}), cs -> named_struct('cs', cs, 's', "
+            "aggregate(cs, 0, (a, x) -> a + x))), 1)), 1)"
+        ).alias("g"),
+    )
+    half = (
+        "aggregate(sequence({}, {}), 0L, (acc, j) -> acc * 2 + "
+        "if(element_at(g.cs, j + 1) * 64 > g.s, 1L, 0L))"
+    )
+    ph = g.select(
         "doc_id",
-        F.expr(
-            "aggregate(sequence(0, 31), 0L, (acc, j) -> acc * 2 + "
-            "if(element_at(cs, j + 1) * 64 > s, 1L, 0L))"
-        ).alias("ph_hi"),
-        F.expr(
-            "aggregate(sequence(32, 63), 0L, (acc, j) -> acc * 2 + "
-            "if(element_at(cs, j + 1) * 64 > s, 1L, 0L))"
-        ).alias("ph_lo"),
+        F.expr(half.format(0, 31)).alias("ph_hi"),
+        F.expr(half.format(32, 63)).alias("ph_lo"),
     )
     return phash_neardup_pairs_over(ph)
 

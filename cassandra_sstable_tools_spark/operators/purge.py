@@ -39,9 +39,20 @@ size covers its two bounds, so the purged marker retains ``cell_size / 2``
 (integer floor) per shared boundary (at most its two bounds). Both-sides
 droppable -> whole boundary purged (reference returns null), no remnant.
 
-Spark shape -- ZERO corpus shuffles on the cached path, ONE corpus sort, no
-Python anywhere: the adapter caches `cells` hash-partitioned on (keyspace,
-table_name, partition_key), and every corpus-wide operator here -- the LWW
+Two formulations of these rules live here. The DataFrame one
+(``purge_stats`` = ``merge_enriched`` + ``_purge_aggregate``) is the oracle
+and the path of the parquet adapter's ``purge``, the registered
+``purge_*_cassdir`` queries and ``compact``. ``purge_partition`` applies
+the same rules to one partition's copies in plain Python: ``purge
+--cassandra-dir`` runs it inside the task that merges every sstable of a
+table in key order (sources/merge_scan.py), so no cell is shuffled and no
+SQL plan is built. tests/test_purge_differential.py and
+tests/test_purge_semantics.py hold the two equal.
+
+Spark shape of the DataFrame formulation -- ZERO corpus shuffles on the
+cached path, ONE corpus sort, no Python anywhere: the adapter caches
+`cells` hash-partitioned on (keyspace, table_name, partition_key), and
+every corpus-wide operator here -- the LWW
 ``row_number`` window and the two-level final aggregation -- keys on a
 superset of that partitioning, so ClusteredDistribution is satisfied straight
 off the cache (an uncached input just gets one planner-inserted window
@@ -62,6 +73,8 @@ decides at runtime.
 """
 
 from __future__ import annotations
+
+import operator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -351,6 +364,178 @@ def _purge_aggregate(enriched: DataFrame, survives) -> DataFrame:
         .drop("remnant")
         .withColumn("reclaimable", F.col("pre_size") - F.col("merged_size"))
     )
+
+
+# ---------------------------------------------------------------------------
+# The same rules over ONE partition's copies, in plain Python: the directory
+# CLI merges every sstable's partitions in key order inside a task
+# (sources/merge_scan.py) and runs this on each merged partition. NULLs
+# follow the SQL formulation above (three-valued logic, NULL-ignoring sums),
+# so the two agree wherever the DataFrame runs, header-resident partition
+# deletes (NULL cell_size) included. (On a range tombstone with a NULL
+# bound the DataFrame raises in ``element_at``; see ``_rtm_remnant``.)
+# ---------------------------------------------------------------------------
+
+# field order of one copy handed to purge_partition
+PURGE_FIELDS = (
+    "sstable_id", "kind", "clustering", "cell_name", "cell_size",
+    "writetime", "is_tombstone", "is_expiring", "local_deletion_time",
+    "range_start", "range_end",
+)
+
+
+def _and(*vs):
+    """SQL AND: False wins, then NULL (None)."""
+    out = True
+    for v in vs:
+        if v is False:
+            return False
+        if v is None:
+            out = None
+    return out
+
+
+def _or(a, b):
+    """SQL OR: True wins, then NULL (None)."""
+    if a is True or b is True:
+        return True
+    return None if a is None or b is None else False
+
+
+def _cmp(a, b, op):
+    return None if a is None or b is None else op(a, b)
+
+
+def _newer(wt, watermark):
+    """``watermark IS NULL OR wt > watermark``."""
+    return True if watermark is None else _cmp(wt, watermark, operator.gt)
+
+
+def _purge_sum(total, v):
+    """One step of SQL ``sum``: NULLs are skipped; all-NULL stays NULL."""
+    return total if v is None else (total or 0) + v
+
+
+def _null_first(v):
+    return (0,) if v is None else (1, v)
+
+
+
+def purge_partition(copies, gc_before: int = GC_BEFORE) -> tuple:
+    """``purge_stats`` of one partition: ``copies`` are every sstable's
+    records of it as ``PURGE_FIELDS`` tuples -> ``(tables, pre_size,
+    merged_size, reclaimable)``.
+
+    The rules are ``merge_enriched`` + ``_purge_aggregate``'s: scope-aware
+    LWW (the same dedup key strings; NULL writetimes lose, and of two
+    copies with the same writetime the first one stays -- the frame picks
+    either), partition/row/complex/range-tombstone shadowing, purge on
+    strict ``ldt < gc_before``, the RTM boundary remnant (per distinct
+    range the max ``(writetime, ldt, cell_size)`` copy), and the
+    ``m0[k3]`` cell-path fold's base column for complex deletes."""
+    winners: dict = {}
+    pd_wt = None
+    rd_wt: dict = {}
+    cd_wt: dict = {}
+    rtms = []
+    pre = None
+    for c in copies:
+        _, kind, cl, name, cs, wt, _, _, _, rs, re = c
+        pre = _purge_sum(pre, cs)
+        if kind == "PARTITION_DELETE":
+            key = ("", "<pd>")
+            if wt is not None and (pd_wt is None or wt > pd_wt):
+                pd_wt = wt
+        elif kind == "RANGE_TOMBSTONE_MARKER":
+            # concat() with a NULL bound is NULL
+            key = ("", None if rs is None or re is None else
+                   f"<rtm>{rs}|{re}")
+            rtms.append(c)
+        elif kind == "ROW_DELETE":
+            key = (cl, "<rd>")
+            if cl is not None and wt is not None:
+                rd_wt[cl] = max(rd_wt.get(cl, wt), wt)
+        elif kind == "COMPLEX_DELETE":
+            key = (cl, "<cd>" + (name or ""))
+            if cl is not None and name is not None and wt is not None:
+                cd_wt[cl, name] = max(cd_wt.get((cl, name), wt), wt)
+        else:
+            key = (cl, "<marker>" if name is None else name)
+        w = winners.get(key)
+        if w is None or (wt is not None and (w[5] is None or wt > w[5])):
+            winners[key] = c
+
+    # LWW losers add 0, not NULL, to the merged sum
+    merged = 0 if len(winners) < len(copies) else None
+    for w in winners.values():
+        _, kind, cl, name, cs, wt, tomb, exp, ldt, _, _ = w
+        if kind in _CELLISH:
+            base = None if name is None else name.split("[", 1)[0]
+            purgeable = _cmp(ldt, gc_before, operator.lt)
+            dropped = _and(_or(tomb, _and(exp, purgeable)), purgeable)
+            keep = _and(
+                _newer(wt, pd_wt), _newer(wt, rd_wt.get(cl)),
+                _newer(wt, cd_wt.get((cl, base))),
+                None if dropped is None else not dropped,
+                not any(
+                    cl is not None and r[9] is not None and r[10] is not None
+                    and wt is not None and r[5] is not None
+                    and r[9] <= cl <= r[10] and wt < r[5]
+                    for r in rtms
+                ),
+            )
+        elif kind == "PARTITION_DELETE":
+            keep = _cmp(ldt, gc_before, operator.ge)
+        elif kind == "COMPLEX_DELETE":
+            keep = _and(_newer(wt, pd_wt), _newer(wt, rd_wt.get(cl)),
+                        _cmp(ldt, gc_before, operator.ge))
+        else:  # ROW_DELETE / RANGE_TOMBSTONE_MARKER
+            keep = _and(_newer(wt, pd_wt), _cmp(ldt, gc_before, operator.ge))
+        merged = _purge_sum(merged, cs if keep is True else 0)
+
+    if merged is not None and rtms:
+        merged += _rtm_remnant(rtms, pd_wt, gc_before)
+    reclaimable = None if pre is None or merged is None else pre - merged
+    tables = len({c[0] for c in copies})
+    return tables, pre, merged, reclaimable
+
+
+def _rtm_remnant(rtms, pd_wt, gc_before: int) -> int:
+    """The boundary remnant of ``merge_enriched``: per distinct (start,
+    end) range the max (writetime, ldt, cell_size) copy wins; a PURGED
+    live winner keeps ``floor(cell_size / 2)`` per bound that meets an
+    opposite-type bound of a KEPT live winner (a degenerate start == end
+    marker counts its position once). A range with a NULL bound has no
+    winner (NULL never equals itself), and a NULL size in a purged
+    winner makes the whole remnant NULL, which adds 0. (The DataFrame
+    formulation fails on the NULL-bound range instead: ``element_at(...,
+    -1)`` of its empty winner list raises under ANSI mode.)"""
+    best: dict = {}
+    for r in rtms:
+        if r[9] is None or r[10] is None:
+            continue
+        rank = tuple(_null_first(v) for v in (r[5], r[8], r[4]))
+        k = (r[9], r[10])
+        if k not in best or rank > best[k][0]:
+            best[k] = (rank, r)
+    kept, purged = [], []
+    for _, r in best.values():
+        if _newer(r[5], pd_wt) is not True or r[8] is None:
+            continue
+        (kept if r[8] >= gc_before else purged).append(r)
+    opens = {r[9] for r in kept}
+    closes = {r[10] for r in kept}
+    remnant = 0
+    for r in purged:
+        open_met, close_met = r[9] in closes, r[10] in opens
+        if r[9] == r[10]:
+            n = int(open_met or close_met)
+        else:
+            n = open_met + close_met
+        if r[4] is None:
+            return 0
+        remnant += (r[4] // 2) * n
+    return remnant
 
 
 def purge_stats_sql(gc_before: int = GC_BEFORE) -> str:

@@ -18,6 +18,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def sort_key(v):
+    """Spark's ascending order for one value: NULLs first, NaN above
+    every number; strings compare by code point, which is the UTF-8 byte
+    order Spark uses."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    return (1, v)
+
+
 class TableBuilder:
     """Mirror of the reference's TableBuilder (setHeader/addRow/toString)."""
 

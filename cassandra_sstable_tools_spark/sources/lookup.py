@@ -60,6 +60,8 @@ this module implements them from the public on-disk formats.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -240,10 +242,10 @@ def _merge_regions(windows: list[tuple[int, int]]) -> list[tuple[int, int]]:
 
 def _sstable_ctx(sst) -> dict | None:
     """Open one sstable's read-path components: schema header + partitioner
-    comparator (required -- Statistics.db), bloom filter and summary
-    (optional), index size. None when cell decoding is impossible
-    (no Data.db / Statistics.db -- the data_cells skip rule)."""
-    from cassandra_sstable_tools_spark.sources.bloom import parse_filter_db
+    comparator (required -- Statistics.db), summary (optional), index
+    size. None when cell decoding is impossible (no Data.db /
+    Statistics.db -- the data_cells skip rule). The bloom filter is the
+    point read's alone (``_lookup_in_sstable``)."""
     from cassandra_sstable_tools_spark.sources.statistics_db import (
         parse_serialization_header,
         parse_statistics_db,
@@ -262,10 +264,6 @@ def _sstable_ctx(sst) -> dict | None:
     header = parse_serialization_header(
         stats_content, version=ver, source=stats_path
     )
-    filt = None
-    if "Filter.db" in sst.components:
-        with sst.open("Filter.db") as f:
-            filt = parse_filter_db(f.read(), source=sst.path("Filter.db"))
     summ = None
     if "Summary.db" in sst.components:
         with sst.open("Summary.db") as f:
@@ -275,7 +273,6 @@ def _sstable_ctx(sst) -> dict | None:
         "header": header,
         "partitioner": stats.partitioner,
         "decorate": key_decorator(stats.partitioner),
-        "filter": filt,
         "summary": summ,
         "index_size": sst.length("Index.db"),
     }
@@ -291,13 +288,14 @@ def _summary_floor(summ, decorate, dk) -> int:
     return max(at - 1, 0)
 
 
-def _read_blocks(sst, ctx: dict, spans) -> list[tuple | None]:
-    """THE Data.db read of every lookup mode: decode the partition block
-    of each span ``(index key, position, end)`` (``end`` None: the end of
-    Data.db). -> per span, ``(rendered key, records, bytes read)``, or
-    None for a zero-extent span (no physical block: NULL psize). A
-    successor position below its span's start is a corrupt index, and so
-    is a block whose decoded key is not the index key: both are loud."""
+def _read_blocks(sst, ctx: dict, spans) -> Iterator[tuple | None]:
+    """THE Data.db read of every lookup mode and of the merge scan: decode
+    the partition block of each span ``(index key, position, end)``
+    (``end`` None: the end of Data.db), lazily, one block in memory at a
+    time. Yields per span ``(rendered key, records, bytes read)``, or None
+    for a zero-extent span (no physical block: NULL psize). A successor
+    position below its span's start is a corrupt index, and so is a block
+    whose decoded key is not the index key: both are loud."""
     from cassandra_sstable_tools_spark.sources.data_cells import (
         decode_partition_block,
     )
@@ -308,16 +306,15 @@ def _read_blocks(sst, ctx: dict, spans) -> list[tuple | None]:
         render_typed,
     )
 
-    if not spans:
-        return []
     path, header = sst.path("Index.db"), ctx["header"]
-    out: list[tuple | None] = []
-    dat, data_len = open_sstable_data(sst)
+    dat = None
     try:
         for key, pos, end in spans:
+            if dat is None:  # opened on the first span only
+                dat, data_len = open_sstable_data(sst)
             end = data_len if end is None else end
             if end == pos:
-                out.append(None)
+                yield None
                 continue
             if end < pos:
                 # a shared offset is legitimate; a DECREASING successor
@@ -338,10 +335,10 @@ def _read_blocks(sst, ctx: dict, spans) -> list[tuple | None]:
                     f"corrupt sstable {path}: index points at byte {pos} "
                     f"whose partition key is {pk!r}, expected {want!r}"
                 )
-            out.append((pk, recs, len(block)))
+            yield pk, recs, len(block)
     finally:
-        dat.close()
-    return out
+        if dat is not None:
+            dat.close()
 
 
 def _lookup_in_sstable(
@@ -360,8 +357,16 @@ def _lookup_in_sstable(
     ctx = _sstable_ctx(sst)
     if ctx is None:
         return None
-    decorate, filt, summ = ctx["decorate"], ctx["filter"], ctx["summary"]
+    decorate, summ = ctx["decorate"], ctx["summary"]
     index_size = ctx["index_size"]
+    filt = None
+    if "Filter.db" in sst.components:
+        from cassandra_sstable_tools_spark.sources.bloom import (
+            parse_filter_db,
+        )
+
+        with sst.open("Filter.db") as f:
+            filt = parse_filter_db(f.read(), source=sst.path("Filter.db"))
 
     # ONE vectorized bloom pass for the whole key cohort (numpy murmur3
     # lanes, bit-identical to the scalar probes) -- the K-key batched
@@ -727,53 +732,79 @@ RANGE_AUDIT_SCHEMA = (
 )
 
 
-def _ordered_range(
-    sst, ctx: dict, order, lo, hi, floor_dk, chunk_bytes: int, what: str
-) -> tuple[dict, list[tuple]]:
-    """All partitions with lo <= order(key) <= hi from one sstable whose
-    index is sorted by ``order``: (RANGE_AUDIT_SCHEMA counters, record
-    tuples). The scan starts at the rightmost sampled entry whose
-    decorated key is <= ``floor_dk``; an index data position that
-    decreases past ``lo`` is a corrupt index ("``what``" names the mode)."""
-    from cassandra_sstable_tools_spark.sources.data_cells import _REC_GET
-
+def _index_walk(
+    sst, ctx: dict, order, lo, past, floor_dk, chunk_bytes: int, what: str,
+    audit: dict,
+) -> Iterator[list]:
+    """Spans ``[key, data position, end]`` (``end`` None: the end of
+    Data.db) of the index entries with ``lo <= order(key)`` and not
+    ``past(order(key))``, in index order, from one sstable whose index is
+    sorted by ``order``; ``lo`` None starts at the first entry. The walk
+    starts at the rightmost sampled entry whose decorated key is <=
+    ``floor_dk`` and reads one entry past the last span (its position
+    ends that span). An index data position that decreases past ``lo`` is
+    a corrupt index ("``what``" names the mode). Fills ``audit``'s
+    bounds_skip, scan_start, entries_scanned and index_bytes_read."""
     path = sst.path("Index.db")
-    audit = {**dict.fromkeys(_RANGE_AUDIT_KEYS, 0),
-             "bounds_skip": None, "scan_start": None}
     summ = ctx["summary"]
     start = 0
     if summ is not None:
-        if hi < order(summ.first_key) or lo > order(summ.last_key):
+        if past(order(summ.first_key)) or (
+            lo is not None and lo > order(summ.last_key)
+        ):
             audit["bounds_skip"] = True
-            return audit, []
+            return
         audit["bounds_skip"] = False
-        floor = _summary_floor(summ, ctx["decorate"], floor_dk)
-        start = summ.entries[floor][1]
+        if floor_dk is not None:
+            floor = _summary_floor(summ, ctx["decorate"], floor_dk)
+            start = summ.entries[floor][1]
     audit["scan_start"] = start
 
-    spans: list[list] = []  # [key, data position, end]; end None: EOF
     with sst.open("Index.db") as f:
         cur = _IndexCursor(
             f, sst.version, path, start, chunk_bytes=chunk_bytes
         )
-        while (ent := cur.next_entry()) is not None:
-            key, dpos, _off = ent
-            audit["entries_scanned"] += 1
-            sort_key = order(key)
-            if sort_key < lo:
-                continue
-            if spans and dpos < spans[-1][1]:
-                raise ValueError(
-                    f"corrupt Index.db {path}: data position {dpos} "
-                    f"decreases inside the {what}"
-                )
-            if spans:
-                spans[-1][2] = dpos
-            if sort_key > hi:
-                break
-            spans.append([key, dpos, None])
-        audit["index_bytes_read"] = cur.bytes_read
+        span = None
+        try:
+            while (ent := cur.next_entry()) is not None:
+                key, dpos, _off = ent
+                audit["entries_scanned"] += 1
+                sort_key = order(key)
+                if lo is not None and sort_key < lo:
+                    continue
+                if span is not None:
+                    if dpos < span[1]:
+                        raise ValueError(
+                            f"corrupt Index.db {path}: data position "
+                            f"{dpos} decreases inside the {what}"
+                        )
+                    span[2] = dpos
+                    yield span
+                    span = None
+                if past(sort_key):
+                    break
+                span = [key, dpos, None]
+            if span is not None:
+                yield span
+        finally:
+            audit["index_bytes_read"] = cur.bytes_read
 
+
+def _ordered_range(
+    sst, ctx: dict, order, lo, hi, floor_dk, chunk_bytes: int, what: str
+) -> tuple[dict, list[tuple]]:
+    """All partitions with lo <= order(key) <= hi from one sstable
+    (``_index_walk``): (RANGE_AUDIT_SCHEMA counters, record tuples). The
+    whole index walk runs before the first block read, so a corrupt index
+    fails before any Data.db byte is decoded."""
+    from cassandra_sstable_tools_spark.sources.data_cells import _REC_GET
+
+    audit = {**dict.fromkeys(_RANGE_AUDIT_KEYS, 0),
+             "bounds_skip": None, "scan_start": None}
+    spans = list(_index_walk(
+        sst, ctx, order, lo, lambda k: k > hi, floor_dk, chunk_bytes, what,
+        audit,
+    ))
     records: list[tuple] = []
     for got in _read_blocks(sst, ctx, spans):
         if got is None:

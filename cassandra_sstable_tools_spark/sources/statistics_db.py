@@ -1091,7 +1091,13 @@ def statistics_coverage(
     ones without saying so. An Index.db without entries has length 0."""
     from cassandra_sstable_tools_spark.sources.inventory import live_sstables
 
-    ssts = live_sstables("statistics_coverage", root, filenames, ())
+    return sstable_coverage(
+        live_sstables("statistics_coverage", root, filenames, ())
+    )
+
+
+def sstable_coverage(ssts) -> tuple[int, int, int]:
+    """``statistics_coverage``'s counts over an inventory already listed."""
     return (
         sum("Data.db" in s.components for s in ssts),
         sum("Statistics.db" in s.components for s in ssts),

@@ -1,5 +1,5 @@
 """Directory reports finished on the driver (``summary``, ``sstables``,
-``pstats`` and ``lookup`` over ``--cassandra-dir``).
+``pstats``, ``lookup`` and ``purge`` over ``--cassandra-dir``).
 
 - They run no SQL engine: one Python pass over the sstable inventory, one
   Spark job, zero SQL executions.
@@ -98,7 +98,7 @@ def edge_root(tmp_path_factory):
 
 _NO_SQL_CASES = [
     "summary", "sstables", "sstables_nostats", "pstats", "lookup_keys",
-    "lookup_range", "lookup_token",
+    "lookup_range", "lookup_token", "purge",
 ]
 
 
@@ -301,12 +301,16 @@ def test_listing_warns_about_empty_index(spark, edge_root, tmp_path,
     assert rc == 0 and "empty Index.db" not in err
 
 
-@pytest.mark.parametrize("command", ["summary", "sstables"])
+_WALKS = {"summary": 2, "sstables": 2, "purge": 1}
+
+
+@pytest.mark.parametrize("command", list(_WALKS))
 def test_directory_walks_per_command(spark, edge_root, monkeypatch,
                                      command):
     """``summary`` and ``sstables`` list the data directory twice on the
     driver: once for the Statistics.db coverage checks, once for the
-    pass (on an object store each listing is a round of LIST calls)."""
+    pass (on an object store each listing is a round of LIST calls).
+    ``purge`` takes its warnings from the listing of its pass: once."""
     from cassandra_sstable_tools_spark.sources import inventory
 
     calls = []
@@ -319,7 +323,7 @@ def test_directory_walks_per_command(spark, edge_root, monkeypatch,
     monkeypatch.setattr(inventory, "_inventory", counting)
     rc, _out, _err = _cli(spark, [command, "--cassandra-dir", edge_root])
     assert rc == 0
-    assert len(calls) == 2, [c[0] for c in calls]
+    assert len(calls) == _WALKS[command], [c[0] for c in calls]
 
 
 def test_parquet_summary_zero_bytes_is_null(spark):

@@ -233,3 +233,86 @@ def test_purge_sql_mirror_matches_model():
     assert not mismatches, (
         f"{len(mismatches)} divergent cases; first: {mismatches[0]}"
     )
+
+
+_NAMES = ["keyspace", "table_name", "sstable_id", "partition_key",
+          "clustering", "kind", "cell_name", "cell_size", "writetime", "ttl",
+          "is_tombstone", "is_expiring", "is_counter", "local_deletion_time",
+          "range_start", "range_end", "gc_grace_seconds"]
+
+
+def _python_purge(rows) -> dict:
+    """``operators.purge.purge_partition`` over COLS-shaped rows of one
+    partition, as a purge_stats-shaped dict."""
+    from cassandra_sstable_tools_spark.operators.purge import (
+        PURGE_FIELDS,
+        purge_partition,
+    )
+
+    recs = [dict(zip(_NAMES, r)) for r in rows]
+    tables, pre, merged, reclaimable = purge_partition(
+        [tuple(r[f] for f in PURGE_FIELDS) for r in recs], gc_before=GC
+    )
+    return {"pre_size": pre, "merged_size": merged,
+            "reclaimable": reclaimable, "tables": tables}
+
+
+def test_python_purge_matches_model_and_spark(spark):
+    """The in-task Python purge (the directory CLI's per-partition
+    function) on the same random cases as the Spark sweep above: equal to
+    the independent model AND to ``purge_stats``, case for case."""
+    rng = random.Random(20260813)
+    cases = {f"case{i:03d}": _random_case(rng, f"case{i:03d}") for i in range(250)}
+    flat = [row for rows in cases.values() for row in rows]
+    got = {
+        r["partition_key"]: r.asDict()
+        for r in purge_stats(
+            spark.createDataFrame(flat, schema=COLS), gc_before=GC
+        ).collect()
+    }
+    mismatches = []
+    for pk, rows in cases.items():
+        have = _python_purge(rows)
+        want = _model([dict(zip(_NAMES, r)) for r in rows])
+        spark_row = {k: got[pk][k] for k in want}
+        if not have == want == spark_row:
+            mismatches.append((pk, have, want, spark_row))
+    assert not mismatches, (
+        f"{len(mismatches)} divergent cases; first: {mismatches[0]}"
+    )
+
+
+def test_python_purge_null_sizes_match_spark(spark):
+    """Header-resident partition deletes carry a NULL size: ``pre_size``,
+    ``merged_size`` and ``reclaimable`` follow Spark's NULL-skipping sums
+    (all-NULL partitions stay NULL). The model has no NULL sizes, so this
+    sweep compares with ``purge_stats`` alone."""
+    rng = random.Random(20261019)
+    cases = {}
+    for i in range(200):
+        pk = f"null{i:03d}"
+        rows = _random_case(rng, pk) if rng.random() < 0.6 else []
+        for _ in range(rng.randint(1, 2)):
+            ldt = rng.choice([GC - 1, GC, GC + 1])
+            rows.append(("ks", "t", f"s{rng.randint(1, 3)}", pk, "",
+                         "PARTITION_DELETE", None, None,
+                         rng.randint(1000, 2000), None, False, False, False,
+                         ldt, None, None, 0))
+        cases[pk] = rows
+    flat = [row for rows in cases.values() for row in rows]
+    got = {
+        r["partition_key"]: r.asDict()
+        for r in purge_stats(
+            spark.createDataFrame(flat, schema=COLS), gc_before=GC
+        ).collect()
+    }
+    assert any(r["pre_size"] is None for r in got.values())
+    mismatches = []
+    for pk, rows in cases.items():
+        have = _python_purge(rows)
+        want = {k: got[pk][k] for k in have}
+        if have != want:
+            mismatches.append((pk, have, want))
+    assert not mismatches, (
+        f"{len(mismatches)} divergent cases; first: {mismatches[0]}"
+    )

@@ -35,11 +35,31 @@ def _cell(pk, clustering, name, size, wt, sstable="s1", kind="CELL",
 
 
 def _run(spark, rows):
+    """purge_stats per partition; every case also runs through the
+    directory CLI's in-task Python purge (``purge_partition``), which must
+    agree with it exactly, so each assertion below holds for both."""
+    from cassandra_sstable_tools_spark.operators.purge import (
+        PURGE_FIELDS,
+        purge_partition,
+    )
+
     df = spark.createDataFrame(rows, schema=COLS)
-    return {
+    out = {
         r["partition_key"]: r.asDict()
         for r in purge_stats(df, gc_before=GC).collect()
     }
+    names = [f.split()[0] for f in COLS.split(",")]
+    for pk, got in out.items():
+        copies = [
+            tuple(dict(zip(names, r))[f] for f in PURGE_FIELDS)
+            for r in rows if r[3] == pk
+        ]
+        tables, pre, merged, reclaimable = purge_partition(copies, GC)
+        assert (tables, pre, merged, reclaimable) == (
+            got["tables"], got["pre_size"], got["merged_size"],
+            got["reclaimable"],
+        ), pk
+    return out
 
 
 def test_lww_dedup(spark):
