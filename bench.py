@@ -253,14 +253,10 @@ def _purge_cassdir_merge(spark, sf_dir):
     """Stage 2: merge -> purge -> measure -> top-N over the already
     checkpointed decoded frame (the exact purge_top_cassdir tail), so a
     merge-stage plan regression is visible on its own."""
-    from pyspark.sql import functions as F
-
-    from cassandra_sstable_tools_spark.constants import DEFAULT_TOP_N
     from cassandra_sstable_tools_spark.operators.purge import purge_stats
-    from cassandra_sstable_tools_spark.operators.topn import top_n_per_group
-
+    from cassandra_sstable_tools_spark.queries.purge import top_reclaimable
     from cassandra_sstable_tools_spark.sources.data_cells import (
-        _purge_partitioned,
+        _pk_partitioned,
     )
 
     frame = _PURGE_DECODED_CACHE.get(sf_dir)
@@ -268,17 +264,8 @@ def _purge_cassdir_merge(spark, sf_dir):
         _purge_cassdir_decode(spark, sf_dir).collect()
         frame = _PURGE_DECODED_CACHE[sf_dir]
     # same pk-keyed exchange purge_top_cassdir's tail applies -- this row
-    # stays "the exact purge_top_cassdir tail" (see _purge_partitioned)
-    per_part = purge_stats(_purge_partitioned(frame))
-    return top_n_per_group(
-        per_part,
-        ["keyspace", "table_name"],
-        [F.desc("reclaimable"), F.desc("pre_size"), F.asc("partition_key")],
-        DEFAULT_TOP_N,
-    ).select(
-        "keyspace", "table_name", "partition_key", "tables", "pre_size",
-        "merged_size", "reclaimable", "rank",
-    )
+    # stays "the exact purge_top_cassdir tail" (see _pk_partitioned)
+    return top_reclaimable(purge_stats(_pk_partitioned(frame)))
 
 
 _DS_POINTREAD_KEYS: dict[str, list] = {}

@@ -668,14 +668,11 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
     elif args.command == "cfstats":
         from cassandra_sstable_tools_spark.queries import cfstats as m
 
-        by_table = ["keyspace", "table_name"]
-        by_rank = ["keyspace", "table_name", "rank"]
         if args.cassandra_dir:
-            # directory-only mode: totals / per-sstable / TTL / top-size off
-            # REAL Data.db cell streams (sources/data_cells.py) + Index.db
-            # position-delta sizes; zero parquet. Scope = cell-decodable
-            # sstables (uncompressed, Statistics.db present); compressed
-            # sstables await the LZ4 phase and are announced, not silent.
+            # directory-only mode: every section off REAL Data.db cell
+            # streams (sources/data_cells.py) + Index.db position-delta
+            # sizes; zero parquet. Scope = cell-decodable sstables
+            # (Statistics.db present), the rest announced, not silent.
             from cassandra_sstable_tools_spark.sources import data_cells as dcm
 
             names = args.filenames.split(",") if args.filenames else None
@@ -683,70 +680,42 @@ def _dispatch(spark, args, sf: str, out: list[tuple[str, str]]) -> int:
             _warn_partial_statistics(spark, root, names, "cfstats")
             # ONE decode pass + ONE index-sizes pass feed all 8 sections
             # (reference: one scanner pass for the whole report,
-            # ColumnFamilyStatisticsCollector.java:121-141) -- previously
-            # each section re-decoded every data byte, a 4-5x read
-            # amplification at scale (r08 VERDICT What's-wrong #1)
+            # ColumnFamilyStatisticsCollector.java:121-141); typed keys
+            # re-render the partition keys, so --key-type keeps its own
+            # sizes pass for the largest-partitions ranking
             decoded, sizes = dcm.cfstats_shared_dir_frames(spark, root, names)
-            out.append(("Totals", _render(
-                _table_scope_filter(
-                    dcm.cfstats_global_from_dir(
-                        spark, root, names,
-                        decoded=decoded, part_sizes=sizes), args),
-                {"total_size": "bytes", "avg_partition_size": "bytes"},
-                order=by_table)))
-            out.append(("Per-SSTable", _render(
-                _table_scope_filter(
-                    dcm.cfstats_sstables_from_dir(
-                        spark, root, names,
-                        decoded=decoded, part_sizes=sizes), args),
-                {"size": "bytes", "min_timestamp": "ts_us",
-                 "max_timestamp": "ts_us"},
-                order=[*by_table, "sstable_id"])))
-            out.append(("TTL histogram", _render(
-                _table_scope_filter(
-                    dcm.cfstats_ttl_from_dir(
-                        spark, root, names, decoded=decoded), args),
-                order=[*by_table, "ttl"])))
-            out.append(("Largest partitions", _render(
-                _table_scope_filter(
-                    dcm.cfstats_top_size_from_dir(
-                        spark, root, args.n, names,
-                        key_type=args.key_type, part_sizes=sizes),
-                    args),
-                {"size": "bytes"}, order=by_rank)))
-            ranked = dcm.cfstats_rankings_from_dir(
-                spark, root, args.n, names, decoded=decoded
+            typed = sizes if args.key_type is None else dcm.dir_partition_sizes(
+                spark, root, names, key_type=args.key_type
             )
-            frame = ranked.pop("_frame")
-            try:
-                for title, df in ranked.items():
-                    out.append((title, _render(
-                        _table_scope_filter(df, args), order=by_rank)))
-            finally:
-                frame.unpersist()
-            for title, table in out:
-                sys.stdout.write(f"{title}\n{table}\n")
-            return 0
-        out.append(("Totals", _render(m.cfstats_global(spark, sf, approx=args.approx),
-                                      {"total_size": "bytes", "avg_partition_size": "bytes"},
-                                      order=by_table)))
-        out.append(("Per-SSTable", _render(m.cfstats_sstables(spark, sf),
-                                           {"size": "bytes", "min_timestamp": "ts_us",
-                                            "max_timestamp": "ts_us"},
-                                           order=[*by_table, "sstable_id"])))
-        out.append(("TTL histogram", _render(m.cfstats_ttl(spark, sf),
-                                             order=[*by_table, "ttl"])))
-        out.append(("Largest partitions", _render(
-            m.cfstats_top_size(spark, sf, args.n), {"size": "bytes"}, order=by_rank)))
-        out.append(("Widest partitions", _render(
-            m.cfstats_widest(spark, sf, args.n), order=by_rank)))
-        out.append(("Most tombstones", _render(
-            m.cfstats_top_tombstones(spark, sf, args.n), order=by_rank)))
-        out.append(("Most deleted rows", _render(
-            m.cfstats_most_deleted(spark, sf, args.n), order=by_rank)))
-        out.append(("In most sstables", _render(
-            m.cfstats_top_tables(spark, sf, args.n), order=by_rank)))
-        _bucketed_section(spark, args, sf, out)
+            frames = [
+                _table_scope_filter(df, args)
+                for df in m.directory_report(decoded, sizes, typed, args.n)
+            ]
+        else:
+            frames = [
+                m.cfstats_global(spark, sf, approx=args.approx),
+                m.cfstats_sstables(spark, sf),
+                m.cfstats_ttl(spark, sf),
+                *(rank(spark, sf, args.n) for rank in m.RANKINGS),
+            ]
+        by_table = ["keyspace", "table_name"]
+        by_rank = [*by_table, "rank"]
+        for (title, fmts, order), df in zip((
+            ("Totals", {"total_size": "bytes", "avg_partition_size": "bytes"},
+             by_table),
+            ("Per-SSTable", {"size": "bytes", "min_timestamp": "ts_us",
+                             "max_timestamp": "ts_us"},
+             [*by_table, "sstable_id"]),
+            ("TTL histogram", None, [*by_table, "ttl"]),
+            ("Largest partitions", {"size": "bytes"}, by_rank),
+            ("Widest partitions", None, by_rank),
+            ("Most tombstones", None, by_rank),
+            ("Most deleted rows", None, by_rank),
+            ("In most sstables", None, by_rank),
+        ), frames):
+            out.append((title, _render(df, fmts, order=order)))
+        if not args.cassandra_dir:
+            _bucketed_section(spark, args, sf, out)
     elif args.command == "purge":
         from cassandra_sstable_tools_spark.queries import purge as m
 

@@ -219,8 +219,13 @@ def merge_enriched(cells: DataFrame, gc_before: int = GC_BEFORE):
     # so CollapseProject keeps each as its own Project stage, evaluated
     # once per delete-map row; only cheap field extractions remain inside
     # the per-element lambdas. Values are identical by construction.
+    # A range with a NULL bound has no winner: NULL never equals itself,
+    # so its filter below would be empty (element_at of [] raises).
     _range = F.array_distinct(
-        F.transform("rtms", lambda m: F.struct(m["rs"].alias("rs"), m["re"].alias("re")))
+        F.transform(
+            F.filter("rtms", lambda m: m["rs"].isNotNull() & m["re"].isNotNull()),
+            lambda m: F.struct(m["rs"].alias("rs"), m["re"].alias("re")),
+        )
     )
     winners = F.transform(
         _range,
@@ -371,9 +376,8 @@ def _purge_aggregate(enriched: DataFrame, survives) -> DataFrame:
 # CLI merges every sstable's partitions in key order inside a task
 # (sources/merge_scan.py) and runs this on each merged partition. NULLs
 # follow the SQL formulation above (three-valued logic, NULL-ignoring sums),
-# so the two agree wherever the DataFrame runs, header-resident partition
-# deletes (NULL cell_size) included. (On a range tombstone with a NULL
-# bound the DataFrame raises in ``element_at``; see ``_rtm_remnant``.)
+# so the two agree, header-resident partition deletes (NULL cell_size) and
+# range tombstones with a NULL bound included.
 # ---------------------------------------------------------------------------
 
 # field order of one copy handed to purge_partition
@@ -507,9 +511,7 @@ def _rtm_remnant(rtms, pd_wt, gc_before: int) -> int:
     opposite-type bound of a KEPT live winner (a degenerate start == end
     marker counts its position once). A range with a NULL bound has no
     winner (NULL never equals itself), and a NULL size in a purged
-    winner makes the whole remnant NULL, which adds 0. (The DataFrame
-    formulation fails on the NULL-bound range instead: ``element_at(...,
-    -1)`` of its empty winner list raises under ANSI mode.)"""
+    winner makes the whole remnant NULL, which adds 0."""
     best: dict = {}
     for r in rtms:
         if r[9] is None or r[10] is None:

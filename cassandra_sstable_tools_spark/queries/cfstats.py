@@ -24,6 +24,17 @@ reference's fused single-pass loop, SURVEY.md §4). Rankings reuse the
 per-partition frame (1 row per key -- orders of magnitude smaller than cells).
 All shuffles key on partition_key or sstable_id; no driver-side state beyond
 report rows.
+
+Each section is written once, as a function over a DataFrame
+(``fold_partitions``, ``table_totals``, ``sstable_sums``/``sstable_stats``,
+``ttl_histogram``, ``rank_partitions``), for both sources: the parquet
+adapter's ``cells`` (the registered queries here) and a Cassandra data
+directory's decoded Data.db cells plus Index.db-delta partition sizes (the
+``directory_*`` compositions behind ``cfstats --cassandra-dir`` and the
+registered ``cfstats_*_cassdir`` queries; sources/data_cells.py supplies
+the two frames). What differs per source is passed in as data: the input
+frames, the source's own per-sstable aggregates, the section columns and
+the ranking orders.
 """
 
 from __future__ import annotations
@@ -43,10 +54,25 @@ from cassandra_sstable_tools_spark.operators.percentiles import (
 )
 from cassandra_sstable_tools_spark.operators.topn import top_n_per_group
 from cassandra_sstable_tools_spark.oracles import with_adapter
+from cassandra_sstable_tools_spark.queries.pstats import collate_sizes
 from cassandra_sstable_tools_spark.sources import tpch_adapter
 
 _ROW_KINDS = ("CELL", "ROW_MARKER", "ROW_DELETE")
 _CELL_KINDS = ("CELL", "STATIC_CELL")
+_PK = ["keyspace", "table_name", "partition_key"]
+_SST = ["keyspace", "table_name", "sstable_id"]
+_SSTABLE_COLUMNS = [
+    "partitions", "row_count", "row_delete_count", "cell_count",
+    "live_cell_count", "expiring_cell_count", "counter_cell_count",
+    "tombstone_count", "droppable_tombstone_count", "range_tombstone_count",
+    "partition_delete_count", "size", "max_cell_size", "min_timestamp",
+    "max_timestamp",
+]
+# counts at either grain: 0 where a LEFT-joined frame has no row
+_COUNTS = frozenset({
+    *_SSTABLE_COLUMNS, "tables", "rows", "row_deletes", "cells",
+    "tombstones", "droppable_tombstones",
+}) - {"size", "max_cell_size", "min_timestamp", "max_timestamp"}
 
 
 def _flags(c: DataFrame) -> DataFrame:
@@ -107,52 +133,66 @@ flags AS (
 )"""
 
 
+def fold_partitions(cells: DataFrame) -> DataFrame:
+    """A1: per-partition collated counters of any cell frame (the
+    reference's PartitionStatistics after cross-sstable collate): size,
+    tables, rows, row_deletes, cells, tombstones, droppable_tombstones.
+
+    Two-level fold (guide §2.3): the one-level form's TWO countDistincts
+    plan an Expand (x3 row blowup of the cell scan) that every COLD first
+    run pays -- which is what a real 100 TB job is. Level 1 groups by
+    (pk grain, sstable_id) with the single remaining distinct (Spark 4
+    plans one distinct Expand-free); level 2 then counts level-1 groups for
+    `tables` and sums the per-sstable row distincts for `rows`. Equivalent
+    because row_key embeds sstable_id ('#'-joined; fixture, adapter and
+    decoded sstable_ids are '#'-free and non-null), so per-sstable
+    distincts are disjoint across level-1 groups of one partition -- and
+    the oracle hash gate certifies it on every fixture SF."""
+    l1 = _flags(cells).groupBy(*_PK, "sstable_id").agg(
+        F.sum("cell_size").alias("_size"),
+        F.countDistinct("row_key").alias("_rows"),
+        F.sum("f_rowdel").alias("_row_deletes"),
+        F.sum("f_cell").alias("_cells"),
+        F.sum("f_tomb").alias("_tombstones"),
+        F.sum("f_droppable").alias("_droppable"),
+    )
+    return l1.groupBy(*_PK).agg(
+        F.sum("_size").alias("size"),
+        F.count(
+            F.when(F.col("sstable_id").isNotNull(), F.lit(1))
+        ).alias("tables"),
+        # coalesce: value-identical (every group is non-empty and _rows
+        # is non-null) but pins `rows` back to NOT NULL, matching the
+        # one-level countDistinct's declared schema
+        F.coalesce(F.sum("_rows"), F.lit(0).cast("bigint")).alias("rows"),
+        F.sum("_row_deletes").alias("row_deletes"),
+        F.sum("_cells").alias("cells"),
+        F.sum("_tombstones").alias("tombstones"),
+        F.sum("_droppable").alias("droppable_tombstones"),
+    )
+
+
 def per_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: per-partition collated statistics (the reference's
-    PartitionStatistics after cross-sstable collate). Persisted via the
+    """``fold_partitions`` of the parquet cells, persisted via the
     adapter's cache registry: the global summary and all five rankings
     reuse ONE collate pass (the reference's single stream feeding 5 heaps
     + 4 histograms, cli/ColumnFamilyStatisticsCollector.java:121-141)."""
+    return tpch_adapter._cached(
+        spark, sf_dir, "cfstats_per_partition",
+        lambda: fold_partitions(tpch_adapter.cells(spark, sf_dir)),
+    )
 
-    def build() -> DataFrame:
-        c = _flags(tpch_adapter.cells(spark, sf_dir))
-        # Two-level fold (guide §2.3): the one-level form's TWO
-        # countDistincts plan an Expand (x3 row blowup of the cell scan)
-        # that every COLD first run pays -- which is what a real 100 TB job
-        # is. Level 1 groups by (pk grain, sstable_id) with the single
-        # remaining distinct (Spark 4 plans one distinct Expand-free);
-        # level 2 then counts level-1 groups for `tables` and sums the
-        # per-sstable row distincts for `rows`. Equivalent because row_key
-        # embeds sstable_id ('#'-joined; fixture/adapter sstable_ids are
-        # '#'-free and non-null), so per-sstable distincts are disjoint
-        # across level-1 groups of one partition -- and the oracle hash
-        # gate certifies it on every fixture SF.
-        l1 = c.groupBy(
-            "keyspace", "table_name", "partition_key", "sstable_id"
-        ).agg(
-            F.sum("cell_size").alias("_size"),
-            F.countDistinct("row_key").alias("_rows"),
-            F.sum("f_rowdel").alias("_row_deletes"),
-            F.sum("f_cell").alias("_cells"),
-            F.sum("f_tomb").alias("_tombstones"),
-            F.sum("f_droppable").alias("_droppable"),
-        )
-        return l1.groupBy("keyspace", "table_name", "partition_key").agg(
-            F.sum("_size").alias("size"),
-            F.count(
-                F.when(F.col("sstable_id").isNotNull(), F.lit(1))
-            ).alias("tables"),
-            # coalesce: value-identical (every group is non-empty and _rows
-            # is non-null) but pins `rows` back to NOT NULL, matching the
-            # one-level countDistinct's declared schema
-            F.coalesce(F.sum("_rows"), F.lit(0).cast("bigint")).alias("rows"),
-            F.sum("_row_deletes").alias("row_deletes"),
-            F.sum("_cells").alias("cells"),
-            F.sum("_tombstones").alias("tombstones"),
-            F.sum("_droppable").alias("droppable_tombstones"),
-        )
 
-    return tpch_adapter._cached(spark, sf_dir, "cfstats_per_partition", build)
+def _left_join(frames: list[DataFrame], key: list[str]) -> DataFrame:
+    """``frames[0]`` (the report's universe) LEFT JOIN each later frame on
+    ``key``; a count read from a joined frame is 0 where that frame has no
+    row (the oracles' count(...) over an empty group)."""
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.join(f, key, "left")
+    for c in [c for f in frames[1:] for c in f.columns if c in _COUNTS]:
+        out = out.withColumn(c, F.coalesce(c, F.lit(0).cast("bigint")))
+    return out
 
 
 _PER_PARTITION_SQL = """
@@ -170,9 +210,10 @@ per_partition_stats AS (
 )"""
 
 
-def cfstats_global(spark: SparkSession, sf_dir: str, approx: bool = False) -> DataFrame:
-    """A4 global scalars + A5 size/cells-per-partition percentiles, per table."""
-    return per_partition(spark, sf_dir).groupBy("keyspace", "table_name").agg(
+def table_totals(parts: DataFrame, approx: bool = False) -> DataFrame:
+    """A4 global scalars + A5 size percentiles, per table, over a
+    per-partition frame."""
+    return parts.groupBy("keyspace", "table_name").agg(
         F.count(F.lit(1)).alias("partitions"),
         F.sum("size").alias("total_size"),
         F.sum("rows").alias("row_count"),
@@ -185,20 +226,17 @@ def cfstats_global(spark: SparkSession, sf_dir: str, approx: bool = False) -> Da
     )
 
 
-def cfstats_sstables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: per-sstable statistics with int-truncated liveness %.
+def cfstats_global(spark: SparkSession, sf_dir: str, approx: bool = False) -> DataFrame:
+    """A4 global scalars + A5 size/cells-per-partition percentiles, per table."""
+    return table_totals(per_partition(spark, sf_dir), approx)
 
-    Two-level aggregation: level 1 folds cells to (sstable, partition) with a
-    SINGLE conditional distinct (row clustering); level 2 sums those partials
-    per sstable, where `partitions` is a plain count(*) and `row_count` a
-    plain sum (distinct (pk, clustering) = sum over pk of distinct
-    clustering). Avoids the multi-countDistinct Expand (x3 row blowup of the
-    cell scan) the naive one-level formulation plans."""
-    key = ["keyspace", "table_name", "sstable_id"]
-    c = _flags(tpch_adapter.cells(spark, sf_dir))
-    # distinct-free main aggregate: pure map-side partial combine folds the
-    # whole scan to #sstables rows before the (tiny) shuffle
-    sums = c.groupBy(*key).agg(
+
+def sstable_sums(cells: DataFrame, *extra) -> DataFrame:
+    """A3 counters per sstable in ONE aggregate: distinct-free, a pure
+    map-side partial combine folds the whole scan to #sstables rows before
+    the (tiny) shuffle. ``extra`` are the source's own aggregates (its
+    byte sizes, or its row distinct), placed before the timestamps."""
+    return _flags(cells).groupBy(*_SST).agg(
         F.sum("f_rowdel").alias("row_delete_count"),
         F.sum("f_cell").alias("cell_count"),
         F.sum("f_live").alias("live_cell_count"),
@@ -208,43 +246,31 @@ def cfstats_sstables(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("f_droppable").alias("droppable_tombstone_count"),
         F.sum("f_rtm").alias("range_tombstone_count"),
         F.sum("f_partdel").alias("partition_delete_count"),
-        F.sum("cell_size").alias("size"),
-        F.max("cell_size").alias("max_cell_size"),
+        *extra,
         F.min("writetime").alias("min_timestamp"),
         F.max("writetime").alias("max_timestamp"),
     )
-    # partitions per sstable: the (sstable, pk) grain is already materialized
-    # in the shared partition_sizes cache -- count it, don't re-distinct cells
-    parts = (
-        tpch_adapter.partition_sizes_cached(spark, sf_dir)
-        .groupBy(*key)
-        .agg(F.count(F.lit(1)).alias("partitions"))
-    )
-    # physical rows: one single-purpose distinct over the narrow row identity
-    rows = (
-        c.where("f_rowkind")
-        .select(*key, "partition_key", "clustering")
+
+
+def sstable_rows(cells: DataFrame) -> DataFrame:
+    """Physical rows per sstable -- distinct (pk, clustering) of the
+    row-bearing kinds -- as one single-purpose distinct over the narrow
+    row identity: on a pk-partitioned input (the parquet cells cache) the
+    distinct needs no exchange."""
+    return (
+        _flags(cells).where("f_rowkind")
+        .select(*_SST, "partition_key", "clustering")
         .distinct()
-        .groupBy(*key)
+        .groupBy(*_SST)
         .agg(F.count(F.lit(1)).alias("row_count"))
     )
-    # LEFT joins: an sstable whose cells are all partition-grain (no
-    # CELL/ROW_MARKER/ROW_DELETE kinds) must still report, with row_count=0 --
-    # matching the oracle's count(DISTINCT all-NULL)=0 semantics. The sums
-    # frame (all cell kinds) is the authoritative sstable universe.
-    agg = (
-        sums.join(parts, key, "left")
-        .join(rows, key, "left")
-        .withColumn("partitions", F.coalesce("partitions", F.lit(0).cast("bigint")))
-        .withColumn("row_count", F.coalesce("row_count", F.lit(0).cast("bigint")))
-    )
-    return agg.select(
-        *key, "partitions", "row_count", "row_delete_count", "cell_count",
-        "live_cell_count", "expiring_cell_count", "counter_cell_count",
-        "tombstone_count", "droppable_tombstone_count",
-        "range_tombstone_count", "partition_delete_count", "size",
-        "max_cell_size", "min_timestamp", "max_timestamp",
-    ).withColumn(
+
+
+def sstable_stats(frames: list[DataFrame], columns: list[str]) -> DataFrame:
+    """A3: the per-sstable section -- ``frames`` LEFT-joined onto the first
+    (the sstable universe), ``columns`` selected, and the int-truncated
+    liveness %."""
+    return _left_join(frames, _SST).select(*_SST, *columns).withColumn(
         "liveness_pct",
         F.when(
             F.col("cell_count") > 0,
@@ -253,14 +279,39 @@ def cfstats_sstables(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cfstats_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
+def cfstats_sstables(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A3: per-sstable statistics with int-truncated liveness %.
+
+    Every aggregate is single-distinct or distinct-free: the counter sums
+    carry no distinct, `partitions` counts the (sstable, partition) grain
+    already materialized in the shared partition_sizes cache, and
+    `row_count` is one narrow distinct. Avoids the multi-countDistinct
+    Expand (x3 row blowup of the cell scan) of the naive one-level
+    formulation. LEFT joins: an sstable whose cells are all
+    partition-grain (no CELL/ROW_MARKER/ROW_DELETE kinds) must still
+    report, with row_count=0 -- the sums frame (all cell kinds) is the
+    authoritative sstable universe."""
+    cells = tpch_adapter.cells(spark, sf_dir)
+    parts = (
+        tpch_adapter.partition_sizes_cached(spark, sf_dir)
+        .groupBy(*_SST)
+        .agg(F.count(F.lit(1)).alias("partitions"))
+    )
+    sums = sstable_sums(
+        cells,
+        F.sum("cell_size").alias("size"),
+        F.max("cell_size").alias("max_cell_size"),
+    )
+    return sstable_stats([sums, parts, sstable_rows(cells)], _SSTABLE_COLUMNS)
+
+
+def ttl_histogram(cells: DataFrame) -> DataFrame:
     """A6: TTL histogram -- count per distinct TTL (NO_TTL sentinel -1).
 
     groupBy on the TTL value beats a MapType union-aggregate at scale
     (SURVEY.md A6): partial aggregation makes the shuffle O(#distinct ttl)."""
-    c = tpch_adapter.cells(spark, sf_dir)
     return (
-        c.where(F.col("kind").isin(*_CELL_KINDS))
+        cells.where(F.col("kind").isin(*_CELL_KINDS))
         .groupBy(
             "keyspace",
             "table_name",
@@ -270,14 +321,32 @@ def cfstats_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ranking(metric_cols: list[str], order, filter_col: str | None = None,
-             doc: str | None = None):
+def cfstats_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A6: TTL histogram of the parquet cells (see ``ttl_histogram``)."""
+    return ttl_histogram(tpch_adapter.cells(spark, sf_dir))
+
+
+def rank_partitions(
+    parts: DataFrame, metrics: list[str], order: tuple[str, ...], n: int,
+    admit: str | None = None,
+) -> DataFrame:
+    """T1: top-``n`` partitions per table of a per-partition frame, ranked
+    by ``order`` (column names, ``-`` prefix = descending; ending in
+    partition_key so ties resolve deterministically); ``admit`` keeps only
+    partitions where that column is > 0 (F2 conditional admission)."""
+    if admit:
+        parts = parts.where(F.col(admit) > 0)
+    by = [F.desc(c[1:]) if c.startswith("-") else F.asc(c) for c in order]
+    return top_n_per_group(parts, ["keyspace", "table_name"], by, n).select(
+        "keyspace", "table_name", "partition_key", *metrics, "rank"
+    )
+
+
+def _ranking(metrics: list[str], order: tuple[str, ...],
+             admit: str | None = None, doc: str | None = None):
     def run(spark: SparkSession, sf_dir: str, n: int = DEFAULT_TOP_N) -> DataFrame:
-        p = per_partition(spark, sf_dir)
-        if filter_col:
-            p = p.where(F.col(filter_col) > 0)  # F2 conditional admission
-        return top_n_per_group(p, ["keyspace", "table_name"], order(), n).select(
-            "keyspace", "table_name", "partition_key", *metric_cols, "rank"
+        return rank_partitions(
+            per_partition(spark, sf_dir), metrics, order, n, admit
         )
 
     run.__doc__ = doc or "cfstats per-table top-N ranking (T1)."
@@ -285,34 +354,104 @@ def _ranking(metric_cols: list[str], order, filter_col: str | None = None,
 
 
 cfstats_top_size = _ranking(
-    ["size", "tables"], lambda: [F.desc("size"), F.asc("partition_key")],
+    ["size", "tables"], ("-size", "partition_key"),
     doc="Largest partitions per table by merged size (T1; the reference's "
         "MinMaxPriorityQueue size ranking, CFStatsCollector.java)."
 )
 cfstats_widest = _ranking(
-    ["cells", "size"],
-    lambda: [F.desc("cells"), F.desc("size"), F.asc("partition_key")],
+    ["cells", "size"], ("-cells", "-size", "partition_key"),
     doc="Widest partitions per table by live cell count (T1)."
 )
 cfstats_top_tombstones = _ranking(
-    ["tombstones", "size"],
-    lambda: [F.desc("tombstones"), F.desc("size"), F.asc("partition_key")],
-    filter_col="tombstones",
+    ["tombstones", "size"], ("-tombstones", "-size", "partition_key"),
+    admit="tombstones",
     doc="Most-tombstoned partitions per table; zero-tombstone partitions "
         "never enter the heap (F2 conditional admission)."
 )
 cfstats_most_deleted = _ranking(
-    ["row_deletes", "size"],
-    lambda: [F.desc("row_deletes"), F.desc("size"), F.asc("partition_key")],
-    filter_col="row_deletes",
+    ["row_deletes", "size"], ("-row_deletes", "-size", "partition_key"),
+    admit="row_deletes",
     doc="Partitions with the most row deletes per table (F2-gated T1)."
 )
 cfstats_top_tables = _ranking(
-    ["tables", "size"],
-    lambda: [F.desc("tables"), F.desc("size"), F.asc("partition_key")],
+    ["tables", "size"], ("-tables", "-size", "partition_key"),
     doc="Partitions spread over the most SSTables per table (compaction "
         "debt signal)."
 )
+# report order of the five ranking sections
+RANKINGS = (cfstats_top_size, cfstats_widest, cfstats_top_tombstones,
+            cfstats_most_deleted, cfstats_top_tables)
+
+
+# --------------------------------------------------------------------------
+# The same sections over a Cassandra data directory: decoded Data.db cells
+# (``cell_size`` = a record's serialized span) plus the Index.db-delta
+# partition sizes (sources/data_cells.py supplies both frames)
+# --------------------------------------------------------------------------
+
+# the directory per-sstable section: sizes come from Index.db deltas, and
+# per-cell byte spans are a serialization detail the reference does not
+# report either, so no max_cell_size
+_DIRECTORY_SSTABLE_COLUMNS = [
+    c for c in _SSTABLE_COLUMNS if c != "max_cell_size"
+]
+# (metric, admission column) of the four decoded-record rankings
+_DIRECTORY_RANKINGS = (
+    ("cells", None), ("tombstones", "tombstones"),
+    ("row_deletes", "row_deletes"), ("tables", None),
+)
+
+
+def directory_totals(counted: DataFrame, sizes: DataFrame) -> DataFrame:
+    """Totals over every Index.db partition (sizes = the reference's
+    scanner deltas, DataReader.java:118-121), with ``counted`` -- the
+    ``fold_partitions`` of the decoded cells, whose record-span size gives
+    way to the index sizes -- LEFT-joined, and exact percentiles."""
+    return table_totals(_left_join(
+        [collate_sizes(sizes).drop("tables"), counted.drop("size")], _PK
+    ))
+
+
+def directory_sstables(cells: DataFrame, sizes: DataFrame) -> DataFrame:
+    """Per-SSTable over the Index.db universe: partitions and size from
+    the index deltas, counters from the decoded cells."""
+    per_sst = sizes.groupBy(*_SST).agg(
+        F.count(F.lit(1)).alias("partitions"),
+        F.sum("size").alias("size"),
+    )
+    # the decoded frame has no useful partitioning, so the row distinct
+    # (``sstable_rows``' identity) rides the counter aggregate's shuffle
+    # instead of scanning the decode a second time
+    rows = F.countDistinct(
+        F.when(F.col("f_rowkind"), F.struct("partition_key", "clustering"))
+    ).alias("row_count")
+    return sstable_stats(
+        [per_sst, sstable_sums(cells, rows)], _DIRECTORY_SSTABLE_COLUMNS
+    )
+
+
+def directory_report(
+    cells: DataFrame, sizes: DataFrame, typed_sizes: DataFrame, n: int
+) -> list[DataFrame]:
+    """The eight ``cfstats --cassandra-dir`` sections, in report order.
+    The per-partition counters feed the totals and four rankings, so they
+    are materialized once; ``typed_sizes`` (the sizes with ``--key-type``
+    keys) feed the largest-partitions ranking, which shows the size only.
+    The decoded rankings rank only partitions that have records and break
+    ties on partition_key."""
+    counted = fold_partitions(cells).localCheckpoint(eager=True)
+    return [
+        directory_totals(counted, sizes),
+        directory_sstables(cells, sizes),
+        ttl_histogram(cells),
+        rank_partitions(
+            collate_sizes(typed_sizes), ["size"], ("-size", "partition_key"), n
+        ),
+        *(
+            rank_partitions(counted, [m], (f"-{m}", "partition_key"), n, admit)
+            for m, admit in _DIRECTORY_RANKINGS
+        ),
+    ]
 
 
 def _rank_sql(metric_cols: str, order: str, where: str = "") -> str:

@@ -2,7 +2,12 @@
 
 Reference: PurgeStatisticsCollector.java:24-103 -- top-N partitions by
 reclaimable bytes + global totals. The heavy lifting is operator A7
-(operators/purge.py); this module shapes the two reports.
+(operators/purge.py); this module shapes the two reports, each written
+once over a per-partition purge frame (``top_reclaimable``,
+``purge_totals``): ``purge_stats`` of the parquet cells here, or of the
+decoded Data.db cells for the registered ``purge_*_cassdir`` queries
+(sources/data_cells.py). The directory CLI's no-SQL pass finishes the
+same two reports on the driver (sources/merge_scan.py).
 """
 
 from __future__ import annotations
@@ -25,11 +30,12 @@ def _per_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return purge_stats(tpch_adapter.cells(spark, sf_dir))
 
 
-def purge_top(spark: SparkSession, sf_dir: str, n: int = DEFAULT_TOP_N) -> DataFrame:
-    """Top-N partitions by reclaimable bytes (PurgeStatisticsCollector.java:65-68,
-    comparator PurgeStatistics.java:14-20 -- reclaimable, size tiebreak)."""
+def top_reclaimable(per_part: DataFrame, n: int = DEFAULT_TOP_N) -> DataFrame:
+    """Top-N partitions by reclaimable bytes of a per-partition purge frame
+    (PurgeStatisticsCollector.java:65-68, comparator
+    PurgeStatistics.java:14-20 -- reclaimable, size tiebreak)."""
     return top_n_per_group(
-        _per_partition(spark, sf_dir),
+        per_part,
         ["keyspace", "table_name"],
         [F.desc("reclaimable"), F.desc("pre_size"), F.asc("partition_key")],
         n,
@@ -39,14 +45,26 @@ def purge_top(spark: SparkSession, sf_dir: str, n: int = DEFAULT_TOP_N) -> DataF
     )
 
 
-def purge_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global totals (PurgeStatisticsCollector.java:62-76)."""
-    return _per_partition(spark, sf_dir).groupBy("keyspace", "table_name").agg(
+def purge_totals(per_part: DataFrame) -> DataFrame:
+    """Per-table totals of a per-partition purge frame
+    (PurgeStatisticsCollector.java:62-76)."""
+    return per_part.groupBy("keyspace", "table_name").agg(
         F.count(F.lit(1)).alias("partitions"),
         F.sum("pre_size").alias("total_size"),
         F.sum("merged_size").alias("total_merged"),
         F.sum("reclaimable").alias("total_reclaimable"),
     )
+
+
+def purge_top(spark: SparkSession, sf_dir: str, n: int = DEFAULT_TOP_N) -> DataFrame:
+    """Top-N partitions by reclaimable bytes of the parquet cells
+    (``top_reclaimable``)."""
+    return top_reclaimable(_per_partition(spark, sf_dir), n)
+
+
+def purge_global(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global totals of the parquet cells (``purge_totals``)."""
+    return purge_totals(_per_partition(spark, sf_dir))
 
 
 ORACLE_PURGE_TOP = with_adapter(f""",

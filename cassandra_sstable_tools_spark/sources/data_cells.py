@@ -73,6 +73,13 @@ cannot), and it verifies each block's key against the stream. Contents
 reduce to cell-grain records executor-side; nothing whole-file ever
 reaches the driver.
 
+Reports: this module supplies only the frames -- ``report_cells``
+(decoded records, ``cell_size`` = the serialized span) and
+``dir_partition_sizes`` (Index.db deltas). The cfstats and purge sections
+over them are written once, in queries/cfstats.py and queries/purge.py;
+the registered ``*_cassdir`` queries here compose those over the planted
+fixture tree, next to their DuckDB oracles.
+
 Fixture notes (materialize_index_files v7/v8): every fixture sstable
 carries REAL partition bodies -- each encodable record of the parquet
 ``cells`` frame serialized through this module's encoder, back-to-back
@@ -2376,34 +2383,15 @@ def data_cells_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return data_cells(spark, root)
 
 
-_ROW_KINDS = ("CELL", "ROW_MARKER", "ROW_DELETE")
-_CELL_KINDS = ("CELL", "STATIC_CELL")
-
-
-def _decoded_flags(c: DataFrame) -> DataFrame:
-    """cfstats classification flags over the DECODED frame -- same
-    definitions as queries/cfstats.py's _flags over the parquet frame."""
-    from cassandra_sstable_tools_spark.constants import GC_BEFORE, NOW_SECONDS
-
-    is_cell = F.col("kind").isin(*_CELL_KINDS)
-    expired = F.col("is_expiring") & (F.col("local_deletion_time") <= NOW_SECONDS)
-    return c.select(
-        "*",
-        is_cell.cast("int").alias("f_cell"),
-        F.when(
-            F.col("kind").isin(*_ROW_KINDS),
-            F.concat_ws("#", "sstable_id", "partition_key", "clustering"),
-        ).alias("row_key"),
-        (F.col("kind") == "ROW_DELETE").cast("int").alias("f_rowdel"),
-        (F.col("kind") == "RANGE_TOMBSTONE_MARKER").cast("int").alias("f_rtm"),
-        (F.col("kind") == "PARTITION_DELETE").cast("int").alias("f_partdel"),
-        F.col("is_tombstone").cast("int").alias("f_tomb"),
-        (F.col("is_tombstone") & (F.col("local_deletion_time") < GC_BEFORE))
-        .cast("int").alias("f_droppable"),
-        (is_cell & ~F.col("is_tombstone") & ~F.coalesce(expired, F.lit(False)))
-        .cast("int").alias("f_live"),
-        F.col("is_expiring").cast("int").alias("f_expiring"),
-        F.col("is_counter").cast("int").alias("f_counter"),
+def report_cells(spark: SparkSession, root: str, filenames=None) -> DataFrame:
+    """The decoded frame as the report layer's cell input
+    (queries/cfstats.py, operators/purge.py): ``cell_size`` is a record's
+    REAL serialized byte span (``phys_size``) -- the reference's own size
+    semantics (scanner deltas, PurgeStatisticBackend.java:70-139) at
+    record grain. Header-resident partition deletes carry NULL size (no
+    stream bytes)."""
+    return data_cells(spark, root, filenames).withColumnRenamed(
+        "phys_size", "cell_size"
     )
 
 
@@ -2432,7 +2420,7 @@ def cfstats_shared_dir_frames(
     spark: SparkSession, root: str, filenames=None
 ) -> tuple[DataFrame, DataFrame]:
     """ONE decode pass + ONE index-sizes pass for a whole ``cfstats
-    --cassandra-dir`` invocation: (decoded cells, per-partition sizes),
+    --cassandra-dir`` invocation: (``report_cells``, per-partition sizes),
     both eagerly localCheckpoint-ed so every report section feeds off the
     same materialized scan instead of re-decoding the data files per
     section (the reference computes all sections in one scanner pass,
@@ -2441,195 +2429,46 @@ def cfstats_shared_dir_frames(
     expensive scan the engine has). The checkpoint blocks free with the
     plan via the ContextCleaner. Registered per-query paths don't need
     this -- each is single-decode already."""
-    decoded = data_cells(spark, root, filenames).localCheckpoint(eager=True)
+    decoded = report_cells(spark, root, filenames).localCheckpoint(eager=True)
     sizes = dir_partition_sizes(spark, root, filenames).localCheckpoint(
         eager=True
     )
     return decoded, sizes
 
 
-def cfstats_global_from_dir(
-    spark: SparkSession, root: str, filenames=None,
-    decoded: DataFrame | None = None, part_sizes: DataFrame | None = None,
-) -> DataFrame:
-    """``cfstats`` totals from a Cassandra data DIRECTORY and nothing else:
-    partition sizes from Index.db position deltas (the reference's scanner
-    delta, DataReader.java:118-121), row/cell/tombstone counters from the
-    decoded cell stream. Same report columns as the parquet
-    ``cfstats_global``; universe = cell-decodable sstables (Data.db +
-    Statistics.db present; compressed sstables included via the LZ4 chunk
-    layer since v8). ``decoded``/``part_sizes`` accept the shared
-    single-scan frames (cfstats_shared_dir_frames) in CLI composition."""
-    from cassandra_sstable_tools_spark.operators.percentiles import (
-        percentile_cols,
-    )
-
-    pkey = ["keyspace", "table_name", "partition_key"]
-    if part_sizes is None:
-        part_sizes = dir_partition_sizes(spark, root, filenames)
-    sizes = (
-        part_sizes
-        .groupBy(*pkey)
-        .agg(F.sum("size").alias("size"))
-    )
-    if decoded is None:
-        decoded = data_cells(spark, root, filenames)
-    counts = _decoded_flags(decoded).groupBy(*pkey).agg(
-        F.countDistinct("row_key").alias("rows"),
-        F.sum("f_rowdel").alias("row_deletes"),
-        F.sum("f_cell").alias("cells"),
-        F.sum("f_tomb").alias("tombstones"),
-        F.sum("f_droppable").alias("droppable_tombstones"),
-    )
-    zero = F.lit(0).cast("bigint")
-    p = sizes.join(counts, pkey, "left")
-    return p.groupBy("keyspace", "table_name").agg(
-        F.count(F.lit(1)).alias("partitions"),
-        F.sum("size").alias("total_size"),
-        F.sum(F.coalesce("rows", zero)).alias("row_count"),
-        F.sum(F.coalesce("row_deletes", zero)).alias("row_delete_count"),
-        F.sum(F.coalesce("cells", zero)).alias("cell_count"),
-        F.sum(F.coalesce("tombstones", zero)).alias("tombstone_count"),
-        F.sum(F.coalesce("droppable_tombstones", zero)).alias(
-            "droppable_tombstone_count"
-        ),
-        F.floor(F.sum("size") / F.count(F.lit(1))).alias("avg_partition_size"),
-        *percentile_cols("size"),
-    )
-
-
 def cfstats_global_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Certified wrapper of ``cfstats_global_from_dir`` over the planted
-    fixture tree."""
+    """``cfstats`` totals from a Cassandra data DIRECTORY and nothing else
+    (queries/cfstats.py ``directory_totals``) over the planted fixture
+    tree: partition sizes from Index.db position deltas, row/cell/tombstone
+    counters from the decoded cell stream. Universe = cell-decodable
+    sstables (Data.db + Statistics.db present; compressed sstables
+    included via the LZ4 chunk layer since v8)."""
+    from cassandra_sstable_tools_spark.queries import cfstats
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         materialize_index_files,
     )
 
-    return cfstats_global_from_dir(
-        spark, materialize_index_files(spark, sf_dir)
-    )
-
-
-def cfstats_sstables_from_dir(
-    spark: SparkSession, root: str, filenames=None,
-    decoded: DataFrame | None = None, part_sizes: DataFrame | None = None,
-) -> DataFrame:
-    """``cfstats`` per-sstable section, directory-only: liveness %, cell
-    class counters and timestamps from the decoded stream, size from index
-    deltas. ``max_cell_size`` is intentionally absent -- per-cell byte
-    spans are a serialization detail the reference does not report either
-    (its sizes come from scanner deltas)."""
-    keys = ["keyspace", "table_name", "sstable_id"]
-    if decoded is None:
-        decoded = data_cells(spark, root, filenames)
-    c = _decoded_flags(decoded)
-    sums = c.groupBy(*keys).agg(
-        F.sum("f_rowdel").alias("row_delete_count"),
-        F.sum("f_cell").alias("cell_count"),
-        F.sum("f_live").alias("live_cell_count"),
-        F.sum("f_expiring").alias("expiring_cell_count"),
-        F.sum("f_counter").alias("counter_cell_count"),
-        F.sum("f_tomb").alias("tombstone_count"),
-        F.sum("f_droppable").alias("droppable_tombstone_count"),
-        F.sum("f_rtm").alias("range_tombstone_count"),
-        F.sum("f_partdel").alias("partition_delete_count"),
-        F.min("writetime").alias("min_timestamp"),
-        F.max("writetime").alias("max_timestamp"),
-        F.countDistinct(
-            F.when(
-                F.col("kind").isin(*_ROW_KINDS),
-                F.concat_ws("#", "partition_key", "clustering"),
-            )
-        ).alias("row_count"),
-    )
-    if part_sizes is None:
-        part_sizes = dir_partition_sizes(spark, root, filenames)
-    per_sst = (
-        part_sizes
-        .groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).alias("partitions"),
-            F.sum("size").alias("size"),
-        )
-    )
-    zero = F.lit(0).cast("bigint")
-    agg = per_sst.join(sums, keys, "left")
-    counters = [
-        "row_count", "row_delete_count", "cell_count", "live_cell_count",
-        "expiring_cell_count", "counter_cell_count", "tombstone_count",
-        "droppable_tombstone_count", "range_tombstone_count",
-        "partition_delete_count",
-    ]
-    for col in counters:
-        agg = agg.withColumn(col, F.coalesce(col, zero))
-    return agg.select(
-        *keys, "partitions", *counters, "size",
-        "min_timestamp", "max_timestamp",
-    ).withColumn(
-        "liveness_pct",
-        F.when(
-            F.col("cell_count") > 0,
-            F.floor(F.col("live_cell_count") * 100 / F.col("cell_count")),
-        ).otherwise(F.lit(0)),
+    root = materialize_index_files(spark, sf_dir)
+    return cfstats.directory_totals(
+        cfstats.fold_partitions(_pk_partitioned(report_cells(spark, root))),
+        dir_partition_sizes(spark, root),
     )
 
 
 def cfstats_sstables_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Certified wrapper of ``cfstats_sstables_from_dir`` over the planted
-    fixture tree."""
+    """``cfstats`` per-sstable section, directory-only (queries/cfstats.py
+    ``directory_sstables``) over the planted fixture tree: liveness %,
+    cell class counters and timestamps from the decoded stream, partitions
+    and size from index deltas, no ``max_cell_size``."""
+    from cassandra_sstable_tools_spark.queries import cfstats
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         materialize_index_files,
     )
 
-    return cfstats_sstables_from_dir(
-        spark, materialize_index_files(spark, sf_dir)
+    root = materialize_index_files(spark, sf_dir)
+    return cfstats.directory_sstables(
+        report_cells(spark, root), dir_partition_sizes(spark, root)
     )
-
-
-def cfstats_ttl_from_dir(
-    spark: SparkSession, root: str, filenames=None,
-    decoded: DataFrame | None = None,
-) -> DataFrame:
-    """``cfstats`` TTL-histogram section from decoded cells (A6 analog)."""
-    from cassandra_sstable_tools_spark.constants import NO_TTL
-
-    c = decoded if decoded is not None else data_cells(spark, root, filenames)
-    return (
-        c.where(F.col("kind").isin(*_CELL_KINDS))
-        .groupBy(
-            "keyspace",
-            "table_name",
-            F.coalesce(F.col("ttl"), F.lit(NO_TTL)).alias("ttl"),
-        )
-        .agg(F.count(F.lit(1)).alias("cell_count"))
-    )
-
-
-def cfstats_top_size_from_dir(
-    spark: SparkSession, root: str, n: int, filenames=None, key_type=None,
-    part_sizes: DataFrame | None = None,
-) -> DataFrame:
-    """``cfstats`` largest-partitions section, directory-only (T1 over the
-    index-delta collate). ``part_sizes`` shares the single-scan frame only
-    when no ``key_type`` rendering applies (typed keys re-render the
-    partition keys, so a typed report keeps its own sizes pass)."""
-    from cassandra_sstable_tools_spark.operators.topn import top_n_per_group
-
-    if part_sizes is None or key_type is not None:
-        part_sizes = dir_partition_sizes(
-            spark, root, filenames, key_type=key_type
-        )
-    collated = (
-        part_sizes
-        .groupBy("keyspace", "table_name", "partition_key")
-        .agg(F.sum("size").alias("size"))
-    )
-    return top_n_per_group(
-        collated,
-        ["keyspace", "table_name"],
-        [F.desc("size"), F.asc("partition_key")],
-        n,
-    ).select("keyspace", "table_name", "partition_key", "size", "rank")
 
 
 # --------------------------------------------------------------------------
@@ -3002,18 +2841,13 @@ def fold_cell_path(df: DataFrame, drop: bool = True) -> DataFrame:
 
 
 def _decoded_purge_cells(spark: SparkSession, root: str, filenames=None) -> DataFrame:
-    """The decoded frame shaped as the purge operator's input: sizes are
-    the records' REAL serialized byte spans (the reference's own size
-    semantics -- scanner deltas, PurgeStatisticBackend.java:70-139 -- at
-    record grain), cell_name is the decoded column name with the CellPath
-    folded in (``m0[k3]``) so two map cells under different paths keep
-    DISTINCT merge identities -- collection cells only LWW-collide on the
-    same path. Header-resident partition deletes carry NULL size (no
-    stream bytes), so they steer shadowing but add no bytes; the oracle
-    replays the same rules."""
-    c = fold_cell_path(data_cells(spark, root, filenames)).withColumnRenamed(
-        "phys_size", "cell_size"
-    )
+    """``report_cells`` shaped as the purge operator's input: cell_name is
+    the decoded column name with the CellPath folded in (``m0[k3]``) so two
+    map cells under different paths keep DISTINCT merge identities --
+    collection cells only LWW-collide on the same path. Header-resident
+    partition deletes (NULL size) steer shadowing but add no bytes; the
+    oracle replays the same rules."""
+    c = fold_cell_path(report_cells(spark, root, filenames))
     # the purge operator references this frame from several branches (the
     # LWW window, the rare-row delete map, the two-level aggregate); an
     # eager localCheckpoint makes the real-file decode run ONCE instead of
@@ -3022,11 +2856,13 @@ def _decoded_purge_cells(spark: SparkSession, root: str, filenames=None) -> Data
     return c.localCheckpoint(eager=True)
 
 
-def _purge_partitioned(frame: DataFrame) -> DataFrame:
-    """One explicit pk-keyed exchange over the checkpointed decode frame.
+def _pk_partitioned(frame: DataFrame) -> DataFrame:
+    """One explicit pk-keyed exchange over a decode frame, for the
+    registered purge and cfstats-totals queries.
 
-    ``localCheckpoint`` scans read back as UnknownPartitioning, so the
-    purge tail re-shuffled the corpus THREE times (the LWW window keyed
+    Decoded scans (and their ``localCheckpoint``) read back as
+    UnknownPartitioning, so the purge tail re-shuffled the corpus THREE
+    times (the LWW window keyed
     (pk, dedup-key) plus both final aggregation levels keyed
     (pk, sstable) / (pk) -- ``plans/r12/purge_cassdir_merge_before2.txt``
     Exchanges 3/20/23). Hash-partitioning once on (keyspace, table_name,
@@ -3035,55 +2871,45 @@ def _purge_partitioned(frame: DataFrame) -> DataFrame:
     reuse this single distribution (optimization guide S2.4: two
     operations keyed the same way share one exchange). REPARTITION_BY_NUM
     (explicit count) so AQE cannot byte-coalesce the corpus below the
-    session's parallelism (the r08 s2 lesson). The adapter-cached parquet
-    path needs none of this: its cells cache is already pk-partitioned."""
+    session's parallelism (the r08 s2 lesson). The cfstats two-level
+    per-partition fold (pk, sstable) -> pk likewise runs exchange-free on
+    it. The adapter-cached parquet path needs none of this: its cells
+    cache is already pk-partitioned."""
     n = int(frame.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return frame.repartition(
         n, F.col("keyspace"), F.col("table_name"), F.col("partition_key")
     )
 
 
+def _cassdir_purge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``purge_stats`` over the planted fixture tree's decoded cells."""
+    from cassandra_sstable_tools_spark.operators.purge import purge_stats
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        materialize_index_files,
+    )
+
+    root = materialize_index_files(spark, sf_dir)
+    return purge_stats(_pk_partitioned(_decoded_purge_cells(spark, root)))
+
+
 def purge_top_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``purge`` top-N reclaimable partitions from a Cassandra data
     DIRECTORY and nothing else: full merge -> purge -> measure
     (operators/purge.py A7/J2/F5 semantics, unchanged) over the decoded
-    cell stream with real serialized sizes. With this, all five reference
-    commands run directory-only."""
-    from cassandra_sstable_tools_spark.constants import DEFAULT_TOP_N
-    from cassandra_sstable_tools_spark.operators.purge import purge_stats
-    from cassandra_sstable_tools_spark.operators.topn import top_n_per_group
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        materialize_index_files,
-    )
+    cell stream with real serialized sizes, ranked by queries/purge.py
+    ``top_reclaimable``. With this, all five reference commands run
+    directory-only."""
+    from cassandra_sstable_tools_spark.queries.purge import top_reclaimable
 
-    root = materialize_index_files(spark, sf_dir)
-    per_part = purge_stats(_purge_partitioned(_decoded_purge_cells(spark, root)))
-    return top_n_per_group(
-        per_part,
-        ["keyspace", "table_name"],
-        [F.desc("reclaimable"), F.desc("pre_size"), F.asc("partition_key")],
-        DEFAULT_TOP_N,
-    ).select(
-        "keyspace", "table_name", "partition_key", "tables", "pre_size",
-        "merged_size", "reclaimable", "rank",
-    )
+    return top_reclaimable(_cassdir_purge_stats(spark, sf_dir))
 
 
 def purge_global_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``purge`` global totals, directory-only (see purge_top_cassdir)."""
-    from cassandra_sstable_tools_spark.operators.purge import purge_stats
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        materialize_index_files,
-    )
+    """``purge`` global totals, directory-only (see purge_top_cassdir;
+    queries/purge.py ``purge_totals``)."""
+    from cassandra_sstable_tools_spark.queries.purge import purge_totals
 
-    root = materialize_index_files(spark, sf_dir)
-    per_part = purge_stats(_purge_partitioned(_decoded_purge_cells(spark, root)))
-    return per_part.groupBy("keyspace", "table_name").agg(
-        F.count(F.lit(1)).alias("partitions"),
-        F.sum("pre_size").alias("total_size"),
-        F.sum("merged_size").alias("total_merged"),
-        F.sum("reclaimable").alias("total_reclaimable"),
-    )
+    return purge_totals(_cassdir_purge_stats(spark, sf_dir))
 
 
 def _purge_cassdir_oracles() -> dict[str, str]:
@@ -3138,75 +2964,16 @@ QUERIES["purge_global_cassdir"] = purge_global_cassdir
 ORACLES.update(_purge_cassdir_oracles())
 
 
-def cfstats_rankings_from_dir(
-    spark: SparkSession, root: str, n: int, filenames=None,
-    decoded: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """The cfstats per-partition ranking sections (T1) over the decoded
-    stream: widest (cells), most tombstones, most deleted rows, in most
-    sstables -- one collate feeding four bounded top-Ns, the reference's
-    single-pass-multiple-heaps shape."""
-    from cassandra_sstable_tools_spark.operators.topn import top_n_per_group
-
-    pkey = ["keyspace", "table_name", "partition_key"]
-    if decoded is None:
-        decoded = data_cells(spark, root, filenames)
-    # two-level fold: the one-level TWO-countDistinct form plans an Expand
-    # (x3 row blowup of the decoded stream); level 1 keeps the single
-    # distinct (Expand-free), level 2 counts groups / sums partials. Same
-    # equivalence argument as queries/cfstats.per_partition: row_key embeds
-    # the ('#'-free, non-null) sstable_id, so per-sstable row distincts are
-    # disjoint within a partition.
-    l1 = _decoded_flags(decoded).groupBy(*pkey, "sstable_id").agg(
-        F.countDistinct("row_key").alias("_rows"),
-        F.sum("f_rowdel").alias("_row_deletes"),
-        F.sum("f_cell").alias("_cells"),
-        F.sum("f_tomb").alias("_tombstones"),
-    )
-    per_part = l1.groupBy(*pkey).agg(
-        F.count(
-            F.when(F.col("sstable_id").isNotNull(), F.lit(1))
-        ).alias("tables"),
-        # coalesce pins NOT NULL, matching the one-level countDistinct
-        F.coalesce(F.sum("_rows"), F.lit(0).cast("bigint")).alias("rows"),
-        F.sum("_row_deletes").alias("row_deletes"),
-        F.sum("_cells").alias("cells"),
-        F.sum("_tombstones").alias("tombstones"),
-    ).persist()
-    group = ["keyspace", "table_name"]
-
-    def rank(order, metric, filter_col=None):
-        p = per_part
-        if filter_col is not None:
-            p = p.where(F.col(filter_col) > 0)  # F2 conditional admission
-        return top_n_per_group(p, group, order, n).select(
-            *group, "partition_key", metric, "rank"
-        )
-
-    return {
-        "Widest partitions": rank(
-            [F.desc("cells"), F.asc("partition_key")], "cells"),
-        "Most tombstones": rank(
-            [F.desc("tombstones"), F.asc("partition_key")], "tombstones",
-            "tombstones"),
-        "Most deleted rows": rank(
-            [F.desc("row_deletes"), F.asc("partition_key")], "row_deletes",
-            "row_deletes"),
-        "In most sstables": rank(
-            [F.desc("tables"), F.asc("partition_key")], "tables"),
-        "_frame": per_part,  # caller unpersists after rendering
-    }
-
-
 def cfstats_ttl_cassdir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Certified wrapper of ``cfstats_ttl_from_dir`` over the planted
-    fixture tree -- the cfstats TTL-histogram section (A6) decoded from
-    real cell flags/deltas rather than the parquet column."""
+    """The cfstats TTL-histogram section (A6, queries/cfstats.py
+    ``ttl_histogram``) over the planted fixture tree, decoded from real
+    cell flags/deltas rather than the parquet column."""
+    from cassandra_sstable_tools_spark.queries.cfstats import ttl_histogram
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         materialize_index_files,
     )
 
-    return cfstats_ttl_from_dir(spark, materialize_index_files(spark, sf_dir))
+    return ttl_histogram(data_cells(spark, materialize_index_files(spark, sf_dir)))
 
 
 def _ttl_oracle() -> str:

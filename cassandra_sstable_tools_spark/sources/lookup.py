@@ -247,8 +247,8 @@ def _sstable_ctx(sst) -> dict | None:
     Statistics.db -- the data_cells skip rule). The bloom filter is the
     point read's alone (``_lookup_in_sstable``)."""
     from cassandra_sstable_tools_spark.sources.statistics_db import (
+        parse_partitioner,
         parse_serialization_header,
-        parse_statistics_db,
     )
     from cassandra_sstable_tools_spark.sources.summary_db import (
         parse_summary_db,
@@ -260,7 +260,9 @@ def _sstable_ctx(sst) -> dict | None:
     stats_path = sst.path("Statistics.db")
     with sst.open("Statistics.db") as f:
         stats_content = f.read()
-    stats = parse_statistics_db(stats_content, version=ver, source=stats_path)
+    partitioner = parse_partitioner(
+        stats_content, version=ver, source=stats_path
+    )
     header = parse_serialization_header(
         stats_content, version=ver, source=stats_path
     )
@@ -271,8 +273,8 @@ def _sstable_ctx(sst) -> dict | None:
     return {
         "data": sst.path("Data.db"),
         "header": header,
-        "partitioner": stats.partitioner,
-        "decorate": key_decorator(stats.partitioner),
+        "partitioner": partitioner,
+        "decorate": key_decorator(partitioner),
         "summary": summ,
         "index_size": sst.length("Index.db"),
     }

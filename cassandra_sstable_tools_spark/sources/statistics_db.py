@@ -657,6 +657,32 @@ def _read_toc(content: bytes, source: str) -> dict[int, int]:
     return toc
 
 
+def _stats_toc(content: bytes, version: str, source: str) -> dict[int, int]:
+    """The TOC of a Statistics.db this parser accepts: a supported
+    version, bounds-valid offsets, a STATS component."""
+    _check_supported_version(version, source)
+    toc = _read_toc(content, source)
+    if _TYPE_STATS not in toc:
+        raise ValueError(
+            f"corrupt Statistics.db {source}: no STATS component in TOC "
+            f"(types {sorted(toc)})"
+        )
+    return toc
+
+
+def parse_partitioner(
+    content: bytes, version: str = "nb", source: str = "<bytes>"
+) -> str:
+    """Only the partitioner class of a Statistics.db: the TOC and the
+    VALIDATION string, under ``parse_statistics_db``'s checks (a read
+    needs the partitioner, not the histograms). Murmur3 when VALIDATION
+    is absent, as in ``SSTableStats``."""
+    toc = _stats_toc(content, version, source)
+    if _TYPE_VALIDATION not in toc:
+        return SSTableStats.partitioner
+    return _read_java_utf(content, toc[_TYPE_VALIDATION], source)[0]
+
+
 def parse_statistics_db(
     content: bytes, version: str = "nb", source: str = "<bytes>"
 ) -> SSTableStats:
@@ -667,13 +693,7 @@ def parse_statistics_db(
     Unknown trailing StatsMetadata fields from future versions
     are tolerated (the format evolves append-only within a family); every
     structural violation raises a ValueError naming file and offset."""
-    _check_supported_version(version, source)
-    toc = _read_toc(content, source)
-    if _TYPE_STATS not in toc:
-        raise ValueError(
-            f"corrupt Statistics.db {source}: no STATS component in TOC "
-            f"(types {sorted(toc)})"
-        )
+    toc = _stats_toc(content, version, source)
     stats = SSTableStats()
     if _TYPE_VALIDATION in toc:
         v = _Reader(content, toc[_TYPE_VALIDATION], source)

@@ -298,6 +298,46 @@ def test_unknown_partitioner_is_loud(spark, tmp_path):
         partition_lookup(spark, str(tmp_path), ["k00"]).collect()
 
 
+def _retype_toc(path: str, type_id: int) -> None:
+    """Rename Statistics.db component ``type_id`` in its TOC (an unknown
+    type id), as if the file had no such component."""
+    with open(path, "r+b") as f:
+        buf = bytearray(f.read())
+        (n,) = struct.unpack_from(">i", buf, 0)
+        for i in range(n):
+            at = 4 + 8 * i
+            if struct.unpack_from(">i", buf, at)[0] == type_id:
+                struct.pack_into(">i", buf, at, 99)
+        f.seek(0)
+        f.write(buf)
+
+
+@pytest.mark.parametrize("case", ["truncated", "no_stats", "no_validation"])
+def test_statistics_db_checks_of_the_read(spark, tmp_path, case):
+    """The reads take only the partitioner and the header out of
+    Statistics.db, under the full parse's checks: a truncated file or a
+    TOC without STATS fails naming the file; a TOC without VALIDATION
+    reads as Murmur3 (the file's real order here, so every key is
+    found)."""
+    keys, _, base = _plant_sstable(tmp_path, _MURMUR3)
+    stats = base + "Statistics.db"
+    if case == "truncated":
+        with open(stats, "r+b") as f:
+            f.truncate(3)
+    else:
+        _retype_toc(stats, {"no_stats": 2, "no_validation": 0}[case])
+    read = partition_lookup(spark, str(tmp_path), [k.decode() for k in keys])
+    if case == "no_validation":
+        assert [r["partition_key"] for r in read.collect()] == ["k03"]
+        return
+    with pytest.raises(Exception) as err:
+        read.collect()
+    assert "corrupt Statistics.db " in str(err.value)
+    assert os.path.basename(stats) in str(err.value)
+    if case == "no_stats":
+        assert "no STATS component" in str(err.value)
+
+
 _MURMUR3 = "org.apache.cassandra.dht.Murmur3Partitioner"
 _BYTE_ORDERED = "org.apache.cassandra.dht.ByteOrderedPartitioner"
 

@@ -174,10 +174,10 @@ def _oracle_frame(spark, root, names=None):
     from cassandra_sstable_tools_spark.operators.purge import purge_stats
     from cassandra_sstable_tools_spark.sources.data_cells import (
         _decoded_purge_cells,
-        _purge_partitioned,
+        _pk_partitioned,
     )
 
-    return purge_stats(_purge_partitioned(
+    return purge_stats(_pk_partitioned(
         _decoded_purge_cells(spark, root, names)
     ))
 

@@ -196,3 +196,63 @@ def test_reclaimable_bounded_by_size(spark, sf_dir):
         (F.col("reclaimable") < 0) | (F.col("reclaimable") > F.col("pre_size"))
     ).count()
     assert bad == 0
+
+
+def _sql(rows) -> dict:
+    """The DuckDB mirror (``purge_stats_sql``) per partition."""
+    import duckdb
+    import pandas as pd
+
+    from cassandra_sstable_tools_spark.operators.purge import purge_stats_sql
+
+    con = duckdb.connect()
+    con.register("cells", pd.DataFrame(
+        rows, columns=[f.split()[0] for f in COLS.split(",")]
+    ))
+    sql = ("WITH " + purge_stats_sql(gc_before=GC).lstrip().lstrip(",")
+           + "\nSELECT * FROM purge_per_partition")
+    return {r["partition_key"]: r
+            for r in con.execute(sql).fetchdf().to_dict("records")}
+
+
+def test_rtm_null_bound_has_no_remnant_winner(spark):
+    """An open-ended range delete (``ck < 'a'``) decodes with a NULL
+    range_start. Its range takes no part in the boundary remnant (NULL
+    never equals itself), so the DataFrame no longer raises on the empty
+    winner pick; the other two markers still form their boundary (e:
+    9 // 2 = 4 kept). All three formulations agree."""
+    rows = [
+        _cell("p1", "b", "ca", 100, 10),
+        _cell("p1", "", None, 5, 20, kind="RANGE_TOMBSTONE_MARKER",
+              ldt=GC + 1, rs=None, re="a"),
+        _cell("p1", "", None, 9, 20, kind="RANGE_TOMBSTONE_MARKER",
+              ldt=GC - 1, rs="c", re="e"),
+        _cell("p1", "", None, 7, 20, kind="RANGE_TOMBSTONE_MARKER",
+              ldt=GC + 1, rs="e", re="g"),
+    ]
+    out = _run(spark, rows)
+    assert out["p1"]["pre_size"] == 121
+    assert out["p1"]["merged_size"] == 100 + 5 + 7 + 4
+    sql = _sql(rows)["p1"]
+    assert (sql["pre_size"], sql["merged_size"]) == (121, 116)
+
+
+def test_rtm_null_bound_other_bound_meets_purged_marker(spark):
+    """A kept open-ended marker (NULL start, end 'c') next to a purged
+    marker opening at 'c': the DataFrame and the in-task Python purge give
+    the NULL-bound range no winner, so no remnant is kept (merged = cell
+    + kept marker). The SQL mirror ranks NULL-bound ranges too (its window
+    groups NULLs together), so it still counts the 'c' boundary and keeps
+    9 // 2 = 4 more bytes: the formulations disagree here until open
+    bounds get Cassandra's semantics in all three."""
+    rows = [
+        _cell("p1", "b", "ca", 100, 10),
+        _cell("p1", "", None, 5, 20, kind="RANGE_TOMBSTONE_MARKER",
+              ldt=GC + 1, rs=None, re="c"),
+        _cell("p1", "", None, 9, 20, kind="RANGE_TOMBSTONE_MARKER",
+              ldt=GC - 1, rs="c", re="e"),
+    ]
+    out = _run(spark, rows)
+    assert out["p1"]["merged_size"] == 100 + 5
+    assert out["p1"]["reclaimable"] == 9
+    assert _sql(rows)["p1"]["merged_size"] == 100 + 5 + 9 // 2
