@@ -96,6 +96,14 @@ def get_spark(
             "spark.python.factory.idleWorkerMaxPoolSize",
             os.environ.get("SPARK_GRAFT_PY_IDLE_WORKERS", str(cpus)),
         )
+        # One Python worker pool per session. Spark keys its worker
+        # daemons on the workers' env map, and SQL Python tasks
+        # (mapInArrow, the V2 read) add SPARK_SIMPLIFIED_TRACEBACK=1
+        # where RDD tasks do not, so each kind started its own daemon and
+        # idle workers. With the variable set for every task, both kinds
+        # share one daemon (measured on 4 cores, purge then a V2 read in
+        # one process: peak process-tree RSS 2.1 -> 1.7 GiB).
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         # Quieter local runs.
         .config("spark.ui.showConsoleProgress", "false")
     )

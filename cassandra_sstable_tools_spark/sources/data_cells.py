@@ -2240,8 +2240,8 @@ def scan_sstable_cell_batches(
 
 def _auto_split_bytes(spark: SparkSession, total_bytes: int) -> int:
     """Byte target for one decode shard when the caller does not pin
-    ``shards_per_sstable`` -- the same FileScan-style rule the V2 reader
-    uses (``target_split_bytes``), made CORE-FILLING: aim for ~1 wave of
+    ``shards_per_sstable`` -- the FileScan-style rule of the V2 reader's
+    ``target_split_bytes``, made CORE-FILLING: aim for ~1 wave of
     tasks across ``defaultParallelism`` (so a 12-sstable directory on 32
     cores stops being gated by the one biggest file's single task), but
     never split finer than 16 MiB (per-shard summary/header overhead) nor
@@ -2254,18 +2254,20 @@ def _auto_split_bytes(spark: SparkSession, total_bytes: int) -> int:
 
 
 def auto_split_bytes(total_bytes: int, cores: int) -> int:
-    """The shared core of the rule (also used by the V2 reader, which
-    plans without a session handle at construction time). ONE wave, not
+    """The shared core of the rule (also sizing the merge units of
+    ``merge_scan.merge_units``). ONE wave, not
     two: per-shard fixed costs (Statistics/Summary parse, and the V2
     row-marshal stream setup) measured 2-wave splitting NET-SLOWER on the
     V2 scan (4.7s at total/64 vs 2.7s at total/32 vs 4.4s at the fixed
     256 MiB, sf0.1 trio bench) -- one wave already un-gates the biggest
-    sstable while keeping per-shard overhead amortized."""
+    sstable while keeping per-shard overhead amortized. The per-wave
+    share rounds up, so ``ceil(total_bytes / target)`` never exceeds
+    ``cores``: one wave."""
     env = os.environ.get("SPARK_GRAFT_DECODE_SPLIT_BYTES")
     if env:
         return max(1 << 20, int(env))
     cores = max(1, cores)
-    per_wave = total_bytes // cores
+    per_wave = -(-total_bytes // cores)
     return max(16 << 20, min(256 << 20, per_wave or (256 << 20)))
 
 

@@ -28,9 +28,9 @@ filtered by the components a source needs, one ``spark.range(...)
 .mapInArrow`` stage runs one task per work unit, and each read gets an
 ``SSTable`` handle that carries the filesystem, opens its components
 (``SSTable.open``) and knows their lengths from the listing -- no task
-probes the filesystem for a sibling. ``sstable_rows`` / ``sstable_rdd``
-run the same work units as a plain Python RDD for the reports that
-finish on the driver: no schema, no Arrow batch, no SQL plan.
+probes the filesystem for a sibling. ``sstable_rows`` runs the same work
+units as a plain Python RDD (``unit_rdd``) for the reports that finish
+on the driver: no schema, no Arrow batch, no SQL plan.
 """
 
 from __future__ import annotations
@@ -297,29 +297,31 @@ def sstable_pass(
     )
 
 
-def sstable_rdd(
-    spark: SparkSession, name: str, root: str, filenames, needs, read
-):
-    """``sstable_pass``'s work units as a plain Python RDD of
-    ``(*sst.identity, *row)`` tuples: no schema, no Arrow batch, no SQL
-    plan -- the source of the reports that finish on the driver."""
-    units = _units(spark, name, root, filenames, needs)
+def unit_rdd(spark: SparkSession, units: list, run_unit):
+    """Plain Python RDD of ``run_unit(unit)``'s rows, one task per work
+    unit: no schema, no Arrow batch, no SQL plan -- the source of the
+    reports that finish on the driver."""
 
     def run(idx) -> Iterator:
         for i in idx:
-            for sst in units[i]:
-                ident = sst.identity
-                for r in read(sst):
-                    yield (*ident, *r)
+            yield from run_unit(units[i])
 
     n = len(units)
-    return spark.sparkContext.parallelize(range(n), n).mapPartitions(run)
+    return spark.sparkContext.parallelize(range(n), max(n, 1)) \
+        .mapPartitions(run)
 
 
 def sstable_rows(
     spark: SparkSession, name: str, root: str, filenames, needs, read
 ) -> list[tuple]:
     """``read(sst)``'s rows for every live sstable that has the components
-    ``needs``, collected in ONE Spark job: ``(*sst.identity, *row)``
-    tuples, in work-unit order."""
-    return sstable_rdd(spark, name, root, filenames, needs, read).collect()
+    ``needs``, collected in ONE Spark job over ``sstable_pass``'s work
+    units (``unit_rdd``): ``(*sst.identity, *row)`` tuples, in work-unit
+    order."""
+    return unit_rdd(
+        spark, _units(spark, name, root, filenames, needs),
+        lambda ssts: (
+            (*ident, *r)
+            for s in ssts for ident in (s.identity,) for r in read(s)
+        ),
+    ).collect()

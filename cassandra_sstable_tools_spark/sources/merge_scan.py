@@ -1,24 +1,36 @@
 """The reference's k-way merge (PAPER.md §0,
-`cassandra/PurgeStatisticBackend.java:70-257`): every sstable of a table
-streamed in partitioner order, merged on the decorated key, and each
-partition's copies aggregated in the same task -- no cell ever crosses
-the network.
+`cassandra/PurgeStatisticBackend.java:70-257`,
+`cli/PartitionSizeStatisticsCollector.java:80-105`): every sstable of a
+table streamed in partitioner order, and each partition's copies
+aggregated in the same task -- nothing per partition crosses the network.
 
 Work unit = (the sstables of one table, a half-open decorated-key range
-``[lo, hi)``, ``None`` for an open end). The number of ranges per table
-is the decode split rule (``data_cells.auto_split_bytes``) over the
-table's Data.db bytes; the cut points are sampled Summary.db keys pooled
-from the table's sstables, read on the driver only when a table gets
-more than one range. In the task each sstable is read through the lookup
-read path (``lookup._index_walk`` + ``lookup._read_blocks``, interpreted
-kernel): one partition block at a time, so memory holds one partition's
-copies per sstable. ``heapq.merge`` orders the streams; equal keys are the
-copies of one partition.
+``[lo, hi)``, ``None`` for an open end). ``max(#tables, ceil(total
+Data.db bytes / data_cells.auto_split_bytes))`` ranges are apportioned
+over the tables by Data.db bytes, at least one per table, each further
+range to the table with the most bytes per range -- so the units fill
+one wave of ``defaultParallelism`` tasks. The cut points are sampled
+Summary.db keys pooled from the table's sstables, read on the driver
+only when a table gets more than one range; a table whose sstables do
+not all declare one partitioner that ``lookup.key_decorator`` supports
+stays one ``[None, None)`` unit. Each task walks its range of every
+Index.db of the table through ``lookup._index_walk``, which starts at
+the Summary.db floor of ``lo``.
 
-``purge_report`` is the directory ``purge``: ``operators.purge
-.purge_partition`` runs on each merged partition, each task folds its rows
-into per-table totals and a top-N, and the driver merges those. One Spark
-job, no shuffle, no SQL plan.
+``purge_report`` is the directory ``purge``: each sstable's spans are
+decoded through the lookup read path (``lookup._read_blocks``,
+interpreted kernel), one partition block at a time, so memory holds one
+partition's copies per sstable; ``heapq.merge`` orders the streams, equal
+keys are the copies of one partition, ``operators.purge
+.purge_partition`` runs on each, each task folds its rows into per-table
+totals and a top-N, and the driver merges those.
+
+``unit_sizes`` serves the directory ``pstats``
+(``sstable_binary.pstats_report``): the spans of a unit become partition
+sizes (Index.db position deltas), no Data.db byte is read, and the task
+collates them by rendered key.
+
+Both run one Spark job of one stage: no shuffle, no SQL plan.
 """
 
 from __future__ import annotations
@@ -45,37 +57,97 @@ PURGE_TOP_COLUMNS = [
 ]
 
 
-def merge_units(spark: SparkSession, ssts) -> list[tuple]:
+def merge_units(spark: SparkSession, ssts, needs=MERGE_NEEDS) -> list[tuple]:
     """``(sstables, lo, hi)`` work units over the inventory ``ssts`` (the
-    sstables that lack a component of ``MERGE_NEEDS`` are left out)."""
+    sstables that lack a component of ``needs`` are left out):
+    ``max(#tables, ceil(Data.db bytes / auto_split_bytes))`` key ranges,
+    apportioned over the tables by Data.db bytes, at least one each."""
     from cassandra_sstable_tools_spark.sources.data_cells import (
         auto_split_bytes,
     )
 
     tables: dict[tuple, list] = {}
     for s in ssts:
-        if MERGE_NEEDS <= s.components:
+        if needs <= s.components:
             tables.setdefault(s.identity[:2], []).append(s)
-    target = auto_split_bytes(
-        sum(s.length("Data.db") for g in tables.values() for s in g),
-        spark.sparkContext.defaultParallelism,
-    )
+    weights = [
+        sum(s.length("Data.db") for s in g if "Data.db" in s.components)
+        for g in tables.values()
+    ]
+    total = sum(weights)
+    target = auto_split_bytes(total, spark.sparkContext.defaultParallelism)
     units = []
-    for group in tables.values():
-        n = -(-sum(s.length("Data.db") for s in group) // target)
+    for group, n in zip(
+        tables.values(),
+        _apportion(weights, max(len(weights), -(-total // target))),
+    ):
         bounds = [None, *(_cuts(group, n) if n > 1 else ()), None]
         units += [(group, lo, hi) for lo, hi in zip(bounds, bounds[1:])]
     return units
 
 
+def _apportion(weights: list[int], total: int) -> list[int]:
+    """``total`` ranges over tables of ``weights`` bytes, at least one
+    each: every further range goes to the table with the most bytes per
+    range, which keeps the largest range as small as it can be."""
+    counts = [1] * len(weights)
+    heap = [(-w, i) for i, w in enumerate(weights)]
+    heapq.heapify(heap)
+    for _ in range(total - len(weights)):
+        _, i = heapq.heappop(heap)
+        counts[i] += 1
+        heapq.heappush(heap, (-weights[i] / counts[i], i))
+    return counts
+
+
+def _key_order(sst):
+    """``(partitioner, decorate)`` of one sstable: its declared
+    partitioner and that partitioner's decorated-key order. None when
+    Statistics.db is absent or unreadable, or ``lookup.key_decorator``
+    does not support the partitioner."""
+    from cassandra_sstable_tools_spark.sources.lookup import key_decorator
+    from cassandra_sstable_tools_spark.sources.statistics_db import (
+        parse_partitioner,
+    )
+
+    if "Statistics.db" not in sst.components:
+        return None
+    try:
+        with sst.open("Statistics.db") as f:
+            partitioner = parse_partitioner(
+                f.read(), version=sst.version,
+                source=sst.path("Statistics.db"),
+            )
+        return partitioner, key_decorator(partitioner)
+    except Exception:  # noqa: BLE001 -- no known order: left uncut
+        return None
+
+
+def _summary(sst):
+    """The parsed Summary.db of ``sst``, None when it has none."""
+    from cassandra_sstable_tools_spark.sources.summary_db import (
+        parse_summary_db,
+    )
+
+    if "Summary.db" not in sst.components:
+        return None
+    with sst.open("Summary.db") as f:
+        return parse_summary_db(f.read(), source=sst.path("Summary.db"))
+
+
 def _cuts(group, n: int) -> list:
     """Up to ``n - 1`` increasing cut points, evenly spaced over the
-    decorated Summary.db samples of the table's sstables."""
-    ctxs = _contexts(group)
+    decorated Summary.db samples of the table's sstables; none when the
+    sstables do not all declare one partitioner that ``key_decorator``
+    supports: such a table is one ``[None, None)`` unit."""
+    orders = [_key_order(s) for s in group]
+    if None in orders or len({p for p, _ in orders}) > 1:
+        return []
+    decorate = orders[0][1]
     samples = sorted({
-        c["decorate"](key)
-        for c in ctxs if c["summary"] is not None
-        for key, _ in c["summary"].entries
+        decorate(key)
+        for s in group if (summ := _summary(s)) is not None
+        for key, _ in summ.entries
     })
     return sorted({samples[len(samples) * i // n] for i in range(1, n)}) \
         if samples else []
@@ -98,20 +170,26 @@ def _contexts(group) -> list[dict]:
     return ctxs
 
 
+def _range_spans(sst, ctx: dict, lo, hi, what: str) -> Iterator[list]:
+    """``lookup._index_walk`` over the entries of ``sst`` whose decorated
+    key is in ``[lo, hi)``: spans ``[key, data position, end]``, in index
+    order."""
+    from cassandra_sstable_tools_spark.sources.lookup import _index_walk
+
+    past = (lambda dk: False) if hi is None else (lambda dk: dk >= hi)
+    return _index_walk(
+        sst, ctx, ctx["decorate"], lo, past, lo, 64 << 10, what,
+        {"entries_scanned": 0},
+    )
+
+
 def _stream(sst, ctx: dict, lo, hi) -> Iterator[tuple]:
     """``(decorated key, sstable_id, rendered key, records)`` of every
     partition of ``sst`` in ``[lo, hi)``, in key order."""
-    from cassandra_sstable_tools_spark.sources.lookup import (
-        _index_walk,
-        _read_blocks,
-    )
+    from cassandra_sstable_tools_spark.sources.lookup import _read_blocks
 
     decorate = ctx["decorate"]
-    past = (lambda dk: False) if hi is None else (lambda dk: dk >= hi)
-    spans, keys = itertools.tee(_index_walk(
-        sst, ctx, decorate, lo, past, lo, 64 << 10, "merge scan",
-        {"entries_scanned": 0},
-    ))
+    spans, keys = itertools.tee(_range_spans(sst, ctx, lo, hi, "merge scan"))
     sid = sst.identity[2]
     last = None
     for got, (key, pos, _end) in zip(_read_blocks(sst, ctx, spans), keys):
@@ -139,6 +217,41 @@ def merged_partitions(unit) -> Iterator[tuple]:
     for _dk, copies in itertools.groupby(merged, key=itemgetter(0)):
         copies = list(copies)
         yield copies[0][2], [(sid, recs) for _, sid, _, recs in copies]
+
+
+def unit_sizes(unit, render=None) -> Iterator[tuple]:
+    """``(rendered key, size)`` of every Index.db entry of a work unit, one
+    sstable after another, each in index order. A size is the next data
+    position minus this one; the last partition of an sstable ends at its
+    uncompressed data length (``sstable_binary._data_length``). ``render``
+    renders keys (None: each sstable's Statistics.db header, else the
+    heuristic). An sstable without Data.db is walked, so a corrupt index
+    still fails, but gives no sizes."""
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        _data_length,
+        _header_renderer,
+    )
+
+    group, lo, hi = unit
+    for sst in group:
+        # an uncut unit walks the whole index and needs no key order
+        ctx = {"summary": None, "decorate": lambda key: key}
+        if (lo, hi) != (None, None):
+            order = _key_order(sst)
+            if order is None:
+                raise ValueError(
+                    f"sstable {sst.path('Statistics.db')} no longer declares "
+                    "the partitioner its table's key ranges were cut in"
+                )
+            ctx = {"summary": _summary(sst), "decorate": order[1]}
+        spans = _range_spans(sst, ctx, lo, hi, "pstats walk")
+        if "Data.db" not in sst.components:
+            for _ in spans:
+                pass
+            continue
+        r = render or _header_renderer(sst)
+        for key, pos, end in spans:
+            yield r(key), (_data_length(sst) if end is None else end) - pos
 
 
 def _purge_copy(sid, rec) -> tuple:
@@ -171,15 +284,9 @@ def purge_partitions(spark: SparkSession, ssts):
     merged_size, reclaimable)`` per partition -- the rows of
     ``operators.purge.purge_stats`` over the decoded cells of ``ssts`` --
     one task per work unit."""
-    units = merge_units(spark, ssts)
+    from cassandra_sstable_tools_spark.sources.inventory import unit_rdd
 
-    def run(idx) -> Iterator[tuple]:
-        for i in idx:
-            yield from _purge_unit(units[i])
-
-    n = len(units)
-    return spark.sparkContext.parallelize(range(n), max(n, 1)) \
-        .mapPartitions(run)
+    return unit_rdd(spark, merge_units(spark, ssts), _purge_unit)
 
 
 def _rank_key(row) -> tuple:

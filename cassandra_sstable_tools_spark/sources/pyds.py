@@ -85,10 +85,15 @@ FORMAT_NAME = "cassandra-sstable"
 
 _PRUNE_COLS = ("keyspace", "table_name", "sstable_id")
 
-# planning-time I/O audit (driver-process-local): tests pin that the
-# point-read planner reads Filter.db files only below the
-# bloom_prune_max_files threshold
+# planning-time I/O audit, local to the process that plans: tests that
+# call a reader's partitions() directly pin that the point-read planner
+# reads Filter.db files only below the bloom_prune_max_files threshold
+# (spark.read plans in its own plan_data_source_read process, whose
+# counts never reach this one)
 PLANNING_AUDIT = {"filter_reads": 0}
+
+# the split target of a scan without target_split_bytes (256 MiB)
+DEFAULT_SPLIT_BYTES = 256 << 20
 
 
 def _index_sstables(root: str, filenames=None, needs=("Index.db",)):
@@ -290,16 +295,14 @@ class SSTableCellReader(DataSourceReader):
         # ceil(Data.db bytes / target) summary-seek shards, so one giant
         # sstable stops gating wall-clock on a single task (measured at a
         # 10x tree: 57s single-task -> ~15s; SCALE.md r09 s2)
-        tsb = options.get("target_split_bytes")
-        # None -> resolved at partitions() time by the same core-filling
-        # rule the mapInArrow scan uses (data_cells._auto_split_bytes):
-        # one wave across defaultParallelism, floored at 16 MiB, capped at
-        # the old fixed 256 MiB default (which an explicit option or
-        # SPARK_GRAFT_DECODE_SPLIT_BYTES still overrides).
-        self.target_split_bytes = int(tsb) if tsb is not None else None
-        if self.target_split_bytes is not None and (
-            self.target_split_bytes < 1 << 20
-        ):
+        # Default: a fixed 256 MiB. spark.read plans in a separate Python
+        # process (plan_data_source_read) that has no active session, so
+        # the core-filling rule of the mapInArrow scan
+        # (data_cells.auto_split_bytes) has no defaultParallelism to read.
+        self.target_split_bytes = int(
+            options.get("target_split_bytes", DEFAULT_SPLIT_BYTES)
+        )
+        if self.target_split_bytes < 1 << 20:
             raise ValueError("target_split_bytes must be >= 1 MiB")
         self.key_type = options.get("key_type")
         # driver-side bloom pre-prune threshold: planning reads one
@@ -362,11 +365,11 @@ class SSTableCellReader(DataSourceReader):
         return [
             SSTablePartition(sst=sst, shard=s, n_shards=k)
             for sst in ssts
-            for k in (self._shards_for(sst, ssts),)
+            for k in (self._shards_for(sst),)
             for s in range(k)
         ] or [SSTablePartition(keys=())]
 
-    def _shards_for(self, sst, ssts: list) -> int:
+    def _shards_for(self, sst) -> int:
         """Split count for one sstable: the explicit option wins; else
         ceil(Data.db bytes / target_split_bytes), capped so a pathological
         file cannot explode the task count."""
@@ -375,37 +378,8 @@ class SSTableCellReader(DataSourceReader):
         if "Data.db" not in sst.components:
             return 1
         return max(1, min(
-            256, -(-sst.length("Data.db") // self._resolved_target(ssts))
+            256, -(-sst.length("Data.db") // self.target_split_bytes)
         ))
-
-    def _resolved_target(self, ssts: list) -> int:
-        """Effective split-byte target: the explicit option, else the
-        shared core-filling rule over this listing's total Data.db bytes
-        and the active session's defaultParallelism (partitions() runs
-        driver-side, so the session is available; a bare construction
-        outside Spark falls back to the fixed 256 MiB)."""
-        if self.target_split_bytes is not None:
-            return self.target_split_bytes
-        from cassandra_sstable_tools_spark.sources.data_cells import (
-            auto_split_bytes,
-        )
-
-        total = sum(
-            s.length("Data.db") for s in ssts if "Data.db" in s.components
-        )
-        cores = 0
-        try:
-            from pyspark.sql import SparkSession
-
-            sess = SparkSession.getActiveSession()
-            if sess is not None:
-                cores = sess.sparkContext.defaultParallelism
-        except Exception:  # pragma: no cover -- no active session
-            cores = 0
-        if cores <= 0:
-            return 256 << 20
-        self.target_split_bytes = auto_split_bytes(total, cores)
-        return self.target_split_bytes
 
     def _point_read_partitions(self, ssts: list) -> list[InputPartition]:
         """Point-read planning: bloom-probe every candidate key against
@@ -857,8 +831,9 @@ class CassandraSSTableDataSource(DataSource):
     - ``files``: comma-separated Data.db basenames (the reference's -f)
     - ``shards_per_sstable``: split each sstable into exactly N
       contiguous-range tasks (summary-seek slices); overrides auto-split
-    - ``target_split_bytes``: byte-bounded AUTO-splits (default 256 MiB,
-      the FileScan maxPartitionBytes idea) -- each sstable plans
+    - ``target_split_bytes``: byte-bounded AUTO-splits (default a fixed
+      256 MiB, the FileScan maxPartitionBytes idea; the planner has no
+      session to size it by cores) -- each sstable plans
       ceil(bytes/target) shards, so one giant sstable never gates
       wall-clock on a single task
     - ``pushdown``: 'true' enables planning-time filter pushdown (needs

@@ -1053,6 +1053,17 @@ INDEX_SIZES_SCHEMA = (
 )
 
 
+def _data_length(sst) -> int:
+    """The uncompressed data length of one sstable: the CompressionInfo.db
+    dataLength when it is compressed, else the Data.db byte length."""
+    if "CompressionInfo.db" in sst.components:
+        with sst.open("CompressionInfo.db") as cf:
+            return parse_compression_info(
+                cf.read(), sst.version, source=sst.path("CompressionInfo.db"),
+            )
+    return sst.length("Data.db")
+
+
 def _index_sizes(sst, render=None, needs=("Data.db",)) -> list[tuple]:
     """One sstable's (partition_key, size) rows: Index.db position deltas,
     the tail partition closed by the sibling-resolved uncompressed length
@@ -1065,16 +1076,9 @@ def _index_sizes(sst, render=None, needs=("Data.db",)) -> list[tuple]:
     entries = _index_entries(sst)
     if not set(needs) <= sst.components:
         return []
-    if "CompressionInfo.db" in sst.components:
-        with sst.open("CompressionInfo.db") as cf:
-            length = parse_compression_info(
-                cf.read(), sst.version, source=sst.path("CompressionInfo.db"),
-            )
-    else:
-        length = sst.length("Data.db")
     entries.sort(key=lambda e: e[1])
     positions = [p for _, p in entries]
-    positions.append(length)
+    positions.append(_data_length(sst))
     return [
         (r(key), positions[j + 1] - pos)
         for j, (key, pos) in enumerate(entries)
@@ -1499,45 +1503,30 @@ def _keep_best(top: list, item, n: int) -> None:
         del top[n:]
 
 
-def _size_buckets(rows, parts: int) -> list[tuple[int, list]]:
-    """One map task's (ks, tb, ss, pk, size) rows -> ``(reducer,
-    [(ks, tb, pk, size)...])`` per reduce partition: the rows of a key
-    (its crc32) meet in one reducer, and PySpark shuffles a few large
-    records instead of one per row."""
-    import zlib
-
-    buckets: list[list] = [[] for _ in range(parts)]
-    for ks, tb, _ss, pk, size in rows:
-        buckets[zlib.crc32(pk.encode()) % parts].append((ks, tb, pk, size))
-    return [(i, b) for i, b in enumerate(buckets) if b]
-
-
-def _pstats_partials(buckets, n: int) -> list[tuple]:
-    """One reduce partition's ``_size_buckets`` -> the partitions collated
-    across sstables (size sum, sstable count) -> one partial per table:
-    ({size: partitions}, the best ``n`` by (size desc, key asc), the best
-    ``n`` by (tables desc, size desc, key asc))."""
+def _pstats_partial(sizes, n: int) -> tuple | None:
+    """One work unit's ``(rendered key, size)`` rows -> the partitions
+    collated across sstables (size sum, sstable count) -> the unit's
+    partial: ({size: partitions}, the best ``n`` by (size desc, key asc),
+    the best ``n`` by (tables desc, size desc, key asc)); None for a unit
+    of no partitions."""
     from collections import Counter
 
-    collated: dict[tuple[str, str, str], list] = {}
-    for _, rows in buckets:
-        for ks, tb, pk, size in rows:
-            c = collated.get((ks, tb, pk))
-            if c is None:
-                collated[(ks, tb, pk)] = [size, 1]
-            else:
-                c[0] += size
-                c[1] += 1
-    tables: dict[tuple[str, str], tuple] = {}
-    for (ks, tb, pk), (size, n_tables) in collated.items():
-        sizes, best, most = tables.setdefault((ks, tb), (Counter(), [], []))
-        sizes[size] += 1
+    collated: dict[str, list] = {}
+    for pk, size in sizes:
+        c = collated.get(pk)
+        if c is None:
+            collated[pk] = [size, 1]
+        else:
+            c[0] += size
+            c[1] += 1
+    if not collated:
+        return None
+    counts, best, most = Counter(), [], []
+    for pk, (size, n_tables) in collated.items():
+        counts[size] += 1
         _keep_best(best, (-size, pk, n_tables), n)
         _keep_best(most, (-n_tables, -size, pk), n)
-    return [
-        (key, (sizes, sorted(best)[:n], sorted(most)[:n]))
-        for key, (sizes, best, most) in tables.items()
-    ]
+    return counts, sorted(best)[:n], sorted(most)[:n]
 
 
 def pstats_report(
@@ -1550,29 +1539,35 @@ def pstats_report(
     table -- the rows ``queries/pstats.py``'s collate + summary + top-N
     frames give over ``binary_index_sizes``.
 
-    One Spark job and no SQL plan: the per-sstable Index.db size read
-    (``_index_sizes``) is shuffled once on (keyspace, table, key) to
-    ``spark.sql.shuffle.partitions`` partitions; each reduce partition
-    collates its keys and turns them into per-table partials
-    (``_pstats_partials``), and only those reach the driver, which merges
-    them. The size -> count map per table is what Spark's exact
-    ``percentile`` buffers per group anyway."""
+    One Spark job of one stage, no shuffle and no SQL plan: one task per
+    (table, decorated-key range) work unit of ``merge_scan.merge_units``
+    walks that range of every Index.db of the table
+    (``merge_scan.unit_sizes``), so all copies of a partition meet in one
+    task; it collates them by rendered key and sends one per-table
+    partial to the driver (``_pstats_partial``), which merges the
+    partials. A table whose sstables do not all declare one partitioner
+    ``lookup.key_decorator`` supports is one uncut unit. The size ->
+    count map per table is what Spark's exact ``percentile`` buffers per
+    group anyway."""
     from collections import Counter
 
-    from cassandra_sstable_tools_spark.sources.inventory import sstable_rdd
+    from cassandra_sstable_tools_spark.sources import merge_scan
+    from cassandra_sstable_tools_spark.sources.inventory import (
+        live_sstables,
+        unit_rdd,
+    )
 
     render = key_renderer(key_type) if key_type is not None else None
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    partials = (
-        sstable_rdd(
-            spark, "pstats_report", root, filenames, ("Index.db",),
-            lambda sst: _index_sizes(sst, render),
-        )
-        .mapPartitions(lambda rows: _size_buckets(rows, parts))
-        .partitionBy(parts, lambda i: i)
-        .mapPartitions(lambda buckets: _pstats_partials(buckets, n))
-        .collect()
-    )
+    ssts = live_sstables("pstats_report", root, filenames, ("Index.db",))
+
+    def partial(unit) -> Iterator[tuple]:
+        got = _pstats_partial(merge_scan.unit_sizes(unit, render), n)
+        if got is not None:
+            yield unit[0][0].identity[:2], got
+
+    partials = unit_rdd(
+        spark, merge_scan.merge_units(spark, ssts, {"Index.db"}), partial
+    ).collect()
     tables: dict[tuple[str, str], tuple] = {}
     for key, (sizes, best, most) in partials:
         t = tables.setdefault(key, (Counter(), [], []))

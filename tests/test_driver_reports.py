@@ -150,6 +150,26 @@ def test_directory_report_runs_no_sql(spark, sf_dir, tmp_path, case):
     assert len(new_jobs) == 1, f"{case} ran {len(new_jobs)} Spark jobs"
 
 
+def test_directory_pstats_runs_one_stage_without_shuffle(spark, sf_dir):
+    """``pstats --cassandra-dir`` on the fixture tree is one job of one
+    stage, at most ``defaultParallelism`` tasks (one wave), writing no
+    shuffle bytes: each task folds its own key ranges."""
+    root = materialize_index_files(spark, sf_dir)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    bus.waitUntilEmpty()
+    jobs = set(tracker.getJobIdsForGroup("cli:pstats"))
+    rc, out, _ = _cli(spark, ["pstats", "--cassandra-dir", root])
+    assert rc == 0 and out
+    bus.waitUntilEmpty()
+    (job,) = set(tracker.getJobIdsForGroup("cli:pstats")) - jobs
+    (stage,) = tracker.getJobInfo(job).stageIds
+    assert tracker.getStageInfo(stage).numTasks <= sc.defaultParallelism
+    store = sc._jsc.sc().statusStore()
+    assert store.lastStageAttempt(stage).shuffleWriteBytes() == 0
+
+
 # --------------------------------------------------------------------------
 # Driver finishing == SQL oracles over the per-sstable sources
 # --------------------------------------------------------------------------

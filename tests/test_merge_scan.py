@@ -7,6 +7,9 @@
   prints, with ``-f`` and with ``--table`` alone too.
 - The output does not depend on how each table is cut into key ranges.
 - A corrupt Index.db fails the pass, naming the file.
+- The directory ``pstats`` runs on the same work units: its sections
+  equal Spark's composition over the Index.db sizes however the table is
+  cut, and a table of an unsupported partitioner stays one uncut unit.
 """
 
 from __future__ import annotations
@@ -318,10 +321,9 @@ def test_mixed_partitioners_are_refused(spark, murmur3_root, tmp_path):
             .collect()
 
 
-def test_corrupt_index_is_loud(spark, edge_root, tmp_path):
-    """Swap the Data.db positions of two adjacent Index.db entries: the
-    pass refuses the index, naming it, instead of merging misread
-    partitions."""
+def _swapped_positions(edge_root: str, tmp_path) -> tuple[str, str]:
+    """A copy of ``ks1/del`` whose first sstable has the Data.db positions
+    of two adjacent Index.db entries swapped: ``(root, Index.db path)``."""
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         encode_index_db,
         index_offsets,
@@ -344,6 +346,111 @@ def test_corrupt_index_is_loud(spark, edge_root, tmp_path):
         f.write(encode_summary_db(
             [(k, o) for (k, _), o in zip(entries, index_offsets(entries))]
         ))
+    return root, base + "Index.db"
+
+
+def test_corrupt_index_is_loud(spark, edge_root, tmp_path):
+    """Swap the Data.db positions of two adjacent Index.db entries: the
+    pass refuses the index, naming it, instead of merging misread
+    partitions."""
+    root, index = _swapped_positions(edge_root, tmp_path)
     with pytest.raises(Exception, match="corrupt Index.db ") as err:
         merge_scan.purge_partitions(spark, sstable_inventory(root)).collect()
-    assert f"{base}Index.db" in str(err.value)
+    assert index in str(err.value)
+
+
+def test_pstats_corrupt_index_is_loud(spark, edge_root, tmp_path):
+    """The ``pstats`` walk refuses the same index, naming it, instead of
+    reporting sizes from its re-sorted positions."""
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        pstats_report,
+    )
+
+    root, index = _swapped_positions(edge_root, tmp_path)
+    with pytest.raises(Exception, match="corrupt Index.db ") as err:
+        pstats_report(spark, root)
+    assert index in str(err.value)
+
+
+def _pstats_spark(spark, root, n: int = 10) -> list:
+    """``pstats`` sections of Spark's collate + percentile + row_number
+    composition over the Index.db sizes frame."""
+    from cassandra_sstable_tools_spark.queries import pstats as m
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        binary_index_sizes,
+    )
+
+    c = m.collate_sizes(binary_index_sizes(spark, root))
+    return [
+        (df.columns, sorted((tuple(r) for r in df.collect()), key=repr))
+        for df in (
+            m.summary_from_collated(c), m.top_size_from_collated(c, n),
+            m.top_tables_from_collated(c, n),
+        )
+    ]
+
+
+def _pstats_pass(spark, root, n: int = 10) -> list:
+    from cassandra_sstable_tools_spark.sources.inventory import ddl_columns
+    from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        pstats_report,
+    )
+
+    return [
+        (ddl_columns(ddl), sorted(rows, key=repr))
+        for ddl, rows in pstats_report(spark, root, n=n)
+    ]
+
+
+def test_pstats_does_not_depend_on_the_range_cuts(
+    spark, tmp_path, monkeypatch
+):
+    """``pstats`` over the wide table cut into at least 4 key ranges
+    equals the one-range pass and Spark's composition."""
+    root = _wide_tree(str(tmp_path / "data"))
+    ssts = sstable_inventory(root)
+    assert len(merge_scan.merge_units(spark, ssts, {"Index.db"})) == 1
+    one = _pstats_pass(spark, root)
+
+    monkeypatch.setenv("SPARK_GRAFT_DECODE_SPLIT_BYTES", str(1 << 20))
+    assert len(merge_scan.merge_units(spark, ssts, {"Index.db"})) >= 4
+    assert _pstats_pass(spark, root) == one
+    assert one == _pstats_spark(spark, root)
+    assert one[0][1][0][2] == 1500  # every key, collated once
+
+
+def test_pstats_keeps_an_unsupported_partitioner_uncut(
+    spark, tmp_path, monkeypatch
+):
+    """A table whose sstables declare RandomPartitioner (which
+    ``key_decorator`` cannot order) is one uncut unit even when its bytes
+    ask for several ranges, and its report equals Spark's composition."""
+    from test_lookup import _plant_sstable
+
+    for sub, keys in (("a", range(0, 12)), ("b", range(6, 18))):
+        (tmp_path / sub).mkdir()
+        _plant_sstable(
+            tmp_path / sub, "org.apache.cassandra.dht.RandomPartitioner",
+            order_partitioner="org.apache.cassandra.dht.Murmur3Partitioner",
+            keys=[b"k%02d" % i for i in keys],
+        )
+    for data in glob.glob(f"{tmp_path}/**/*-Data.db", recursive=True):
+        os.truncate(data, 3 << 20)  # 3 MiB: a tail partition of zeros
+    monkeypatch.setenv("SPARK_GRAFT_DECODE_SPLIT_BYTES", str(1 << 20))
+    root = str(tmp_path)
+    units = merge_scan.merge_units(spark, sstable_inventory(root),
+                                   {"Index.db"})
+    assert [(len(g), lo, hi) for g, lo, hi in units] == [(2, None, None)]
+    got = _pstats_pass(spark, root)
+    assert got == _pstats_spark(spark, root)
+    assert got[0][1][0][2] == 18
+
+
+def test_units_are_apportioned_by_bytes():
+    """``max(#tables, ceil(total / target))`` ranges, at least one per
+    table, each further range to the table with the most bytes per
+    range."""
+    assert merge_scan._apportion([50, 30, 20], 3) == [1, 1, 1]
+    assert merge_scan._apportion([50, 30, 20], 4) == [2, 1, 1]
+    assert merge_scan._apportion([50, 30, 20], 6) == [3, 2, 1]
+    assert merge_scan._apportion([0, 10], 5) == [1, 4]

@@ -615,6 +615,27 @@ def test_byte_bounded_auto_splits(registered, cass_root):
         ).partitions()
 
 
+def test_spark_read_splits_at_the_fixed_default(registered, tmp_path):
+    """``spark.read`` plans in its own Python process, where no session
+    is active, so a scan without ``target_split_bytes`` splits at the
+    fixed 256 MiB default: a 64 MiB Data.db plans one task, where the
+    core-filling rule at this session's parallelism would cut it into
+    several."""
+    from cassandra_sstable_tools_spark.sources.data_cells import (
+        auto_split_bytes,
+    )
+
+    _plant_sstable(
+        tmp_path, "org.apache.cassandra.dht.ByteOrderedPartitioner"
+    )
+    (data,) = glob.glob(f"{tmp_path}/**/*-Data.db", recursive=True)
+    os.truncate(data, 64 << 20)  # sparse: planning reads only the listing
+    cores = registered.sparkContext.defaultParallelism
+    assert auto_split_bytes(64 << 20, cores) < 64 << 20
+    df = _read(registered, str(tmp_path))
+    assert df.rdd.getNumPartitions() == 1
+
+
 # --------------------------------------------------------------------------
 # r10: unparseable typed literals, planning-I/O threshold, late-finalizing
 # generations
