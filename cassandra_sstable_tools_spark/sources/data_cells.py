@@ -62,8 +62,9 @@ file is a no-op and makes skipping corrupt-tolerant the way Cassandra's
 own skippers position.
 
 Spark shape / 100 TB notes: one task per (sstable, shard) (``data_cells``).
-Per task: Statistics.db HEADER parse (KB), a streaming Index.db pass kept
-as a position array (8 bytes/partition), then per-partition point reads of
+Per task: Statistics.db HEADER parse (KB), a streaming Index.db walk
+(``sstable_binary.index_spans``) kept as a position array (8
+bytes/partition), then per-partition point reads of
 [position, next position) -- task memory bounds at one partition block
 plus the position array, never the file. The scan is INDEX-DRIVEN rather
 than the reference's sequential ``ISSTableScanner``: that makes a Data.db
@@ -121,10 +122,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
+    IndexCursor,
+    index_spans,
     read_unsigned_vint,
     render_key,
     render_typed,
-    stream_parse_index_db,
     write_unsigned_vint,
 )
 from cassandra_sstable_tools_spark.sources.statistics_db import (
@@ -1991,7 +1993,9 @@ def _scan_plan(sst, shard: int, n_shards: int):
     Statistics.db (the skip rule) or the shard is empty, else
     ``(sst, ks, tb, ss, ver, header, positions, lo, hi, npos, tail,
     cmarshal)``; the tuple and columnar paths share this one setup (same
-    side-effect order, same errors)."""
+    side-effect order, same errors). The positions come from
+    ``index_spans``: a decreasing one, the entry that closes a shard
+    included, is a corrupt index (loud)."""
     from cassandra_sstable_tools_spark.sources.inventory import SSTable
     from cassandra_sstable_tools_spark.sources.statistics_db import (
         parse_serialization_header,
@@ -2011,16 +2015,15 @@ def _scan_plan(sst, shard: int, n_shards: int):
     # positions are computed BEFORE the Data.db handle opens: a corrupt
     # Summary/Index parse raises here, and an open handle must not leak
     # across that raise (review finding)
-    if n_shards > 1 and "Summary.db" in sst.components:
+    start, stop = 0, None
+    sliced = n_shards > 1 and "Summary.db" in sst.components
+    if sliced:
         # summary-seek slice (r08 s2): shard boundaries are SAMPLED
         # summary entries, whose stored positions are Index.db offsets --
         # each shard streams only ITS index byte range instead of
         # re-streaming the whole index (on a multi-GB index of a 100 GB
-        # sstable that re-read was shards x index). The extra entry past
-        # the slice end bounds the last partition's byte extent.
-        from cassandra_sstable_tools_spark.sources.lookup import (
-            _IndexCursor,
-        )
+        # sstable that re-read was shards x index). The first entry at
+        # ``stop`` closes the slice: its position ends the last span.
         from cassandra_sstable_tools_spark.sources.summary_db import (
             parse_summary_db,
         )
@@ -2030,48 +2033,26 @@ def _scan_plan(sst, shard: int, n_shards: int):
                 sf_.read(), source=sst.path("Summary.db")
             )
         ns = len(summ.entries)
-        idx_size = sst.length("Index.db")
         lo_e = int(shard) * ns // n_shards
         hi_e = (int(shard) + 1) * ns // n_shards
         if lo_e == hi_e:
             return None  # fewer sampled entries than shards
-        start_off = summ.entries[lo_e][1]
-        end_off = summ.entries[hi_e][1] if hi_e < ns else idx_size
-        positions: list[int] = []
-        next_pos = None
-        with sst.open("Index.db") as idx:
-            cur = _IndexCursor(
-                idx, ver, path, start_off,
-                chunk_bytes=1 << 20, region_end=end_off,
-            )
-            while True:
-                ent = cur.next_entry()
-                if ent is None:
-                    break
-                _k, dpos, off = ent
-                if off >= end_off:
-                    next_pos = dpos
-                    break
-                if positions and dpos < positions[-1]:
-                    raise ValueError(
-                        f"corrupt Index.db {path}: data position {dpos} "
-                        f"decreases at index byte {off}"
-                    )
-                positions.append(dpos)
-        npos = len(positions)
-        lo, hi = 0, npos
-        tail = next_pos  # None -> bounded by data length
-    else:
-        with sst.open("Index.db") as idx:
-            positions = sorted(
-                pos for _, pos in stream_parse_index_db(
-                    idx, version=ver, source=path
-                )
-            )
-        npos = len(positions)
-        lo = int(shard) * npos // n_shards
-        hi = (int(shard) + 1) * npos // n_shards
-        tail = None
+        start = summ.entries[lo_e][1]
+        stop = summ.entries[hi_e][1] if hi_e < ns else None
+    positions: list[int] = []
+    tail = None  # the end of the last span; None -> the data length
+    with sst.open("Index.db") as idx:
+        cur = IndexCursor(
+            idx, ver, path, start, chunk_bytes=8 << 20, region_end=stop
+        )
+        where = None if stop is None else (lambda _key, off: int(off >= stop))
+        for _key, pos, tail in index_spans(cur, where):
+            positions.append(pos)
+    npos = len(positions)
+    # without a summary, a shard is a slice of the whole index's positions
+    lo, hi = (0, npos) if sliced else (
+        int(shard) * npos // n_shards, (int(shard) + 1) * npos // n_shards
+    )
     h_clustering = list(header.clustering_types)
     # clustering_marshal: the sstable's OWN clustering types
     # (comma-joined), constant per sstable -- lets a rewrite re-declare
@@ -2139,7 +2120,10 @@ def scan_sstable_cell_rows(
     Summary.db present the shard SEEKS to its sampled index slice and
     streams only its own index bytes (zero duplicated I/O across shards);
     without one it falls back to a full index stream sliced by position
-    count. Shard-invariance of the union is pinned by test."""
+    count. Either way the positions come from ``index_spans`` in index
+    order, never re-sorted: a position that decreases, inside a shard or
+    at the entry that closes one, fails the scan at every shard count.
+    Shard-invariance of the union is pinned by test."""
     from cassandra_sstable_tools_spark.sources.lz4_block import (
         open_sstable_data,
     )
@@ -2238,31 +2222,23 @@ def scan_sstable_cell_batches(
     )
 
 
-def _auto_split_bytes(spark: SparkSession, total_bytes: int) -> int:
-    """Byte target for one decode shard when the caller does not pin
-    ``shards_per_sstable`` -- the FileScan-style rule of the V2 reader's
-    ``target_split_bytes``, made CORE-FILLING: aim for ~1 wave of
-    tasks across ``defaultParallelism`` (so a 12-sstable directory on 32
-    cores stops being gated by the one biggest file's single task), but
-    never split finer than 16 MiB (per-shard summary/header overhead) nor
-    coarser than 256 MiB (the V2 default; at 100 TB the cap rules and the
-    task count grows with bytes, not cores). ``SPARK_GRAFT_DECODE_SPLIT_BYTES``
-    overrides outright (deployment knob)."""
-    return auto_split_bytes(
-        total_bytes, spark.sparkContext.defaultParallelism
-    )
-
-
 def auto_split_bytes(total_bytes: int, cores: int) -> int:
-    """The shared core of the rule (also sizing the merge units of
-    ``merge_scan.merge_units``). ONE wave, not
-    two: per-shard fixed costs (Statistics/Summary parse, and the V2
+    """Byte target for one decode shard of ``data_cells`` when the caller
+    does not pin ``shards_per_sstable``, and for one merge unit of
+    ``merge_scan.merge_units``: the FileScan-style rule of the V2
+    reader's ``target_split_bytes``, made CORE-FILLING. It aims for ONE
+    wave of tasks across ``cores`` (the session's
+    ``defaultParallelism``), so a 12-sstable directory on 32 cores stops
+    being gated by the one biggest file's single task. Not two waves:
+    per-shard fixed costs (Statistics/Summary parse, and the V2
     row-marshal stream setup) measured 2-wave splitting NET-SLOWER on the
     V2 scan (4.7s at total/64 vs 2.7s at total/32 vs 4.4s at the fixed
-    256 MiB, sf0.1 trio bench) -- one wave already un-gates the biggest
-    sstable while keeping per-shard overhead amortized. The per-wave
-    share rounds up, so ``ceil(total_bytes / target)`` never exceeds
-    ``cores``: one wave."""
+    256 MiB, sf0.1 trio bench). The per-wave share rounds up, so
+    ``ceil(total_bytes / target)`` never exceeds ``cores``. Never finer
+    than 16 MiB (per-shard summary/header overhead) nor coarser than
+    256 MiB (the V2 default; at 100 TB the cap rules and the task count
+    grows with bytes, not cores). ``SPARK_GRAFT_DECODE_SPLIT_BYTES``
+    overrides outright (deployment knob)."""
     env = os.environ.get("SPARK_GRAFT_DECODE_SPLIT_BYTES")
     if env:
         return max(1 << 20, int(env))
@@ -2280,7 +2256,7 @@ def data_cells(
 ) -> DataFrame:
     """Cell-grain records from REAL Data.db files under a Cassandra data
     directory. By default each sstable splits into byte-bounded
-    summary-seek shards (``_auto_split_bytes``); per shard: Statistics.db
+    summary-seek shards (``auto_split_bytes``); per shard: Statistics.db
     HEADER parse, streaming Index.db position pass (positions only -- 8
     bytes per partition in task memory), then per-partition block decodes.
     Compressed sstables read through the CompressionInfo chunk map + the
@@ -2319,8 +2295,9 @@ def data_cells(
         # ceil(Data.db bytes / auto target), from the inventory's own
         # file lengths. Shard invariance of the union is pinned by test,
         # so results are bit-identical to one task per sstable.
-        target = _auto_split_bytes(
-            spark, sum(s.length("Data.db") for s in ssts)
+        target = auto_split_bytes(
+            sum(s.length("Data.db") for s in ssts),
+            spark.sparkContext.defaultParallelism,
         )
         counts = [
             max(1, min(256, -(-s.length("Data.db") // target))) for s in ssts

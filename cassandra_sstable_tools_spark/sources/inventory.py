@@ -278,7 +278,8 @@ def sstable_pass(
     """Run ``read(sst)`` once for every live sstable that has the
     components ``needs``, in ONE Spark stage, and emit its row tuples
     (``schema`` column order after the keyspace/table_name/sstable_id
-    prefix). ``schema`` is a StructType or a DDL string."""
+    prefix) as they come: a ``read`` that yields holds one 64k-row Arrow
+    batch in task memory. ``schema`` is a StructType or a DDL string."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from cassandra_sstable_tools_spark.sources.data_cells import _cell_batches
@@ -289,7 +290,7 @@ def sstable_pass(
 
     def read_batches(sst) -> Iterator:
         ident = sst.identity
-        return _cell_batches([(*ident, *r) for r in read(sst)], pa_schema)
+        return _cell_batches(((*ident, *r) for r in read(sst)), pa_schema)
 
     return run_units(
         spark, _units(spark, name, root, filenames, needs), read_batches,

@@ -17,7 +17,8 @@ pipeline, per sstable and per requested key:
                      [sampled_offset_i, sampled_offset_{i+1});
     3. Index.db    — stream exactly that window (not the file) to find
                      the key's Data.db position; the NEXT entry bounds
-                     the partition's byte extent;
+                     the partition's byte extent (``sstable_binary
+                     .index_spans``, the position walk every pass shares);
     4. Data.db     — one read of [position, next_position) per found
                      key, decoded through the interpreted cell codec
                      (sources/data_cells.py; compressed sstables ride the
@@ -71,7 +72,8 @@ from cassandra_sstable_tools_spark.sources.inventory import (
     sstable_rows,
 )
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
-    read_unsigned_vint,
+    IndexCursor,
+    index_spans,
 )
 
 LOOKUP_AUDIT_SCHEMA = (
@@ -112,120 +114,6 @@ def key_decorator(partitioner: str):
         "search needs its exact key order (supported: Murmur3Partitioner, "
         "ByteOrderedPartitioner)"
     )
-
-
-class _IndexCursor:
-    """Parse Index.db entries one at a time from a byte offset, tracking
-    bytes actually read — the bounded-I/O proof the audit surfaces.
-    Grammar (and version regimes) mirror sstable_binary._parse_entries."""
-
-    __slots__ = ("f", "version", "source", "buf", "off", "base",
-                 "bytes_read", "eof", "chunk", "region_end", "read_pos")
-
-    def __init__(self, f, version: str, source: str, start: int,
-                 chunk_bytes: int = 8 << 10, region_end: int | None = None):
-        f.seek(start)
-        self.f = f
-        self.version = version
-        self.source = source
-        self.buf = b""
-        self.off = 0          # parse offset within buf
-        self.base = start     # file offset of buf[0]
-        self.bytes_read = 0
-        self.eof = False
-        self.chunk = chunk_bytes
-        # clamp read-ahead at the caller's window boundary so
-        # index_bytes_read tracks the WINDOW size, not the fixed chunk
-        # (r08 ADVICE #1: a 98-byte window was charged a full 8 KB);
-        # an entry straddling the boundary still gets its exact bytes
-        self.region_end = region_end
-        self.read_pos = start  # file offset the next read starts at
-
-    def _fill(self, need: int) -> bool:
-        """Ensure ``need`` bytes are parseable at self.off; False at EOF."""
-        while len(self.buf) - self.off < need:
-            if self.eof:
-                return False
-            want = max(self.chunk, need)
-            if self.region_end is not None:
-                want = max(need, min(want, self.region_end - self.read_pos))
-            data = self.f.read(want)
-            self.read_pos += len(data)
-            self.bytes_read += len(data)
-            if not data:
-                self.eof = True
-                return False
-            if self.off:  # drop consumed prefix before growing
-                self.base += self.off
-                self.buf = self.buf[self.off:]
-                self.off = 0
-            self.buf += data
-        return True
-
-    def _vint(self) -> int | None:
-        if not self._fill(1):
-            return None
-        first = self.buf[self.off]
-        extra = 0
-        while extra < 8 and first & (0x80 >> extra):
-            extra += 1
-        if not self._fill(1 + extra):
-            return None
-        v, self.off = read_unsigned_vint(self.buf, self.off)
-        return v
-
-    def next_entry(self) -> tuple[bytes, int, int] | None:
-        """-> (key, data_position, entry_start_file_offset), or None at a
-        clean EOF. A mid-entry EOF is corruption (loud)."""
-        entry_start = self.base + self.off
-        if not self._fill(2):
-            if len(self.buf) - self.off == 0:
-                return None  # clean EOF on an entry boundary
-            raise ValueError(
-                f"corrupt Index.db {self.source}: truncated entry at "
-                f"byte {entry_start}"
-            )
-        klen = int.from_bytes(self.buf[self.off : self.off + 2], "big")
-        self.off += 2
-        if not self._fill(klen):
-            raise ValueError(
-                f"corrupt Index.db {self.source}: truncated key at byte "
-                f"{entry_start}"
-            )
-        key = self.buf[self.off : self.off + klen]
-        self.off += klen
-        if self.version > "ma":
-            position = self._vint()
-        else:
-            position = (
-                int.from_bytes(self.buf[self.off : self.off + 8], "big")
-                if self._fill(8)
-                else None
-            )
-            if position is not None:
-                self.off += 8
-        if position is None:
-            raise ValueError(
-                f"corrupt Index.db {self.source}: truncated position at "
-                f"byte {entry_start}"
-            )
-        if self.version >= "ma":
-            psize = self._vint()
-        else:
-            psize = (
-                int.from_bytes(self.buf[self.off : self.off + 4], "big")
-                if self._fill(4)
-                else None
-            )
-            if psize is not None:
-                self.off += 4
-        if psize is None or not self._fill(psize):
-            raise ValueError(
-                f"corrupt Index.db {self.source}: truncated promoted index "
-                f"at byte {entry_start}"
-            )
-        self.off += psize  # promoted/columns index: opaque, skipped
-        return key, position, entry_start
 
 
 def _merge_regions(windows: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -295,9 +183,9 @@ def _read_blocks(sst, ctx: dict, spans) -> Iterator[tuple | None]:
     the partition block of each span ``(index key, position, end)``
     (``end`` None: the end of Data.db), lazily, one block in memory at a
     time. Yields per span ``(rendered key, records, bytes read)``, or None
-    for a zero-extent span (no physical block: NULL psize). A successor
-    position below its span's start is a corrupt index, and so is a block
-    whose decoded key is not the index key: both are loud."""
+    for a zero-extent span (no physical block: NULL psize). The spans come
+    from ``index_spans``, which refuses a decreasing position; a block
+    whose decoded key is not the index key is a corrupt sstable (loud)."""
     from cassandra_sstable_tools_spark.sources.data_cells import (
         decode_partition_block,
     )
@@ -318,14 +206,6 @@ def _read_blocks(sst, ctx: dict, spans) -> Iterator[tuple | None]:
             if end == pos:
                 yield None
                 continue
-            if end < pos:
-                # a shared offset is legitimate; a DECREASING successor
-                # position is corruption and must not silently drop the
-                # partition
-                raise ValueError(
-                    f"corrupt Index.db {path}: successor data position "
-                    f"{end} below {pos}"
-                )
             dat.seek(pos)
             block = dat.read(end - pos)
             pk, recs = decode_partition_block(
@@ -442,35 +322,21 @@ def _lookup_in_sstable(
     with sst.open("Index.db") as f:
         for (rs, re_), members in zip(regions, per_region):
             remaining = {kb for kb, _a in members}
-            cur = _IndexCursor(
+            cur = IndexCursor(
                 f, ver, path, rs, chunk_bytes=chunk_bytes, region_end=re_
             )
-            pending: list[list] = []
-            while True:
-                ent = cur.next_entry()
-                if ent is None:
-                    for m in pending:
-                        m[1] = None  # EOF: bounded by data length
-                    break
-                key, dpos, entry_off = ent
-                for m in pending:
-                    m[1] = dpos
-                pending.clear()
-                if entry_off >= re_:
-                    # past the region: every unmatched key of the region
-                    # is proven absent (its entry had to start before re_)
-                    break
-                if key in remaining:
-                    remaining.discard(key)
-                    for a in by_key[key]:
-                        a["found"] = True
-                        m = [dpos, None, a]
-                        pending.append(m)
-                        matches.append(m)
+
+            def where(key, off, remaining=remaining, re_=re_):
+                return 1 if off >= re_ else (0 if key in remaining else -1)
+
+            for key, dpos, end in index_spans(cur, where):
+                remaining.discard(key)
+                for a in by_key[key]:
+                    a["found"] = True
+                    matches.append((dpos, end, a))
             for _kb, a in members:
                 a["index_bytes_read"] = cur.bytes_read
 
-    matches.sort(key=lambda m: m[0])
     records: list[tuple] = []
     blocks = _read_blocks(
         sst, ctx, [(a["key_bytes"], dpos, end) for dpos, end, a in matches]
@@ -688,9 +554,9 @@ def _summary_check_in_sstable(sst):
     with sst.open("Index.db") as f:
         for key, idx_off in summ.entries:
             try:
-                ent = _IndexCursor(
+                ent = next(iter(IndexCursor(
                     f, sst.version, sst.path("Index.db"), idx_off
-                ).next_entry()
+                )), None)
             except ValueError:
                 continue  # mid-entry offset: not a boundary
             if ent is not None and ent[0] == key:
@@ -735,18 +601,15 @@ RANGE_AUDIT_SCHEMA = (
 
 
 def _index_walk(
-    sst, ctx: dict, order, lo, past, floor_dk, chunk_bytes: int, what: str,
-    audit: dict,
+    sst, ctx: dict, order, lo, past, floor_dk, chunk_bytes: int, audit: dict
 ) -> Iterator[list]:
-    """Spans ``[key, data position, end]`` (``end`` None: the end of
-    Data.db) of the index entries with ``lo <= order(key)`` and not
-    ``past(order(key))``, in index order, from one sstable whose index is
-    sorted by ``order``; ``lo`` None starts at the first entry. The walk
-    starts at the rightmost sampled entry whose decorated key is <=
-    ``floor_dk`` and reads one entry past the last span (its position
-    ends that span). An index data position that decreases past ``lo`` is
-    a corrupt index ("``what``" names the mode). Fills ``audit``'s
-    bounds_skip, scan_start, entries_scanned and index_bytes_read."""
+    """``index_spans`` of the index entries with ``lo <= order(key)`` and
+    not ``past(order(key))`` of one sstable whose index is sorted by
+    ``order``; ``lo`` None starts at the first entry. The walk starts at
+    the rightmost sampled entry whose decorated key is <= ``floor_dk``
+    and reads one entry past the last span (its position ends that
+    span). Fills ``audit``'s bounds_skip, scan_start, entries_scanned and
+    index_bytes_read."""
     path = sst.path("Index.db")
     summ = ctx["summary"]
     start = 0
@@ -762,38 +625,21 @@ def _index_walk(
             start = summ.entries[floor][1]
     audit["scan_start"] = start
 
+    def where(key, _off) -> int:
+        audit["entries_scanned"] += 1
+        k = order(key)
+        return -1 if lo is not None and k < lo else int(past(k))
+
     with sst.open("Index.db") as f:
-        cur = _IndexCursor(
-            f, sst.version, path, start, chunk_bytes=chunk_bytes
-        )
-        span = None
+        cur = IndexCursor(f, sst.version, path, start, chunk_bytes=chunk_bytes)
         try:
-            while (ent := cur.next_entry()) is not None:
-                key, dpos, _off = ent
-                audit["entries_scanned"] += 1
-                sort_key = order(key)
-                if lo is not None and sort_key < lo:
-                    continue
-                if span is not None:
-                    if dpos < span[1]:
-                        raise ValueError(
-                            f"corrupt Index.db {path}: data position "
-                            f"{dpos} decreases inside the {what}"
-                        )
-                    span[2] = dpos
-                    yield span
-                    span = None
-                if past(sort_key):
-                    break
-                span = [key, dpos, None]
-            if span is not None:
-                yield span
+            yield from index_spans(cur, where)
         finally:
             audit["index_bytes_read"] = cur.bytes_read
 
 
 def _ordered_range(
-    sst, ctx: dict, order, lo, hi, floor_dk, chunk_bytes: int, what: str
+    sst, ctx: dict, order, lo, hi, floor_dk, chunk_bytes: int
 ) -> tuple[dict, list[tuple]]:
     """All partitions with lo <= order(key) <= hi from one sstable
     (``_index_walk``): (RANGE_AUDIT_SCHEMA counters, record tuples). The
@@ -804,8 +650,7 @@ def _ordered_range(
     audit = {**dict.fromkeys(_RANGE_AUDIT_KEYS, 0),
              "bounds_skip": None, "scan_start": None}
     spans = list(_index_walk(
-        sst, ctx, order, lo, lambda k: k > hi, floor_dk, chunk_bytes, what,
-        audit,
+        sst, ctx, order, lo, lambda k: k > hi, floor_dk, chunk_bytes, audit,
     ))
     records: list[tuple] = []
     for got in _read_blocks(sst, ctx, spans):
@@ -846,8 +691,7 @@ def _range_in_sstable(
             "filter instead"
         )
     return _ordered_range(
-        sst, ctx, lambda key: key, lo_b, hi_b, (lo_b,), chunk_bytes,
-        "range scan",
+        sst, ctx, lambda key: key, lo_b, hi_b, (lo_b,), chunk_bytes
     )
 
 
@@ -881,7 +725,7 @@ def _token_range_in_sstable(
     decorate = ctx["decorate"]
     return _ordered_range(
         sst, ctx, lambda key: decorate(key)[0], token_lo, token_hi,
-        (token_lo, b""), chunk_bytes, "token-range scan",
+        (token_lo, b""), chunk_bytes
     )
 
 

@@ -170,7 +170,7 @@ def _contexts(group) -> list[dict]:
     return ctxs
 
 
-def _range_spans(sst, ctx: dict, lo, hi, what: str) -> Iterator[list]:
+def _range_spans(sst, ctx: dict, lo, hi) -> Iterator[list]:
     """``lookup._index_walk`` over the entries of ``sst`` whose decorated
     key is in ``[lo, hi)``: spans ``[key, data position, end]``, in index
     order."""
@@ -178,7 +178,7 @@ def _range_spans(sst, ctx: dict, lo, hi, what: str) -> Iterator[list]:
 
     past = (lambda dk: False) if hi is None else (lambda dk: dk >= hi)
     return _index_walk(
-        sst, ctx, ctx["decorate"], lo, past, lo, 64 << 10, what,
+        sst, ctx, ctx["decorate"], lo, past, lo, 64 << 10,
         {"entries_scanned": 0},
     )
 
@@ -189,7 +189,7 @@ def _stream(sst, ctx: dict, lo, hi) -> Iterator[tuple]:
     from cassandra_sstable_tools_spark.sources.lookup import _read_blocks
 
     decorate = ctx["decorate"]
-    spans, keys = itertools.tee(_range_spans(sst, ctx, lo, hi, "merge scan"))
+    spans, keys = itertools.tee(_range_spans(sst, ctx, lo, hi))
     sid = sst.identity[2]
     last = None
     for got, (key, pos, _end) in zip(_read_blocks(sst, ctx, spans), keys):
@@ -219,14 +219,14 @@ def merged_partitions(unit) -> Iterator[tuple]:
         yield copies[0][2], [(sid, recs) for _, sid, _, recs in copies]
 
 
-def unit_sizes(unit, render=None) -> Iterator[tuple]:
+def unit_sizes(unit, render=None, needs=("Data.db",)) -> Iterator[tuple]:
     """``(rendered key, size)`` of every Index.db entry of a work unit, one
     sstable after another, each in index order. A size is the next data
     position minus this one; the last partition of an sstable ends at its
     uncompressed data length (``sstable_binary._data_length``). ``render``
     renders keys (None: each sstable's Statistics.db header, else the
-    heuristic). An sstable without Data.db is walked, so a corrupt index
-    still fails, but gives no sizes."""
+    heuristic). An sstable without a component of ``needs`` is walked, so
+    a corrupt index still fails, but gives no sizes."""
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         _data_length,
         _header_renderer,
@@ -244,8 +244,8 @@ def unit_sizes(unit, render=None) -> Iterator[tuple]:
                     "the partitioner its table's key ranges were cut in"
                 )
             ctx = {"summary": _summary(sst), "decorate": order[1]}
-        spans = _range_spans(sst, ctx, lo, hi, "pstats walk")
-        if "Data.db" not in sst.components:
+        spans = _range_spans(sst, ctx, lo, hi)
+        if not set(needs) <= sst.components:
             for _ in spans:
                 pass
             continue

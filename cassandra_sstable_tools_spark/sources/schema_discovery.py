@@ -90,8 +90,9 @@ def _decode_columns_sstable(data_path: str) -> list[dict]:
         open_data_file,
     )
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
+        IndexCursor,
         _parse_filename,
-        stream_parse_index_db,
+        index_spans,
     )
     from cassandra_sstable_tools_spark.sources.statistics_db import (
         parse_serialization_header,
@@ -108,17 +109,14 @@ def _decode_columns_sstable(data_path: str) -> list[dict]:
             f.read(), version=ver, source=stats_path
         )
     with open(index_path, "rb") as f:
-        entries = sorted(
-            stream_parse_index_db(f, version=ver, source=index_path),
-            key=lambda kp: kp[1],
-        )
+        spans = list(index_spans(IndexCursor(f, ver, index_path)))
     out: list[dict] = []
     dat, data_len = open_data_file(
         data_path, base + "CompressionInfo.db", ver
     )
     try:
-        for i, (key, pos) in enumerate(entries):
-            end = entries[i + 1][1] if i + 1 < len(entries) else data_len
+        for key, pos, end in spans:
+            end = data_len if end is None else end
             if end <= pos:
                 continue
             dat.seek(pos)

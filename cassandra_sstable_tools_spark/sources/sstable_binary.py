@@ -26,14 +26,16 @@ Format (public knowledge: Apache Cassandra ``VIntCoding`` /
     promoted-size vint cutoff at >= "ma", :85/:92 for the position vint
     cutoff at > "ma")
 
-Partition size is NOT stored: it is the DELTA to the next entry's position,
-with the tail partition closed by the Data.db file length
-(IndexReader.java:88-98). ``binary_index_entries`` emits (key, position)
-for the W1 window operator (operators/window_sizes.py -- the shared
-size-derivation path for parquet-metadata compositions);
-``binary_index_sizes`` fuses the same delta arithmetic into the per-file
-parse task for directory-only consumers, eliminating the window exchange
-and the length join from those plans.
+The grammar is written once, in ``IndexCursor``; every Index.db read
+goes through it. Partition size is NOT stored: it is the DELTA to the
+next entry's position, with the tail partition closed by the Data.db
+file length (IndexReader.java:88-98). ``index_spans`` is the one walk
+from entries to those Data.db extents -- lookups, range and token reads,
+the merge scan, ``pstats``, ``binary_index_sizes`` and the cell scan all
+take their extents from it, so all of them refuse a decreasing position
+the same way. ``binary_index_entries`` emits (key, position) for the W1
+window operator (operators/window_sizes.py -- the shared size-derivation
+path for parquet-metadata compositions).
 
 Unsigned vint (Cassandra ``VIntCoding``): first byte carries N leading
 1-bits = N extra bytes, remaining first-byte bits are the value's high
@@ -45,9 +47,9 @@ Spark shape / 100 TB notes:
   can open) and one ``mapInArrow`` stage of min(#sstables, cores) tasks
   reads each Index.db exactly once through that filesystem
   (``inventory.sstable_pass``), stream-parsing it in 8 MB chunks
-  executor-side -- task memory is bounded by the chunk, never by the
-  index size (a 100 GB Data.db's index is ~1 GB), and the reference also
-  streams one file per thread.
+  executor-side and emitting rows as it goes -- task memory is one chunk
+  and one 64k-row Arrow batch, never the index size (a 100 GB Data.db's
+  index is ~1 GB), and the reference also streams one file per thread.
 - the parse is sequential WITHIN a file by format necessity (entries are
   variable-length), exactly like the reference reader; parallelism is
   across files, which is how a real data directory scales (many sstables).
@@ -216,88 +218,164 @@ def index_offsets(
     return offs
 
 
-def _try_vint(buf: bytes, off: int, n: int) -> tuple[int, int] | None:
-    """read_unsigned_vint, but None when the buffer ends mid-vint (the
-    streaming parser's 'incomplete, need more bytes' signal)."""
-    if off >= n:
-        return None
-    first = buf[off]
-    if first < 0x80:
-        return first, off + 1
-    extra = 0
-    while extra < 8 and first & (0x80 >> extra):
-        extra += 1
-    if off + 1 + extra > n:
-        return None
-    return read_unsigned_vint(buf, off)
+# one logical entry (u16 key + position + promoted columns index) larger
+# than this is corruption, not data: a bogus promoted size fails before
+# the cursor reads or buffers its bytes
+_MAX_ENTRY_BYTES = 1 << 28
 
 
-def _parse_entries(
-    buf: bytes, version: str, at_eof: bool, source: str, base: int = 0
-) -> tuple[list[tuple[bytes, int]], int]:
-    """Greedily parse whole entries from ``buf`` -> (entries, consumed).
+def _number(buf: bytes, off: int, vint: bool, width: int):
+    """``(value, bytes)`` of the unsigned number at ``off``: a vint, or a
+    ``width``-byte big-endian int; value None when ``buf`` ends inside it,
+    with the bytes it needs."""
+    if vint:
+        if off >= len(buf):
+            return None, 1
+        first = buf[off]
+        if first < 0x80:
+            return first, 1
+        width = 1 + _VINT_EXTRA[first]
+        if off + width > len(buf):
+            return None, width
+        return read_unsigned_vint(buf, off)[0], width
+    if off + width > len(buf):
+        return None, width
+    return int.from_bytes(buf[off : off + width], "big"), width
 
-    ``consumed`` is the offset where the first INCOMPLETE entry starts; with
-    ``at_eof`` any incomplete tail is corruption (loud), otherwise the
-    caller carries ``buf[consumed:]`` into the next chunk. ``base`` = file
-    offset of buf[0], only for error messages."""
-    entries: list[tuple[bytes, int]] = []
-    off, n = 0, len(buf)
-    while off < n:
-        start = off
-        if off + 2 > n:
-            break
-        klen = int.from_bytes(buf[off : off + 2], "big")
-        off += 2
-        if off + klen > n:
-            break
-        key = buf[off : off + klen]
-        off += klen
-        if version > "ma":
-            got = _try_vint(buf, off, n)
-            if got is None:
-                break
-            position, off = got
-        else:
-            if off + 8 > n:
-                break
-            position = int.from_bytes(buf[off : off + 8], "big")
-            off += 8
-        if version >= "ma":
-            got = _try_vint(buf, off, n)
-            if got is None:
-                break
-            psize, off = got
-        else:
-            if off + 4 > n:
-                break
-            psize = int.from_bytes(buf[off : off + 4], "big")
-            off += 4
-        if off + psize > n:
-            break
-        off += psize  # skipData(): promoted index is opaque to stats
-        entries.append((key, position))
-    else:
-        start = n
-    if start < n and at_eof:
-        raise ValueError(
-            f"corrupt Index.db {source}: truncated entry at byte {base + start}"
-        )
-    return entries, start
+
+class IndexCursor:
+    """THE Index.db entry grammar: iterating yields ``(key, data position,
+    file offset of the entry)`` per entry of the open file ``f``, in file
+    order, from file offset ``start`` to a clean end of file. Every
+    Index.db read goes through it: the whole-file and streaming parses,
+    the lookups, the scans and the merge walk (``index_spans``).
+
+    Each read is ``chunk_bytes`` (at least what the field being parsed
+    needs), cut short at index offset ``region_end`` unless a field
+    straddles it, so ``bytes_read`` counts what a bounded window costs
+    (the lookup audit's ``index_bytes_read``). Memory holds the entry
+    being parsed and the rest of the last read, never the file. A
+    truncated entry, or one over ``_MAX_ENTRY_BYTES``, raises ValueError
+    naming ``source`` and the entry's file offset; the oversized one
+    before any of its bytes are read. Iterate once: the cursor reads
+    ``f`` from where the last read left it."""
+
+    __slots__ = ("f", "version", "source", "start", "chunk", "region_end",
+                 "bytes_read")
+
+    def __init__(self, f, version: str = _DEFAULT_VERSION,
+                 source: str = "<stream>", start: int = 0,
+                 chunk_bytes: int = 8 << 10, region_end: int | None = None):
+        f.seek(start)
+        self.f = f
+        self.version = version
+        self.source = source
+        self.start = start
+        self.chunk = chunk_bytes
+        self.region_end = region_end
+        self.bytes_read = 0
+
+    def __iter__(self) -> Iterator[tuple[bytes, int, int]]:
+        pos_vint = self.version > "ma"   # else an 8-byte long
+        size_vint = self.version >= "ma"  # else a 4-byte int
+        buf, base, off = b"", self.start, 0  # base: file offset of buf[0]
+        read_pos = self.start
+        while True:
+            n = len(buf)
+            # whole entries of buf; a short field breaks out with the
+            # buffer offset ``at`` where it needs ``need`` bytes
+            while True:
+                start = off
+                if off + 2 > n:
+                    at, need = off, 2
+                    break
+                klen = int.from_bytes(buf[off : off + 2], "big")
+                off += 2
+                if off + klen > n:
+                    at, need = off, klen
+                    break
+                key = buf[off : off + klen]
+                off += klen
+                position, w = _number(buf, off, pos_vint, 8)
+                if position is None:
+                    at, need = off, w
+                    break
+                off += w
+                psize, w = _number(buf, off, size_vint, 4)
+                if psize is None:
+                    at, need = off, w
+                    break
+                off += w
+                if off + psize > n:
+                    at, need = off, psize
+                    break
+                off += psize  # the promoted index: opaque, skipped
+                yield key, position, base + start
+            if at - start + need > _MAX_ENTRY_BYTES:
+                raise ValueError(
+                    f"corrupt Index.db {self.source}: entry at byte "
+                    f"{base + start} exceeds {_MAX_ENTRY_BYTES} bytes"
+                )
+            # keep the entry's bytes, read on, re-parse it from its start
+            buf, base, at, off = buf[start:], base + start, at - start, 0
+            while len(buf) - at < need:
+                want = max(self.chunk, need)
+                if self.region_end is not None:
+                    want = max(need, min(want, self.region_end - read_pos))
+                data = self.f.read(want)
+                if not data:
+                    if buf:
+                        raise ValueError(
+                            f"corrupt Index.db {self.source}: truncated "
+                            f"entry at byte {base}"
+                        )
+                    return  # a clean end on an entry boundary
+                read_pos += len(data)
+                self.bytes_read += len(data)
+                buf += data
+
+
+def index_spans(cur: IndexCursor, where=None) -> Iterator[list]:
+    """THE walk from Index.db entries to Data.db extents: spans ``[key,
+    data position, end]`` in index order, one per entry of the cursor
+    ``cur`` that ``where(key, index offset)`` places inside the wanted
+    run (0); an entry before it (< 0) is skipped, and the first entry
+    past it (> 0) ends the walk. ``where`` None keeps every entry. A span
+    ends at the next entry's position, ``end`` None at the end of the
+    index (the end of Data.db). Every position walked is checked against
+    the one before it, the entry that closes a span, a shard or the walk
+    included: a decreasing position is a corrupt index, which would
+    otherwise drop or misread a partition."""
+    span = prev = None
+    for key, pos, off in cur:
+        if prev is not None and pos < prev:
+            raise ValueError(
+                f"corrupt Index.db {cur.source}: successor data position "
+                f"{pos} at index byte {off} decreases below {prev}"
+            )
+        prev = pos
+        if span is not None:
+            span[2] = pos
+            yield span
+            span = None
+        place = 0 if where is None else where(key, off)
+        if place > 0:
+            return
+        if place == 0:
+            span = [key, pos, None]
+    if span is not None:
+        yield span
 
 
 def parse_index_db(
     content: bytes, version: str = _DEFAULT_VERSION, source: str = "<bytes>"
 ) -> list[tuple[bytes, int]]:
     """Parse Index.db bytes -> [(key, position)]; loud on corruption."""
-    entries, _ = _parse_entries(content, version, at_eof=True, source=source)
-    return entries
+    import io
 
-
-# one logical entry (u16 key + vints + promoted columns index) larger than
-# this is corruption, not data -- stops a bogus promoted-size vint from
-# growing the streaming carry-over buffer until the file ends
-_MAX_ENTRY_BYTES = 1 << 28
+    return list(stream_parse_index_db(
+        io.BytesIO(content), version, source, max(len(content), 1)
+    ))
 
 
 def stream_parse_index_db(
@@ -306,32 +384,14 @@ def stream_parse_index_db(
     source: str = "<stream>",
     chunk_bytes: int = 8 << 20,
 ) -> Iterator[tuple[bytes, int]]:
-    """Parse Index.db from a file object in bounded memory.
-
-    The whole-file path (``parse_index_db``) holds one file in RAM, which
-    makes a 100 GB Data.db's multi-GB index a task OOM; this variant keeps
-    only ``chunk_bytes`` plus one partial entry resident, so index size
-    never bounds what a task can read. Same grammar, same loud-corruption
-    contract."""
-    buf = b""
-    base = 0  # file offset of buf[0]
-    while True:
-        data = fobj.read(chunk_bytes)
-        at_eof = not data
-        buf += data
-        entries, consumed = _parse_entries(
-            buf, version, at_eof=at_eof, source=source, base=base
-        )
-        yield from entries
-        buf = buf[consumed:]
-        base += consumed
-        if at_eof:
-            return
-        if len(buf) > _MAX_ENTRY_BYTES:
-            raise ValueError(
-                f"corrupt Index.db {source}: entry at byte {base} exceeds "
-                f"{_MAX_ENTRY_BYTES} bytes"
-            )
+    """``(key, position)`` per Index.db entry of the file object ``fobj``
+    (``IndexCursor``), read in ``chunk_bytes`` reads: memory holds one
+    read and one entry, so index size never bounds what a task can
+    read."""
+    for key, position, _off in IndexCursor(
+        fobj, version, source, chunk_bytes=chunk_bytes
+    ):
+        yield key, position
 
 
 def _parse_filename(
@@ -671,14 +731,6 @@ def _header_renderer(sst):
     return lambda b: render_typed(b, kt)
 
 
-def _index_entries(sst) -> list[tuple[bytes, int]]:
-    """Stream-parse one sstable's Index.db -> [(key, position)]."""
-    with sst.open("Index.db") as f:
-        return list(stream_parse_index_db(
-            f, version=sst.version, source=sst.path("Index.db")
-        ))
-
-
 def binary_index_entries(
     spark: SparkSession, root: str, filenames=None, key_type: str | None = None
 ) -> DataFrame:
@@ -704,9 +756,13 @@ def binary_index_entries(
 
     render = key_renderer(key_type)
 
-    def scan(sst) -> list[tuple]:
+    def scan(sst) -> Iterator[tuple]:
         r = render if key_type is not None else _header_renderer(sst)
-        return [(r(key), position) for key, position in _index_entries(sst)]
+        with sst.open("Index.db") as f:
+            for key, position in stream_parse_index_db(
+                f, version=sst.version, source=sst.path("Index.db")
+            ):
+                yield r(key), position
 
     return sstable_pass(
         spark, "binary_index_entries", root, filenames, ("Index.db",), scan,
@@ -1064,56 +1120,32 @@ def _data_length(sst) -> int:
     return sst.length("Data.db")
 
 
-def _index_sizes(sst, render=None, needs=("Data.db",)) -> list[tuple]:
-    """One sstable's (partition_key, size) rows: Index.db position deltas,
-    the tail partition closed by the sibling-resolved uncompressed length
-    (the CompressionInfo.db dataLength when the sstable is compressed,
-    else the Data.db byte length). ``render`` renders keys (None: the
-    sibling Statistics.db header's key validator). The Index.db is always
-    parsed (loud on corruption), but rows are emitted only when every
-    component in ``needs`` exists."""
-    r = render or _header_renderer(sst)
-    entries = _index_entries(sst)
-    if not set(needs) <= sst.components:
-        return []
-    entries.sort(key=lambda e: e[1])
-    positions = [p for _, p in entries]
-    positions.append(_data_length(sst))
-    return [
-        (r(key), positions[j + 1] - pos)
-        for j, (key, pos) in enumerate(entries)
-    ]
-
-
 def binary_index_sizes(
     spark: SparkSession, root: str, filenames=None, key_type: str | None = None,
     require_components: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Fused Index.db scan -> (ks, tb, ss, pk, SIZE): each parse task
-    resolves its own file's position deltas in place (``_index_sizes``).
+    """Index.db sizes -> (ks, tb, ss, pk, SIZE): each sstable's task walks
+    its own index (``merge_scan.unit_sizes`` over a one-sstable uncut
+    unit), so size = next position - position in index order, the tail
+    partition closed by the uncompressed data length
+    (``_data_length``, what ``data_file_lengths`` gives), and a
+    decreasing position is a corrupt index (loud). No lead() window
+    (Exchange + Sort) and no length join in any directory-sizes plan.
 
-    Equivalent by construction to
-    ``index_partition_sizes(binary_index_entries(...),
-    data_file_lengths(...))`` -- the parser sees a file's entries in
-    position order (sorted defensively per file, matching the W1 window's
-    ORDER BY position), so size = next position - position with the tail
-    partition closed by exactly ``data_file_lengths``'s length. Removes
-    the entry-grain lead() window (one Exchange + Sort) and the broadcast
-    length join from every directory-sizes plan.
-
-    Join semantics preserved: an sstable without a Data.db sibling emits
-    no rows (the window composition's inner join against the lengths frame
-    drops keyless entries the same way). ``require_components`` lists
-    extra sibling components that must also exist (e.g. Statistics.db for
-    the cell-decodable universe) -- the in-task equivalent of a broadcast
-    semi join against a component listing."""
+    An sstable without a Data.db sibling emits no rows (the window
+    composition's inner join against the lengths frame drops keyless
+    entries the same way); ``require_components`` lists extra sibling
+    components that must also exist (e.g. Statistics.db for the
+    cell-decodable universe). Its Index.db is walked all the same."""
     from cassandra_sstable_tools_spark.sources.inventory import sstable_pass
+    from cassandra_sstable_tools_spark.sources.merge_scan import unit_sizes
 
     render = key_renderer(key_type) if key_type is not None else None
     needs = ("Data.db", *require_components)
     return sstable_pass(
         spark, "binary_index_sizes", root, filenames, ("Index.db",),
-        lambda sst: _index_sizes(sst, render, needs), INDEX_SIZES_SCHEMA,
+        lambda sst: unit_sizes(([sst], None, None), render, needs),
+        INDEX_SIZES_SCHEMA,
     )
 
 

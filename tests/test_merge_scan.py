@@ -6,7 +6,9 @@
   kind, and on a Murmur3 tree; the CLI prints what the DataFrame report
   prints, with ``-f`` and with ``--table`` alone too.
 - The output does not depend on how each table is cut into key ranges.
-- A corrupt Index.db fails the pass, naming the file.
+- A corrupt Index.db fails the pass, naming the file; so does every
+  other reader of Index.db positions (sizes, cell scans, the V2 source,
+  the CLI reports).
 - The directory ``pstats`` runs on the same work units: its sections
   equal Spark's composition over the Index.db sizes however the table is
   cut, and a table of an unsupported partitioner stays one uncut unit.
@@ -25,8 +27,13 @@ import pytest
 from cassandra_sstable_tools_spark.__main__ import main
 from cassandra_sstable_tools_spark.constants import GC_BEFORE
 from cassandra_sstable_tools_spark.sources import merge_scan
+from cassandra_sstable_tools_spark.sources.data_cells import (
+    data_cells,
+    dir_partition_sizes,
+)
 from cassandra_sstable_tools_spark.sources.inventory import sstable_inventory
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
+    binary_index_sizes,
     materialize_index_files,
 )
 
@@ -323,7 +330,10 @@ def test_mixed_partitioners_are_refused(spark, murmur3_root, tmp_path):
 
 def _swapped_positions(edge_root: str, tmp_path) -> tuple[str, str]:
     """A copy of ``ks1/del`` whose first sstable has the Data.db positions
-    of two adjacent Index.db entries swapped: ``(root, Index.db path)``."""
+    of two adjacent Index.db entries swapped, at a shard boundary: the
+    entry that opens the second of two summary-seek shards now points
+    below the one before it, so it decreases as the entry that closes
+    the first shard. ``(root, Index.db path)``."""
     from cassandra_sstable_tools_spark.sources.sstable_binary import (
         encode_index_db,
         index_offsets,
@@ -338,8 +348,12 @@ def _swapped_positions(edge_root: str, tmp_path) -> tuple[str, str]:
     base = f"{root}/ks1/del/nb-1-big-"
     with open(base + "Index.db", "rb") as f:
         entries = parse_index_db(f.read(), version="nb")
-    (ka, pa), (kb, pb) = entries[1], entries[2]
-    entries[1], entries[2] = (ka, pb), (kb, pa)
+    # the summary samples every 4th entry; shard 2 of 2 opens at the
+    # middle sample
+    opens = (-(-len(entries) // 4) // 2) * 4
+    assert 0 < opens < len(entries)
+    (ka, pa), (kb, pb) = entries[opens - 1], entries[opens]
+    entries[opens - 1], entries[opens] = (ka, pb), (kb, pa)
     with open(base + "Index.db", "wb") as f:
         f.write(encode_index_db(entries))
     with open(base + "Summary.db", "wb") as f:
@@ -372,13 +386,53 @@ def test_pstats_corrupt_index_is_loud(spark, edge_root, tmp_path):
     assert index in str(err.value)
 
 
+def _v2_read(spark, root) -> list:
+    from cassandra_sstable_tools_spark.sources.pyds import register
+
+    register(spark)
+    return spark.read.format("cassandra-sstable").load(root).collect()
+
+
+# every reader that turns Index.db positions into sizes or extents; the
+# CLI cases raise out of ``main``, which exits the command non-zero
+_POSITION_CONSUMERS = {
+    "binary_index_sizes":
+        lambda spark, root: binary_index_sizes(spark, root).collect(),
+    "dir_partition_sizes":
+        lambda spark, root: dir_partition_sizes(spark, root).collect(),
+    "data_cells-1-shard": lambda spark, root: data_cells(
+        spark, root, shards_per_sstable=1
+    ).collect(),
+    "data_cells-2-shards": lambda spark, root: data_cells(
+        spark, root, shards_per_sstable=2
+    ).collect(),
+    "spark.read": _v2_read,
+    "cli-pstats-approx": lambda spark, root: _cli(
+        spark, ["pstats", "--cassandra-dir", root, "--approx"]
+    ),
+    "cli-cfstats": lambda spark, root: _cli(
+        spark, ["cfstats", "--cassandra-dir", root]
+    ),
+}
+
+
+@pytest.mark.parametrize("consumer", list(_POSITION_CONSUMERS))
+def test_every_position_consumer_refuses_a_swapped_index(
+    spark, edge_root, tmp_path, consumer
+):
+    """The swap at the shard boundary is refused, naming the Index.db, by
+    every reader of positions: none re-sorts them, and none drops the
+    partition whose extent the closing entry would end below its start."""
+    root, index = _swapped_positions(edge_root, tmp_path)
+    with pytest.raises(Exception, match="corrupt Index.db ") as err:
+        _POSITION_CONSUMERS[consumer](spark, root)
+    assert index in str(err.value)
+
+
 def _pstats_spark(spark, root, n: int = 10) -> list:
     """``pstats`` sections of Spark's collate + percentile + row_number
     composition over the Index.db sizes frame."""
     from cassandra_sstable_tools_spark.queries import pstats as m
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        binary_index_sizes,
-    )
 
     c = m.collate_sizes(binary_index_sizes(spark, root))
     return [

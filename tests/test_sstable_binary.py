@@ -13,15 +13,20 @@ import random
 
 import pytest
 
+from cassandra_sstable_tools_spark.sources.data_cells import data_cells
+from cassandra_sstable_tools_spark.sources.lookup import point_read, range_read
 from cassandra_sstable_tools_spark.sources.sstable_binary import (
     binary_index_entries,
     encode_index_db,
+    index_offsets,
     key_encoder,
     key_renderer,
     materialize_index_files,
     parse_index_db,
+    pstats_report,
     read_unsigned_vint,
     render_typed,
+    stream_parse_index_db,
     write_unsigned_vint,
 )
 
@@ -341,23 +346,88 @@ def test_stream_parse_matches_whole_buffer():
     assert list(stream_parse_index_db(io.BytesIO(b""))) == []
 
 
-def test_stream_parse_truncation_is_loud():
+@pytest.mark.parametrize("cut", ["key", "position", "promoted"])
+def test_stream_parse_truncation_is_loud(cut):
+    """A file cut inside the second entry's key, its two-byte position
+    vint or its promoted index fails naming the entry's offset."""
     import io
 
     import pytest as _pytest
 
-    from cassandra_sstable_tools_spark.sources.sstable_binary import (
-        encode_index_db,
-        stream_parse_index_db,
-    )
-
-    blob = encode_index_db([(b"aaa", 0), (b"bbb", 999)])
-    with _pytest.raises(ValueError, match="truncated entry"):
+    entries = [(b"aaa", 0), (b"bbb", 999)]
+    blob = encode_index_db(entries)
+    second = index_offsets(entries)[1]
+    # u16 length, key, position vint (999: two bytes), promoted size vint,
+    # promoted bytes
+    end = {"key": second + 3, "position": second + 6,
+           "promoted": len(blob) - 2}[cut]
+    with _pytest.raises(ValueError, match="truncated entry") as err:
         list(
             stream_parse_index_db(
-                io.BytesIO(blob[:-2]), source="t", chunk_bytes=5
+                io.BytesIO(blob[:end]), source="t", chunk_bytes=5
             )
         )
+    assert f"corrupt Index.db t: truncated entry at byte {second}" in str(
+        err.value
+    )
+
+
+def _oversized_entry(tmp_path) -> tuple[str, str, list[bytes], int]:
+    """A planted ByteOrderedPartitioner sstable whose last Index.db entry
+    declares a 2^40-byte promoted index: ``(root, Index.db path, keys in
+    index order, byte offset of that entry)``."""
+    from test_lookup import _BYTE_ORDERED, _plant_sstable
+
+    _keys, ordered, base = _plant_sstable(tmp_path, _BYTE_ORDERED)
+    path = base + "Index.db"
+    with open(path, "rb") as f:
+        entries = parse_index_db(f.read(), version="nb")
+    off = index_offsets(entries)[-1]
+    key, pos = entries[-1]
+    with open(path, "r+b") as f:
+        f.truncate(off)
+        f.seek(off)
+        f.write(len(key).to_bytes(2, "big") + key + write_unsigned_vint(pos)
+                + write_unsigned_vint(1 << 40))
+    return str(tmp_path), path, ordered, off
+
+
+def _stream_parse(spark, root, path, keys):
+    with open(path, "rb") as f:
+        return list(stream_parse_index_db(f, source=path))
+
+
+# every reader of the oversized entry, as ``read(spark, root, path, keys)``
+_OVERSIZED_READS = {
+    "stream_parse_index_db": _stream_parse,
+    "point_read": lambda spark, root, path, keys: point_read(
+        spark, root, [keys[-1].decode()]
+    ).collect(),
+    "range_read": lambda spark, root, path, keys: range_read(
+        spark, root, keys[-2].decode(), keys[-1].decode()
+    ).collect(),
+    "pstats_report": lambda spark, root, path, keys: pstats_report(
+        spark, root
+    ),
+    "data_cells-2-shards": lambda spark, root, path, keys: data_cells(
+        spark, root, shards_per_sstable=2
+    ).collect(),
+}
+
+
+@pytest.mark.parametrize("reader", list(_OVERSIZED_READS))
+def test_oversized_entry_is_refused_with_path_and_offset(
+    spark, tmp_path, reader
+):
+    """A promoted index of 2^40 bytes is corruption: every reader fails
+    with a ValueError naming the Index.db and the entry's byte offset,
+    before it tries to read or buffer those bytes (a MemoryError would
+    name neither)."""
+    root, path, keys, off = _oversized_entry(tmp_path)
+    with pytest.raises(Exception, match="corrupt Index.db ") as err:
+        _OVERSIZED_READS[reader](spark, root, path, keys)
+    assert f"{path}: entry at byte {off} exceeds" in str(err.value)
+    assert "MemoryError" not in str(err.value)
 
 
 def test_compression_info_roundtrip():
